@@ -3378,20 +3378,9 @@ def _tx_fresh_search_index_dir(spark: SparkSession, sf_dir: str) -> str:
     return _materialized_dir(sf_dir, "documents", "tx_search_index_fresh_v1", build)
 
 
-def _probe_terms(*texts: str) -> list:
-    """Driver-side mirror of search._norm_tokens for literal query
-    strings: lowercase, non-alphanumerics to spaces, whitespace split —
-    the term set a bucket-pruned probe of the persisted postings needs."""
-    import re
-
-    return sorted(
-        {
-            t
-            for txt in texts
-            for t in re.sub(r"[^a-z0-9\s]", " ", txt.lower()).split()
-            if t
-        }
-    )
+#: the term set a bucket-pruned probe of the persisted postings needs
+#: (driver-side mirror of search._norm_tokens for literal query strings)
+_probe_terms = search._literal_terms
 
 
 def q_search_postings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -527,7 +527,8 @@ def ref_ivf_model(
         means: dict[int, list[float]] = {}
         for (cid, pos), s in sums.items():
             means.setdefault(cid, [0.0] * dim)[pos] = s / scale / counts[cid]
-        cents = [normalize(means.get(j, cents[j])) for j in range(n_centroids)]
+        # one cell per seed: a corpus smaller than n_centroids trains fewer
+        cents = [normalize(means.get(j, cents[j])) for j in range(len(cents))]
 
     margins: list[float] = []
     probes = topn(cents, n_probe, margin_out=margins)

@@ -32,6 +32,125 @@ def _norm_tokens(col: Column) -> Column:
     return tokens(F.regexp_replace(F.lower(col), r"[^a-z0-9\s]", " "))
 
 
+def _literal_terms(*texts: str) -> list[str]:
+    """Driver-side mirror of ``_norm_tokens`` for literal query strings:
+    lowercase, non-alphanumerics to spaces, whitespace split — the sorted
+    distinct term set a literal ``token IN (...)`` probe (and a
+    bucket-pruned probe of the persisted postings) needs."""
+    import re
+
+    return sorted(
+        {t for text in texts for t in re.sub(r"[^a-z0-9\s]", " ", text.lower()).split()}
+    )
+
+
+def _literal_probe(
+    postings: DataFrame, stats: DataFrame, query: str, stat: str
+) -> tuple[DataFrame, DataFrame]:
+    """(probe, qstats) for a batch of ONE query known driver-side: its
+    terms as literal ``token IN (...)`` filters on postings and stats
+    (pushed into both scans), tagged with the constant query id -1 the
+    batch kernels group and rank by. The scalar searches use this
+    instead of a one-row query frame because the frame's term set is a
+    job of its own before the broadcast joins can run: measured at sf0.1
+    on local[4], the one-row-frame plan made search_bm25, search_hybrid
+    and lexical_suite ~1 s slower each."""
+    terms = _literal_terms(query)
+    probe = postings.filter(F.col("token").isin(terms)).withColumn(
+        "query_id", F.lit(-1).cast("long")
+    )
+    return probe, stats.filter(F.col("token").isin(terms)).select("token", stat)
+
+
+def _frame_probe(
+    postings: DataFrame, stats: DataFrame, queries: DataFrame, stat: str,
+    query_id: str, text_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(probe, qstats) for a batch known only as data: its distinct
+    (query, token) set joins the postings scan (broadcast — the join IS
+    the pushdown when the term list is data) and prunes stats."""
+    qterms = _query_terms(queries, query_id, text_col)
+    return postings.join(broadcast(qterms), "token"), _query_stats(stats, qterms, stat)
+
+
+def _query_terms(queries: DataFrame, query_id: str, text_col: str) -> DataFrame:
+    """The distinct (query, token) probe set of a query frame."""
+    return queries.select(
+        F.col(query_id), F.explode(_norm_tokens(F.col(text_col))).alias("token")
+    ).distinct()
+
+
+def _query_stats(stats: DataFrame, qterms: DataFrame, stat: str) -> DataFrame:
+    """The (token, ``stat``) stats rows of the batch's terms. stats is
+    vocabulary-sized — unbounded at corpus scale — so it is pruned to the
+    term set (left_semi against the distinct tokens) BEFORE any
+    broadcast."""
+    return stats.select("token", stat).join(
+        qterms.select("token").distinct(), "token", "left_semi"
+    )
+
+
+def _rank_within(
+    df: DataFrame, query_id: str, score: str, id_col: str, k: int, rank: str = "rank"
+) -> DataFrame:
+    """Rows ranked 1..k per query by (score desc, id asc) — the tie-break
+    every searcher shares — with the rank in column ``rank``."""
+    w = Window.partitionBy(query_id).orderBy(F.desc(score), F.asc(id_col))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _filter_attrs(docs: DataFrame, attr_filters: dict[str, object] | None) -> DataFrame:
+    """The ATTRIBUTES clause analog: plain pushdown filters — equality,
+    or overlap with a list value for array attributes."""
+    for attr, val in (attr_filters or {}).items():
+        if isinstance(val, (list, tuple)):
+            docs = docs.filter(F.arrays_overlap(F.col(attr), F.array(*[F.lit(v) for v in val])))
+        else:
+            docs = docs.filter(F.col(attr) == F.lit(val))
+    return docs
+
+
+def _tfidf_ranked(
+    probe: DataFrame, qstats: DataFrame, k: int, query_id: str, rank: str = "rank"
+) -> DataFrame:
+    """The TF-IDF kernel: (query_id, id, score, ``rank``) for each query's
+    top k ids by sum of tf*idf over the probe's (query, token, id, tf)
+    rows, with the pruned (token, idf) stats broadcast."""
+    lex = (
+        probe.join(broadcast(qstats), "token")
+        .groupBy(query_id, "id")
+        .agg(F.round(F.sum(F.col("tf") * F.col("idf")), 6).alias("score"))
+    )
+    return _rank_within(lex, query_id, "score", "id", k, rank)
+
+
+def _memo_layout(cache: dict, spark, path: str, build):
+    """Session-scoped memo of an opened index layout in ``cache``: a
+    serving tier holds its index frames open for the process lifetime
+    instead of reopening parquet readers per query. Keyed by (Spark
+    application, real path, _meta.json mtime_ns) so a rebuilt layout —
+    tests rewrite them in place under tmp dirs — is reopened, never
+    served stale. DataFrames are immutable plans, so sharing them across
+    calls in one session is safe. Bounded FIFO: a serving tier holds a
+    handful of layouts (per-corpus + tx generations), so test churn
+    through tmp-dir layouts can't grow it unbounded."""
+    import os
+
+    key = (
+        spark.sparkContext.applicationId,
+        os.path.realpath(path),
+        os.stat(os.path.join(path, "_meta.json")).st_mtime_ns,
+    )
+    hit = cache.get(key)
+    if hit is not None:
+        return hit
+    out = build()
+    if len(cache) >= 8:
+        cache.pop(next(iter(cache)))
+    cache[key] = out
+    return out
+
+
 def build_postings(docs: DataFrame, id_col: str = "id", text_col: str = "chunk") -> DataFrame:
     """Posting list: (token, id, tf). One explode + one groupBy shuffle.
     The fan-out exchange sits UPSTREAM of the tokenization so a small-file
@@ -60,21 +179,16 @@ def lexical_search(
     query: str,
     k: int = 10,
 ) -> DataFrame:
-    """Top-k ids by sum of tf*idf over query terms.
-
-    Query terms are a literal in-plan array → the postings scan is filtered
-    by ``token IN (...)`` (pushed to the scan); the per-doc sum is one
-    partial-aggregated shuffle. Ties break by id for determinism.
+    """Top-k (id, score) by sum of tf*idf over the query's terms: the
+    TF-IDF kernel the hybrid searchers' lexical legs use
+    (``_tfidf_ranked``) over a literal one-query probe
+    (``_literal_probe``). The per-doc sum is one partial-aggregated
+    shuffle; ties break by id for determinism. Over the persisted layout,
+    prune the postings with ``prune_postings_probe`` first so the scan
+    opens only the query terms' buckets.
     """
-    terms = sorted({t for t in query.lower().split() if t})
-    hits = (
-        postings.filter(F.col("token").isin(terms))
-        .join(broadcast(stats.filter(F.col("token").isin(terms))), "token")
-        .groupBy("id")
-        .agg(F.round(F.sum(F.col("tf") * F.col("idf")), 6).alias("score"))
-    )
-    w = Window.orderBy(F.desc("score"), F.asc("id"))
-    return hits.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).drop("rank")
+    probe, qstats = _literal_probe(postings, stats, query, "idf")
+    return _tfidf_ranked(probe, qstats, k, "query_id").select("id", "score")
 
 
 def apply_changes(
@@ -255,18 +369,10 @@ def apply_changes_bounds(
         b=b,
     )
 
-    def _avgdl(lens: DataFrame, name: str) -> DataFrame:
-        return lens.filter(F.col("dl") > 0).agg(
-            (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias(name)
-        )
-
     factor = (
-        _avgdl(doclens_after, "a1")
-        .crossJoin(_avgdl(doclens_before, "a0"))
+        _avgdl(doclens_after.filter(F.col("dl") > 0), "a1")
+        .crossJoin(_avgdl(doclens_before.filter(F.col("dl") > 0), "a0"))
         .select(F.greatest(F.lit(1.0), F.col("a1") / F.col("a0")).alias("__f"))
-    )
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs_after)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
     untouched = (
         bounds.join(broadcast(touched), "token", "left_anti")
@@ -276,7 +382,7 @@ def apply_changes_bounds(
             "df",
             (F.col("max_part") * F.col("__f")).alias("max_part"),
         )
-        .select("token", "df", "max_part", (idf * F.col("max_part")).alias("ub"))
+        .select("token", "df", "max_part", (_idf(n_docs_after) * F.col("max_part")).alias("ub"))
     )
     return rebuilt_touched.unionByName(untouched)
 
@@ -442,23 +548,7 @@ def refresh_search_index(
     maintained.repartition(max(1, len(touched_buckets)), "__tb").write.mode(
         "overwrite"
     ).parquet(staging)
-    staged_postings = spark.read.parquet(staging)
-    (
-        staged_postings.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__tb")
-        .parquet(os.path.join(path, "postings"))
-    )
-    # Dynamic overwrite only replaces partitions PRESENT in the output —
-    # a touched bucket whose every posting belonged to deleted docs
-    # produces no output rows, so its stale directory must be removed
-    # explicitly or the old postings would survive the refresh.
-    kept = {r["__tb"] for r in staged_postings.select("__tb").distinct().collect()}
-    for tb in touched_buckets:
-        if tb not in kept:
-            shutil.rmtree(
-                os.path.join(path, "postings", f"__tb={tb}"), ignore_errors=True
-            )
+    _swap_buckets(spark.read.parquet(staging), path, "postings", "__tb", touched_buckets)
     shutil.rmtree(staging, ignore_errors=True)
     postings_after = spark.read.parquet(os.path.join(path, "postings"))
 
@@ -513,18 +603,7 @@ def refresh_search_index(
 
     # --- swap: doclens touched buckets (dynamic overwrite + emptied-
     # bucket removal, as postings), stats/frontier/bounds whole.
-    (
-        staged_doclens.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__ib")
-        .parquet(os.path.join(path, "doclens"))
-    )
-    kept_ibs = {r["__ib"] for r in staged_doclens.select("__ib").distinct().collect()}
-    for ib in touched_ibs:
-        if ib not in kept_ibs:
-            shutil.rmtree(
-                os.path.join(path, "doclens", f"__ib={ib}"), ignore_errors=True
-            )
+    _swap_buckets(staged_doclens, path, "doclens", "__ib", touched_ibs)
     shutil.rmtree(doclens_stage, ignore_errors=True)
     for name, stage in (
         ("stats", stats_stage),
@@ -541,6 +620,27 @@ def refresh_search_index(
         json.dump(meta, f)
 
 
+def _swap_buckets(staged: DataFrame, path: str, name: str, col: str, touched: list) -> None:
+    """Dynamic-overwrite the ``col`` bucket partitions of ``path/name``
+    that ``staged`` holds. Dynamic overwrite only replaces partitions
+    PRESENT in the output — a touched bucket whose every row belonged to
+    deleted docs produces no output rows, so its stale directory is
+    removed explicitly or the old rows would survive the refresh."""
+    import os
+    import shutil
+
+    (
+        staged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(os.path.join(path, name))
+    )
+    kept = {r[col] for r in staged.select(col).distinct().collect()}
+    for bucket in touched:
+        if bucket not in kept:
+            shutil.rmtree(os.path.join(path, name, f"{col}={bucket}"), ignore_errors=True)
+
+
 def doc_lengths(docs: DataFrame, id_col: str = "id", text_col: str = "chunk") -> DataFrame:
     """(id, dl) straight from the raw docs: dl = token count = size of the
     normalized token array — identical to sum(tf) over the doc's postings,
@@ -550,6 +650,70 @@ def doc_lengths(docs: DataFrame, id_col: str = "id", text_col: str = "chunk") ->
     nothing corpus-wide but linear scans (see bm25_search)."""
     return spread(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id").select(
         "id", F.size(_norm_tokens(F.col(text_col))).alias("dl")
+    )
+
+
+def _avgdl(lens: DataFrame, name: str = "avgdl") -> DataFrame:
+    """Single-row mean doc length over (id, dl) rows: sum(dl)/count —
+    value-identical to avg-of-doubles because every dl is an exact
+    integer in double (and the integer sum is order-independent)."""
+    return lens.agg(
+        (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias(name)
+    )
+
+
+def _idf(n_docs: int) -> Column:
+    """RSJ idf, smoothed: ln(1 + (N - df + 0.5)/(df + 0.5))."""
+    return F.log(
+        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+
+
+def _tf_part(k1: float, b: float) -> Column:
+    """BM25 tf saturation with length normalization:
+    tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))."""
+    return (F.col("tf") * (k1 + 1.0)) / (
+        F.col("tf") + F.lit(k1) * (1.0 - b + F.lit(b) * F.col("dl") / F.col("avgdl"))
+    )
+
+
+def _bm25_lengths(postings: DataFrame, doclens: DataFrame | None):
+    """(doclen, avgdl) for BM25. With an index-side (id, dl) table (see
+    doc_lengths) docs with no tokens are excluded exactly like the
+    postings derivation excludes them, and nothing corpus-wide but
+    linear scans remains. Without one, both derive from postings (one
+    full (id) aggregate — fine when the postings table is materialized,
+    expensive when it is itself a live explode+groupBy subplan; pass
+    doclens= in that case)."""
+    if doclens is not None:
+        lens = doclens.filter(F.col("dl") > 0)
+        return lens.select("id", F.col("dl").cast("double").alias("dl")), _avgdl(lens)
+    doclen = postings.groupBy("id").agg(F.sum("tf").cast("double").alias("dl"))
+    avgdl = postings.agg(
+        (F.sum("tf").cast("double") / F.countDistinct("id").cast("double")).alias("avgdl")
+    )
+    return doclen, avgdl
+
+
+def _bm25_scores(
+    probe: DataFrame,
+    qstats: DataFrame,
+    lengths,
+    n_docs: int,
+    k1: float,
+    b: float,
+    query_id: str,
+) -> DataFrame:
+    """The BM25 kernel: exact per-(query, doc) score over the probe's
+    (query, token, id, tf) rows, with the pruned (token, df) stats
+    broadcast and ``lengths`` = ``_bm25_lengths``' (doclen, avgdl)."""
+    doclen, avgdl = lengths
+    return (
+        probe.join(broadcast(qstats), "token")
+        .join(doclen, "id")
+        .crossJoin(broadcast(avgdl))
+        .groupBy(query_id, "id")
+        .agg(F.round(F.sum(_idf(n_docs) * _tf_part(k1, b)), 6).alias("score"))
     )
 
 
@@ -563,72 +727,37 @@ def bm25_search(
     b: float = 0.75,
     doclens: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-k ids by Okapi BM25 (the Lucene-default lexical ranker):
+    """Top-k (id, score) by Okapi BM25 (the Lucene-default lexical ranker):
 
         score = sum over query terms of
             ln(1 + (N - df + 0.5)/(df + 0.5))          # RSJ idf, smoothed
             * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
 
-    Same index tables as TF-IDF (postings + stats), plus an optional
-    ``doclens`` (id, dl) table. Plan shape (reworked r7 — the old one was
-    SCALE.md's worst non-quadratic scaler at 6.1x on 10x rows): the
-    postings scan is pruned to the query terms FIRST (a grouping-key
-    filter, so it pushes below the postings aggregate and only matching
-    tokens ever shuffle); stats is filtered the same way; and with
-    ``doclens`` supplied, doc length + avgdl come from a narrow linear
-    projection and a single-row aggregate — the full-corpus (token, id)
-    explode/groupBy that the postings-derived fallback needs is gone
-    from the query-time plan entirely. avgdl = sum(dl)/count is
-    value-identical to avg-of-doubles here because every dl is an exact
-    integer in double. Net: nothing corpus-sized shuffles; AQE broadcasts
-    the pruned-hits side of the doclen join.
+    The BM25 kernel of ``bm25_search_many`` over a literal one-query
+    probe (``_literal_probe``), so the scores are the batch form's. Same
+    index tables as TF-IDF (postings + stats), plus an optional
+    ``doclens`` (id, dl) table: with it, doc length + avgdl come from a
+    narrow linear projection and a single-row aggregate, and the
+    full-corpus (token, id) explode/groupBy the postings-derived fallback
+    needs is gone from the query-time plan. Over the persisted layout,
+    prune the postings with ``prune_postings_probe`` first so the scan
+    opens only the query terms' buckets.
 
     High-df terms still fan the candidate set out with document
-    frequency; that is inherent to exact BM25 over an inverted index
-    (a WAND/maxscore upper-bound skip needs an iterative threshold no
-    one-shot declarative plan has). At 100 TB the standard levers compose
-    here: partition/bucket the postings table by token (prunes the scan
-    to query terms — demonstrated end-to-end in tests/test_search_ops.py:
-    a token-bucketed save + the IN filter selects a strict subset of
-    buckets at identical ranking), and drop stopword-class terms at
-    INDEX time (``prune_high_df_terms``) — both leave this query-time
-    plan unchanged.
+    frequency; exact BM25 over an inverted index scores every posting of
+    every query term. ``bm25_search_many_maxscore`` skips the postings
+    lists of terms whose max-score bound cannot lift a document into the
+    top k (identical results). At 100 TB the index-side levers compose
+    here too: partition/bucket the postings table by token (prunes the
+    scan to query terms — demonstrated end-to-end in
+    tests/test_search_ops.py), and drop stopword-class terms at INDEX
+    time (``prune_high_df_terms``).
     """
-    terms = sorted({t for t in query.lower().split() if t})
-    pruned = postings.filter(F.col("token").isin(terms))
-    if doclens is not None:
-        # index-side (id, dl) table (see doc_lengths): docs with no tokens
-        # are excluded exactly like the postings derivation excludes them
-        lens = doclens.filter(F.col("dl") > 0)
-        doclen = lens.select("id", F.col("dl").cast("double").alias("dl"))
-        avgdl = lens.agg(
-            (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias("avgdl")
-        )
-    else:
-        # derive from postings (one full (id) aggregate — fine when the
-        # postings table is materialized, expensive when it is itself a
-        # live explode+groupBy subplan; pass doclens= in that case)
-        doclen = postings.groupBy("id").agg(F.sum("tf").cast("double").alias("dl"))
-        avgdl = postings.agg(
-            (F.sum("tf").cast("double") / F.countDistinct("id").cast("double")).alias("avgdl")
-        )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    probe, qstats = _literal_probe(postings, stats, query, "df")
+    hits = _bm25_scores(
+        probe, qstats, _bm25_lengths(postings, doclens), n_docs, k1, b, "query_id"
     )
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + F.lit(k1) * (1.0 - b + F.lit(b) * F.col("dl") / F.col("avgdl"))
-    )
-    hits = (
-        pruned
-        .join(broadcast(stats.filter(F.col("token").isin(terms)).select("token", "df")), "token")
-        .join(doclen, "id")
-        .crossJoin(broadcast(avgdl))
-        .groupBy("id")
-        .agg(F.round(F.sum(idf * tf_part), 6).alias("score"))
-    )
-    w = Window.orderBy(F.desc("score"), F.asc("id"))
-    return hits.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).drop("rank")
+    return _rank_within(hits, "query_id", "score", "id", k).select("id", "score")
 
 
 def hybrid_search(
@@ -644,7 +773,10 @@ def hybrid_search(
     id_col: str = "id",
 ) -> DataFrame:
     """Hybrid ranking: alpha * lexical + (1-alpha) * cosine, after attribute
-    filtering (the ATTRIBUTES clause analog — plain pushdown filters).
+    filtering (the ATTRIBUTES clause analog — plain pushdown filters):
+    ``hybrid_search_many``'s blend and ranking over a literal one-query
+    lexical probe (``_literal_probe``), the query vector a literal;
+    without ``query_vec`` the cosine term is 0.
 
     Filter semantics: POST-candidate — the lexical pool (10k per query,
     min 100) is selected first and the filter then intersects it, so an
@@ -654,25 +786,16 @@ def hybrid_search(
     serving path) filters AT RETRIEVAL inside both legs instead."""
     from ..functions.vectors import cosine
 
-    base = docs
-    for attr, val in (attr_filters or {}).items():
-        if isinstance(val, (list, tuple)):
-            base = base.filter(F.arrays_overlap(F.col(attr), F.array(*[F.lit(v) for v in val])))
-        else:
-            base = base.filter(F.col(attr) == F.lit(val))
-
-    lex = lexical_search(postings, stats, query, k=max(k * 10, 100)).withColumnRenamed("score", "lex_score")
-    out = base.join(lex, base[id_col] == lex["id"], "inner").drop(lex["id"])
-    if query_vec is not None:
-        qv = F.array(*[F.lit(float(v)) for v in query_vec])
-        out = out.withColumn("sem_score", cosine(F.col(vec_col), qv))
-    else:
-        out = out.withColumn("sem_score", F.lit(0.0))
-    out = out.withColumn(
-        "score", F.round(F.lit(alpha) * F.col("lex_score") + F.lit(1.0 - alpha) * F.col("sem_score"), 6)
+    cand = _tfidf_ranked(
+        *_literal_probe(postings, stats, query, "idf"), max(k * 10, 100), "query_id"
     )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).drop("rank")
+    if query_vec is None:
+        sem = F.lit(0.0)
+    else:
+        sem = cosine(F.col(vec_col), F.array(*[F.lit(float(v)) for v in query_vec]))
+    return _blend_ranked(
+        docs, attr_filters, cand, sem, alpha, k, "query_id", id_col
+    ).drop("query_id")
 
 
 def hybrid_search_ann(
@@ -724,8 +847,7 @@ def hybrid_search_ann(
     drops the query_id column — one fusion/rank/filter code path to
     maintain, and scalar/batch parity holds by construction. The query
     text tokenizes with the index's OWN normalizer (_norm_tokens), so a
-    punctuated query matches normalized postings tokens the raw-split
-    lexical probe could never hit.
+    punctuated query matches normalized postings tokens.
 
     Scale: both legs are the already-scale-shaped plans (pruned postings
     probe; cell-pruned ADC over a cid-bucketed index). The fusion itself
@@ -735,10 +857,9 @@ def hybrid_search_ann(
     top-k ordering equals ``lexical_search``'s; with an empty lexical leg
     it equals the ANN ranking.
     """
-    spark = docs.sparkSession
-    qdf = spark.createDataFrame(
+    qdf = docs.sparkSession.createDataFrame(
         [(-1, query, [float(x) for x in query_vec])],
-        f"query_id long, query_text string, query_vec array<double>",
+        "query_id long, query_text string, query_vec array<double>",
     )
     return hybrid_search_ann_many(
         docs,
@@ -776,15 +897,14 @@ def bm25_search_many(
     shape when queries are themselves data (offline eval sets, query-log
     replays, RAG batch retrieval) rather than one interactive string.
 
-    Same scoring as ``bm25_search`` (identical idf/tf expressions, so a
-    single-query batch reproduces it bit-for-bit — pinned by test), but
-    the term pruning is a JOIN against the distinct (query, token) set
-    instead of a literal IN list: queries tokenize with the index's own
-    normalizer, the term set broadcasts onto the postings scan (a runtime
-    broadcast-hash filter — the join IS the pushdown when the term list
-    is data), df/idf stats broadcast the same way, and ONE window ranks
-    all queries at once (partitioned by query id — no per-query job
-    loop; |Q| queries cost one plan, not |Q| plans).
+    ``bm25_search`` runs the same kernel over a literal one-query probe.
+    The term pruning is a JOIN against the distinct (query, token) set:
+    queries tokenize with the index's own normalizer, the term set
+    broadcasts onto the postings scan (a runtime broadcast-hash filter —
+    the join IS the pushdown when the term list is data), df/idf stats
+    broadcast the same way, and ONE window ranks all queries at once
+    (partitioned by query id — no per-query job loop; |Q| queries cost
+    one plan, not |Q| plans).
 
     Scale: postings rows fan out once per MATCHING (query, term) — the
     same df-driven fan-out as single-query BM25, summed over the batch.
@@ -793,47 +913,13 @@ def bm25_search_many(
     huge batch call for per-term dedup upstream (the distinct() here
     collapses duplicate terms within AND across queries into one probe
     row per (query, token))."""
-    qterms = queries.select(
-        F.col(query_id), F.explode(_norm_tokens(F.col(text_col))).alias("token")
-    ).distinct()
-    if doclens is not None:
-        lens = doclens.filter(F.col("dl") > 0)
-        doclen = lens.select("id", F.col("dl").cast("double").alias("dl"))
-        avgdl = lens.agg(
-            (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias("avgdl")
-        )
-    else:
-        doclen = postings.groupBy("id").agg(F.sum("tf").cast("double").alias("dl"))
-        avgdl = postings.agg(
-            (F.sum("tf").cast("double") / F.countDistinct("id").cast("double")).alias("avgdl")
-        )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    qterms = _query_terms(queries, query_id, text_col)
+    lengths = _bm25_lengths(postings, doclens)
+    qstats = _query_stats(stats, qterms, "df")
+    hits = _bm25_scores(
+        postings.join(broadcast(qterms), "token"), qstats, lengths, n_docs, k1, b, query_id
     )
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + F.lit(k1) * (1.0 - b + F.lit(b) * F.col("dl") / F.col("avgdl"))
-    )
-    # stats is vocabulary-sized — unbounded at corpus scale — so prune it
-    # to the batch's term set (left_semi against the distinct tokens)
-    # BEFORE broadcasting, exactly like the scalar form's literal IN list
-    qstats = stats.select("token", "df").join(
-        qterms.select("token").distinct(), "token", "left_semi"
-    )
-    hits = (
-        postings.join(broadcast(qterms), "token")
-        .join(broadcast(qstats), "token")
-        .join(doclen, "id")
-        .crossJoin(broadcast(avgdl))
-        .groupBy(query_id, "id")
-        .agg(F.round(F.sum(idf * tf_part), 6).alias("score"))
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc("id"))
-    return (
-        hits.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _rank_within(hits, query_id, "score", "id", k).drop("rank")
 
 
 def build_term_bounds(
@@ -853,27 +939,17 @@ def build_term_bounds(
     is vocabulary-sized (broadcastable after a query-term semi-join,
     like stats)."""
     lens = doclens.filter(F.col("dl") > 0)
-    avgdl = lens.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias("avgdl")
-    )
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1) * (1.0 - b + F.lit(b) * F.col("dl").cast("double") / F.col("avgdl"))
-    )
     per_doc = (
         postings.join(lens, "id")
-        .crossJoin(broadcast(avgdl))
+        .crossJoin(broadcast(_avgdl(lens)))
         .groupBy("token")
-        .agg(F.max(tf_part).alias("max_part"), F.count(F.lit(1)).alias("df"))
+        .agg(F.max(_tf_part(k1, b)).alias("max_part"), F.count(F.lit(1)).alias("df"))
     )
     # df and max_part ride along with the folded ub so the CDC maintainer
     # (apply_changes_bounds) can re-derive idf exactly under n_docs drift
     # and max-merge / rescale max_part without a postings scan; ub-only
     # consumers (bm25_search_many_maxscore) are unchanged.
-    return per_doc.select("token", "df", "max_part", (idf * F.col("max_part")).alias("ub"))
+    return per_doc.select("token", "df", "max_part", (_idf(n_docs) * F.col("max_part")).alias("ub"))
 
 
 def build_term_frontier(postings: DataFrame, doclens: DataFrame) -> DataFrame:
@@ -925,25 +1001,14 @@ def bounds_from_frontier(
     rebuild bit-for-bit while costing vocabulary-scale work. ``stats``
     supplies (token, df); avgdl comes from ``doclens`` exactly as the
     rebuild computes it (integer dl sum -> order-independent)."""
-    lens = doclens.filter(F.col("dl") > 0)
-    avgdl = lens.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias("avgdl")
-    )
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1) * (1.0 - b + F.lit(b) * F.col("dl").cast("double") / F.col("avgdl"))
-    )
     per_tok = (
-        frontier.crossJoin(broadcast(avgdl))
+        frontier.crossJoin(broadcast(_avgdl(doclens.filter(F.col("dl") > 0))))
         .groupBy("token")
-        .agg(F.max(tf_part).alias("max_part"))
+        .agg(F.max(_tf_part(k1, b)).alias("max_part"))
     )
     return (
         per_tok.join(stats.select("token", "df"), "token")
-        .select("token", "df", "max_part", (idf * F.col("max_part")).alias("ub"))
+        .select("token", "df", "max_part", (_idf(n_docs) * F.col("max_part")).alias("ub"))
     )
 
 
@@ -1025,24 +1090,9 @@ def bm25_search_many_maxscore(
     At 100 TB this composes with the persisted layout: candidate
     generation is a bucket-pruned scan of the essential terms' buckets,
     and ``bounds`` rides the same semi-join + broadcast as stats."""
-    qterms = queries.select(
-        F.col(query_id), F.explode(_norm_tokens(F.col(text_col))).alias("token")
-    ).distinct()
-
-    lens = doclens.filter(F.col("dl") > 0)
-    doclen = lens.select("id", F.col("dl").cast("double").alias("dl"))
-    avgdl = lens.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias("avgdl")
-    )
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + F.lit(k1) * (1.0 - b + F.lit(b) * F.col("dl") / F.col("avgdl"))
-    )
-    qstats = stats.select("token", "df").join(
-        qterms.select("token").distinct(), "token", "left_semi"
-    )
+    qterms = _query_terms(queries, query_id, text_col)
+    lengths = _bm25_lengths(postings, doclens)
+    qstats = _query_stats(stats, qterms, "df")
 
     def exact_scores(cand):
         """Exact per-(query, doc) BM25 over ALL query terms, probe rows
@@ -1052,16 +1102,10 @@ def bm25_search_many_maxscore(
         matched-doc set (corpus-scale — an executor-OOM hazard if forced
         onto every executor); left to the planner/AQE it broadcasts when
         small and shuffles when not, same as plain bm25_search_many."""
-        probe = (
-            postings.join(broadcast(qterms), "token")
-            .join(cand, [query_id, "id"], "left_semi")
-            .join(broadcast(qstats), "token")
-            .join(doclen, "id")
-            .crossJoin(broadcast(avgdl))
+        probe = postings.join(broadcast(qterms), "token").join(
+            cand, [query_id, "id"], "left_semi"
         )
-        return probe.groupBy(query_id, "id").agg(
-            F.round(F.sum(idf * tf_part), 6).alias("score")
-        )
+        return _bm25_scores(probe, qstats, lengths, n_docs, k1, b, query_id)
 
     # ---- pass 1: floor from the top-bound term's postings ----
     qbounds = qterms.join(broadcast(bounds), "token")  # terms absent from the
@@ -1112,12 +1156,7 @@ def bm25_search_many_maxscore(
         _explain_out["essential"] = essential
         _explain_out["cand1"] = cand1
         _explain_out["cand2"] = cand2
-    hits = exact_scores(cand2)
-    return (
-        hits.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _rank_within(exact_scores(cand2), query_id, "score", "id", k).drop("rank")
 
 
 def materialize_search_index(
@@ -1202,15 +1241,11 @@ def materialize_search_index(
         json.dump({"n_docs": n, "n_buckets": n_buckets}, f)
 
 
-#: Session-scoped memo of opened index layouts. A serving tier holds
-#: its index frames open for the process lifetime — reopening three
-#: parquet readers per query costs ~0.3 s of pure driver/py4j plan
-#: construction (profiled r15: the batch_search_suite row spent more
-#: wall on spark.read.parquet round-trips than on any executor stage).
-#: Keyed by (Spark application, real path, _meta.json mtime_ns) so a
-#: rebuilt layout — tests rewrite them in place under tmp dirs — is
-#: reopened, never served stale. DataFrames are immutable plans, so
-#: sharing them across calls in one session is safe.
+#: Session-scoped memo of opened index layouts (``_memo_layout``):
+#: reopening three parquet readers per query costs ~0.3 s of pure
+#: driver/py4j plan construction (profiled r15: the batch_search_suite
+#: row spent more wall on spark.read.parquet round-trips than on any
+#: executor stage).
 _INDEX_CACHE: dict = {}
 
 
@@ -1225,32 +1260,20 @@ def load_search_index(spark, path: str):
     import json
     import os
 
-    meta_path = os.path.join(path, "_meta.json")
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(path),
-        os.stat(meta_path).st_mtime_ns,
-    )
-    hit = _INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with open(meta_path) as f:
-        meta = json.load(f)
-    out = (
-        spark.read.parquet(os.path.join(path, "postings")),
-        spark.read.parquet(os.path.join(path, "stats")),
-        # __ib is maintenance-internal (refresh_search_index's id-bucket
-        # partitioning); scorers see exactly (id, dl)
-        spark.read.parquet(os.path.join(path, "doclens")).drop("__ib"),
-        int(meta["n_docs"]),
-        int(meta["n_buckets"]),
-    )
-    if len(_INDEX_CACHE) >= 8:  # a serving tier holds a handful of
-        # layouts (per-corpus + tx generations); bound the memo so
-        # test churn through tmp-dir layouts can't grow it unbounded
-        _INDEX_CACHE.pop(next(iter(_INDEX_CACHE)))
-    _INDEX_CACHE[key] = out
-    return out
+    def build():
+        with open(os.path.join(path, "_meta.json")) as f:
+            meta = json.load(f)
+        return (
+            spark.read.parquet(os.path.join(path, "postings")),
+            spark.read.parquet(os.path.join(path, "stats")),
+            # __ib is maintenance-internal (refresh_search_index's id-bucket
+            # partitioning); scorers see exactly (id, dl)
+            spark.read.parquet(os.path.join(path, "doclens")).drop("__ib"),
+            int(meta["n_docs"]),
+            int(meta["n_buckets"]),
+        )
+
+    return _memo_layout(_INDEX_CACHE, spark, path, build)
 
 
 def prune_postings_probe(postings: DataFrame, terms: list[str], n_buckets: int) -> DataFrame:
@@ -1318,65 +1341,49 @@ def hybrid_search_many(
     the same POST-candidate semantics as ``hybrid_search`` (see there —
     the true-hybrid ``hybrid_search_ann_many`` filters at retrieval).
 
-    Single-query parity with ``hybrid_search`` pinned by test.
+    ``hybrid_search`` is its one-query call.
     """
-    base = docs
-    for attr, val in (attr_filters or {}).items():
-        if isinstance(val, (list, tuple)):
-            base = base.filter(F.arrays_overlap(F.col(attr), F.array(*[F.lit(v) for v in val])))
-        else:
-            base = base.filter(F.col(attr) == F.lit(val))
-
-    pool = max(k * 10, 100)
-    qterms = queries.select(
-        F.col(query_id), F.explode(_norm_tokens(F.col(text_col))).alias("token")
-    ).distinct()
-    # prune the vocabulary-sized stats to the batch's terms before the
-    # broadcast (see bm25_search_many — same OOM guard)
-    qstats = stats.select("token", "idf").join(
-        qterms.select("token").distinct(), "token", "left_semi"
-    )
-    lex = (
-        postings.join(broadcast(qterms), "token")
-        .join(broadcast(qstats), "token")
-        .groupBy(query_id, "id")
-        .agg(F.round(F.sum(F.col("tf") * F.col("idf")), 6).alias("lex_score"))
-    )
-    wl = Window.partitionBy(query_id).orderBy(F.desc("lex_score"), F.asc("id"))
-    cand = (
-        lex.withColumn("__r", F.row_number().over(wl))
-        .filter(F.col("__r") <= pool)
-        .drop("__r")
-    )
-
     from ..functions.vectors import cosine
 
+    cand = _tfidf_ranked(
+        *_frame_probe(postings, stats, queries, "idf", query_id, text_col),
+        max(k * 10, 100), query_id,
+    )
+    sem = F.when(
+        F.col(qvec_col).isNotNull(), cosine(F.col(vec_col), F.col(qvec_col))
+    ).otherwise(F.lit(0.0))
     qv = queries.select(F.col(query_id), F.col(qvec_col))
-    out = (
-        base.join(cand, base[id_col] == cand["id"], "inner")
-        .drop(cand["id"])
-        .join(broadcast(qv), query_id)
-        .withColumn(
-            "sem_score",
-            F.when(
-                F.col(qvec_col).isNotNull(), cosine(F.col(vec_col), F.col(qvec_col))
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "score",
-            F.round(
-                F.lit(alpha) * F.col("lex_score")
-                + F.lit(1.0 - alpha) * F.col("sem_score"),
-                6,
-            ),
-        )
+    return _blend_ranked(
+        docs, attr_filters, cand, sem, alpha, k, query_id, id_col, qv
+    ).drop(qvec_col)
+
+
+def _blend_ranked(
+    docs: DataFrame,
+    attr_filters: dict[str, object] | None,
+    cand: DataFrame,
+    sem: Column,
+    alpha: float,
+    k: int,
+    query_id: str,
+    id_col: str,
+    qv: DataFrame | None = None,
+) -> DataFrame:
+    """The hybrid blend: the lexical candidates ``cand`` (``_tfidf_ranked``
+    rows) joined to the attribute-filtered docs (and, for a batch, to the
+    broadcast query vectors ``qv``), scored alpha * lex_score +
+    (1-alpha) * ``sem``, top k per query."""
+    base = _filter_attrs(docs, attr_filters)
+    cand = cand.select(query_id, "id", F.col("score").alias("lex_score"))
+    out = base.join(cand, base[id_col] == cand["id"], "inner").drop(cand["id"])
+    if qv is not None:
+        out = out.join(broadcast(qv), query_id)
+    out = out.withColumn("sem_score", sem).withColumn(
+        "score",
+        F.round(F.lit(alpha) * F.col("lex_score") + F.lit(1.0 - alpha) * F.col("sem_score"), 6),
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank", qvec_col)
-    )
+    return _rank_within(out, query_id, "score", id_col, k).drop("rank")
+
 
 def hybrid_search_ann_many(
     docs: DataFrame,
@@ -1443,27 +1450,12 @@ def hybrid_search_ann_many(
 
     pool = pool if pool is not None else max(k * 10, 100)
 
-    base = docs
-    for attr, val in (attr_filters or {}).items():
-        if isinstance(val, (list, tuple)):
-            base = base.filter(F.arrays_overlap(F.col(attr), F.array(*[F.lit(v) for v in val])))
-        else:
-            base = base.filter(F.col(attr) == F.lit(val))
-
-    qterms = queries.select(
-        F.col(query_id), F.explode(_norm_tokens(F.col(text_col))).alias("token")
-    ).distinct()
-    # stats is vocabulary-sized — prune to the batch's terms BEFORE the
-    # broadcast (the bm25_search_many OOM guard)
-    qstats = stats.select("token", "idf").join(
-        qterms.select("token").distinct(), "token", "left_semi"
-    )
-    probe = postings.join(broadcast(qterms), "token")
+    base = _filter_attrs(docs, attr_filters)
+    probe, qstats = _frame_probe(postings, stats, queries, "idf", query_id, text_col)
     ann_index = index
     ann_provider = index_for_cids
     if attr_filters:
-        allowed = base.select(F.col(id_col).alias("id"))
-        probe = probe.join(allowed, "id", "left_semi")
+        probe = probe.join(base.select(F.col(id_col).alias("id")), "id", "left_semi")
         if index_for_cids is not None:
             # the provider's pruned read still gets the same retrieval-
             # time id restriction the eager frame would
@@ -1474,16 +1466,8 @@ def hybrid_search_ann_many(
             ann_index = index.join(
                 base.select(F.col(id_col)), id_col, "left_semi"
             )
-    lex = (
-        probe.join(broadcast(qstats), "token")
-        .groupBy(query_id, "id")
-        .agg(F.round(F.sum(F.col("tf") * F.col("idf")), 6).alias("score"))
-    )
-    wl = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc("id"))
-    lexr = (
-        lex.withColumn("lex_rank", F.row_number().over(wl))
-        .filter(F.col("lex_rank") <= pool)
-        .select(query_id, F.col("id").alias(id_col), "lex_rank")
+    lexr = _tfidf_ranked(probe, qstats, pool, query_id, "lex_rank").select(
+        query_id, F.col("id").alias(id_col), "lex_rank"
     )
 
     qvecs = queries.select(F.col(query_id), F.col(qvec_col).alias(vec_col))
@@ -1526,11 +1510,8 @@ def hybrid_search_ann_many(
     )
 
     out = fused.join(base.select(id_col), id_col, "inner")
-
-    w = Window.partitionBy(query_id).orderBy(F.desc("__rrf"), F.asc(id_col))
     return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        _rank_within(out, query_id, "__rrf", id_col, k)
         .select(
             query_id,
             id_col,

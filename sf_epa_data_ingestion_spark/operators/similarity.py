@@ -33,7 +33,7 @@ import math
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import broadcast, pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 
@@ -48,6 +48,7 @@ from ..functions.refhash import (
 )
 from ..functions.vectors import to_double_array
 from ..partitioning import spread
+from .search import _memo_layout, _rank_within
 
 # Fixed-point resolution for IVF's Lloyd sums: unit coordinates floored
 # at 2^-30 before the per-cell integer aggregate (see ivf_topk docstring).
@@ -76,21 +77,64 @@ def _with_vec_norm(df: DataFrame, vec_col: str, out_vec: str, out_norm: str) -> 
     return df.select(
         "*",
         to_double_array(F.col(vec_col)).alias(out_vec),
-        let(
-            to_double_array(F.col(vec_col)),
-            lambda v: F.sqrt(
-                F.aggregate(
-                    F.zip_with(v, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-                )
-            ),
-        ).alias(out_norm),
+        let(to_double_array(F.col(vec_col)), lambda v: F.sqrt(_dot(v, v))).alias(out_norm),
     ).drop(vec_col)
+
+
+def _dot(a: Column, b: Column) -> Column:
+    """Sequential dot-product fold — the one float-sum order every cosine
+    in this module (and its DuckDB oracles' list_dot_product) shares."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
 def _pair_cosine(va: Column, vb: Column, na: Column, nb: Column) -> Column:
     """cosine from precomputed double arrays + norms (attribute reads)."""
-    d = F.aggregate(F.zip_with(va, vb, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    return d / F.nullif(na * nb, F.lit(0.0))
+    return _dot(va, vb) / F.nullif(na * nb, F.lit(0.0))
+
+
+def _rank_topk(scored: DataFrame, query_id: str, corpus_id: str, score: str, k: int) -> DataFrame:
+    """Per-query top-k by (score desc, corpus id asc) — the searchers'
+    ``_rank_within`` — as (query_id, corpus_id, score, rank long)."""
+    return _rank_within(scored, query_id, score, corpus_id, k).select(
+        query_id, corpus_id, score, F.col("rank").cast("long").alias("rank")
+    )
+
+
+def _no_hits(spark, query_id: str, corpus_id: str, score: str = "cosine_sim double") -> DataFrame:
+    """The empty top-k frame a tier returns when it has no model or no
+    valid query."""
+    return spark.createDataFrame([], f"{query_id} long, {corpus_id} long, {score}, rank long")
+
+
+def _dense(vecs: pd.Series, dim: int) -> np.ndarray:
+    """(N, dim) float64 batch matrix for the Arrow UDFs. NULL vectors and
+    vectors whose length differs from ``dim`` stay zero rows — the
+    expression specs' zip_with NULL-pads any length mismatch and nulls
+    the whole dot, so a partial dot over the overlapping prefix would
+    disagree with them."""
+    M = np.zeros((len(vecs), dim))
+    for i, v in enumerate(vecs):
+        if v is not None and len(v) == dim:
+            M[i] = np.asarray(v, dtype=np.float64)
+    return M
+
+
+def _stack_valid(series, dim: int):
+    """Zeroed (n, dim) matrix + validity mask for SemDeDup's pair and
+    keep-rule dots: None, wrong-length and NaN-carrying vectors (a
+    zero-norm vector's NULL elements) are masked out rather than raised
+    on, so a bad vector never fails a cluster or a streaming
+    micro-batch."""
+    n = len(series)
+    M = np.zeros((n, dim), dtype=np.float64)
+    valid = np.zeros(n, dtype=bool)
+    for r, u in enumerate(series):
+        if u is not None and len(u) == dim:
+            row = np.asarray(u, dtype=np.float64)
+            if not np.isnan(row).any():
+                M[r] = row
+                valid[r] = True
+    return M, valid
 
 
 def brute_force_topk(
@@ -124,12 +168,7 @@ def brute_force_topk(
             ).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine_sim"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine_sim", F.col("rank").cast("long").alias("rank"))
-    )
+    return _rank_topk(scored, query_id, corpus_id, "cosine_sim", k)
 
 
 def _hyperplane(table: int, bit: int, dim: int) -> list[float]:
@@ -152,12 +191,7 @@ def _signature_of(v: Column, table: int, bits: int, dim: int) -> Column:
     a cheap reference (lambda variable / attribute) — it is read bits times."""
     sig = F.lit(0).cast("long")
     for b in range(bits):
-        plane = F.array(*[F.lit(x) for x in _hyperplane(table, b, dim)])
-        d = F.aggregate(
-            F.zip_with(v, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        d = _dot(v, F.array(*[F.lit(x) for x in _hyperplane(table, b, dim)]))
         sig = sig + F.when(d > 0, F.lit(1 << b)).otherwise(F.lit(0)).cast("long")
     return sig
 
@@ -189,9 +223,7 @@ def _signatures_pd(n_tables: int, bits: int, dim: int):
     and the per-row interpreted folds become a batched BLAS call.
     NULL vectors and vectors whose length differs from ``dim`` stay zero
     rows (every dot 0, no bit set, signature 0 in every table) — the
-    expression's zip_with NULL-pads any length mismatch, nulling every
-    dot, so it also emits the all-zero signature; a partial dot over the
-    overlapping prefix would bucket ragged vectors differently."""
+    expression emits the all-zero signature for them too (``_dense``)."""
     H = np.array(
         [_hyperplane(t, b, dim) for t in range(n_tables) for b in range(bits)]
     )  # (T*B, D)
@@ -199,11 +231,7 @@ def _signatures_pd(n_tables: int, bits: int, dim: int):
 
     @pandas_udf(ArrayType(LongType()))
     def sig(vecs: pd.Series) -> pd.Series:
-        M = np.zeros((len(vecs), dim))
-        for i, v in enumerate(vecs):
-            if v is not None and len(v) == dim:
-                M[i] = np.asarray(v, dtype=np.float64)
-        dots = M @ H.T  # (N, T*B)
+        dots = _dense(vecs, dim) @ H.T  # (N, T*B)
         bitm = (dots > 0).reshape(len(vecs), n_tables, bits)
         sigs = (bitm * W).sum(axis=2, dtype=np.int64)
         return pd.Series([row.tolist() for row in sigs])
@@ -254,12 +282,7 @@ def lsh_topk(
             _pair_cosine(F.col("__qvec"), F.col("__cvec"), F.col("__qn"), F.col("__cn")), 6
         ).alias("cosine_sim"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine_sim"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine_sim", F.col("rank").cast("long").alias("rank"))
-    )
+    return _rank_topk(scored, query_id, corpus_id, "cosine_sim", k)
 
 
 def _unit_vec(vec: Column, norm: Column) -> Column:
@@ -275,14 +298,7 @@ def _unit_vec(vec: Column, norm: Column) -> Column:
 def _centroid_dots(u: Column, centroids: list[list[float]]) -> list[Column]:
     """dot(u, c_j) for every centroid, NULL-safe (-2.0 sentinel sorts below
     any real cosine)."""
-    out = []
-    for c in centroids:
-        plane = F.array(*[F.lit(x) for x in c])
-        d = F.aggregate(
-            F.zip_with(u, plane, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-        out.append(F.coalesce(d, F.lit(-2.0)))
-    return out
+    return [F.coalesce(_dot(u, F.array(*[F.lit(x) for x in c])), F.lit(-2.0)) for c in centroids]
 
 
 def _nearest_centroid(u: Column, centroids: list[list[float]]) -> Column:
@@ -320,15 +336,28 @@ def _centroid_topn_pd(centroids: list[list[float]], n: int):
 
     @pandas_udf(ArrayType(IntegerType()))
     def probe(vecs: pd.Series) -> pd.Series:
-        M = np.zeros((len(vecs), dim))
-        for i, v in enumerate(vecs):
-            if v is not None and len(v) == dim:
-                M[i] = np.asarray(v, dtype=np.float64)
-        dots = M @ C.T  # (N, K)
-        order = np.argsort(-dots, axis=1, kind="stable")[:, :n]
+        order = np.argsort(-(_dense(vecs, dim) @ C.T), axis=1, kind="stable")[:, :n]
         return pd.Series([row.astype("int32").tolist() for row in order])
 
     return probe
+
+
+def _probe_cells(qu, C: np.ndarray, n: int) -> np.ndarray:
+    """Driver-side mirror of ``_centroid_topn_pd`` for one query vector:
+    its n nearest cells by stable argsort. A NULL or ragged vector is a
+    zero row; NULL elements (a zero-norm vector's __u is [NULL]*dim, not
+    a NULL array) map to nan through np.asarray — exactly what the batch
+    matmul sees, so the all-nan dots pick the same [0..n-1]."""
+    v = np.zeros(C.shape[1])
+    if qu is not None and len(qu) == C.shape[1]:
+        v = np.asarray(qu, dtype=np.float64)
+    return np.argsort(-(v @ C.T), kind="stable")[:n]
+
+
+def _residual(v, C: np.ndarray) -> list[float]:
+    """``v - C[cell]`` for v's nearest cell (``_probe_cells`` n=1)."""
+    a = np.asarray(v, dtype=np.float64)
+    return (a - C[int(np.argsort(-(a @ C.T), kind="stable")[0])]).tolist()
 
 
 def _residual_pd(centroids: list[list[float]], dim: int):
@@ -342,84 +371,79 @@ def _residual_pd(centroids: list[list[float]], dim: int):
 
     @pandas_udf(ArrayType(DoubleType()))
     def resid(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            if v is None or len(v) != dim:
-                out.append(None)
-                continue
-            a = np.asarray(v, dtype=np.float64)
-            cid = int(np.argsort(-(a @ C.T), kind="stable")[0])
-            out.append((a - C[cid]).tolist())
-        return pd.Series(out)
+        return pd.Series(
+            [None if v is None or len(v) != dim else _residual(v, C) for v in vecs]
+        )
 
     return resid
 
 
-def _ivf_prep(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, __u) unit-vector rows, projected BELOW the exchange barrier:
-    the spread shuffle materializes __u, so downstream reads (centroid
-    dots per row, repeated across Lloyd jobs) are attribute reads, never
-    re-evaluations of the normalize expression."""
+def _unit_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, __u, __d): each row's unit vector and raw length."""
     dn = _with_vec_norm(df.select(id_col, vec_col), vec_col, "__v", "__n")
-    u = dn.select(id_col, _unit_vec(F.col("__v"), F.col("__n")).alias("__u"))
-    return spread(u, F.col(id_col))
-
-
-def train_ivf(
-    corpus: DataFrame,
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    iters: int = 2,
-    dim: int | None = None,
-    _prepped: DataFrame | None = None,
-) -> list[list[float]]:
-    """Train the IVF coarse quantizer only: the seeds + fixed-point Lloyd
-    block of ``ivf_topk`` (which delegates here), returned as the plain
-    centroid list — the frozen model ``encode_ivf``/``ivf_search`` and
-    the persisted layout (``materialize_ivf_index``) apply without
-    retraining. Deterministic across any partitioning: hash-ordered
-    seeds, stable-argsort assignment, int64 fixed-point cell sums (see
-    ivf_topk's docstring for the full argument)."""
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
-    own = _prepped is None
-    c = _ivf_prep(corpus, corpus_id, vec_col).persist() if own else _prepped
-
-    # seed scan skips invalid vectors (NULL / wrong length / NULL
-    # elements): they can never train a centroid — normalize() has no
-    # value for them — and a corpus of ONLY invalid vectors is the
-    # no-model case. Valid-vector corpora (every graded table) see the
-    # identical seed set as before.
-    valid = (
-        F.col(vec_col).isNotNull()
-        & (F.size(F.col(vec_col)) == dim)
-        & ~F.exists(F.col(vec_col), lambda x: x.isNull())
+    return dn.select(
+        id_col,
+        _unit_vec(F.col("__v"), F.col("__n")).alias("__u"),
+        F.size("__v").alias("__d"),
     )
-    seeds = (
-        corpus.select(corpus_id, vec_col)
-        .filter(valid)
-        .orderBy(F.xxhash64(F.col(corpus_id).cast("string")), F.col(corpus_id))
-        .limit(n_centroids)
+
+
+def _ivf_prep(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """IVF prep: (id, __u) for EVERY row — NULL, ragged and zero-norm
+    vectors included, so each still lands in a cell. Projected BELOW the
+    exchange barrier: the spread shuffle materializes __u, so downstream
+    reads (centroid dots per row, repeated across Lloyd jobs) are
+    attribute reads, never re-evaluations of the normalize expression."""
+    return spread(_unit_rows(df, id_col, vec_col).drop("__d"), F.col(id_col))
+
+
+def _ivfpq_prep(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
+    """IVF-PQ prep: (id, __u) with NULL / ragged / zero-norm rows DROPPED
+    from training, encoding and results (zero norm surfaces as NULL
+    elements from x/nullif(0), so element 0 is probed too), spread for
+    parallel downstream UDFs."""
+    u = _unit_rows(df, id_col, vec_col)
+    return spread(
+        u.filter(
+            F.col("__u").isNotNull()
+            & (F.col("__d") == dim)
+            & F.col("__u")[0].isNotNull()
+        ).drop("__d"),
+        F.col(id_col),
+    )
+
+
+def _normalize(v: list[float]) -> list[float]:
+    n = math.sqrt(sum(x * x for x in v))
+    return [x / n for x in v] if n > 0 else list(v)
+
+
+def _hash_seeds(df: DataFrame, id_col: str, n: int) -> list:
+    """The n rows with the smallest (xxhash64(string id), id): an
+    engine-stable seed choice, independent of partitioning."""
+    return (
+        df.orderBy(F.xxhash64(F.col(id_col).cast("string")), F.col(id_col))
+        .limit(n)
         .collect()
     )
 
-    def normalize(v: list[float]) -> list[float]:
-        n = math.sqrt(sum(x * x for x in v))
-        return [x / n for x in v] if n > 0 else list(v)
 
-    if not seeds:  # empty/all-NULL corpus: no model (train_ivfpq's contract)
-        if own:
-            c.unpersist()
-        return None
-    cents = [normalize([float(x) for x in row[1]]) for row in seeds]
+def _train_coarse(
+    c: DataFrame, seed_vecs: list, dim: int, iters: int
+) -> list[list[float]]:
+    """The coarse quantizer both IVF tiers train: one normalized centroid
+    per seed vector, then ``iters`` fixed-point Lloyd passes over the
+    prepped (id, __u) frame ``c`` (each tier keeps its own prep and seed
+    rule). A corpus with fewer seeds than n_centroids trains that many
+    cells.
 
-    # Assignment/probing runs through the Arrow-batched matmul UDF
-    # (_centroid_topn_pd): the literal-centroid expression alternative
-    # (_nearest_centroid, kept as the pinned spec) is rebuilt with fresh
-    # literals every Lloyd pass, paying driver analysis + janino
-    # compilation that dwarfs the executor work (measured 5.2s -> ~2s for
-    # the full ann_ivf query at sf0.1).
+    Assignment runs through the Arrow-batched matmul UDF
+    (_centroid_topn_pd): the literal-centroid expression alternative
+    (_nearest_centroid, kept as the pinned spec) is rebuilt with fresh
+    literals every Lloyd pass, paying driver analysis + janino
+    compilation that dwarfs the executor work (measured 5.2s -> ~2s for
+    the full ann_ivf query at sf0.1)."""
+    cents = [_normalize([float(x) for x in v]) for v in seed_vecs]
     for _ in range(iters):
         nearest = _centroid_topn_pd(cents, 1)
         sums = (
@@ -427,7 +451,7 @@ def train_ivf(
             .select("cid", F.posexplode("__u").alias("pos", "x"))
             # fixed-point: floor(x * 2^30) as long — order-independent
             # integer sums make the trained centroids reproducible under
-            # ANY partitioning/reduce order (see docstring)
+            # ANY partitioning/reduce order (see ivf_topk's docstring)
             .groupBy("cid", "pos")
             .agg(
                 F.sum(F.floor(F.col("x") * F.lit(float(IVF_SCALE))).cast("long")).alias("s"),
@@ -441,10 +465,46 @@ def train_ivf(
                 row["s"] / IVF_SCALE / row["n"]
             )
         # empty cells keep their previous centroid
-        cents = [normalize(means.get(j, cents[j])) for j in range(n_centroids)]
-    if own:
-        c.unpersist()
+        cents = [_normalize(means.get(j, cents[j])) for j in range(len(cents))]
     return cents
+
+
+def train_ivf(
+    corpus: DataFrame,
+    corpus_id: str = "vec_id",
+    vec_col: str = "embedding",
+    n_centroids: int = 16,
+    iters: int = 2,
+    dim: int | None = None,
+    _prepped: DataFrame | None = None,
+) -> list[list[float]]:
+    """Train the IVF coarse quantizer only, returned as the plain
+    centroid list (None on an empty/all-invalid corpus) — the frozen
+    model ``encode_ivf``/``ivf_search`` and the persisted layout
+    (``materialize_ivf_index``) apply without retraining. Deterministic
+    across any partitioning: hash-ordered seeds, stable-argsort
+    assignment, int64 fixed-point cell sums (see ivf_topk's docstring
+    for the full argument)."""
+    if dim is None:
+        dim = _infer_dim(corpus, vec_col)
+    # seed scan skips invalid vectors (NULL / wrong length / NULL
+    # elements): they can never train a centroid — normalize() has no
+    # value for them — and a corpus of ONLY invalid vectors is the
+    # no-model case.
+    valid = (
+        F.col(vec_col).isNotNull()
+        & (F.size(F.col(vec_col)) == dim)
+        & ~F.exists(F.col(vec_col), lambda x: x.isNull())
+    )
+    seeds = _hash_seeds(corpus.select(corpus_id, vec_col).filter(valid), corpus_id, n_centroids)
+    if not seeds:
+        return None
+    c = _ivf_prep(corpus, corpus_id, vec_col).persist() if _prepped is None else _prepped
+    try:
+        return _train_coarse(c, [row[1] for row in seeds], dim, iters)
+    finally:
+        if _prepped is None:
+            c.unpersist()
 
 
 def ivf_topk(
@@ -461,7 +521,10 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF (inverted-file) approximate cosine top-k: spherical k-means
     partitions the corpus into ``n_centroids`` cells; each query scores only
-    the ``n_probe`` cells nearest its own vector.
+    the ``n_probe`` cells nearest its own vector. The in-query chain
+    ``train_ivf`` -> ``encode_ivf`` -> ``ivf_search``, so serving from a
+    persisted layout is the same code path (and, as in ivfpq_topk, the
+    query set is probed driver-side: keep it interactive-small).
 
     Everything is deterministic — INCLUDING across partitionings: seeds
     are the ``n_centroids`` corpus rows with the smallest ``xxhash64(id)``
@@ -487,71 +550,25 @@ def ivf_topk(
     ~n_probe/n_centroids of it. At 100 TB the assignment (id, cid) is
     written once as a bucketed table and reused across query batches;
     recall/compute trades via ``n_probe``.
+
+    Cache lifecycle: the returned frame is lazy and REFERENCES the
+    persisted prepped corpus (training and the index both read it), the
+    same contract as ivfpq_topk.
     """
     if dim is None:
         dim = _infer_dim(corpus, vec_col)
-
     # persist: the prepped corpus (id, unit-vec) is consumed iters+1 times
     # (every Lloyd pass + the final assignment); without it each pass
-    # re-runs scan -> normalize -> spread. This is also the 100 TB
-    # posture: IVF training materializes the normalized corpus once and
-    # shares it across iterations (then writes the assignment for reuse
-    # across query batches, per the scale notes above).
+    # re-runs scan -> normalize -> spread.
     c = _ivf_prep(corpus, corpus_id, vec_col).persist()
-    cents = train_ivf(
-        corpus,
-        corpus_id=corpus_id,
-        vec_col=vec_col,
-        n_centroids=n_centroids,
-        iters=iters,
-        dim=dim,
-        _prepped=c,
-    )
+    cents = train_ivf(corpus, corpus_id, vec_col, n_centroids, iters, dim, _prepped=c)
     if cents is None:  # empty/all-NULL corpus
         c.unpersist()
-        return corpus.sparkSession.createDataFrame(
-            [], f"{query_id} long, {corpus_id} long, cosine_sim double, rank long"
-        )
-
-    # cid must be a GENERATOR output, not a projection over the UDF: when
-    # queries share lineage with the corpus (self-search), constraint
-    # inference synthesizes isnotnull/equality filters from the join key,
-    # and a filter containing a PythonUDF cannot be evaluated by the
-    # interpreted predicate evaluator. explode() makes cid a plain
-    # attribute, so inferred filters reference the attribute only.
-    nearest = _centroid_topn_pd(cents, 1)
-    assigned = c.select(
-        corpus_id, "__u", F.explode(nearest(F.col("__u"))).alias("cid")
-    )
-
-    q = _ivf_prep(queries, query_id, vec_col)
-    q_probe = q.select(
-        query_id,
-        F.col("__u").alias("__qu"),
-        F.explode(_centroid_topn_pd(cents, n_probe)(F.col("__u"))).alias("cid"),
-    )
-
-    scored = (
-        assigned.join(broadcast(q_probe), "cid")
-        .filter(F.col(query_id) != F.col(corpus_id))
-        .select(
-            query_id,
-            corpus_id,
-            F.round(
-                F.aggregate(
-                    F.zip_with(F.col("__qu"), F.col("__u"), lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine_sim"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine_sim", F.col("rank").cast("long").alias("rank"))
+        return _no_hits(corpus.sparkSession, query_id, corpus_id)
+    index = encode_ivf(corpus, cents, id_col=corpus_id, vec_col=vec_col, _prepped=c)
+    return ivf_search(
+        index, queries, cents, k=k, corpus_id=corpus_id, query_id=query_id,
+        vec_col=vec_col, n_probe=n_probe,
     )
 
 
@@ -563,10 +580,15 @@ def encode_ivf(
     _prepped: DataFrame | None = None,
 ) -> DataFrame:
     """Apply a FROZEN IVF coarse quantizer: (id, __u, cid) rows — the
-    "add" half of the IVF train/add split, and exactly the assignment
-    frame ivf_topk builds internally (explode keeps cid a plain
-    attribute; see ivf_topk's generator note). This is what a batch job
-    runs to (re)build the persisted, cid-partitioned assignment table."""
+    "add" half of the IVF train/add split. This is what a batch job runs
+    to (re)build the persisted, cid-partitioned assignment table.
+
+    cid must be a GENERATOR output, not a projection over the UDF: when
+    queries share lineage with the corpus (self-search), constraint
+    inference synthesizes isnotnull/equality filters from the join key,
+    and a filter containing a PythonUDF cannot be evaluated by the
+    interpreted predicate evaluator. explode() makes cid a plain
+    attribute, so inferred filters reference the attribute only."""
     c = _prepped if _prepped is not None else _ivf_prep(df, id_col, vec_col)
     nearest = _centroid_topn_pd(cents, 1)
     return c.select(id_col, "__u", F.explode(nearest(F.col("__u"))).alias("cid"))
@@ -587,69 +609,92 @@ def ivf_search(
     ``materialize_ivf_index`` layout) maintains — this path never
     retrains. Queries are interactive-small by contract (the same
     collect the IVF-PQ serving path documents): their probes are
-    computed driver-side with the stable-argsort mirror of
-    ``_centroid_topn_pd``, so the probe lands on the index scan BOTH as
-    a broadcast equi-join AND as a literal ``cid IN (...)`` predicate —
-    over the cid-partitioned persisted layout that is a directory-level
-    PartitionFilter (unprobed cells never opened). Scoring is the SAME
-    zip_with/aggregate cosine fold as ivf_topk (identical sequential
-    float-sum order — bit-parity pinned by test)."""
+    computed driver-side (``_probe_cells``), so the probe lands on the
+    index scan BOTH as a broadcast equi-join AND as a literal
+    ``cid IN (...)`` predicate — over the cid-partitioned persisted
+    layout that is a directory-level PartitionFilter (unprobed cells
+    never opened). Scoring is the sequential ``_dot`` cosine fold over
+    unit vectors."""
     spark = queries.sparkSession
-    if not cents:  # no model (empty/all-NULL corpus at build time)
-        return spark.createDataFrame(
-            [], f"{query_id} long, {corpus_id} long, cosine_sim double, rank long"
-        )
-    qrows = _ivf_prep(queries, query_id, vec_col).collect()
+    # no model (empty/all-NULL corpus at build time): no query is probed
+    qrows = _ivf_prep(queries, query_id, vec_col).collect() if cents else []
     if not qrows:
-        return spark.createDataFrame(
-            [], f"{query_id} long, {corpus_id} long, cosine_sim double, rank long"
-        )
+        return _no_hits(spark, query_id, corpus_id)
     C = np.asarray(cents, dtype=np.float64)
-    dim = C.shape[1]
-    probe_rows = []
-    for row in qrows:
-        qu = row["__u"]
-        v = np.zeros(dim)
-        if qu is not None and len(qu) == dim:
-            # np.asarray(dtype=float64) maps NULL elements (a zero-norm
-            # vector's __u is [NULL]*dim, not a NULL array) to nan —
-            # exactly what _centroid_topn_pd's batch matmul sees, so the
-            # all-nan-dots stable argsort picks the same [0..n_probe-1]
-            v = np.asarray(qu, dtype=np.float64)
-        order = np.argsort(-(v @ C.T), kind="stable")[:n_probe]
-        # __qu passes through VERBATIM (None/NULL-element/ragged
-        # included) so the scoring fold sees exactly what ivf_topk's
-        # Spark-side prep produced — NULL semantics stay identical
-        qu_out = qu if qu is None else list(qu)
-        for cid in order:
-            probe_rows.append((row[query_id], int(cid), qu_out))
+    # __qu passes through VERBATIM (None/NULL-element/ragged included) so
+    # the scoring fold sees exactly what the Spark-side prep produced —
+    # NULL semantics stay identical
+    probe_rows = [
+        (row[query_id], int(cid), row["__u"] if row["__u"] is None else list(row["__u"]))
+        for row in qrows
+        for cid in _probe_cells(row["__u"], C, n_probe)
+    ]
     q_probe = spark.createDataFrame(
         probe_rows, f"{query_id} long, cid int, __qu array<double>"
     )
-    probed_cids = sorted({cid for _, cid, _ in probe_rows})
     scored = (
-        index.filter(F.col("cid").isin(probed_cids))
+        index.filter(F.col("cid").isin(sorted({cid for _, cid, _ in probe_rows})))
         .join(broadcast(q_probe), "cid")
         .filter(F.col(query_id) != F.col(corpus_id))
         .select(
             query_id,
             corpus_id,
-            F.round(
-                F.aggregate(
-                    F.zip_with(F.col("__qu"), F.col("__u"), lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("cosine_sim"),
+            F.round(_dot(F.col("__qu"), F.col("__u")), 6).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine_sim"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine_sim", F.col("rank").cast("long").alias("rank"))
-    )
+    return _rank_topk(scored, query_id, corpus_id, "cosine_sim", k)
+
+
+def _write_layout(path: str, encoded: DataFrame | None, n_centroids: int, meta: dict) -> None:
+    """The persisted layout both IVF tiers write: the encoded frame
+    directory-partitioned by cid under ``index/`` (the search's literal
+    probe predicate prunes to the probed cells' directories; a no-model
+    build writes none) plus the frozen model and params in
+    ``_meta.json``, written LAST so a present meta file implies a
+    complete index."""
+    import json
+    import os
+
+    os.makedirs(path, exist_ok=True)
+    if encoded is not None:
+        (
+            encoded.repartition(n_centroids, "cid")
+            .write.mode("overwrite")
+            .partitionBy("cid")
+            .parquet(os.path.join(path, "index"))
+        )
+    with open(os.path.join(path, "_meta.json"), "w") as f:
+        json.dump(meta, f)
+
+
+#: Session-scoped memo of opened vector-index layouts (the
+#: load_search_index discipline — see operators/search.py): a serving
+#: tier holds its frames open; reopening a parquet reader per query is
+#: ~90 ms of pure driver time. Keyed by (application, real path,
+#: _meta.json mtime_ns) so a rebuilt layout is reopened, never stale.
+_VINDEX_CACHE: dict = {}
+
+
+def _load_layout(spark, path: str, model_keys: tuple, empty_schema: str) -> tuple:
+    """Read a ``_write_layout`` layout: (index, *model, meta). A no-model
+    layout (empty/all-NULL corpus at build time) loads as an EMPTY index
+    frame of ``empty_schema`` and None model parts, so downstream
+    searches return empty results instead of dereferencing None. Opened
+    layouts are memoized per session (``_VINDEX_CACHE``)."""
+    import json
+    import os
+
+    def build():
+        with open(os.path.join(path, "_meta.json")) as f:
+            meta = json.load(f)
+        model = [meta[key] for key in model_keys]
+        if model[0] is None:
+            index = spark.createDataFrame([], f"{meta['corpus_id']} long, {empty_schema}")
+        else:
+            index = spark.read.parquet(os.path.join(path, "index"))
+        return (index, *model, meta)
+
+    return _memo_layout(_VINDEX_CACHE, spark, path, build)
 
 
 def materialize_ivf_index(
@@ -661,95 +706,32 @@ def materialize_ivf_index(
     iters: int = 2,
     dim: int | None = None,
 ) -> None:
-    """Write the IVF tier as a PERSISTED layout: the (id, __u, cid)
-    assignment table directory-partitioned by cid (``ivf_search``'s
-    literal probe predicate prunes to the n_probe probed cells'
-    directories) plus the frozen centroids in ``_meta.json`` (written
-    last). The scale note in ivf_topk's docstring — "the assignment is
-    written once as a bucketed table and reused across query batches" —
-    made concrete; training is a pure function of the corpus, so serving
-    from this layout is bit-identical to ivf_topk (pinned by test)."""
-    import json
-    import os
-
+    """Write the IVF tier as a PERSISTED layout (``_write_layout``): the
+    (id, __u, cid) assignment table plus the frozen centroids. The scale
+    note in ivf_topk's docstring — "the assignment is written once as a
+    bucketed table and reused across query batches" — made concrete;
+    training is a pure function of the corpus, so serving from this
+    layout is bit-identical to ivf_topk (pinned by test)."""
     if dim is None:
         dim = _infer_dim(corpus, vec_col)
     prepped = _ivf_prep(corpus, corpus_id, vec_col).persist()
     try:
-        cents = train_ivf(
-            corpus, corpus_id=corpus_id, vec_col=vec_col,
-            n_centroids=n_centroids, iters=iters, dim=dim, _prepped=prepped,
+        cents = train_ivf(corpus, corpus_id, vec_col, n_centroids, iters, dim, _prepped=prepped)
+        encoded = None if cents is None else encode_ivf(
+            corpus, cents, id_col=corpus_id, vec_col=vec_col, _prepped=prepped
         )
-        os.makedirs(path, exist_ok=True)
-        if cents is not None:
-            (
-                encode_ivf(
-                    corpus, cents, id_col=corpus_id, vec_col=vec_col,
-                    _prepped=prepped,
-                )
-                .repartition(n_centroids, "cid")
-                .write.mode("overwrite")
-                .partitionBy("cid")
-                .parquet(os.path.join(path, "index"))
-            )
+        _write_layout(
+            path, encoded, n_centroids,
+            {"corpus_id": corpus_id, "dim": dim, "n_centroids": n_centroids, "cents": cents},
+        )
     finally:
         prepped.unpersist()
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(
-            {"corpus_id": corpus_id, "dim": dim, "n_centroids": n_centroids,
-             "cents": cents},
-            f,
-        )
-
-
-#: Session-scoped memo of opened vector-index layouts (the
-#: load_search_index discipline — see operators/search.py): a serving
-#: tier holds its frames open; reopening a parquet reader per query is
-#: ~90 ms of pure driver time. Keyed by (application, real path,
-#: _meta.json mtime_ns) so a rebuilt layout is reopened, never stale.
-_VINDEX_CACHE: dict = {}
-
-
-def _memo_layout(spark, path: str, build):
-    import os
-
-    meta_path = os.path.join(path, "_meta.json")
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(path),
-        os.stat(meta_path).st_mtime_ns,
-    )
-    hit = _VINDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    out = build()
-    if len(_VINDEX_CACHE) >= 8:
-        _VINDEX_CACHE.pop(next(iter(_VINDEX_CACHE)))
-    _VINDEX_CACHE[key] = out
-    return out
 
 
 def load_ivf_index(spark, path: str):
-    """Read a ``materialize_ivf_index`` layout: (index, cents, meta).
-    A no-model layout (empty/all-NULL corpus at build time) loads as an
-    EMPTY index frame + cents None, so downstream searches return empty
-    results instead of dereferencing None. Opened layouts are memoized
-    per session (``_VINDEX_CACHE``)."""
-    import json
-    import os
-
-    def build():
-        with open(os.path.join(path, "_meta.json")) as f:
-            meta = json.load(f)
-        if meta["cents"] is None:
-            index = spark.createDataFrame(
-                [], f"{meta['corpus_id']} long, __u array<double>, cid int"
-            )
-        else:
-            index = spark.read.parquet(os.path.join(path, "index"))
-        return index, meta["cents"], meta
-
-    return _memo_layout(spark, path, build)
+    """Read a ``materialize_ivf_index`` layout: (index, cents, meta)
+    (``_load_layout``)."""
+    return _load_layout(spark, path, ("cents",), "__u array<double>, cid int")
 
 
 def _round6_halfup(x: float) -> float:
@@ -830,14 +812,7 @@ def semantic_dedup_pairs(
         cid = int(pdf["cid"].iloc[0])
         cvec = C[cid]
         ids = pdf[corpus_id].to_numpy()
-        M = np.zeros((n, dim), dtype=np.float64)
-        valid = np.zeros(n, dtype=bool)
-        for r, u in enumerate(pdf["__u"]):
-            if u is not None and len(u) == dim:
-                row = np.asarray(u, dtype=np.float64)
-                if not np.isnan(row).any():
-                    M[r] = row
-                    valid[r] = True
+        M, valid = _stack_valid(pdf["__u"], dim)
         ccos = M @ cvec
         out_cid, out_keep, out_drop, out_cos = [], [], [], []
         # row-blocked pairwise: memory is block x n, never n x n
@@ -918,16 +893,19 @@ def embedding_near_dup_pairs(
     # double-cast vectors + norms computed once per ROW (not per pair);
     # pair scoring below is then a single dot-product fold.
     cn = _with_vec_norm(c, vec_col, "__v", "__n")
+
+    def side(t: str) -> DataFrame:
+        return cn.select(
+            F.col(id_col).alias(f"id_{t}"),
+            F.col("__v").alias(f"__v{t}"),
+            F.col("__n").alias(f"__n{t}"),
+        )
+
     if exact:
         # spread the O(n^2) nested-loop probe across cores (a small-file
         # scan would run it in one task; explicit count so AQE can't
         # coalesce the byte-small but CPU-heavy exchange)
-        a = spread(
-            cn.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va"), F.col("__n").alias("__na")),
-            "id_a",
-        )
-        b = cn.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"), F.col("__n").alias("__nb"))
-        pairs = a.join(b, F.col("id_a") < F.col("id_b"))
+        pairs = spread(side("a"), "id_a").join(side("b"), F.col("id_a") < F.col("id_b"))
     else:
         if dim is None:
             dim = _infer_dim(c, vec_col)
@@ -955,13 +933,7 @@ def embedding_near_dup_pairs(
             )
             .dropDuplicates(["id_a", "id_b"])
         )
-        va = cn.select(
-            F.col(id_col).alias("id_a"), F.col("__v").alias("__va"), F.col("__n").alias("__na")
-        )
-        vb = cn.select(
-            F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"), F.col("__n").alias("__nb")
-        )
-        pairs = cand.join(va, "id_a").join(vb, "id_b")
+        pairs = cand.join(side("a"), "id_a").join(side("b"), "id_b")
     return (
         pairs.select(
             "id_a",
@@ -1074,11 +1046,7 @@ def _pq_codes_pd(cents_q: list[list[list[int]]], dim: int):
 
     @pandas_udf(ArrayType(IntegerType()))
     def codes(vecs: pd.Series) -> pd.Series:
-        M = np.zeros((len(vecs), dim))
-        for i, v in enumerate(vecs):
-            if v is not None and len(v) == dim:
-                M[i] = np.asarray(v, dtype=np.float64)
-        Xq = np.floor(M * float(PQ_COORD_SCALE)).astype(np.int64)  # (N, dim)
+        Xq = np.floor(_dense(vecs, dim) * float(PQ_COORD_SCALE)).astype(np.int64)  # (N, dim)
         cols = []
         for s in range(m):
             S = Xq[:, s * dsub : (s + 1) * dsub]                   # (N, dsub)
@@ -1113,14 +1081,22 @@ def pq_topk(
     the refined dot of the two 2^-15-quantized unit vectors (an exact
     int64 in 2^-30 units ~ cosine).
 
+    Flat PQ is the one-cell case of IVF-PQ, so this is
+    ``ivfpq_topk(n_centroids=1, n_probe=1)``: the seed scan takes
+    max(1, ksub) = ksub rows, every vector lands in cell 0 whatever the
+    coarse centroid is (so the coarse Lloyd is skipped, ``ivf_iters=0``),
+    and the raw-mode ADC over the single probed cell is the full-corpus
+    LUT sweep. NULL / ragged / zero-norm vectors are excluded from
+    training, encoding and results.
+
     Everything INCLUDING the ranking is integer-exact: unit-vector
     coordinates and centroids quantize to 2^-15 before any decision, the
     k-means assignment rank and the ADC scores are int64 arithmetic, and
-    the Lloyd sums are the same 2^-30 fixed-point longs ivf_topk uses.
-    Identical input doubles therefore give bit-identical codes and ranks
-    under ANY partitioning — which is what lets q_ann_pq carry a
-    golden-fixture oracle (functions/refhash.ref_pq_topk replays the
-    whole train->encode->score chain in pure Python).
+    the Lloyd sums are 2^-30 fixed-point longs. Identical input doubles
+    therefore give bit-identical codes and ranks under ANY partitioning —
+    which is what lets q_ann_pq carry a golden-fixture oracle
+    (functions/refhash.ref_pq_topk replays the whole
+    train->encode->score chain in pure Python).
 
     Scale shape (the reason PQ exists next to IVF): IVF prunes WHICH
     vectors a query touches; PQ shrinks WHAT a scan reads — the encoded
@@ -1128,72 +1104,74 @@ def pq_topk(
     sweep is a scan over bytes-per-vector, not floats-per-dimension, and
     the per-(query, vector) work is ``m`` table lookups. Training is
     ``iters`` map-side passes with a (m x ksub x dsub)-row fixed-point
-    aggregate to the driver (metadata-scale, like the IVF Lloyd stats);
-    encoding is one Arrow pass; scoring broadcasts the per-query LUTs
-    (m*ksub ints each) and never shuffles the corpus. At 100 TB compose
-    the two: store codes bucketed by the IVF cell id and sweep only
-    probed cells (IVF-PQ); this operator keeps the stages orthogonal so
-    either index is reusable alone.
-
-    Reference basis: from-scratch Spark design (the reference pipeline
-    has no vector search); complements brute_force_topk (exact),
-    lsh_topk (hash buckets) and ivf_topk (cell pruning).
+    aggregate to the driver; encoding is one Arrow pass; scoring
+    broadcasts the per-query LUTs and never shuffles the corpus.
     """
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
-    if dim % m:
-        # a silent dim//m would drop the last dim - m*(dim//m) coordinates
-        # from training/encoding/ADC — degrade quietly, never error
-        raise ValueError(f"dim {dim} not divisible by m {m} subspaces")
-    dsub = dim // m
-
-    def prep(df: DataFrame, id_col: str) -> DataFrame:
-        dn = _with_vec_norm(df.select(id_col, vec_col), vec_col, "__v", "__n")
-        u = dn.select(
-            id_col,
-            _unit_vec(F.col("__v"), F.col("__n")).alias("__u"),
-            F.size("__v").alias("__d"),
-        )
-        # PQ spec: NULL / ragged / zero-norm vectors are excluded from
-        # training, encoding and results (ref_pq_topk skips them too).
-        # Zero norm surfaces as an array of NULL ELEMENTS (x / nullif(0))
-        # rather than a NULL array, so probe element 0 too.
-        return spread(
-            u.filter(
-                F.col("__u").isNotNull()
-                & (F.col("__d") == dim)
-                & F.col("__u")[0].isNotNull()
-            ).drop("__d"),
-            F.col(id_col),
-        )
-
-    # Cache lifecycle: the returned frame is lazy and REFERENCES this cache
-    # (training sweeps, encode, and the refine re-join all read it), so it
-    # cannot be unpersisted here before the caller consumes the result.
-    # Callers invoking pq_topk repeatedly in one session should release it
-    # (spark.catalog.clearCache() or unpersist) between calls — the same
-    # documented contract as ivfpq_topk and q_search_bm25's persisted index.
-    c = prep(corpus, corpus_id).persist()
-
-    seeds = (
-        c.orderBy(F.xxhash64(F.col(corpus_id).cast("string")), F.col(corpus_id))
-        .limit(ksub)
-        .collect()
+    return ivfpq_topk(
+        corpus, queries, k=k, corpus_id=corpus_id, query_id=query_id,
+        vec_col=vec_col, n_centroids=1, n_probe=1, ivf_iters=0, m=m,
+        ksub=ksub, pq_iters=iters, dim=dim, rerank=rerank,
     )
-    if not seeds:  # no valid vectors at all — empty result, not a crash
-        # the empty frame never references the cache: release it here
-        # instead of leaking session-lifetime cached blocks (r8 VERDICT
-        # what's-wrong #4 — the one site ivfpq_topk's r8 fix missed)
-        c.unpersist()
-        spark = corpus.sparkSession
-        return spark.createDataFrame(
-            [], f"{query_id} long, {corpus_id} long, score_fp long, rank long"
-        )
-    # cents[s][j]: float centroid of subspace s (seed rows' unit subvectors)
-    cents = [
-        [[float(x) for x in row["__u"][s * dsub : (s + 1) * dsub]] for row in seeds]
-        for s in range(m)
-    ]
+
+
+# Below this many queries the plain per-query window IS the fast
+# shortlist: the scored rows are narrow, the sort is one exchange, and
+# everything stays in whole-stage codegen. The bounded pandas pass wins
+# only when |Q| x N stops fitting one comfortable sort — measured at
+# bench scale (|Q|=10) the Arrow hop costs ~1s MORE than the window, so
+# the operator picks per call based on the (driver-known) query count.
+SHORTLIST_WINDOW_MAX_Q = 64
+
+
+def _shortlist_topn(
+    scored: DataFrame, query_id: str, corpus_id: str, n: int, n_queries: int
+) -> DataFrame:
+    """Exact per-query top-n by (__adc desc, id asc). For
+    interactive-small query sets (<= SHORTLIST_WINDOW_MAX_Q) this is the
+    plain row_number window. Beyond that it avoids the full |Q| x N
+    global sort: a per-partition bounded pass (pandas lexsort + head per
+    batch, merged per partition) keeps at most n candidates per query,
+    then one window over the <= n_partitions * |Q| * n survivors picks
+    the global top-n. Identical output either way — the comparator is
+    total (ids unique), and any global top-n row is necessarily in its
+    partition's top-n. (r6 VERDICT stretch item: the old shape always
+    sorted all |Q| x N ADC rows.)"""
+
+    def top(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.sort_values(
+            ["__adc", corpus_id], ascending=[False, True], kind="mergesort"
+        ).groupby(query_id, sort=False).head(n)
+
+    def part_topn(batches):
+        acc = None
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            acc = top(pdf) if acc is None else pd.concat([acc, top(pdf)], ignore_index=True)
+            # re-bound the accumulator so partition state stays O(|Q| * n)
+            if len(acc) > 4 * n * max(acc[query_id].nunique(), 1):
+                acc = top(acc)
+        if acc is not None:
+            yield top(acc)
+
+    survivors = scored
+    if n_queries > SHORTLIST_WINDOW_MAX_Q:
+        cols = [query_id, corpus_id, "__adc"]
+        survivors = scored.select(*cols).mapInPandas(part_topn, scored.select(*cols).schema)
+    return _rank_within(survivors, query_id, "__adc", corpus_id, n, "__sr").select(
+        query_id, corpus_id
+    )
+
+
+def _train_pq(
+    c: DataFrame, seed_vecs: list, dim: int, m: int, iters: int
+) -> list[list[list[int]]]:
+    """The PQ codebooks: per subspace, one centroid per seed vector
+    slice, then ``iters`` integer-rank Lloyd passes over ``c``'s __u
+    (2^-15-quantized argmin over exact int64 ranks, 2^-15 fixed-point
+    sums). Returns the quantized codebooks ``cq[s][j]``."""
+    dsub = dim // m
+    cents = [[v[s * dsub : (s + 1) * dsub] for v in seed_vecs] for s in range(m)]
 
     def quantized() -> list[list[list[int]]]:
         return [
@@ -1229,162 +1207,11 @@ def pq_topk(
             )
             cnt[(row["s"], row["cid"])] = row["n"]
         for s in range(m):
-            for j in range(ksub):
+            for j in range(len(seed_vecs)):
                 n = cnt.get((s, j), 0)
                 if n:  # empty cells keep their previous centroid
                     cents[s][j] = [v / n for v in acc[(s, j)]]
-
-    cq = quantized()
-    codes_udf = _pq_codes_pd(cq, dim)
-    # explode -> plain attribute (same constraint-inference hazard as
-    # ivf_topk: a PythonUDF inside an inferred filter cannot be
-    # interpreted when queries share lineage with the corpus)
-    encoded = c.select(corpus_id, F.explode(F.array(codes_udf(F.col("__u")))).alias("__cs"))
-
-    # Per-query LUTs on the driver: queries are the interactive-small
-    # side (same posture as brute_force_topk's broadcast); each LUT is
-    # m*ksub int64s, plus the full quantized query vector for the
-    # refinement step. Quantize with the SAME floor as the mirror.
-    q_rows = prep(queries, query_id).collect()
-    lut_rows = []
-    for row in q_rows:
-        qu = row["__u"]
-        qx = [math.floor(float(x) * float(PQ_COORD_SCALE)) for x in qu]
-        luts = [
-            [sum(a * b for a, b in zip(qx[s * dsub : (s + 1) * dsub], cj)) for cj in cq[s]]
-            for s in range(m)
-        ]
-        lut_rows.append((row[query_id], luts, qx))
-    spark = corpus.sparkSession
-    q_lut = spark.createDataFrame(
-        lut_rows, f"{query_id} long, __lut array<array<long>>, __qx array<long>"
-    )
-
-    adc = sum(
-        F.element_at(
-            F.element_at("__lut", s + 1), F.element_at("__cs", s + 1) + F.lit(1)
-        )
-        for s in range(m)
-    )
-    # scored rows are NARROW (two ids + one int64): the per-query
-    # quantized vector __qx re-attaches by broadcast AFTER the shortlist
-    # (r7 — it rode every scored row before: 8 B/dim per candidate
-    # through the shortlist shuffle for a value that only rerank*k rows
-    # per query ever read)
-    scored = (
-        encoded.crossJoin(broadcast(q_lut.select(query_id, "__lut")))
-        .filter(F.col(query_id) != F.col(corpus_id))
-        .select(query_id, corpus_id, adc.alias("__adc"))
-    )
-    # ADC shortlist, then refine: exact int64 dot of the 2^-15-quantized
-    # FULL unit vectors (the ADC+R rerank pattern — with integers, so the
-    # refined ranking is as reproducible as the codes). Only
-    # rerank * k * |Q| rows ever touch a raw vector again.
-    shortlist = _shortlist_topn(
-        scored, query_id, corpus_id, rerank * k, len(lut_rows)
-    ).join(broadcast(q_lut.select(query_id, "__qx")), query_id)
-    refined = shortlist.join(c, corpus_id).select(
-        query_id,
-        corpus_id,
-        F.aggregate(
-            F.zip_with(
-                F.col("__qx"),
-                F.transform(
-                    "__u",
-                    lambda x: F.floor(x * F.lit(float(PQ_COORD_SCALE))).cast("long"),
-                ),
-                lambda a, b: a * b,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("score_fp"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score_fp"), F.asc(corpus_id))
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "score_fp", F.col("rank").cast("long").alias("rank"))
-    )
-
-
-# Below this many queries the plain per-query window IS the fast
-# shortlist: the scored rows are narrow, the sort is one exchange, and
-# everything stays in whole-stage codegen. The bounded pandas pass wins
-# only when |Q| x N stops fitting one comfortable sort — measured at
-# bench scale (|Q|=10) the Arrow hop costs ~1s MORE than the window, so
-# the operator picks per call based on the (driver-known) query count.
-SHORTLIST_WINDOW_MAX_Q = 64
-
-
-def _shortlist_topn(
-    scored: DataFrame, query_id: str, corpus_id: str, n: int, n_queries: int
-) -> DataFrame:
-    """Exact per-query top-n by (__adc desc, id asc). For
-    interactive-small query sets (<= SHORTLIST_WINDOW_MAX_Q) this is the
-    plain row_number window. Beyond that it avoids the full |Q| x N
-    global sort: a per-partition bounded pass (pandas lexsort + head per
-    batch, merged per partition) keeps at most n candidates per query,
-    then one window over the <= n_partitions * |Q| * n survivors picks
-    the global top-n. Identical output either way — the comparator is
-    total (ids unique), and any global top-n row is necessarily in its
-    partition's top-n. (r6 VERDICT stretch item: the old shape always
-    sorted all |Q| x N ADC rows.)"""
-    if n_queries <= SHORTLIST_WINDOW_MAX_Q:
-        w = Window.partitionBy(query_id).orderBy(F.desc("__adc"), F.asc(corpus_id))
-        return (
-            scored.withColumn("__sr", F.row_number().over(w))
-            .filter(F.col("__sr") <= n)
-            .select(query_id, corpus_id)
-        )
-    cols = [query_id, corpus_id, "__adc"]
-    out_schema = scored.select(*cols).schema
-
-    def part_topn(batches):
-        acc = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(
-                ["__adc", corpus_id], ascending=[False, True], kind="mergesort"
-            ).groupby(query_id, sort=False).head(n)
-            acc = pdf if acc is None else pd.concat([acc, pdf], ignore_index=True)
-            # re-bound the accumulator so partition state stays O(|Q| * n)
-            if len(acc) > 4 * n * max(acc[query_id].nunique(), 1):
-                acc = acc.sort_values(
-                    ["__adc", corpus_id], ascending=[False, True], kind="mergesort"
-                ).groupby(query_id, sort=False).head(n)
-        if acc is not None:
-            yield acc.sort_values(
-                ["__adc", corpus_id], ascending=[False, True], kind="mergesort"
-            ).groupby(query_id, sort=False).head(n)
-
-    survivors = scored.select(*cols).mapInPandas(part_topn, out_schema)
-    w = Window.partitionBy(query_id).orderBy(F.desc("__adc"), F.asc(corpus_id))
-    return (
-        survivors.withColumn("__sr", F.row_number().over(w))
-        .filter(F.col("__sr") <= n)
-        .select(query_id, corpus_id)
-    )
-
-
-def _ivfpq_prep(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
-    """PQ-spec prep: (id, __u) unit vectors with NULL / ragged / zero-norm
-    rows excluded (zero norm surfaces as NULL elements from x/nullif(0),
-    so element 0 is probed too), spread for parallel downstream UDFs."""
-    dn = _with_vec_norm(df.select(id_col, vec_col), vec_col, "__v", "__n")
-    u = dn.select(
-        id_col,
-        _unit_vec(F.col("__v"), F.col("__n")).alias("__u"),
-        F.size("__v").alias("__d"),
-    )
-    return spread(
-        u.filter(
-            F.col("__u").isNotNull()
-            & (F.col("__d") == dim)
-            & F.col("__u")[0].isNotNull()
-        ).drop("__d"),
-        F.col(id_col),
-    )
+    return quantized()
 
 
 def train_ivfpq(
@@ -1405,9 +1232,9 @@ def train_ivfpq(
     (None, None) on an all-invalid corpus. This is the offline half of
     the FAISS train/add split: ``encode_ivfpq`` (and the streaming
     vector-index appender) apply a FROZEN model to new vectors without
-    retraining. Same bit-reproducible chains as ivfpq_topk (which calls
-    this): fixed-point Lloyd for the cells, integer-rank Lloyd for the
-    codebooks.
+    retraining. Both trainers are shared: the coarse quantizer is
+    ``_train_coarse`` (IVF's fixed-point Lloyd), the codebooks
+    ``_train_pq`` (integer-rank Lloyd).
 
     ``residual=True`` (r8, the FAISS IVFPQ default) trains the codebooks
     on the IVF RESIDUALS ``u - coarse[cell(u)]`` instead of the raw unit
@@ -1422,113 +1249,29 @@ def train_ivfpq(
         dim = _infer_dim(corpus, vec_col)
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m} subspaces")
-    dsub = dim // m
     own = _prepped is None
     c = _ivfpq_prep(corpus, corpus_id, vec_col, dim).persist() if own else _prepped
-
-    # one seed scan feeds BOTH trainers (same engine-stable order; the
-    # coarse quantizer takes the first n_centroids, PQ the first ksub)
-    n_seed = max(n_centroids, ksub)
-    seeds = (
-        c.orderBy(F.xxhash64(F.col(corpus_id).cast("string")), F.col(corpus_id))
-        .limit(n_seed)
-        .collect()
-    )
-    if not seeds:
+    try:
+        # one seed scan feeds BOTH trainers (same engine-stable order; the
+        # coarse quantizer takes the first n_centroids, PQ the first ksub)
+        seeds = [row["__u"] for row in _hash_seeds(c, corpus_id, max(n_centroids, ksub))]
+        if not seeds:
+            return None, None
+        coarse = _train_coarse(c, seeds[:n_centroids], dim, ivf_iters)
+        if residual:
+            # codebooks learn the residual distribution: same Lloyd, same
+            # seed ROWS, but the training column (and the seed vectors) are
+            # u - coarse[cell(u)] under the now-frozen coarse quantizer
+            C = np.asarray(coarse, dtype=np.float64)
+            c_pq = c.select(corpus_id, _residual_pd(coarse, dim)(F.col("__u")).alias("__u"))
+            pq_seeds = [_residual(v, C) for v in seeds[:ksub]]
+        else:
+            c_pq = c
+            pq_seeds = [[float(x) for x in v] for v in seeds[:ksub]]
+        return coarse, _train_pq(c_pq, pq_seeds, dim, m, pq_iters)
+    finally:
         if own:
             c.unpersist()
-        return None, None
-
-    # ---- coarse quantizer: ivf_topk's fixed-point Lloyd ----
-    def normalize(v: list[float]) -> list[float]:
-        n = math.sqrt(sum(x * x for x in v))
-        return [x / n for x in v] if n > 0 else list(v)
-
-    coarse = [normalize([float(x) for x in row["__u"]]) for row in seeds[:n_centroids]]
-    for _ in range(ivf_iters):
-        nearest = _centroid_topn_pd(coarse, 1)
-        sums = (
-            c.select(F.element_at(nearest(F.col("__u")), 1).alias("cid"), "__u")
-            .select("cid", F.posexplode("__u").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(
-                F.sum(F.floor(F.col("x") * F.lit(float(IVF_SCALE))).cast("long")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        means: dict[int, list[float]] = {}
-        for row in sums:
-            means.setdefault(row["cid"], [0.0] * dim)[row["pos"]] = (
-                row["s"] / IVF_SCALE / row["n"]
-            )
-        coarse = [normalize(means.get(j, coarse[j])) for j in range(len(coarse))]
-
-    # ---- PQ codebooks: pq_topk's integer-rank Lloyd ----
-    pq_seeds = seeds[:ksub]
-    if residual:
-        # codebooks learn the residual distribution: same Lloyd, same
-        # seed ROWS, but the training column (and the seed vectors) are
-        # u - coarse[cell(u)] under the now-frozen coarse quantizer
-        resid_udf = _residual_pd(coarse, dim)
-        c_pq = c.select(corpus_id, resid_udf(F.col("__u")).alias("__u"))
-        C_np = np.asarray(coarse, dtype=np.float64)
-
-        def _seed_resid(row):
-            a = np.asarray([float(x) for x in row["__u"]], dtype=np.float64)
-            cid = int(np.argsort(-(a @ C_np.T), kind="stable")[0])
-            return (a - C_np[cid]).tolist()
-
-        seed_vecs = [_seed_resid(row) for row in pq_seeds]
-    else:
-        c_pq = c
-        seed_vecs = [[float(x) for x in row["__u"]] for row in pq_seeds]
-    cents = [
-        [seed_vecs[j][s * dsub : (s + 1) * dsub] for j in range(len(pq_seeds))]
-        for s in range(m)
-    ]
-
-    def quantized() -> list[list[list[int]]]:
-        return [
-            [[math.floor(x * float(PQ_COORD_SCALE)) for x in cj] for cj in cs]
-            for cs in cents
-        ]
-
-    for _ in range(pq_iters):
-        codes_udf = _pq_codes_pd(quantized(), dim)
-        sums = (
-            c_pq.select(F.posexplode(codes_udf(F.col("__u"))).alias("s", "cid"), "__u")
-            .select(
-                "s",
-                "cid",
-                F.posexplode(
-                    F.slice(F.col("__u"), F.col("s") * F.lit(dsub) + F.lit(1), F.lit(dsub))
-                ).alias("pos", "x"),
-            )
-            .groupBy("s", "cid", "pos")
-            .agg(
-                F.sum(F.floor(F.col("x") * F.lit(float(PQ_SUM_SCALE))).cast("long")).alias("t"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        acc: dict[tuple[int, int], list[float]] = {}
-        cnt: dict[tuple[int, int], int] = {}
-        for row in sums:
-            acc.setdefault((row["s"], row["cid"]), [0.0] * dsub)[row["pos"]] = (
-                row["t"] / float(PQ_SUM_SCALE)
-            )
-            cnt[(row["s"], row["cid"])] = row["n"]
-        for s in range(m):
-            for j in range(len(pq_seeds)):
-                n = cnt.get((s, j), 0)
-                if n:
-                    cents[s][j] = [v / n for v in acc[(s, j)]]
-
-    cq = quantized()
-    if own:
-        c.unpersist()
-    return coarse, cq
 
 
 def encode_ivfpq(
@@ -1549,7 +1292,7 @@ def encode_ivfpq(
     the persisted, cid-bucketed index table. With ``residual=True`` the
     codes quantize ``u - coarse[cid]`` (the cell stays the raw-vector
     assignment — same argsort either way); pass the flag the model was
-    trained with."""
+    trained with. cid and codes are generator outputs (see encode_ivf)."""
     u = _prepped if _prepped is not None else _ivfpq_prep(df, id_col, vec_col, dim)
     nearest = _centroid_topn_pd(coarse, 1)
     codes_udf = _pq_codes_pd(cq, dim)
@@ -1592,29 +1335,34 @@ def ivfpq_topk(
     codes. At 100 TB: codes+cid persist as a table bucketed by cid (the
     probe is then a partition-pruned scan), centroids/codebooks are
     metadata-scale broadcasts, and n_probe trades recall for compute.
+    The in-query chain is ``train_ivfpq`` -> ``encode_ivfpq`` ->
+    ``ivfpq_search``, the same code that serves a persisted index.
 
-    Design choice vs FAISS: PQ encodes the RAW unit vectors, not the
-    cell residuals. Residual encoding squeezes more recall per bit but
-    needs per-cell LUTs (m*ksub ints per (query, probe) instead of per
-    query); raw-vector encoding composes the two existing bit-exact
-    specs unchanged, so training, assignment, ADC and refinement stay
-    pure functions of the input table — which is what lets q_ann_ivfpq
-    carry a golden-fixture oracle (functions/refhash.ref_ivfpq_topk
-    replays the whole chain; the fixture generator asserts the coarse
-    quantizer's argsort margins like the IVF fixture does). The
-    recall@k floor vs brute force is pinned in tests/test_recall_gates.py.
+    Encoding (``residual=``): the default encodes the RAW unit vectors.
+    Raw-vector encoding composes the two existing bit-exact specs
+    unchanged, so training, assignment, ADC and refinement stay pure
+    functions of the input table — which is what lets q_ann_ivfpq carry
+    a golden-fixture oracle (functions/refhash.ref_ivfpq_topk replays
+    the whole chain; the fixture generator asserts the coarse
+    quantizer's argsort margins like the IVF fixture does).
+    ``residual=True`` encodes the cell residuals instead (FAISS's
+    default; more recall per bit at high n_centroids). Its codebooks
+    stay global, so the LUT stays per query and the ADC adds one
+    per-(query, probed cell) centroid term (see ivfpq_search). The
+    recall@k floors vs brute force for both modes are pinned in
+    tests/test_recall_gates.py.
 
     Both trainers keep their own specs: the coarse quantizer is
     ivf_topk's fixed-point Lloyd (2^-30 integer sums, ties to the lowest
-    cell, empty cells keep their centroid); the codebooks are pq_topk's
-    (2^-15-quantized argmin over exact int64 ranks). Validity rules are
-    PQ's (NULL / ragged / zero-norm vectors excluded everywhere).
+    cell, empty cells keep their centroid); the codebooks are the
+    integer-rank Lloyd (2^-15-quantized argmin over exact int64 ranks).
+    Validity rules are PQ's (NULL / ragged / zero-norm vectors excluded
+    everywhere).
     """
     if dim is None:
         dim = _infer_dim(corpus, vec_col)
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m} subspaces")
-    dsub = dim // m
 
     # Cache lifecycle: the returned frame is lazy and REFERENCES this cache
     # (train, encode and the refine re-join all read it), so this function
@@ -1632,27 +1380,13 @@ def ivfpq_topk(
         # cache, so release it here instead of leaking session-lifetime
         # cached blocks (r7 ADVICE)
         c.unpersist()
-        spark = corpus.sparkSession
-        return spark.createDataFrame(
-            [], f"{query_id} long, {corpus_id} long, score_fp long, rank long"
-        )
-
-    # ---- encode: (id, cid, codes) — the persisted index of a real run ----
-    codes_udf = _pq_codes_pd(cq, dim)
-    nearest = _centroid_topn_pd(coarse, 1)
-    assigned = c.select(
-        corpus_id, "__u", F.explode(nearest(F.col("__u"))).alias("cid")
-    )
-    enc_col = (
-        codes_udf(_residual_pd(coarse, dim)(F.col("__u")))
-        if residual
-        else codes_udf(F.col("__u"))
-    )
-    encoded = assigned.select(
-        corpus_id, "cid", F.explode(F.array(enc_col)).alias("codes")
+        return _no_hits(corpus.sparkSession, query_id, corpus_id, "score_fp long")
+    index = encode_ivfpq(
+        corpus, coarse, cq, dim, id_col=corpus_id, vec_col=vec_col,
+        residual=residual, _prepped=c,
     )
     return ivfpq_search(
-        encoded, corpus, queries, coarse, cq,
+        index, corpus, queries, coarse, cq,
         k=k, corpus_id=corpus_id, query_id=query_id, vec_col=vec_col,
         n_probe=n_probe, dim=dim, rerank=rerank, _prepped=c, residual=residual,
     )
@@ -1704,10 +1438,9 @@ def ivfpq_search(
     rows ``index.filter(cid.isin(probed))`` would."""
     if dim is None:
         dim = _infer_dim(corpus, vec_col)
+    spark = corpus.sparkSession
     if not coarse or not cq:  # no model (empty/all-NULL corpus at build)
-        return corpus.sparkSession.createDataFrame(
-            [], f"{query_id} long, {corpus_id} long, score_fp long, rank long"
-        )
+        return _no_hits(spark, query_id, corpus_id, "score_fp long")
     m = len(cq)
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by {m} codebook subspaces")
@@ -1721,10 +1454,7 @@ def ivfpq_search(
     luts_by_q: dict[int, np.ndarray] = {}
     qx_by_q: dict[int, np.ndarray] = {}
     for row in q_rows:
-        qu = [float(x) for x in row["__u"]]
-        dots = np.asarray(qu, dtype=np.float64) @ C.T
-        probes = np.argsort(-dots, kind="stable")[:n_probe]
-        qx = [math.floor(x * float(PQ_COORD_SCALE)) for x in qu]
+        qx = [math.floor(float(x) * float(PQ_COORD_SCALE)) for x in row["__u"]]
         luts = [
             [sum(a * b for a, b in zip(qx[s * dsub : (s + 1) * dsub], cj)) for cj in cq[s]]
             for s in range(m)
@@ -1732,18 +1462,15 @@ def ivfpq_search(
         qid_v = row[query_id]
         luts_by_q[qid_v] = np.asarray(luts, dtype=np.int64)  # (m, ksub)
         qx_by_q[qid_v] = np.asarray(qx, dtype=np.int64)  # (dim,)
-        for cid in probes:
+        for cid in _probe_cells(row["__u"], C, n_probe):
             if residual:
                 cfx = [math.floor(x * float(PQ_COORD_SCALE)) for x in coarse[int(cid)]]
                 cell_fp = sum(a * b for a, b in zip(qx, cfx))
             else:
                 cell_fp = 0  # raw mode: ADC is the LUT sum alone
             probe_rows.append((qid_v, int(cid), cell_fp))
-    spark = corpus.sparkSession
     if not probe_rows:
-        return spark.createDataFrame(
-            [], f"{query_id} long, {corpus_id} long, score_fp long, rank long"
-        )
+        return _no_hits(spark, query_id, corpus_id, "score_fp long")
     q_probes = spark.createDataFrame(
         probe_rows, f"{query_id} long, cid int, __cell long"
     )
@@ -1824,12 +1551,7 @@ def ivfpq_search(
             )
 
     refined = ref_in.mapInPandas(refine_rows, ref_schema)
-    w = Window.partitionBy(query_id).orderBy(F.desc("score_fp"), F.asc(corpus_id))
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "score_fp", F.col("rank").cast("long").alias("rank"))
-    )
+    return _rank_topk(refined, query_id, corpus_id, "score_fp", k)
 
 
 def materialize_vector_index(
@@ -1850,7 +1572,7 @@ def materialize_vector_index(
     instead of re-running the trainer per query (train once, serve
     many — the FAISS train/add split, on disk).
 
-    Layout, under ``path``:
+    Layout (``_write_layout``), under ``path``:
     - ``index/`` (corpus_id, codes) parquet, directory-partitioned by
       ``cid`` — ``ivfpq_search``'s driver-side probe pushes a literal
       ``cid IN (...)`` predicate, so a query's scan opens only the
@@ -1859,8 +1581,7 @@ def materialize_vector_index(
       table and are re-joined for the rerank·k refinement rows only.
     - ``_meta.json`` — the FROZEN model: coarse centroids (exact
       repr-round-trip doubles), the 2^-15-quantized integer codebooks,
-      and the (dim, m, ksub, n_centroids, residual) params, written
-      LAST so a present meta file implies a complete index.
+      and the (dim, m, ksub, n_centroids, residual) params.
 
     Training is a pure function of the corpus (hash-ordered seeds,
     fixed-point Lloyd — train_ivfpq), so serving from this layout is
@@ -1869,80 +1590,34 @@ def materialize_vector_index(
     streaming appender keeps current; a corpus change rewrites only the
     touched cells' partitions.
     """
-    import json
-    import os
-
     if dim is None:
         dim = _infer_dim(corpus, vec_col)
     prepped = _ivfpq_prep(corpus, corpus_id, vec_col, dim).persist()
     try:
         coarse, cq = train_ivfpq(
-            corpus,
-            corpus_id=corpus_id,
-            vec_col=vec_col,
-            n_centroids=n_centroids,
-            m=m,
-            ksub=ksub,
-            dim=dim,
-            _prepped=prepped,
-            residual=residual,
+            corpus, corpus_id=corpus_id, vec_col=vec_col, n_centroids=n_centroids,
+            m=m, ksub=ksub, dim=dim, _prepped=prepped, residual=residual,
         )
-        os.makedirs(path, exist_ok=True)
-        if coarse is not None:
-            enc = encode_ivfpq(
-                corpus, coarse, cq, dim,
-                id_col=corpus_id, vec_col=vec_col, residual=residual,
-                _prepped=prepped,
-            )
-            (
-                enc.repartition(n_centroids, "cid")
-                .write.mode("overwrite")
-                .partitionBy("cid")
-                .parquet(os.path.join(path, "index"))
-            )
-        with open(os.path.join(path, "_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "corpus_id": corpus_id,
-                    "dim": dim,
-                    "n_centroids": n_centroids,
-                    "m": m,
-                    "ksub": ksub,
-                    "residual": residual,
-                    "coarse": coarse,
-                    "cq": cq,
-                },
-                f,
-            )
+        encoded = None if coarse is None else encode_ivfpq(
+            corpus, coarse, cq, dim, id_col=corpus_id, vec_col=vec_col,
+            residual=residual, _prepped=prepped,
+        )
+        _write_layout(
+            path, encoded, n_centroids,
+            {"corpus_id": corpus_id, "dim": dim, "n_centroids": n_centroids, "m": m,
+             "ksub": ksub, "residual": residual, "coarse": coarse, "cq": cq},
+        )
     finally:
         prepped.unpersist()
 
 
 def load_vector_index(spark, path: str):
-    """Read a ``materialize_vector_index`` layout: returns
-    (index, coarse, cq, meta) — ``index`` is the (corpus_id, cid, codes)
-    frame ``ivfpq_search`` consumes (cid as the partition column, so the
-    probe's literal IN predicate prunes directories), ``coarse``/``cq``
-    the frozen model (None on an all-invalid corpus), ``meta`` the param
-    dict. Rename the id column to match the serving corpus when the two
-    differ (e.g. doc_id vs vec_id over the same id/vector pairs).
-    Opened layouts are memoized per session (``_VINDEX_CACHE``)."""
-    import json
-    import os
-
-    def build():
-        with open(os.path.join(path, "_meta.json")) as f:
-            meta = json.load(f)
-        coarse = meta["coarse"]
-        cq = meta["cq"]
-        if coarse is None:  # no-model layout: empty index, not None
-            # (callers pass this straight to ivfpq_search — empty
-            # results, no crash)
-            index = spark.createDataFrame(
-                [], f"{meta['corpus_id']} long, codes array<int>, cid int"
-            )
-        else:
-            index = spark.read.parquet(os.path.join(path, "index"))
-        return index, coarse, cq, meta
-
-    return _memo_layout(spark, path, build)
+    """Read a ``materialize_vector_index`` layout (``_load_layout``):
+    returns (index, coarse, cq, meta) — ``index`` is the
+    (corpus_id, cid, codes) frame ``ivfpq_search`` consumes (cid as the
+    partition column, so the probe's literal IN predicate prunes
+    directories), ``coarse``/``cq`` the frozen model (None on an
+    all-invalid corpus), ``meta`` the param dict. Rename the id column to
+    match the serving corpus when the two differ (e.g. doc_id vs vec_id
+    over the same id/vector pairs)."""
+    return _load_layout(spark, path, ("coarse", "cq"), "codes array<int>, cid int")

@@ -51,7 +51,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from sf_epa_data_ingestion_spark.operators.similarity import encode_ivf
+from sf_epa_data_ingestion_spark.operators.similarity import _stack_valid, encode_ivf
 from sf_epa_data_ingestion_spark.storage.txlog import TxTable
 from sf_epa_data_ingestion_spark.streaming.txsink import (
     append_once,
@@ -60,26 +60,6 @@ from sf_epa_data_ingestion_spark.streaming.txsink import (
 )
 
 _STATE_SCHEMA = "id long, cid int, u array<double>, ccos double"
-
-
-def _stack_valid(series, dim: int):
-    """Zeroed (n, dim) matrix + validity mask: None, wrong-length and
-    NaN-carrying embeddings are masked out rather than raised on — the
-    batch operator's per_cluster admits exactly these rows, so a bad
-    vector reaching the monitor must not fail the micro-batch (and with
-    it the streaming query)."""
-    import numpy as np
-
-    n = len(series)
-    m = np.zeros((n, dim), dtype=np.float64)
-    valid = np.zeros(n, dtype=bool)
-    for r, u in enumerate(series):
-        if u is not None and len(u) == dim:
-            row = np.asarray(u, dtype=np.float64)
-            if not np.isnan(row).any():
-                m[r] = row
-                valid[r] = True
-    return m, valid
 
 
 def _encode_with_ccos(df, cents, id_col="vec_id", vec_col="embedding",

@@ -94,11 +94,10 @@ def _update_user_stats(
 
     Values are summed in one numpy pass per batch (Arrow-vectorized);
     state holds three scalars per user — the state store footprint is
-    O(distinct users), not O(events). ``last_ts_us`` of -1 means "no
-    event seen yet" (every real event time maps to a non-negative
-    microsecond count in this corpus; a pre-1970 event time would still
-    compare correctly against any later one, only the sentinel would
-    need moving).
+    O(distinct users), not O(events). ``last_ts_us`` of ``-(1 << 62)``
+    means "no event seen yet": it sorts below every real event time,
+    pre-1970 ones included (microseconds since the epoch stay far above
+    -2^62 for any representable timestamp).
     """
     (user_id,) = key
     n, total, last_us = (

@@ -217,6 +217,41 @@ def test_ivf_topk_identical_vector_and_recall(spark):
     assert sorted(map(tuple, approx)) == sorted(map(tuple, shuffled))
 
 
+def test_ivf_with_fewer_vectors_than_centroids(spark, tmp_path):
+    """A corpus with fewer valid vectors than n_centroids trains one cell
+    per valid vector (a NULL row seeds nothing), and the in-query chain,
+    the persisted layout and the refhash mirror all agree on it."""
+    import numpy as np
+
+    from sf_epa_data_ingestion_spark.functions.refhash import ref_ivf_model
+
+    rng = np.random.default_rng(5)
+    vecs = {i: [float(x) for x in rng.normal(size=8)] for i in range(5)}
+    df = spark.createDataFrame(
+        list(vecs.items()) + [(5, None)], "vec_id long, embedding array<double>"
+    )
+    queries = df.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+    cents = similarity.train_ivf(df, n_centroids=16, dim=8)
+    assert len(cents) == 5
+    _probes, ref_cents, _margin = ref_ivf_model(list(vecs.items()), n_centroids=16, dim=8)
+    assert ref_cents == cents
+
+    topk = sorted(
+        map(tuple, similarity.ivf_topk(df, queries, k=3, n_centroids=16, dim=8).collect())
+    )
+    assert {r[0] for r in topk} == {0, 1} and all(r[3] <= 3 for r in topk)
+
+    path = str(tmp_path / "ivf")
+    similarity.materialize_ivf_index(df, path, n_centroids=16, dim=8)
+    index, loaded, _meta = similarity.load_ivf_index(spark, path)
+    assert loaded == cents
+    served = similarity.ivf_search(index, queries, loaded, k=3).collect()
+    assert sorted(map(tuple, served)) == topk
+
+
 def test_embedding_near_dup_exact_threshold(spark):
     df = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])], ["vec_id", "embedding"]

@@ -1,0 +1,18 @@
+"""Oracle parity for the retrieval rows in the default (fast) tier: the ANN
+suite, IVF-PQ, BM25 and hybrid search each hash-match their DuckDB oracle
+at sf0.001. The full oracle module (test_oracle_parity.py) is slow-marked;
+this keeps one oracle path exercised by every default run."""
+
+from __future__ import annotations
+
+from oracle_harness import run_all
+from test_oracle_parity import SF_DIR
+
+ROWS = ["ann_suite", "ann_ivfpq", "search_bm25", "search_hybrid"]
+
+
+def test_retrieval_rows_match_duckdb_oracle():
+    results = run_all(SF_DIR, only=ROWS)
+    assert sorted(results) == sorted(ROWS)
+    problems = [p for row in ROWS for p in results[row]]
+    assert problems == [], "\n".join(problems)

@@ -139,6 +139,34 @@ def test_hybrid_batch_single_query_matches_scalar(spark):
     postings.unpersist()
 
 
+def test_punctuated_query_ranks_like_its_normalized_terms(spark):
+    """The scalar searches tokenize the query with the index's own
+    normalizer, so punctuation glued to a term ("spark,", "hash-join!")
+    still matches the normalized postings tokens."""
+    d, n, postings, stats = _index(spark)
+    emb = load_table(spark, SF_DIR, "embeddings")
+    docs = d.join(emb, d["doc_id"] == emb["vec_id"], "inner").select(
+        F.col("doc_id").alias("id"), "text", "lang", "embedding"
+    )
+    qv = [1.0 if i % 3 == 0 else 0.5 for i in range(64)]
+
+    def ranked(query):
+        return [
+            sorted(tuple(r) for r in df.collect())
+            for df in (
+                search.bm25_search(postings, stats, query, n_docs=n, k=10),
+                search.lexical_search(postings, stats, query, k=10),
+                search.hybrid_search(docs, postings, stats, query, query_vec=qv, k=10)
+                .select("id", "lex_score", "sem_score", "score"),
+            )
+        ]
+
+    plain = ranked("spark hash join")
+    assert all(len(rows) == 10 for rows in plain)
+    assert ranked("Spark, hash-join!") == plain
+    postings.unpersist()
+
+
 def test_bm25_batch_fallback_doclens_matches(spark):
     """Batch BM25 without an index-side doclens table (postings-derived
     fallback) == the doclens path."""

@@ -494,6 +494,31 @@ def test_retrain_retry_after_crashed_build(spark, tmp_path):
         GenerationStore(root).prepare_dir(2)
 
 
+def test_retrain_with_fewer_vectors_than_centroids(spark, tmp_path):
+    """A retrain asked for more centroids than the state holds vectors
+    trains one cell per vector instead of failing: the coarse trainer
+    keeps one centroid per hash-ordered seed."""
+    from sf_epa_data_ingestion_spark.streaming.semdedup import (
+        current_semdedup_generation,
+        init_semdedup_generations,
+        retrain_semdedup_generation,
+        semantic_dedup_monitor_gen,
+    )
+
+    root = str(tmp_path / "gens")
+    init_semdedup_generations(spark, root, CENTS)
+    out = TxTable(spark, str(tmp_path / "out")).create_empty(
+        "gen int, cid int, keep_id long, drop_id long, cosine_sim double"
+    )
+    semantic_dedup_monitor_gen(spark, root, out, "sd-small")(_emb(spark, [1, 2, 3, 4, 5]), 0)
+
+    assert retrain_semdedup_generation(spark, root, "sd-small", n_centroids=16) == 2
+    gen, cents2, state2 = current_semdedup_generation(spark, root)
+    assert gen == 2 and len(cents2) == 5
+    assert sorted(r["id"] for r in state2.read().collect()) == [1, 2, 3, 4, 5]
+    assert {r["cid"] for r in state2.read().collect()} <= set(range(5))
+
+
 def test_generation_publish_is_atomic_and_tmp_tolerant(spark, tmp_path):
     """r10 review: the generation record appears atomically (temp write
     + link), a leftover temp file never pollutes generation resolution,
