@@ -1291,10 +1291,10 @@ GROUP BY 1, 2
 
 
 def q_running_user_stats_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming (applyInPandasWithState) graded
-    end-to-end (r12 VERDICT next-round #5: the one streaming operator
-    family with no graded row). The events table is replayed as two
-    deterministic micro-batches (even event_ids, then odd — so most
+    """Stateful streaming (the built-in per-user streaming aggregate)
+    graded end-to-end (r12 VERDICT next-round #5: the one streaming
+    operator family with no graded row). The events table is replayed
+    as two deterministic micro-batches (even event_ids, then odd — so most
     users' state is genuinely UPDATED across the batch boundary, not
     created once) through ``running_user_stats`` (streaming/stateful.py)
     with availableNow and UPDATE output into a memory sink; the graded
@@ -1304,8 +1304,8 @@ def q_running_user_stats_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, exact value sum, newest timestamp. State that leaked across
     users, double-counted a batch, or failed to carry across micro-
     batches flips the hash. ``value`` is fed as floor(value*100) — an
-    integer-valued double — so the running pandas sum is order-free
-    exact and bit-equal to the oracle's one-shot SUM (the
+    integer-valued double — so the running state-store sum is
+    order-free exact and bit-equal to the oracle's one-shot SUM (the
     profile_stream_replay moments discipline). State store footprint is
     O(distinct users) scalars — the 100 TB shape."""
     from sf_epa_data_ingestion_spark.streaming.stateful import running_user_stats
@@ -1357,47 +1357,6 @@ SELECT user_id, COUNT(*) AS n_events,
 FROM events
 GROUP BY user_id
 """
-
-
-def q_userstats_replay_feed_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a registry row: bench-time decomposition probe (r15 VERDICT
-    next-round #4 — running_user_stats_replay was the #2 row with no
-    probe). This is the feed DERIVATION sub-plan: both micro-batch
-    projections of the events table, unioned — what the replay's
-    ``_arrival_feed`` computes before its two coalesce(1) parquet
-    writes (the write IO itself is not probe-able through the noop
-    sink and rides in the remainder)."""
-    e = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.floor(F.col("value") * 100).cast("double").alias("value"),
-    )
-    return e.filter(F.col("event_id") % 2 == 0).drop("event_id").unionAll(
-        e.filter(F.col("event_id") % 2 == 1).drop("event_id")
-    )
-
-
-def q_userstats_replay_fold_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a registry row: bench-time decomposition probe. One batch
-    pass of the SAME per-user fold the stateful operator runs per
-    micro-batch (shuffle by user_id + per-group Python boundary + numpy
-    fold + template emit), with no state store — the data-proportional
-    part of running_user_stats_replay. The replay runs this shape twice
-    (two micro-batches over half the rows each) plus the state
-    envelope (json+pickle per group) and per-batch commits; if the
-    row's number moves, this probe says whether the fold grew
-    (data/host) or the fixed cost did."""
-    from sf_epa_data_ingestion_spark.streaming.stateful import (
-        user_stats_batch_fold,
-    )
-
-    e = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        F.floor(F.col("value") * 100).cast("double").alias("value"),
-    )
-    return user_stats_batch_fold(e)
 
 
 def q_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5431,7 +5390,7 @@ def _registry_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "time_travel": q_time_travel,
     # r13 new graded rows (r12 VERDICT #2/#4/#5): the row-level change
     # data feed, watermark late-data semantics from a real streaming
-    # replay, and applyInPandasWithState running state
+    # replay, and per-user running state across micro-batches
         "change_feed": q_change_feed,
         "late_data_replay": q_late_data_replay,
         "running_user_stats_replay": q_running_user_stats_replay,

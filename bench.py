@@ -64,15 +64,6 @@ STAGE_PROBES: dict[str, list] = {
     "training_ingest_replay": [
         ("gate_stage", entrymod.q_training_ingest_gate_stage)
     ],
-    # feed derivation vs one batch pass of the per-user fold vs
-    # state-store/micro-batch fixed cost (r15 VERDICT next-round #4:
-    # the #2 row had no probe; its cost decomposed per-worker in r16 as
-    # ~2.9 ms/group of Python-boundary time, most of it timestamp
-    # conversion — now shipped as epoch micros)
-    "running_user_stats_replay": [
-        ("feed_stage", entrymod.q_userstats_replay_feed_stage),
-        ("fold_stage", entrymod.q_userstats_replay_fold_stage),
-    ],
 }
 
 

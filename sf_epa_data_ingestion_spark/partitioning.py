@@ -12,6 +12,7 @@ only reliable way to fan CPU-bound (rather than byte-bound) work out.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
@@ -71,6 +72,10 @@ def adaptive_factor(df: DataFrame, factor: int) -> int:
     return factor
 
 
+#: Serializes ``persist_keyed``'s scoped AQE switch across threads.
+_AQE_SWITCH = threading.Lock()
+
+
 def persist_keyed(df: DataFrame) -> DataFrame:
     """``persist()`` whose cached hash partitioning stays VISIBLE to
     consumers (r16, guide §2.4: two operations keyed the same way should
@@ -96,14 +101,21 @@ def persist_keyed(df: DataFrame) -> DataFrame:
     Use ONLY on frames built with an explicit ``spread(df, key)`` whose
     downstream consumers re-key on that same key; AQE stays on for the
     rest of the query.
+
+    Thread safety: the read → switch off → ``persist()`` → restore
+    sequence runs under ``_AQE_SWITCH``, so two overlapping calls cannot
+    restore each other's ``false`` and leave AQE off for the session.
+    The conf is session-global, though: another thread that PLANS a
+    query during that short window still sees AQE off.
     """
     conf = df.sparkSession.conf
-    old = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.persist()
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old)
+    with _AQE_SWITCH:
+        old = conf.get("spark.sql.adaptive.enabled")
+        conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return df.persist()
+        finally:
+            conf.set("spark.sql.adaptive.enabled", old)
 
 
 def salted_join(

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import io
 import contextlib
+import threading
 
 import pyspark.sql.functions as F
 
@@ -133,3 +134,58 @@ def test_adaptive_factor_gates_on_plan_size(spark):
     assert sz is not None and sz < SPREAD_FACTOR_MIN_BYTES
     assert adaptive_factor(small, 4) == 1
     assert adaptive_factor(small, 1) == 1  # factor 1 is never raised
+
+
+def test_persist_keyed_overlapping_calls_leave_aqe_on(spark, monkeypatch):
+    """Two threads in persist_keyed at once, ordered by events inside a
+    wrapped persist(): the second call reads the conf while the first is
+    inside persist(), and restores last. Unserialized, the second call
+    saves the first's ``false`` and restores it, leaving AQE off for the
+    rest of the session."""
+    from sf_epa_data_ingestion_spark.partitioning import persist_keyed
+
+    first_inside = threading.Event()
+    second_inside = threading.Event()
+    first_done = threading.Event()
+    frame_cls = type(spark.range(0))
+    plain_persist = frame_cls.persist
+
+    def ordered_persist(self, *args, **kwargs):
+        if threading.current_thread().name == "first":
+            first_inside.set()
+            # hold persist() until the second call is inside it too; when
+            # the switch is serialized it cannot get there, so time out
+            second_inside.wait(3)
+        else:
+            second_inside.set()
+            first_done.wait(60)
+        return plain_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", ordered_persist)
+    cached, errors = [], []
+
+    def call(name, n):
+        try:
+            cached.append(persist_keyed(spark.range(0, n).repartition(2, "id")))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+        finally:
+            if name == "first":
+                first_done.set()
+
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        first = threading.Thread(target=call, args=("first", 100), name="first")
+        second = threading.Thread(target=call, args=("second", 200), name="second")
+        first.start()
+        assert first_inside.wait(60)
+        second.start()
+        first.join(120)
+        second.join(120)
+        assert not first.is_alive() and not second.is_alive()
+        assert errors == []
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        for df in cached:
+            df.unpersist()

@@ -1,14 +1,22 @@
-"""Oracle parity for the retrieval rows in the default (fast) tier: the ANN
-suite, IVF-PQ, BM25 and hybrid search each hash-match their DuckDB oracle
-at sf0.001. The full oracle module (test_oracle_parity.py) is slow-marked;
-this keeps one oracle path exercised by every default run."""
+"""Oracle parity in the default (fast) tier: the retrieval rows (the ANN
+suite, IVF-PQ, BM25 and hybrid search) and the stateful streaming replay
+(running_user_stats_replay: per-user running totals carried across two
+micro-batches) each hash-match their DuckDB oracle at sf0.001. The full
+oracle module (test_oracle_parity.py) is slow-marked; this keeps one
+oracle path exercised by every default run."""
 
 from __future__ import annotations
 
 from oracle_harness import run_all
 from test_oracle_parity import SF_DIR
 
-ROWS = ["ann_suite", "ann_ivfpq", "search_bm25", "search_hybrid"]
+ROWS = [
+    "ann_suite",
+    "ann_ivfpq",
+    "search_bm25",
+    "search_hybrid",
+    "running_user_stats_replay",
+]
 
 
 def test_retrieval_rows_match_duckdb_oracle():

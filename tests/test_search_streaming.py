@@ -90,8 +90,10 @@ def test_freshness_job_available_now(spark, tmp_path):
 
 
 def test_stateful_running_user_stats(spark, tmp_path):
-    """applyInPandasWithState: state must persist across micro-batches
-    (two availableNow runs over a growing directory, same checkpoint)."""
+    """State must persist across micro-batches (two availableNow runs
+    over a growing directory, same checkpoint), and nulls follow SQL
+    aggregate semantics: each user's last emission equals a batch
+    groupBy of the same rows."""
     import datetime as dt
     from pyspark.sql.types import (
         DoubleType,
@@ -100,7 +102,10 @@ def test_stateful_running_user_stats(spark, tmp_path):
         StructType,
         TimestampType,
     )
-    from sf_epa_data_ingestion_spark.streaming.stateful import running_user_stats
+    from sf_epa_data_ingestion_spark.streaming.stateful import (
+        OUTPUT_SCHEMA,
+        running_user_stats,
+    )
 
     src = os.path.join(str(tmp_path), "events")
     ckpt = os.path.join(str(tmp_path), "ckpt")
@@ -115,10 +120,12 @@ def test_stateful_running_user_stats(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1)
 
     def run_once():
-        stream = spark.readStream.schema(schema).parquet(src)
+        stats = running_user_stats(spark.readStream.schema(schema).parquet(src))
+        assert [(f.name, f.dataType) for f in stats.schema] == [
+            (f.name, f.dataType) for f in OUTPUT_SCHEMA
+        ]
         q = (
-            running_user_stats(stream)
-            .writeStream.outputMode("update")
+            stats.writeStream.outputMode("update")
             .foreachBatch(lambda b, e: b.write.mode("append").parquet(out))
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -126,14 +133,21 @@ def test_stateful_running_user_stats(spark, tmp_path):
         )
         q.awaitTermination(120)
 
+    # user 12's only value is null; user 11's second event has no ts
     spark.createDataFrame(
-        [(10, t0, 1.0), (10, t0 + dt.timedelta(minutes=1), 2.0), (11, t0, 5.0)], schema
+        [
+            (10, t0, 1.0),
+            (10, t0 + dt.timedelta(minutes=1), 2.0),
+            (11, t0, 5.0),
+            (12, t0, None),
+        ],
+        schema,
     ).write.mode("overwrite").parquet(src)
     run_once()
 
-    spark.createDataFrame([(10, t0 + dt.timedelta(minutes=2), 4.0)], schema).write.mode(
-        "append"
-    ).parquet(src)
+    spark.createDataFrame(
+        [(10, t0 + dt.timedelta(minutes=2), 4.0), (11, None, 3.0)], schema
+    ).write.mode("append").parquet(src)
     run_once()
 
     rows = spark.read.parquet(out).collect()
@@ -144,7 +158,22 @@ def test_stateful_running_user_stats(spark, tmp_path):
     # user 10: 2 events in batch 1, +1 in batch 2 -> state carried
     assert latest[10]["n_events"] == 3
     assert latest[10]["total_value"] == 7.0
-    assert latest[11]["n_events"] == 1
+
+    batch = (
+        spark.read.schema(schema)
+        .parquet(src)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("value").alias("total_value"),
+            F.max("ts").alias("last_ts"),
+        )
+        .collect()
+    )
+    cols = OUTPUT_SCHEMA.fieldNames()
+    assert sorted(tuple(r[c] for c in cols) for r in latest.values()) == sorted(
+        tuple(r[c] for c in cols) for r in batch
+    )
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
