@@ -669,51 +669,55 @@ def _idf(n_docs: int) -> Column:
     )
 
 
-def _tf_part(k1: float, b: float) -> Column:
+def _tf_part(k1: float, b: float, avgdl: Column) -> Column:
     """BM25 tf saturation with length normalization:
     tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))."""
     return (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + F.lit(k1) * (1.0 - b + F.lit(b) * F.col("dl") / F.col("avgdl"))
+        F.col("tf") + F.lit(k1) * (1.0 - b + F.lit(b) * F.col("dl") / avgdl)
     )
 
 
-def _bm25_lengths(postings: DataFrame, doclens: DataFrame | None):
-    """(doclen, avgdl) for BM25. With an index-side (id, dl) table (see
-    doc_lengths) docs with no tokens are excluded exactly like the
-    postings derivation excludes them, and nothing corpus-wide but
-    linear scans remains. Without one, both derive from postings (one
-    full (id) aggregate — fine when the postings table is materialized,
-    expensive when it is itself a live explode+groupBy subplan; pass
-    doclens= in that case)."""
+def _doclen(doclens: DataFrame) -> DataFrame:
+    """(id, dl double) of the docs with tokens — the rows BM25 joins its
+    probe to; docs with no tokens are excluded exactly like the postings
+    derivation excludes them."""
+    return doclens.filter(F.col("dl") > 0).select("id", F.col("dl").cast("double").alias("dl"))
+
+
+def _bm25_lengths(postings: DataFrame, doclens: DataFrame | None) -> tuple[DataFrame, Column]:
+    """(doclen, avgdl) for BM25: the (id, dl) frame and avgdl as a scalar
+    subquery Column. With an index-side (id, dl) table (see doc_lengths)
+    nothing corpus-wide but linear scans remains. Without one, both
+    derive from postings (one full (id) aggregate — fine when the
+    postings table is materialized, expensive when it is itself a live
+    explode+groupBy subplan; pass doclens= in that case). A caller that
+    already knows avgdl (a pinned ``TxSearchSnapshot``) passes it as a
+    literal instead."""
     if doclens is not None:
-        lens = doclens.filter(F.col("dl") > 0)
-        return lens.select("id", F.col("dl").cast("double").alias("dl")), _avgdl(lens)
+        return _doclen(doclens), _avgdl(doclens.filter(F.col("dl") > 0)).scalar()
     doclen = postings.groupBy("id").agg(F.sum("tf").cast("double").alias("dl"))
     avgdl = postings.agg(
         (F.sum("tf").cast("double") / F.countDistinct("id").cast("double")).alias("avgdl")
     )
-    return doclen, avgdl
+    return doclen, avgdl.scalar()
 
 
 def _bm25_scores(
     probe: DataFrame,
-    qstats: DataFrame,
-    lengths,
+    lengths: tuple[DataFrame, Column],
     n_docs: int,
     k1: float,
     b: float,
     query_id: str,
 ) -> DataFrame:
     """The BM25 kernel: exact per-(query, doc) score over the probe's
-    (query, token, id, tf) rows, with the pruned (token, df) stats
-    broadcast and ``lengths`` = ``_bm25_lengths``' (doclen, avgdl)."""
+    (query, token, id, tf, df) rows, with ``lengths`` = (doclen frame,
+    avgdl Column) as ``_bm25_lengths`` returns them."""
     doclen, avgdl = lengths
     return (
-        probe.join(broadcast(qstats), "token")
-        .join(doclen, "id")
-        .crossJoin(broadcast(avgdl))
+        probe.join(doclen, "id")
         .groupBy(query_id, "id")
-        .agg(F.round(F.sum(_idf(n_docs) * _tf_part(k1, b)), 6).alias("score"))
+        .agg(F.round(F.sum(_idf(n_docs) * _tf_part(k1, b, avgdl)), 6).alias("score"))
     )
 
 
@@ -755,7 +759,8 @@ def bm25_search(
     """
     probe, qstats = _literal_probe(postings, stats, query, "df")
     hits = _bm25_scores(
-        probe, qstats, _bm25_lengths(postings, doclens), n_docs, k1, b, "query_id"
+        probe.join(broadcast(qstats), "token"), _bm25_lengths(postings, doclens),
+        n_docs, k1, b, "query_id",
     )
     return _rank_within(hits, "query_id", "score", "id", k).select("id", "score")
 
@@ -913,11 +918,10 @@ def bm25_search_many(
     huge batch call for per-term dedup upstream (the distinct() here
     collapses duplicate terms within AND across queries into one probe
     row per (query, token))."""
-    qterms = _query_terms(queries, query_id, text_col)
-    lengths = _bm25_lengths(postings, doclens)
-    qstats = _query_stats(stats, qterms, "df")
+    probe, qstats = _frame_probe(postings, stats, queries, "df", query_id, text_col)
     hits = _bm25_scores(
-        postings.join(broadcast(qterms), "token"), qstats, lengths, n_docs, k1, b, query_id
+        probe.join(broadcast(qstats), "token"), _bm25_lengths(postings, doclens),
+        n_docs, k1, b, query_id,
     )
     return _rank_within(hits, query_id, "score", "id", k).drop("rank")
 
@@ -943,7 +947,10 @@ def build_term_bounds(
         postings.join(lens, "id")
         .crossJoin(broadcast(_avgdl(lens)))
         .groupBy("token")
-        .agg(F.max(_tf_part(k1, b)).alias("max_part"), F.count(F.lit(1)).alias("df"))
+        .agg(
+            F.max(_tf_part(k1, b, F.col("avgdl"))).alias("max_part"),
+            F.count(F.lit(1)).alias("df"),
+        )
     )
     # df and max_part ride along with the folded ub so the CDC maintainer
     # (apply_changes_bounds) can re-derive idf exactly under n_docs drift
@@ -1004,7 +1011,7 @@ def bounds_from_frontier(
     per_tok = (
         frontier.crossJoin(broadcast(_avgdl(doclens.filter(F.col("dl") > 0))))
         .groupBy("token")
-        .agg(F.max(_tf_part(k1, b)).alias("max_part"))
+        .agg(F.max(_tf_part(k1, b, F.col("avgdl"))).alias("max_part"))
     )
     return (
         per_tok.join(stats.select("token", "df"), "token")
@@ -1087,12 +1094,54 @@ def bm25_search_many_maxscore(
        the shuffled/aggregated row volume collapses with the candidate
        set.
 
+    Every per-term statistic comes from ``bounds``, whose ``df`` is the
+    same count as ``stats``' (``build_term_bounds`` counts it, and
+    ``bounds_from_frontier`` joins it from stats), so this path does not
+    read ``stats``; the parameter stays for positional callers. avgdl is
+    one scalar subquery over ``doclens``; ``TxSearchSnapshot.bm25_maxscore``
+    passes its per-snapshot avgdl as a literal instead.
+
     At 100 TB this composes with the persisted layout: candidate
     generation is a bucket-pruned scan of the essential terms' buckets,
-    and ``bounds`` rides the same semi-join + broadcast as stats."""
-    qterms = _query_terms(queries, query_id, text_col)
-    lengths = _bm25_lengths(postings, doclens)
-    qstats = _query_stats(stats, qterms, "df")
+    and the batch's (query, term) set broadcasts onto the bounds scan —
+    the vocabulary-sized table is never broadcast."""
+    return _maxscore_topk(
+        postings, bounds, _query_terms(queries, query_id, text_col), n_docs,
+        _bm25_lengths(postings, doclens), k, k1, b, query_id, _explain_out,
+    )
+
+
+def _maxscore_topk(
+    postings: DataFrame,
+    bounds: DataFrame,
+    qterms: DataFrame,
+    n_docs: int,
+    lengths: tuple[DataFrame, Column],
+    k: int,
+    k1: float,
+    b: float,
+    query_id: str,
+    explain_out: dict | None = None,
+) -> DataFrame:
+    """``bm25_search_many_maxscore`` over a distinct (query, token) set
+    and given ``lengths``. Every consumer of the term set reads it
+    through ONE frame, ``ranked`` (query, token, df, ub, __ord,
+    __suffix), so the query frame is scanned once per plan."""
+    # terms absent from the index carry no bound and no postings: they
+    # contribute nothing and prune nothing, exactly like bm25_search_many
+    w = Window.partitionBy(query_id)
+    ranked = (
+        bounds.select("token", "df", "ub")
+        .join(broadcast(qterms), "token")
+        .withColumn("__ord", F.row_number().over(w.orderBy(F.desc("ub"), F.asc("token"))))
+        .withColumn(
+            "__suffix",
+            F.sum("ub").over(
+                w.orderBy("__ord").rowsBetween(Window.currentRow, Window.unboundedFollowing)
+            ),
+        )
+    )
+    probe_terms = ranked.select(query_id, "token", "df")
 
     def exact_scores(cand):
         """Exact per-(query, doc) BM25 over ALL query terms, probe rows
@@ -1101,40 +1150,34 @@ def bm25_search_many_maxscore(
         with no prunable rare term the candidate set approaches the full
         matched-doc set (corpus-scale — an executor-OOM hazard if forced
         onto every executor); left to the planner/AQE it broadcasts when
-        small and shuffles when not, same as plain bm25_search_many."""
-        probe = postings.join(broadcast(qterms), "token").join(
+        small and shuffles when not, same as plain bm25_search_many. A
+        semi-join needs no distinct build side."""
+        probe = postings.join(broadcast(probe_terms), "token").join(
             cand, [query_id, "id"], "left_semi"
         )
-        return _bm25_scores(probe, qstats, lengths, n_docs, k1, b, query_id)
+        return _bm25_scores(probe, lengths, n_docs, k1, b, query_id)
+
+    def candidates(terms):
+        # (token, id) is unique in postings, and each (query, token) is
+        # one row of ranked: no duplicate pairs to remove
+        return postings.join(broadcast(terms), "token").select(query_id, "id")
 
     # ---- pass 1: floor from the top-bound term's postings ----
-    qbounds = qterms.join(broadcast(bounds), "token")  # terms absent from the
-    # index carry no bound and no postings: they contribute nothing and
-    # prune nothing, exactly like bm25_search_many
-    w_ord = Window.partitionBy(query_id).orderBy(F.desc("ub"), F.asc("token"))
-    ranked = qbounds.withColumn("__ord", F.row_number().over(w_ord)).withColumn(
-        "__suffix",
-        F.sum("ub").over(
-            Window.partitionBy(query_id)
-            .orderBy("__ord")
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        ),
-    )
     top_term = ranked.filter(F.col("__ord") == 1).select(query_id, "token")
-    cand1 = (
-        postings.join(broadcast(top_term), "token")
-        .select(query_id, "id")
-        .distinct()
-    )
-    s1 = exact_scores(cand1)
-    w_rank = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc("id"))
     floors = (
-        s1.withColumn("__rn", F.row_number().over(w_rank))
+        _rank_within(exact_scores(candidates(top_term)), query_id, "score", "id", k, "__rn")
         .filter(F.col("__rn") == k)
         .select(query_id, F.col("score").alias("__floor"))
     )
 
-    # ---- pass 2: essential-term candidates union pass-1, exact top-k ----
+    # ---- pass 2: essential-term candidates, exact top-k ----
+    # The top term is always essential, so these candidates already hold
+    # pass 1's: its suffix S_1 is the sum of every term's bound, which is
+    # at least any doc's exact score (each term adds at most its bound),
+    # hence at least the floor (the k-th best exact score). Rounding the
+    # score to 6 places moves it by at most 5e-7 and the bound/score
+    # float-order difference is ~1e-14, both far below MAXSCORE_EPS, so
+    # S_1 >= floor - eps holds and no union with pass 1 is needed.
     essential = (
         ranked.join(broadcast(floors), query_id, "left")
         .filter(
@@ -1143,20 +1186,14 @@ def bm25_search_many_maxscore(
         )
         .select(query_id, "token")
     )
-    cand2 = (
-        postings.join(broadcast(essential), "token")
-        .select(query_id, "id")
-        .unionByName(cand1)
-        .distinct()
-    )
-    if _explain_out is not None:
+    if explain_out is not None:
         # test/measurement hook: the probe-term frames, for pruning
         # evidence (which (query, term) lists candidate generation scans)
-        _explain_out["qterms"] = qterms
-        _explain_out["essential"] = essential
-        _explain_out["cand1"] = cand1
-        _explain_out["cand2"] = cand2
-    return _rank_within(exact_scores(cand2), query_id, "score", "id", k).drop("rank")
+        explain_out["qterms"] = qterms
+        explain_out["essential"] = essential
+    return _rank_within(
+        exact_scores(candidates(essential)), query_id, "score", "id", k
+    ).drop("rank")
 
 
 def materialize_search_index(

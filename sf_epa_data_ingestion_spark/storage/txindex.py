@@ -43,6 +43,7 @@ overwrites, and the WAND bounds are frontier-exact
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pyspark.sql.functions as F
@@ -160,6 +161,13 @@ class TxSearchSnapshot:
     def frontier(self) -> DataFrame:
         return self._read("frontier")
 
+    @functools.cached_property
+    def avgdl(self) -> float | None:
+        """Mean length of this generation's docs with tokens, resolved
+        once: the snapshot is immutable, so BM25 serving takes it as a
+        literal instead of aggregating doclens in every query's plan."""
+        return search._avgdl(self.doclens().filter(F.col("dl") > 0)).first()[0]
+
     def last_txn(self, app: str):
         """Replay marker for ``app`` as of this generation's manifest."""
         return GenerationStore(self.path).meta(self.gen).get("txn", {}).get(app)
@@ -171,18 +179,22 @@ class TxSearchSnapshot:
                       terms: list | None = None) -> DataFrame:
         """WAND-pruned batch BM25 served ENTIRELY from this snapshot:
         the postings probe is bucket-pruned through txlog file skipping
-        (``postings_for_terms``), and every statistic (stats, bounds,
-        doclens, n_docs) reads at the pinned versions — so results are
-        stable under concurrent refreshes, the property the directory
-        layout cannot offer.
+        (``postings_for_terms``), and every statistic (bounds, doclens,
+        n_docs) reads at the pinned versions — so results are stable
+        under concurrent refreshes, the property the directory layout
+        cannot offer. avgdl is the snapshot's ``avgdl``, a literal in
+        the plan, so no query scans all of doclens for it; the query
+        frame's term set is filtered by the same literal ``terms`` as
+        the postings probe, so every branch of the plan reads the same
+        term-set subtree and the query frame is scanned once.
 
         ``terms``: when the query texts are LITERALS the caller already
         knows their normalized term set (the directory path's
         ``_probe_terms`` shape) — passing it skips the tokenize+collect
         job this method otherwise runs over the query frame. Must equal
         ``_norm_tokens``' output for the same texts: a superset only
-        widens the probe (safe), a subset would silently drop a term's
-        postings from scoring."""
+        widens the probe (safe), a subset would silently drop a term
+        from scoring."""
         if terms is None:
             # the SAME Spark expression the scorer tokenizes with (one
             # tiny collect over the query frame) — a hand-rolled Python
@@ -195,14 +207,16 @@ class TxSearchSnapshot:
                     F.explode(search._norm_tokens(F.col(text_col))).alias("t")
                 ).distinct().collect()
             )
-        return search.bm25_search_many_maxscore(
+        qterms = search._query_terms(queries, query_id, text_col).filter(
+            F.col("token").isin(sorted(terms))
+        )
+        return search._maxscore_topk(
             self.postings_for_terms(terms),
-            self.stats(),
             self.bounds(),
-            queries,
+            qterms,
             self.n_docs,
-            self.doclens(),
-            k=k, k1=k1, b=b, query_id=query_id, text_col=text_col,
+            (search._doclen(self.doclens()), F.lit(self.avgdl).cast("double")),
+            k, k1, b, query_id,
         )
 
 

@@ -152,9 +152,9 @@ def test_multi_grouping_is_three_expands(spark):
 
 def test_bm25_broadcasts_stats_and_avgdl(spark):
     p = plan_of(spark, "search_bm25")
-    # term-pruned postings probe the doc-length table; the term stats and
-    # the 1-row avgdl aggregate must broadcast — never shuffle the corpus
-    # for a 4-term query, never a cartesian against a materialized scalar
+    # term-pruned postings probe the doc-length table; the term stats
+    # must broadcast and avgdl is a scalar subquery — never shuffle the
+    # corpus for a 4-term query, never a cartesian against a scalar
     assert "BroadcastHashJoin" in p
     assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
     assert "CartesianProduct" not in p

@@ -1,9 +1,13 @@
 """Oracle parity in the default (fast) tier: the retrieval rows (the ANN
-suite, IVF-PQ, BM25 and hybrid search) and the stateful streaming replay
+suite, IVF-PQ, BM25, hybrid search, and max-score BM25 served from the
+directory layout, from a transactional snapshot, and from a snapshot
+brought to the corpus by a CDC refresh) and the stateful streaming replay
 (running_user_stats_replay: per-user running totals carried across two
-micro-batches) each hash-match their DuckDB oracle at sf0.001. The full
-oracle module (test_oracle_parity.py) is slow-marked; this keeps one
-oracle path exercised by every default run."""
+micro-batches) each hash-match their DuckDB oracle at sf0.001. The
+max-score rows share one full-scoring oracle, so any unsound pruning
+fails here. The full oracle module (test_oracle_parity.py) is
+slow-marked; this keeps one oracle path exercised by every default
+run."""
 
 from __future__ import annotations
 
@@ -15,6 +19,9 @@ ROWS = [
     "ann_ivfpq",
     "search_bm25",
     "search_hybrid",
+    "search_bm25_wand",
+    "search_bm25_wand_tx",
+    "search_bm25_wand_tx_fresh",
     "running_user_stats_replay",
 ]
 

@@ -444,6 +444,60 @@ def test_maxscore_bm25_identical_to_naive_and_actually_prunes(spark):
     postings.unpersist()
 
 
+def _first_join_or_broadcast_above(plan: str, marker: str) -> list[str]:
+    """For each node of a physical plan tree string whose line holds
+    ``marker``: the nearest ancestor that is a join or a
+    BroadcastExchange (node name, codegen prefix dropped)."""
+    import re
+
+    nodes = []
+    for line in plan.splitlines():
+        text = line.lstrip(" :+-")
+        nodes.append((len(line) - len(text), re.sub(r"^\*\(\d+\) ", "", text)))
+    hits = []
+    for i, (col, text) in enumerate(nodes):
+        if marker not in text:
+            continue
+        for j in range(i - 1, -1, -1):
+            if nodes[j][0] < col:
+                col, name = nodes[j][0], nodes[j][1].split(" ", 1)[0]
+                if name == "BroadcastExchange" or name.endswith("Join"):
+                    hits.append(name)
+                    break
+    return hits
+
+
+def test_maxscore_never_broadcasts_unpruned_bounds(spark, tmp_path):
+    """bounds is vocabulary-sized, so the batch's term set broadcasts
+    onto the bounds scan: every path up from that scan meets a join
+    before any BroadcastExchange. Postings are unfiltered (the
+    search_bm25_wand shape), so no inferred token filter prunes the
+    bounds scan either."""
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate([
+            "spark join hash table", "hash table scan", "spark spark row",
+            "merge row filter", "table join join", "scan filter value",
+        ])],
+        "doc_id long, text string",
+    )
+    postings = search.build_postings(docs, id_col="doc_id", text_col="text")
+    doclens = search.doc_lengths(docs, id_col="doc_id", text_col="text")
+    search.build_term_bounds(postings, doclens, 6).write.parquet(str(tmp_path / "bounds"))
+    bounds = spark.read.parquet(str(tmp_path / "bounds"))
+    qdf = spark.createDataFrame(
+        [(0, "spark table"), (1, "row filter scan")], "query_id long, query_text string"
+    )
+    stats = search.build_token_stats(postings, n_docs=6)
+    served = search.bm25_search_many_maxscore(
+        postings, stats, bounds, qdf, n_docs=6, doclens=doclens, k=2
+    )
+    naive = search.bm25_search_many(postings, stats, qdf, n_docs=6, doclens=doclens, k=2)
+    assert sorted(served.collect()) == sorted(naive.collect())
+    plan = served._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    above = _first_join_or_broadcast_above(plan, "ub:double")
+    assert above and "BroadcastExchange" not in above, plan
+
+
 def test_hybrid_ann_batch_single_row_parity_and_semantic_reach(spark):
     """hybrid_search_ann_many contracts: (1) a 1-row batch reproduces
     hybrid_search_ann row-for-row (same legs, same RRF, same ties);

@@ -447,3 +447,61 @@ def test_hybrid_query_is_snapshot_isolated_mid_refresh(spark, tmp_path):
     assert r2 != r1
     corpus.unpersist()
     index.unpersist()
+
+
+def _final_plan(df) -> str:
+    """The executed (final adaptive) physical plan of a collected frame."""
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def test_single_query_plan_reads_query_frame_once(spark, tmp_path):
+    """One serving query built with createDataFrame(list) (a LogicalRDD:
+    every scan of it runs Python tasks): the executed max-score plan
+    scans it exactly once — every branch reads the same term-set
+    subtree — and has no SinglePartition exchange, i.e. no per-query
+    avgdl aggregate over doclens (the snapshot passes its own avgdl as
+    a literal)."""
+    docs = _docs(spark, n=60)
+    tx = str(tmp_path / "tx")
+    materialize_tx_search_index(docs, tx, id_col="doc_id", text_col="text")
+    snap = load_tx_search_index(spark, tx)
+    query = spark.createDataFrame(
+        [(7, "spark table join")], "query_id long, query_text string"
+    )
+    served = snap.bm25_maxscore(query, k=5, terms=["join", "spark", "table"])
+    assert served.collect()
+    plan = _final_plan(served)
+    assert plan.count("Scan ExistingRDD") == 1, plan
+    assert "Exchange SinglePartition" not in plan, plan
+
+
+def test_bounds_df_equals_stats_df_after_build_and_refresh(spark, tmp_path):
+    """The max-score path takes each term's df from bounds and never
+    reads stats, so the two must agree token for token: after a tx
+    build, after one tx refresh, and after an in-place directory
+    refresh of the same change feed."""
+    def df_of(frame):
+        return {r["token"]: r["df"] for r in frame.select("token", "df").collect()}
+
+    docs = _docs(spark, n=80)
+    tx = str(tmp_path / "tx")
+    materialize_tx_search_index(docs, tx, id_col="doc_id", text_col="text")
+    snap = load_tx_search_index(spark, tx)
+    built = df_of(snap.bounds())
+    assert built and built == df_of(snap.stats())
+
+    _t, changes = _feed(spark, tmp_path, docs)
+    refresh_tx_search_index(spark, tx, changes, id_col="doc_id", text_col="text")
+    snap2 = load_tx_search_index(spark, tx)
+    assert snap2.gen == 2
+    refreshed = df_of(snap2.bounds())
+    assert refreshed == df_of(snap2.stats()) and refreshed != built
+
+    dir_ = str(tmp_path / "dir")
+    search.materialize_search_index(docs, dir_, id_col="doc_id", text_col="text")
+    search.refresh_search_index(
+        spark, dir_, changes, id_col="doc_id", text_col="text", allow_inplace=True
+    )
+    dir_bounds = df_of(spark.read.parquet(os.path.join(dir_, "bounds")))
+    assert dir_bounds == df_of(spark.read.parquet(os.path.join(dir_, "stats")))
+    assert dir_bounds == refreshed
