@@ -684,6 +684,11 @@ def _doclen(doclens: DataFrame) -> DataFrame:
     return doclens.filter(F.col("dl") > 0).select("id", F.col("dl").cast("double").alias("dl"))
 
 
+def _doc_avgdl(doclens: DataFrame) -> DataFrame:
+    """Single-row avgdl over the docs with tokens of an (id, dl) table."""
+    return _avgdl(doclens.filter(F.col("dl") > 0))
+
+
 def _bm25_lengths(postings: DataFrame, doclens: DataFrame | None) -> tuple[DataFrame, Column]:
     """(doclen, avgdl) for BM25: the (id, dl) frame and avgdl as a scalar
     subquery Column. With an index-side (id, dl) table (see doc_lengths)
@@ -694,7 +699,7 @@ def _bm25_lengths(postings: DataFrame, doclens: DataFrame | None) -> tuple[DataF
     already knows avgdl (a pinned ``TxSearchSnapshot``) passes it as a
     literal instead."""
     if doclens is not None:
-        return _doclen(doclens), _avgdl(doclens.filter(F.col("dl") > 0)).scalar()
+        return _doclen(doclens), _doc_avgdl(doclens).scalar()
     doclen = postings.groupBy("id").agg(F.sum("tf").cast("double").alias("dl"))
     avgdl = postings.agg(
         (F.sum("tf").cast("double") / F.countDistinct("id").cast("double")).alias("avgdl")
@@ -1009,7 +1014,7 @@ def bounds_from_frontier(
     supplies (token, df); avgdl comes from ``doclens`` exactly as the
     rebuild computes it (integer dl sum -> order-independent)."""
     per_tok = (
-        frontier.crossJoin(broadcast(_avgdl(doclens.filter(F.col("dl") > 0))))
+        frontier.crossJoin(broadcast(_doc_avgdl(doclens)))
         .groupBy("token")
         .agg(F.max(_tf_part(k1, b, F.col("avgdl"))).alias("max_part"))
     )
@@ -1106,27 +1111,37 @@ def bm25_search_many_maxscore(
     and the batch's (query, term) set broadcasts onto the bounds scan —
     the vocabulary-sized table is never broadcast."""
     return _maxscore_topk(
-        postings, bounds, _query_terms(queries, query_id, text_col), n_docs,
-        _bm25_lengths(postings, doclens), k, k1, b, query_id, _explain_out,
+        postings, bounds, queries, n_docs, doclens, _doc_avgdl(doclens).scalar(),
+        k, k1, b, query_id, text_col, explain_out=_explain_out,
     )
 
 
 def _maxscore_topk(
     postings: DataFrame,
     bounds: DataFrame,
-    qterms: DataFrame,
+    queries: DataFrame,
     n_docs: int,
-    lengths: tuple[DataFrame, Column],
+    doclens: DataFrame,
+    avgdl: Column,
     k: int,
     k1: float,
     b: float,
     query_id: str,
+    text_col: str,
+    terms: list | None = None,
     explain_out: dict | None = None,
 ) -> DataFrame:
-    """``bm25_search_many_maxscore`` over a distinct (query, token) set
-    and given ``lengths``. Every consumer of the term set reads it
-    through ONE frame, ``ranked`` (query, token, df, ub, __ord,
-    __suffix), so the query frame is scanned once per plan."""
+    """``bm25_search_many_maxscore`` with avgdl given as a Column (a
+    scalar subquery, or a pinned snapshot's literal). Every consumer of
+    the term set reads it through ONE frame, ``ranked`` (query, token,
+    df, ub, __ord, __suffix). ``terms``: a literal superset of the
+    batch's tokens, the same set a ``postings_for_terms`` probe is cut
+    to; filtering the query terms by it too gives every branch of the
+    plan the same term-set subtree, so the query frame is scanned once."""
+    qterms = _query_terms(queries, query_id, text_col)
+    if terms is not None:
+        qterms = qterms.filter(F.col("token").isin(sorted(terms)))
+    lengths = (_doclen(doclens), avgdl)
     # terms absent from the index carry no bound and no postings: they
     # contribute nothing and prune nothing, exactly like bm25_search_many
     w = Window.partitionBy(query_id)

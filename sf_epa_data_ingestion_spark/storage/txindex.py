@@ -166,7 +166,7 @@ class TxSearchSnapshot:
         """Mean length of this generation's docs with tokens, resolved
         once: the snapshot is immutable, so BM25 serving takes it as a
         literal instead of aggregating doclens in every query's plan."""
-        return search._avgdl(self.doclens().filter(F.col("dl") > 0)).first()[0]
+        return search._doc_avgdl(self.doclens()).first()[0]
 
     def last_txn(self, app: str):
         """Replay marker for ``app`` as of this generation's manifest."""
@@ -207,16 +207,14 @@ class TxSearchSnapshot:
                     F.explode(search._norm_tokens(F.col(text_col))).alias("t")
                 ).distinct().collect()
             )
-        qterms = search._query_terms(queries, query_id, text_col).filter(
-            F.col("token").isin(sorted(terms))
-        )
         return search._maxscore_topk(
             self.postings_for_terms(terms),
             self.bounds(),
-            qterms,
+            queries,
             self.n_docs,
-            (search._doclen(self.doclens()), F.lit(self.avgdl).cast("double")),
-            k, k1, b, query_id,
+            self.doclens(),
+            F.lit(self.avgdl).cast("double"),
+            k, k1, b, query_id, text_col, terms=terms,
         )
 
 

@@ -472,7 +472,9 @@ def test_maxscore_never_broadcasts_unpruned_bounds(spark, tmp_path):
     onto the bounds scan: every path up from that scan meets a join
     before any BroadcastExchange. Postings are unfiltered (the
     search_bm25_wand shape), so no inferred token filter prunes the
-    bounds scan either."""
+    bounds scan either. bounds is the only file-backed input here, so
+    every parquet scan in the plan is a bounds scan, whichever columns
+    the branch reading it keeps."""
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate([
             "spark join hash table", "hash table scan", "spark spark row",
@@ -494,8 +496,9 @@ def test_maxscore_never_broadcasts_unpruned_bounds(spark, tmp_path):
     naive = search.bm25_search_many(postings, stats, qdf, n_docs=6, doclens=doclens, k=2)
     assert sorted(served.collect()) == sorted(naive.collect())
     plan = served._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
-    above = _first_join_or_broadcast_above(plan, "ub:double")
-    assert above and "BroadcastExchange" not in above, plan
+    above = _first_join_or_broadcast_above(plan, "FileScan parquet")
+    assert len(above) == plan.count("FileScan parquet") >= 1, plan
+    assert "BroadcastExchange" not in above, plan
 
 
 def test_hybrid_ann_batch_single_row_parity_and_semantic_reach(spark):

@@ -7,16 +7,17 @@ query set in one batch.
 
 Usage (from the root of a checkout):
 
-    python3 tools/serving_plans.py <outdir> [--scale 1.0] [--seed 1] [--queries 24]
+    python3 tools/serving_plans.py <outdir>
 
-Writes ``<outdir>/single.txt`` and ``<outdir>/batch.txt``: the job count,
-the wall time, the ``Scan ExistingRDD`` (query-frame scan) and Exchange
-counts of the final adaptive plan, then that plan.  Each call runs
+The corpus is ``perfbench/datagen.py`` at scale 1.0 with the benchmark's
+data seed, and the query set is ``search_serving``'s at seed 1, on
+``local[4]``.  Writes ``<outdir>/single.txt`` and ``<outdir>/batch.txt``:
+the job count, the wall time, the ``Scan ExistingRDD`` (query-frame scan)
+and Exchange counts of the final adaptive plan, then that plan.  Each call runs
 once untimed first so the counted call is warm.  The input tables and the
 index live in a temporary directory that is removed at exit.
 """
 
-import argparse
 import os
 import shutil
 import sys
@@ -25,6 +26,7 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
+SCALE, SEED, MASTER = 1.0, 1, "local[4]"
 
 
 def _count(plan: str) -> dict[str, int]:
@@ -55,29 +57,26 @@ def _measure(spark, make_df) -> tuple[dict, str]:
 
 
 def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("outdir")
-    ap.add_argument("--scale", type=float, default=1.0)
-    ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--queries", type=int, default=24)
-    ap.add_argument("--cores", type=int, default=4)
-    args = ap.parse_args()
+    if len(sys.argv) != 2:
+        sys.exit(__doc__)
+    outdir = sys.argv[1]
 
     work = tempfile.mkdtemp(prefix="serving_plans_")
     tempfile.tempdir = work
     try:
         import datagen
-        from workloads import make_queries, norm_terms
+        from run import DATA_SEED
+        from workloads import WORKLOADS, make_queries, norm_terms
 
         data = os.path.join(work, "data")
-        datagen.generate(data, seed=20240101, scale=args.scale)
-        queries = make_queries(data, args.seed, args.queries)
+        datagen.generate(data, seed=DATA_SEED, scale=SCALE)
+        queries = make_queries(data, SEED, WORKLOADS["search_serving"]["queries"])
 
         import __spark_entry__ as entry
         from sf_epa_data_ingestion_spark.session import get_spark
         from sf_epa_data_ingestion_spark.storage import txindex
 
-        spark = get_spark(master=f"local[{args.cores}]", extra_conf={
+        spark = get_spark(master=MASTER, extra_conf={
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         })
         spark.sparkContext.setLogLevel("ERROR")
@@ -92,12 +91,12 @@ def main():
             "single": lambda: snap.bm25_maxscore(qdf([single]), k=10, terms=norm_terms(single[1])),
             "batch": lambda: snap.bm25_maxscore(qdf(queries), k=10, terms=batch_terms),
         }
-        os.makedirs(args.outdir, exist_ok=True)
+        os.makedirs(outdir, exist_ok=True)
         for name, make_df in cases.items():
             stats, plan = _measure(spark, make_df)
-            head = f"# {name}: scale {args.scale}, seed {args.seed}, local[{args.cores}]\n"
+            head = f"# {name}: scale {SCALE}, seed {SEED}, {MASTER}\n"
             head += "".join(f"# {k} = {v}\n" for k, v in stats.items())
-            with open(os.path.join(args.outdir, f"{name}.txt"), "w") as f:
+            with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
                 f.write(head + plan + "\n")
             print(name, stats, flush=True)
         spark.stop()
