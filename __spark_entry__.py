@@ -3113,16 +3113,16 @@ def _materialized_dir(sf_dir: str, table, tag: str, build) -> str:
 
 def _search_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Persisted token-bucketed search index (search.materialize_search_index)
-    over the documents table — see _materialized_dir. ``search_index_v5``
-    keys the current layout generation (v2 added bounds/; v3 widened
-    bounds/ to (token, df, max_part, ub) for CDC maintenance; v4
-    id-bucketed doclens/ so refresh rewrites only changed buckets —
-    readers are unchanged in all three: load_search_index hides the
-    maintenance columns and every ub value is bit-identical)."""
+    over the documents table — see _materialized_dir. The layout is
+    write-once: a changed corpus gets a new signature and a new build.
+    ``search_index_v6`` keys the current layout generation (v2 added
+    bounds/; v3 widened bounds/ to (token, df, max_part, ub); v6 dropped
+    the frontier/ piece and the id-bucketing of doclens/, which only the
+    removed in-place refresh read — every served row is unchanged)."""
     return _materialized_dir(
         sf_dir,
         "documents",
-        "search_index_v5",
+        "search_index_v6",
         lambda tmp: search.materialize_search_index(
             _t(spark, sf_dir, "documents"), tmp, id_col="doc_id", text_col="text"
         ),
@@ -3242,7 +3242,7 @@ def _joined_search_index_dir(spark: SparkSession, sf_dir: str) -> str:
     return _materialized_dir(
         sf_dir,
         ["documents", "embeddings"],
-        "search_index_join_v2",
+        "search_index_join_v3",
         lambda tmp: search.materialize_search_index(
             _joined_docs(spark, sf_dir), tmp, id_col="id", text_col="text"
         ),
@@ -3255,7 +3255,8 @@ def _tx_search_index_dir(spark: SparkSession, sf_dir: str) -> str:
     txlog tables behind an atomic generation manifest — the
     snapshot-isolated sibling of _search_index_dir. Serving reads pin
     the manifest's piece versions, so results are stable under a
-    concurrent refresh (the directory layout's documented hazard)."""
+    concurrent refresh (the directory layout is write-once and is
+    never refreshed)."""
     def build(tmp):
         txindex.materialize_tx_search_index(
             _t(spark, sf_dir, "documents"), tmp, id_col="doc_id", text_col="text"
@@ -3345,9 +3346,9 @@ _probe_terms = search._literal_terms
 def q_search_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 index: postings (token, id, tf) joined with token stats
     (df, idf), read from the PERSISTED token-bucketed layout (r8 — the
-    searchable index is a maintained TABLE kept fresh by
-    streaming/freshness.py; r7 re-derived it from raw text inside every
-    graded query, which made the index build the query's cost). Identical
+    searchable index is a write-once TABLE built per corpus signature;
+    r7 re-derived it from raw text inside every graded query, which made
+    the index build the query's cost). Identical
     rows to the live build (same build plan writes the layout; pinned by
     test + the unchanged oracle)."""
     root = _search_index_dir(spark, sf_dir)
@@ -3642,9 +3643,9 @@ def q_search_bm25_wand_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
     txlog versions (storage/txindex.TxSearchSnapshot) and the postings
     probe is bucket-pruned through txlog FILE SKIPPING on __tb instead
     of directory PartitionFilters — the serving path that stays
-    bit-stable under a concurrent refresh_tx_search_index, which the
-    in-place directory refresh cannot offer (reference anchor:
-    continuous serving under TARGET_LAG, epa_ingestion.py:844-854).
+    bit-stable under a concurrent refresh_tx_search_index (reference
+    anchor: continuous serving under TARGET_LAG,
+    epa_ingestion.py:844-854).
     One logical query, two physical hosts: shares
     ORACLE_SEARCH_BM25_WAND verbatim (the merge_upsert/merge_upsert_tx
     precedent), so any host-side drift fails the hash compare."""

@@ -7,8 +7,9 @@ Cortex Search service (X1, epa_ingestion.py:838-865: ``ON chunk``,
 Design: the *index* is two plain DataFrames/tables —
 - postings(token, id, tf)      one shuffle to build (explode + groupBy)
 - stats(token, df, idf)        tiny, broadcast at query time
-kept fresh by the streaming job in ``streaming/freshness.py`` (the
-TARGET_LAG analog). Queries never scan raw text: they broadcast the query
+kept fresh by the transactional host (``storage/txindex.py``) and its
+streaming maintainer in ``streaming/freshness.py`` (the TARGET_LAG
+analog). Queries never scan raw text: they broadcast the query
 terms against the postings table (partition-pruned by token at scale if the
 postings table is bucketed/partitioned by token).
 
@@ -308,339 +309,6 @@ def apply_changes_stats(
     )
 
 
-def apply_changes_bounds(
-    bounds: DataFrame,
-    postings_after: DataFrame,
-    doclens_before: DataFrame,
-    doclens_after: DataFrame,
-    changes: DataFrame,
-    n_docs_after: int,
-    id_col: str = "id",
-    text_col: str = "text",
-    change_col: str = "_change_type",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Incrementally maintain the max-score bounds table (token, df,
-    max_part, ub) from a txlog change feed, keeping WAND candidate
-    pruning SOUND (result-invisible) between full rebuilds.
-
-    r10 note: this is the FRONTIER-FREE form — sound upper bounds whose
-    untouched-token scale factor (greatest(1, avgdl'/avgdl)) ratchets
-    monotonically looser across repeated refreshes. The persisted-layout
-    refresh path (``refresh_search_index``) no longer uses it: with the
-    layout's per-token Pareto frontier, ``bounds_from_frontier`` is
-    EXACT at the same vocabulary-scale cost. Kept for maintaining a
-    bounds table when no frontier exists (e.g. an ad-hoc
-    ``build_term_bounds`` output held in memory) — its soundness
-    property tests still pin the scale-factor math.
-
-    - TOUCHED tokens (any token appearing in an inserted or deleted row
-      image — max-merge on insert is not enough because a delete can
-      remove the bound-defining doc): rebuilt EXACTLY from the maintained
-      postings semi-joined to the touched-token set. Over the persisted
-      token-bucketed layout that semi-join prunes to the touched tokens'
-      buckets.
-    - UNTOUCHED tokens: their postings are unchanged, but avgdl may have
-      drifted. tf_part(dl, avgdl) is increasing in avgdl, and for
-      a' > a it holds per-posting that
-      tf_part(a') <= tf_part(a) * (a'/a), so scaling the stored
-      max_part by greatest(1, avgdl_after/avgdl_before) keeps every
-      bound an upper bound of the true per-term score; idf is re-derived
-      EXACTLY from the stored df and ``n_docs_after``. The scaled bound
-      is never below the rebuilt one (soundness, pinned by test); a
-      periodic full rebuild re-tightens pruning efficiency, never
-      correctness.
-
-    Equality contract (pinned in tests/test_search_streaming.py):
-    maintained == rebuilt exactly on touched tokens, and exactly
-    everywhere when avgdl is unchanged (e.g. same-length updates);
-    otherwise maintained >= rebuilt element-wise and
-    ``bm25_search_many_maxscore`` served from the maintained table
-    returns bit-identical top-k to the naive scorer."""
-    touched = (
-        changes.select(F.explode(_norm_tokens(F.col(text_col))).alias("token")).distinct()
-    )
-    rebuilt_touched = build_term_bounds(
-        postings_after.join(broadcast(touched), "token", "left_semi"),
-        doclens_after,
-        n_docs_after,
-        k1=k1,
-        b=b,
-    )
-
-    factor = (
-        _avgdl(doclens_after.filter(F.col("dl") > 0), "a1")
-        .crossJoin(_avgdl(doclens_before.filter(F.col("dl") > 0), "a0"))
-        .select(F.greatest(F.lit(1.0), F.col("a1") / F.col("a0")).alias("__f"))
-    )
-    untouched = (
-        bounds.join(broadcast(touched), "token", "left_anti")
-        .crossJoin(broadcast(factor))
-        .select(
-            "token",
-            "df",
-            (F.col("max_part") * F.col("__f")).alias("max_part"),
-        )
-        .select("token", "df", "max_part", (_idf(n_docs_after) * F.col("max_part")).alias("ub"))
-    )
-    return rebuilt_touched.unionByName(untouched)
-
-
-def refresh_search_index(
-    spark,
-    path: str,
-    changes: DataFrame,
-    id_col: str = "id",
-    text_col: str = "text",
-    change_col: str = "_change_type",
-    k1: float = 1.2,
-    b: float = 0.75,
-    txn: tuple[str, int] | None = None,
-    allow_inplace: bool = False,
-) -> None:
-    """Apply a txlog change feed to a PERSISTED
-    ``materialize_search_index`` layout in place — all five pieces
-    (postings, doclens, stats, frontier, bounds) plus the ``_meta.json``
-    corpus count, without a full rebuild. This is what the 60 s
-    freshness job runs per micro-batch to honor the reference's
-    whole-service TARGET_LAG (epa_ingestion.py:844-854), not just its
-    postings half. Since r10 every piece is maintained EXACTLY — bounds
-    included, via the persisted per-token Pareto frontier
-    (``build_term_frontier``/``bounds_from_frontier``): maintained ==
-    full rebuild row-for-row after any feed shape, deletes included
-    (pinned by test), at vocabulary-scale bounds cost per refresh.
-
-    ``txn=(app_id, batch_id)`` makes micro-batch replay a no-op: the
-    marker is recorded in ``_meta.json`` at the end of a completed
-    refresh, and a batch at or below the recorded id is acknowledged
-    without touching the layout (streaming/freshness.index_refresh_sink
-    passes it). Crash-consistency caveat, stated rather than papered
-    over: the marker commits LAST, so a crash MID-refresh leaves a torn
-    layout whose recovery is a full ``materialize_search_index`` rebuild
-    — the standard story for a non-transactional multi-directory layout.
-    The same caveat applies to CONCURRENT READERS, not just crashes: the
-    refresh mutates the live directories non-atomically (dynamic
-    partition overwrite, removal of emptied bucket dirs, stats/bounds
-    rewritten in place), so a query serving from ``load_search_index``
-    while a refresh runs can observe mixed-generation pieces or hit a
-    FileNotFound on a just-removed bucket directory. Serving reads must
-    be fenced off a refresh window (the single-writer + quiesced-reader
-    discipline of streaming/freshness.index_refresh_sink). When either
-    caveat matters, use ``storage/txindex.py`` (r10): the same five
-    pieces hosted in txlog tables behind an atomic manifest — torn
-    refreshes invisible, concurrent readers snapshot-isolated — at the
-    cost of txlog commit overhead per refresh.
-
-    Postings AND doclens are maintained bucket-incrementally: only the
-    ``__tb`` partitions containing a touched token (respectively the
-    ``__ib`` id-buckets containing a changed doc id) are read,
-    maintained, and dynamically overwritten
-    (``partitionOverwriteMode=dynamic``) — at 100 TB an O(change) update
-    touches O(touched-buckets) of either table, never the untouched
-    directories (pinned by an untouched-files-unmodified test).
-    Maintained rows are staged to a sibling directory first because
-    Spark cannot overwrite a path it is reading in the same job. stats
-    and bounds are vocabulary-sized and rewritten whole."""
-    if not allow_inplace:
-        # r11 VERDICT next-round #7: SCALE.md's own recommendation is
-        # that every TARGET_LAG-style deployment serve from the tx host,
-        # so the hazard-carrying in-place mutation is now OPT-IN — the
-        # caller must state it has fenced readers off the refresh window
-        raise RuntimeError(
-            "refresh_search_index mutates the directory layout IN PLACE: "
-            "a concurrent reader can observe mixed-generation pieces and "
-            "a crash mid-refresh leaves a torn layout. Use "
-            "storage/txindex.refresh_tx_search_index (atomic manifest "
-            "cutover, snapshot-isolated readers), or pass "
-            "allow_inplace=True after fencing readers off the refresh "
-            "window (single-writer + quiesced-reader discipline)"
-        )
-    import json
-    import os
-    import shutil
-
-    from ..functions.refhash import xxh64_string
-
-    with open(os.path.join(path, "_meta.json")) as f:
-        meta = json.load(f)
-    if txn is not None:
-        app_id, batch_id = txn
-        last = meta.get("txn", {}).get(app_id)
-        if last is not None and int(batch_id) <= int(last):
-            return  # replayed micro-batch: already applied, acknowledge
-    n_buckets = int(meta["n_buckets"])
-    postings = spark.read.parquet(os.path.join(path, "postings"))
-    stats = spark.read.parquet(os.path.join(path, "stats"))
-    doclens_raw = spark.read.parquet(os.path.join(path, "doclens"))
-    frontier = spark.read.parquet(os.path.join(path, "frontier"))
-
-    # --- changed ids and their id-buckets (change-set-sized collect) ---
-    deleted_ids = (
-        changes.filter(F.col(change_col) == "delete").select(F.col(id_col).alias("id")).distinct()
-    )
-    changed_ids = changes.select(F.col(id_col).alias("id")).distinct()
-    touched_ibs = sorted(
-        r["__ib"]
-        for r in changed_ids.select(
-            F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets)).alias("__ib")
-        ).distinct().collect()
-    )
-
-    # Fail fast on delete rows that violate the full-row-image contract:
-    # a delete whose image carries no tokens touches no postings bucket,
-    # so the doc's postings would survive in the layout while n_docs and
-    # doclens are decremented — a silent inconsistency nothing downstream
-    # detects. A zero-token image is legitimate only when the doc truly
-    # had no tokens (its doclens dl == 0), so probe doclens (already
-    # id-bucket-pruned to the change set) instead of rejecting blanket.
-    empty_deletes = (
-        changes.filter(F.col(change_col) == "delete")
-        .filter(
-            F.coalesce(F.size(_norm_tokens(F.col(text_col))), F.lit(0)) <= 0
-        )
-        .select(F.col(id_col).alias("id"))
-        .distinct()
-    )
-    n_bad = (
-        doclens_raw.filter(F.col("__ib").isin(touched_ibs))
-        .join(broadcast(empty_deletes), "id", "left_semi")
-        .filter(F.col("dl") > 0)
-        .count()
-    )
-    if n_bad:
-        raise ValueError(
-            f"refresh_search_index: {n_bad} delete row(s) carry a "
-            "null/empty text image for docs whose indexed dl > 0 — the "
-            "change feed must supply the full pre-image (the deleted "
-            "text) or the doc's postings would be stranded"
-        )
-
-    # --- corpus count: change-feed-sized arithmetic, id-bucket-pruned ---
-    n_deleted = (
-        doclens_raw.filter(F.col("__ib").isin(touched_ibs))
-        .join(broadcast(deleted_ids), "id", "left_semi")
-        .count()
-    )
-    n_inserted = changes.filter(F.col(change_col) == "insert").count()
-    n_after = int(meta["n_docs"]) - n_deleted + n_inserted
-
-    # --- postings: touched buckets only ---
-    touched_tokens = sorted(
-        r["token"]
-        for r in changes.select(
-            F.explode(_norm_tokens(F.col(text_col))).alias("token")
-        ).distinct().collect()
-    )  # vocabulary-of-the-change-sized — bounded by the micro-batch
-    touched_buckets = sorted({xxh64_string(t) % n_buckets for t in touched_tokens})
-    touched_part = postings.filter(F.col("__tb").isin(touched_buckets))
-    # A deleted doc's postings live exactly in its tokens' buckets (the
-    # delete row image carries the text), so maintaining the touched
-    # buckets alone is complete, not an approximation.
-    maintained = apply_changes(
-        touched_part.select("token", "id", "tf"),
-        changes,
-        id_col=id_col,
-        text_col=text_col,
-        change_col=change_col,
-    ).withColumn("__tb", F.pmod(F.xxhash64(F.col("token")), F.lit(n_buckets)))
-    staging = os.path.join(path, "_staging_postings")
-    maintained.repartition(max(1, len(touched_buckets)), "__tb").write.mode(
-        "overwrite"
-    ).parquet(staging)
-    _swap_buckets(spark.read.parquet(staging), path, "postings", "__tb", touched_buckets)
-    shutil.rmtree(staging, ignore_errors=True)
-    postings_after = spark.read.parquet(os.path.join(path, "postings"))
-
-    # --- doclens: touched id-buckets only (same discipline as postings).
-    # A deleted/updated doc's (id, dl) row lives exactly in its id's
-    # bucket, so maintaining the touched buckets alone is complete.
-    doclens_stage = os.path.join(path, "_staging_doclens")
-    new_doclens_touched = apply_changes_doclens(
-        doclens_raw.filter(F.col("__ib").isin(touched_ibs)).drop("__ib"),
-        changes, id_col=id_col, text_col=text_col, change_col=change_col,
-    ).withColumn("__ib", F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets)))
-    new_doclens_touched.repartition(max(1, len(touched_ibs)), "__ib").write.mode(
-        "overwrite"
-    ).parquet(doclens_stage)
-    staged_doclens = spark.read.parquet(doclens_stage)
-
-    # --- stats / frontier / bounds: stage BEFORE swapping doclens
-    # (doclens_after is composed lazily from the untouched buckets,
-    # still on disk, + the staged touched buckets).
-    new_stats = apply_changes_stats(
-        stats, changes, n_after, id_col=id_col, text_col=text_col, change_col=change_col
-    )
-    stats_stage = os.path.join(path, "_staging_stats")
-    new_stats.write.mode("overwrite").parquet(stats_stage)
-    doclens_after = (
-        doclens_raw.filter(~F.col("__ib").isin(touched_ibs))
-        .drop("__ib")
-        .unionByName(staged_doclens.drop("__ib"))
-    )
-    # frontier: touched tokens rebuilt exactly, untouched carried over;
-    # then bounds recompute EXACTLY for every token from the staged
-    # frontier under the post-change avgdl (r10: replaces the
-    # apply_changes_bounds scale-factor form, whose >= soundness ratchet
-    # compounded looseness across refreshes; bounds == full rebuild is
-    # now pinned after every feed shape, deletes included).
-    new_frontier = apply_changes_frontier(
-        frontier, postings_after, doclens_after, changes,
-        id_col=id_col, text_col=text_col, change_col=change_col,
-    )
-    frontier_stage = os.path.join(path, "_staging_frontier")
-    new_frontier.write.mode("overwrite").parquet(frontier_stage)
-    new_bounds = bounds_from_frontier(
-        spark.read.parquet(frontier_stage),
-        spark.read.parquet(stats_stage),
-        doclens_after,
-        n_after,
-        k1=k1,
-        b=b,
-    )
-    bounds_stage = os.path.join(path, "_staging_bounds")
-    new_bounds.write.mode("overwrite").parquet(bounds_stage)
-
-    # --- swap: doclens touched buckets (dynamic overwrite + emptied-
-    # bucket removal, as postings), stats/frontier/bounds whole.
-    _swap_buckets(staged_doclens, path, "doclens", "__ib", touched_ibs)
-    shutil.rmtree(doclens_stage, ignore_errors=True)
-    for name, stage in (
-        ("stats", stats_stage),
-        ("frontier", frontier_stage),
-        ("bounds", bounds_stage),
-    ):
-        spark.read.parquet(stage).write.mode("overwrite").parquet(os.path.join(path, name))
-        shutil.rmtree(stage, ignore_errors=True)
-
-    meta.update({"n_docs": n_after})
-    if txn is not None:
-        meta.setdefault("txn", {})[txn[0]] = int(txn[1])
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(meta, f)
-
-
-def _swap_buckets(staged: DataFrame, path: str, name: str, col: str, touched: list) -> None:
-    """Dynamic-overwrite the ``col`` bucket partitions of ``path/name``
-    that ``staged`` holds. Dynamic overwrite only replaces partitions
-    PRESENT in the output — a touched bucket whose every row belonged to
-    deleted docs produces no output rows, so its stale directory is
-    removed explicitly or the old rows would survive the refresh."""
-    import os
-    import shutil
-
-    (
-        staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(col)
-        .parquet(os.path.join(path, name))
-    )
-    kept = {r[col] for r in staged.select(col).distinct().collect()}
-    for bucket in touched:
-        if bucket not in kept:
-            shutil.rmtree(os.path.join(path, name, f"{col}={bucket}"), ignore_errors=True)
-
-
 def doc_lengths(docs: DataFrame, id_col: str = "id", text_col: str = "chunk") -> DataFrame:
     """(id, dl) straight from the raw docs: dl = token count = size of the
     normalized token array — identical to sum(tf) over the doc's postings,
@@ -653,12 +321,12 @@ def doc_lengths(docs: DataFrame, id_col: str = "id", text_col: str = "chunk") ->
     )
 
 
-def _avgdl(lens: DataFrame, name: str = "avgdl") -> DataFrame:
+def _avgdl(lens: DataFrame) -> DataFrame:
     """Single-row mean doc length over (id, dl) rows: sum(dl)/count —
     value-identical to avg-of-doubles because every dl is an exact
     integer in double (and the integer sum is order-independent)."""
     return lens.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias(name)
+        (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias("avgdl")
     )
 
 
@@ -957,10 +625,10 @@ def build_term_bounds(
             F.count(F.lit(1)).alias("df"),
         )
     )
-    # df and max_part ride along with the folded ub so the CDC maintainer
-    # (apply_changes_bounds) can re-derive idf exactly under n_docs drift
-    # and max-merge / rescale max_part without a postings scan; ub-only
-    # consumers (bm25_search_many_maxscore) are unchanged.
+    # df rides along with the folded ub because the max-score path takes
+    # each term's df from bounds and never reads stats; max_part (the
+    # unfolded tf-part maximum) is the same column bounds_from_frontier
+    # maintains, so a built and a refreshed table compare row for row.
     return per_doc.select("token", "df", "max_part", (_idf(n_docs) * F.col("max_part")).alias("ub"))
 
 
@@ -974,10 +642,9 @@ def build_term_frontier(postings: DataFrame, doclens: DataFrame) -> DataFrame:
     the distinct tf values a term attains) is what lets the CDC
     maintainer recompute bounds EXACTLY after avgdl drift
     (``bounds_from_frontier``) instead of scaling by a sound-but-loose
-    ratio that ratchets monotonically looser across refreshes (the
-    pre-r10 ``apply_changes_bounds`` form, kept as the frontier-free
-    fallback). Plain codegen'd aggregates + one window — no interpreted
-    higher-order functions (see PLANS.md on session-aging HOF cost)."""
+    ratio that ratchets monotonically looser across refreshes. Plain
+    codegen'd aggregates + one window — no interpreted higher-order
+    functions (see PLANS.md on session-aging HOF cost)."""
     from pyspark.sql import Window
 
     lens = doclens.filter(F.col("dl") > 0)
@@ -1218,12 +885,12 @@ def materialize_search_index(
     text_col: str = "chunk",
     n_buckets: int = 16,
 ) -> None:
-    """Write the search index as a PERSISTED, token-bucketed layout —
-    the maintained-table form the streaming freshness job
-    (streaming/freshness.py, the TARGET_LAG analog) keeps current in the
-    real design, so query-time plans READ the index instead of
-    re-deriving it from raw text (r7 VERDICT watch item #2: the postings
-    build was the one search piece with no persisted-layout story).
+    """Write the search index as a PERSISTED, token-bucketed layout, once
+    per corpus generation: query-time plans READ the index instead of
+    re-deriving it from raw text. The layout is write-once — nothing
+    refreshes it in place. An index that must stay fresh under a change
+    feed is hosted by ``storage/txindex.py`` instead, whose refresh
+    publishes each new generation atomically.
 
     Layout, under ``path``:
     - ``postings/`` (token, id, tf) parquet, directory-partitioned by
@@ -1237,11 +904,10 @@ def materialize_search_index(
       doclens= path wants.
     - ``stats/`` (token, df, idf) — vocabulary-sized, probe-pruned by a
       token filter at query time.
-    - ``_meta.json`` {n_docs} — the corpus count the scorers need.
-
-    The writes happen once per corpus generation; ``apply_changes``
-    maintains the postings rows incrementally from a txlog change feed
-    (rewriting only touched buckets at scale).
+    - ``bounds/`` (token, df, max_part, ub) — the max-score
+      candidate-pruning statistic (``build_term_bounds``).
+    - ``_meta.json`` {n_docs, n_buckets} — the corpus count the scorers
+      need and the bucket count a term probe hashes into.
     """
     import json
     import os
@@ -1261,34 +927,12 @@ def materialize_search_index(
     build_token_stats(persisted, n_docs=n).write.mode("overwrite").parquet(
         os.path.join(path, "stats")
     )
-    dl = doc_lengths(docs, id_col=id_col, text_col=text_col)
-    # id-bucketed like postings (same n_buckets): refresh_search_index
-    # rewrites only the buckets containing changed ids instead of the
-    # whole per-doc table — at 100 TB that turns a ~n_docs-row rewrite
-    # per refresh into a change-set-sized one. Readers never see the
-    # bucket column (load_search_index drops it).
-    (
-        dl.withColumn("__ib", F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets)))
-        .repartition(n_buckets, "__ib")
-        .write.mode("overwrite")
-        .partitionBy("__ib")
-        .parquet(os.path.join(path, "doclens"))
-    )
-    # max-score bounds (token, ub) — the WAND-style candidate-pruning
-    # statistic bm25_search_many_maxscore consumes (vocabulary-sized)
-    dl_read = docs.sparkSession.read.parquet(
+    doc_lengths(docs, id_col=id_col, text_col=text_col).write.mode("overwrite").parquet(
         os.path.join(path, "doclens")
-    ).drop("__ib")
-    build_term_bounds(persisted, dl_read, n).write.mode("overwrite").parquet(
-        os.path.join(path, "bounds")
     )
-    # per-token Pareto frontier (token, tf, dl) — what lets the CDC
-    # maintainer recompute bounds EXACTLY under avgdl drift
-    # (bounds_from_frontier) at vocabulary cost; vocabulary x O(distinct
-    # tf values) rows
-    build_term_frontier(persisted, dl_read).write.mode("overwrite").parquet(
-        os.path.join(path, "frontier")
-    )
+    build_term_bounds(
+        persisted, docs.sparkSession.read.parquet(os.path.join(path, "doclens")), n
+    ).write.mode("overwrite").parquet(os.path.join(path, "bounds"))
     with open(os.path.join(path, "_meta.json"), "w") as f:
         json.dump({"n_docs": n, "n_buckets": n_buckets}, f)
 
@@ -1302,7 +946,7 @@ _INDEX_CACHE: dict = {}
 
 
 def load_search_index(spark, path: str):
-    """Read a ``materialize_search_index`` layout: returns
+    """Read a write-once ``materialize_search_index`` layout: returns
     (postings, stats, doclens, n_docs, n_buckets). ``postings`` carries
     the ``__tb`` partition column — pass it through
     ``prune_postings_probe`` so literal term probes prune buckets.
@@ -1318,9 +962,7 @@ def load_search_index(spark, path: str):
         return (
             spark.read.parquet(os.path.join(path, "postings")),
             spark.read.parquet(os.path.join(path, "stats")),
-            # __ib is maintenance-internal (refresh_search_index's id-bucket
-            # partitioning); scorers see exactly (id, dl)
-            spark.read.parquet(os.path.join(path, "doclens")).drop("__ib"),
+            spark.read.parquet(os.path.join(path, "doclens")),
             int(meta["n_docs"]),
             int(meta["n_buckets"]),
         )

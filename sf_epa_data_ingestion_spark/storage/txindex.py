@@ -1,14 +1,11 @@
 """Transactional search-index hosting: the five-piece layout inside
-txlog tables behind an atomic manifest.
+txlog tables behind an atomic manifest — the one search index that can
+change.
 
-``operators/search.materialize_search_index`` keeps the serving layout
-as plain directory-partitioned parquet — fast, vanilla-readable, and the
-graded serving path — but its in-place ``refresh_search_index`` carries
-two documented caveats: a crash MID-refresh leaves a torn layout
-(recovery = full rebuild), and a CONCURRENT reader can observe
-mixed-generation pieces or hit FileNotFound on a just-removed bucket
-directory. This module is the "documented next increment" that removes
-both, by composing two primitives the engine already has:
+``operators/search.materialize_search_index`` writes a write-once
+directory layout (plain directory-partitioned parquet, readable by a
+vanilla session). An index kept fresh under a change feed lives here
+instead, built by composing two primitives the engine already has:
 
 - each piece (postings, doclens, stats, bounds, frontier) lives in its
   own ``TxTable`` — copy-on-write commits, per-file min/max stats, so
@@ -33,12 +30,13 @@ Consequences, by construction:
 - replay: the manifest carries the ``{app: batch}`` marker map; a
   replayed micro-batch is acknowledged without touching any piece.
 
-Scale posture matches the directory layout: postings/doclens refresh
-rewrites only touched-bucket FILES (delete_where rides the per-file
-``__tb``/``__ib`` bounds), stats/bounds/frontier are vocabulary-sized
-overwrites, and the WAND bounds are frontier-exact
-(``search.bounds_from_frontier``). Old generations are reclaimed with
-``vacuum_tx_search_index`` once no reader needs them.
+Scale posture: a refresh rewrites only touched-bucket postings/doclens
+FILES (replace_where rides the per-file ``__tb``/``__ib`` bounds, so
+untouched files stay live under their old paths — pinned by test),
+stats/bounds/frontier are vocabulary-sized overwrites, and the WAND
+bounds are frontier-exact (``search.bounds_from_frontier``). Old
+generations are reclaimed with ``vacuum_tx_search_index`` once no
+reader needs them.
 """
 
 from __future__ import annotations
@@ -181,8 +179,7 @@ class TxSearchSnapshot:
         the postings probe is bucket-pruned through txlog file skipping
         (``postings_for_terms``), and every statistic (bounds, doclens,
         n_docs) reads at the pinned versions — so results are stable
-        under concurrent refreshes, the property the directory layout
-        cannot offer. avgdl is the snapshot's ``avgdl``, a literal in
+        under concurrent refreshes. avgdl is the snapshot's ``avgdl``, a literal in
         the plan, so no query scans all of doclens for it; the query
         frame's term set is filtered by the same literal ``terms`` as
         the postings probe, so every branch of the plan reads the same
@@ -240,10 +237,9 @@ def refresh_tx_search_index(
     _publish: bool = True,
 ) -> None:
     """Apply a txlog change feed and publish the next generation
-    atomically. Piece maintenance mirrors ``refresh_search_index``
-    exactly (touched-bucket postings/doclens CoW, vocabulary-sized
-    stats, frontier-exact bounds) but every mutation is a txlog commit
-    and nothing becomes visible until the manifest publish — the last,
+    atomically: touched-bucket postings/doclens CoW, vocabulary-sized
+    stats, frontier-exact bounds. Every mutation is a txlog commit and
+    nothing becomes visible until the manifest publish — the last,
     atomic step.
 
     SINGLE-WRITER DISCIPLINE: at most one refresh may run at a time
@@ -318,9 +314,9 @@ def refresh_tx_search_index(
         changes.filter(F.col(change_col) == "delete")
         .select(F.col(id_col).alias("id")).distinct()
     )
-    # full-row-image contract, same fail-fast as refresh_search_index:
-    # a tokenless delete image for a doc with indexed dl > 0 would
-    # strand its postings while decrementing the counts
+    # full-row-image contract: a delete whose image carries no tokens
+    # touches no postings bucket, so a doc with indexed dl > 0 would
+    # keep its postings while the counts decrement — fail fast
     empty_deletes = (
         changes.filter(F.col(change_col) == "delete")
         .filter(F.coalesce(F.size(search._norm_tokens(F.col(text_col))), F.lit(0)) <= 0)
@@ -375,7 +371,7 @@ def refresh_tx_search_index(
     postings_after = t["postings"].read().drop("__tb")
 
     # --- stats / frontier / bounds: vocabulary-sized overwrites,
-    # frontier-exact bounds (same contract as the directory refresh)
+    # frontier-exact bounds (maintained == a full rebuild, row for row)
     new_stats = search.apply_changes_stats(
         snap.stats(), changes, n_after,
         id_col=id_col, text_col=text_col, change_col=change_col,

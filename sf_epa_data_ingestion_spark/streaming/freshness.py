@@ -3,103 +3,26 @@
 The reference's search service auto-refreshed within 1 minute of base-table
 change (CREATE CORTEX SEARCH SERVICE ... TARGET_LAG = '1 minute',
 epa_ingestion.py:844-854). Spark-native equivalent: a Structured Streaming
-job file-sourced on the chunks table path that incrementally maintains the
-postings/stats index tables:
+job over a stream of change rows (the txlog change-feed shape: full row
+images tagged insert/delete) that refreshes a transactional search index
+(``storage/txindex.py``) once per micro-batch:
 
-  readStream(parquet chunks dir)
-    -> explode tokens -> append postings delta
-  with trigger(processingTime='60 seconds')  # the 1-minute lag budget
-  or trigger(availableNow=True)              # batch catch-up mode
+  readStream(change rows)
+    -> foreachBatch(refresh_tx_search_index)  # one new generation per batch
+  with trigger(processingTime='60 seconds')   # the 1-minute lag budget
+  or trigger(availableNow=True)               # batch catch-up mode
 
-Incremental contract: the chunks table is append-only between compactions
-(the pipeline's delete-then-insert rechunk rewrites whole files, which the
-file source picks up as new files), so appending per-file postings keeps
-the index consistent; stats (df/idf) are recomputed by the reader at query
-time from the postings aggregate — cheap because postings are pre-grouped.
+Every piece is maintained (postings, doclens, stats, frontier and the WAND
+bounds), so max-score serving stays exact between full rebuilds. Each
+generation publishes atomically: serving snapshots never see a half-applied
+batch. The ``(app_id, batch_id)`` marker in the manifest makes a replayed
+micro-batch a no-op (foreachBatch is at-least-once after a crash).
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
-
-from ..operators.search import _norm_tokens
-
-
-def stream_postings(
-    spark: SparkSession,
-    chunks_path: str,
-    chunk_schema: StructType,
-    id_col: str = "CHUNK_ID",
-    text_col: str = "CHUNK",
-) -> DataFrame:
-    """Streaming postings delta: (token, id, tf) per new chunk file."""
-    stream = spark.readStream.schema(chunk_schema).parquet(chunks_path)
-    return (
-        stream.select(F.col(id_col).alias("id"), F.explode(_norm_tokens(F.col(text_col))).alias("token"))
-        .groupBy("token", "id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
-def start_freshness_job(
-    postings_delta: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    lag_seconds: int = 60,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Run the index maintainer with the 1-minute freshness budget
-    (``processingTime='60 seconds'``) or as a batch catch-up
-    (``availableNow`` — drains everything then stops)."""
-    writer = (
-        postings_delta.writeStream.outputMode("update")
-        .foreachBatch(lambda batch, epoch: batch.write.mode("append").parquet(out_path))
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{lag_seconds} seconds")
-    return writer.start()
-
-
-def index_refresh_sink(
-    spark: SparkSession,
-    index_path: str,
-    app_id: str,
-    id_col: str = "id",
-    text_col: str = "text",
-    change_col: str = "_change_type",
-    allow_inplace: bool = False,
-):
-    """``foreachBatch`` callable maintaining a WHOLE persisted
-    ``materialize_search_index`` layout from a stream of tagged change
-    rows — postings, doclens, stats, AND the WAND ``bounds`` table, so
-    max-score-pruned serving stays correct between full rebuilds (the r8
-    gap: the old postings-only appender left dl/avgdl and the term
-    bounds stale after any change). Each micro-batch is one
-    ``search.refresh_search_index`` application; the ``(app_id,
-    batch_id)`` marker in the layout's ``_meta.json`` makes a replayed
-    batch a no-op (foreachBatch is at-least-once after a crash), with
-    refresh_search_index's documented torn-refresh caveat."""
-    from ..operators.search import refresh_search_index
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        refresh_search_index(
-            spark,
-            index_path,
-            batch_df,
-            id_col=id_col,
-            text_col=text_col,
-            change_col=change_col,
-            txn=(app_id, int(batch_id)),
-            allow_inplace=allow_inplace,
-        )
-
-    return write_batch
 
 
 def start_index_maintainer(
@@ -113,21 +36,21 @@ def start_index_maintainer(
     change_col: str = "_change_type",
     lag_seconds: int = 60,
     available_now: bool = False,
-    allow_inplace: bool = False,
 ) -> StreamingQuery:
-    """Run the whole-layout index maintainer with the 1-minute freshness
-    budget (the reference's TARGET_LAG covered the entire search
-    service, epa_ingestion.py:844-854 — this is that contract for all
-    four persisted pieces, not just postings). ``changes_stream`` is a
+    """Run the whole-index maintainer with the 1-minute freshness
+    budget (``processingTime``) or as a batch catch-up (``availableNow``
+    — drains everything then stops). The reference's TARGET_LAG covered
+    the entire search service, epa_ingestion.py:844-854, so every piece
+    of the index at ``index_path`` (a ``materialize_tx_search_index``
+    layout) is refreshed, not just postings. ``changes_stream`` is a
     streaming frame of row images tagged insert/delete in
-    ``change_col`` — the txlog change-feed shape."""
+    ``change_col``."""
     writer = (
         changes_stream.writeStream.outputMode("update")
         .foreachBatch(
-            index_refresh_sink(
+            tx_index_refresh_sink(
                 spark, index_path, app_id,
                 id_col=id_col, text_col=text_col, change_col=change_col,
-                allow_inplace=allow_inplace,
             )
         )
         .option("checkpointLocation", checkpoint)
@@ -148,10 +71,9 @@ def tx_index_refresh_sink(
     change_col: str = "_change_type",
 ):
     """``foreachBatch`` callable maintaining a TRANSACTIONAL index
-    layout (storage/txindex.py) — the atomic-cutover face of
-    ``index_refresh_sink``: each micro-batch publishes one new manifest
-    generation, so concurrent serving snapshots never observe a
-    mid-refresh layout and a crash mid-batch leaves the prior
+    layout (storage/txindex.py): each micro-batch publishes one new
+    manifest generation, so concurrent serving snapshots never observe
+    a mid-refresh layout and a crash mid-batch leaves the prior
     generation intact (the replayed batch re-runs the whole refresh
     from the still-pinned snapshot after rolling back the torn piece
     commits). The ``(app_id, batch_id)`` marker rides the manifest."""

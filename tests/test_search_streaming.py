@@ -1,16 +1,14 @@
-"""Tests for the hybrid search index and the streaming freshness job."""
+"""Tests for the hybrid search index, its CDC maintenance and the streaming
+freshness job."""
 
 from __future__ import annotations
 
 import os
-import time
 
 import pyspark.sql.functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from sf_epa_data_ingestion_spark.operators import search
 from sf_epa_data_ingestion_spark.streaming import events as ev
-from sf_epa_data_ingestion_spark.streaming.freshness import start_freshness_job, stream_postings
 
 DOCS = [
     (1, "spark engine shuffles data across executors", "DANGER"),
@@ -60,33 +58,6 @@ def test_session_windows_batch_gap_semantics(spark):
     assert len(by_user[10]) == 2
     assert sorted(r["n_events"] for r in by_user[10]) == [1, 2]
     assert len(by_user[11]) == 1
-
-
-def test_freshness_job_available_now(spark, tmp_path):
-    chunks_path = os.path.join(str(tmp_path), "chunks")
-    out_path = os.path.join(str(tmp_path), "postings")
-    ckpt = os.path.join(str(tmp_path), "ckpt")
-    schema = StructType(
-        [StructField("CHUNK_ID", LongType()), StructField("CHUNK", StringType())]
-    )
-    spark.createDataFrame([(1, "alpha beta"), (2, "beta gamma")], schema).write.mode(
-        "overwrite"
-    ).parquet(chunks_path)
-
-    delta = stream_postings(spark, chunks_path, schema)
-    q = start_freshness_job(delta, out_path, ckpt, available_now=True)
-    q.awaitTermination(120)
-    postings = spark.read.parquet(out_path)
-    got = {(r["token"], r["id"]): r["tf"] for r in postings.collect()}
-    assert got[("beta", 1)] == 1 and got[("beta", 2)] == 1
-    assert ("alpha", 1) in got and ("gamma", 2) in got
-
-    # incremental: append a new chunk file, catch up again, index extends
-    spark.createDataFrame([(3, "delta alpha")], schema).write.mode("append").parquet(chunks_path)
-    q2 = start_freshness_job(stream_postings(spark, chunks_path, schema), out_path, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    got2 = {(r["token"], r["id"]) for r in spark.read.parquet(out_path).collect()}
-    assert ("delta", 3) in got2 and ("alpha", 3) in got2
 
 
 def test_stateful_running_user_stats(spark, tmp_path):
@@ -369,14 +340,10 @@ def test_apply_changes_maintains_postings_incrementally(spark, tmp_path):
     assert incremental.filter(F.col("token") == "zebra").count() == 4
 
 
-def _tx_with_changes(spark, tmp_path, same_length_update: bool):
-    """A txlog table of 200 real documents plus one committed change set.
-    With ``same_length_update`` the change set is exactly avgdl-preserving
-    — 3 updates that swap the first token for a novel one, no inserts or
-    deletes — so the bounds maintenance must equal a rebuild EVERYWHERE.
-    Otherwise 3 length-growing updates + 2 inserts + 1 pure delete drift
-    avgdl and the corpus count: maintained bounds are then sound upper
-    bounds, exact on touched tokens."""
+def _tx_with_changes(spark, tmp_path):
+    """A txlog table of 200 real documents plus one committed change set:
+    3 length-growing updates + 2 inserts + 1 pure delete, which drift
+    avgdl and the corpus count."""
     from sf_epa_data_ingestion_spark.storage import TxTable
 
     docs = (
@@ -385,7 +352,7 @@ def _tx_with_changes(spark, tmp_path, same_length_update: bool):
         .limit(200)
         # the synthetic corpus has a ~34-token vocabulary, so a handful of
         # changed docs touches EVERY token; a per-doc unique token keeps a
-        # real untouched-vocabulary population for the drift/scaling path
+        # real untouched-vocabulary population
         .withColumn(
             "text", F.concat(F.col("text"), F.lit(" uniq"), F.col("doc_id").cast("string"))
         )
@@ -394,21 +361,13 @@ def _tx_with_changes(spark, tmp_path, same_length_update: bool):
         docs.repartitionByRange(4, "doc_id")
     )
     lo = docs.agg(F.min("doc_id")).first()[0]
-    if same_length_update:
-        # replace the first token with a novel one: token count identical
-        new_text = F.concat(
-            F.lit("zzznovel "), F.regexp_replace(F.col("text"), r"^\S+\s*", "")
-        )
-    else:
-        new_text = F.concat(F.lit("fresh zebra tokens "), F.col("text"))
-    updates = docs.filter(F.col("doc_id") <= lo + 2).withColumn("text", new_text)
-    if same_length_update:
-        t.merge(updates, ["doc_id"])
-    else:
-        inserts = docs.limit(2).withColumn("doc_id", F.col("doc_id") + 1_000_000)
-        t.merge(updates.unionByName(inserts), ["doc_id"])
-        hi = docs.agg(F.max("doc_id")).first()[0]
-        t.delete_where(F.col("doc_id") == hi)
+    updates = docs.filter(F.col("doc_id") <= lo + 2).withColumn(
+        "text", F.concat(F.lit("fresh zebra tokens "), F.col("text"))
+    )
+    inserts = docs.limit(2).withColumn("doc_id", F.col("doc_id") + 1_000_000)
+    t.merge(updates.unionByName(inserts), ["doc_id"])
+    hi = docs.agg(F.max("doc_id")).first()[0]
+    t.delete_where(F.col("doc_id") == hi)
     return t, t.changes(0)
 
 
@@ -423,7 +382,7 @@ def test_apply_changes_maintains_doclens_and_stats_exactly(spark, tmp_path):
     side tables that previously had NO delta path (r8 VERDICT missing
     #1): doclens via per-doc upsert, stats via df-delta merge + idf
     recompute from the maintained corpus count."""
-    t, changes = _tx_with_changes(spark, tmp_path, same_length_update=False)
+    t, changes = _tx_with_changes(spark, tmp_path)
     v1 = t.read()
     n1 = v1.count()
 
@@ -447,269 +406,20 @@ def test_apply_changes_maintains_doclens_and_stats_exactly(spark, tmp_path):
     assert ms == rs
 
 
-def test_apply_changes_bounds_exact_when_avgdl_unchanged(spark, tmp_path):
-    """Same-token-count updates keep avgdl fixed, so the maintained
-    bounds table equals a full build_term_bounds rebuild exactly —
-    touched tokens are rebuilt, untouched tokens' scale factor is 1 and
-    idf re-derivation from (df, n_docs) reproduces the folded ub."""
-    t, changes = _tx_with_changes(spark, tmp_path, same_length_update=True)
-    v0, v1 = t.read(0), t.read()
-    n1 = v1.count()
-    p0 = search.build_postings(v0, id_col="doc_id", text_col="text")
-    dl0 = search.doc_lengths(v0, id_col="doc_id", text_col="text")
-    b0 = search.build_term_bounds(p0, dl0, v0.count())
-    p1 = search.apply_changes(p0, changes, id_col="doc_id", text_col="text")
-    dl1 = search.apply_changes_doclens(dl0, changes, id_col="doc_id", text_col="text")
-    maintained = search.apply_changes_bounds(
-        b0, p1, dl0, dl1, changes, n1, id_col="doc_id", text_col="text"
-    )
-    rebuilt = search.build_term_bounds(
-        search.build_postings(v1, id_col="doc_id", text_col="text"),
-        search.doc_lengths(v1, id_col="doc_id", text_col="text"),
-        n1,
-    )
-    m = {(r["token"], r["df"], round(r["max_part"], 9), round(r["ub"], 9))
-         for r in maintained.collect()}
-    r = {(r["token"], r["df"], round(r["max_part"], 9), round(r["ub"], 9))
-         for r in rebuilt.collect()}
-    assert m == r
-
-
-def test_apply_changes_bounds_sound_under_avgdl_drift(spark, tmp_path):
-    """Length-changing updates drift avgdl: maintained bounds must stay
-    ELEMENT-WISE >= the exact rebuild (max-score pruning soundness — an
-    underestimate could wrongly prune a true top-k doc), be EXACT on
-    touched tokens, and serve bit-identical WAND top-k results."""
-    t, changes = _tx_with_changes(spark, tmp_path, same_length_update=False)
-    v0, v1 = t.read(0), t.read()
-    n1 = v1.count()
-    p0 = search.build_postings(v0, id_col="doc_id", text_col="text")
-    dl0 = search.doc_lengths(v0, id_col="doc_id", text_col="text")
-    b0 = search.build_term_bounds(p0, dl0, v0.count())
-    p1 = search.apply_changes(p0, changes, id_col="doc_id", text_col="text")
-    dl1 = search.apply_changes_doclens(dl0, changes, id_col="doc_id", text_col="text")
-    maintained = search.apply_changes_bounds(
-        b0, p1, dl0, dl1, changes, n1, id_col="doc_id", text_col="text"
-    )
-    rebuilt = search.build_term_bounds(
-        search.build_postings(v1, id_col="doc_id", text_col="text"),
-        search.doc_lengths(v1, id_col="doc_id", text_col="text"),
-        n1,
-    )
-    m = {r["token"]: (r["df"], r["max_part"], r["ub"]) for r in maintained.collect()}
-    r = {r["token"]: (r["df"], r["max_part"], r["ub"]) for r in rebuilt.collect()}
-    assert set(m) == set(r)  # same vocabulary either way
-    touched = {
-        row["token"]
-        for row in changes.select(
-            F.explode(search._norm_tokens(F.col("text"))).alias("token")
-        ).distinct().collect()
-    }
-    drifted = 0
-    for tok, (df_r, part_r, ub_r) in r.items():
-        df_m, part_m, ub_m = m[tok]
-        assert df_m == df_r, tok
-        assert ub_m >= ub_r - 1e-12, tok  # sound: never an underestimate
-        if tok in touched and tok in m:
-            assert abs(ub_m - ub_r) < 1e-12, tok  # exact on touched tokens
-        drifted += ub_m > ub_r + 1e-12
-    assert drifted > 0  # the drift case is actually exercised
-
-    # end-to-end: WAND served from the MAINTAINED side tables returns the
-    # same top-k as naive full scoring over the maintained postings
-    queries = spark.createDataFrame(
-        [(0, "the data of water product"), (1, "zebra fresh tokens")],
-        "query_id long, query_text string",
-    )
-    s1 = search.apply_changes_stats(
-        search.build_token_stats(p0, n_docs=v0.count()),
-        changes, n1, id_col="doc_id", text_col="text",
-    )
-    pruned = sorted(
-        (row["query_id"], row["id"], row["score"])
-        for row in search.bm25_search_many_maxscore(
-            p1, s1, maintained, queries, n_docs=n1, doclens=dl1, k=5
-        ).collect()
-    )
-    naive = sorted(
-        (row["query_id"], row["id"], row["score"])
-        for row in search.bm25_search_many(
-            p1, s1, queries, n_docs=n1, k=5, doclens=dl1
-        ).collect()
-    )
-    assert pruned == naive
-
-
-def test_refresh_search_index_rejects_tokenless_delete_image(spark, tmp_path):
-    """r9 ADVICE: a delete row whose image carries no tokens for a doc
-    whose indexed dl > 0 would leave the doc's postings stranded while
-    n_docs/doclens decrement — the refresh must fail fast instead of
-    silently corrupting the layout. Deleting a genuinely token-free doc
-    (dl == 0) with an empty image stays legal."""
-    import pytest
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "beta delta"), (3, "")],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "idx")
-    search.materialize_search_index(
-        docs, idx, id_col="doc_id", text_col="text", n_buckets=8
-    )
-
-    bad_feed = spark.createDataFrame(
-        [(1, None, "delete")], "doc_id long, text string, _change_type string"
-    )
-    with pytest.raises(ValueError, match="full pre-image"):
-        search.refresh_search_index(
-            spark, idx, bad_feed, id_col="doc_id", text_col="text",
-            allow_inplace=True,
-        )
-
-    ok_feed = spark.createDataFrame(
-        [(3, "", "delete")], "doc_id long, text string, _change_type string"
-    )
-    search.refresh_search_index(
-        spark, idx, ok_feed, id_col="doc_id", text_col="text",
-        allow_inplace=True,
-    )
-    _p, _st, _dl, n_docs, _nb = search.load_search_index(spark, idx)
-    assert n_docs == 2
-
-
-def test_refresh_search_index_maintains_persisted_layout(spark, tmp_path):
-    """The persisted-layout maintainer: apply a txlog change feed to a
-    materialize_search_index directory and every piece must match a
-    from-scratch materialization of the new snapshot — postings
-    (touched-bucket dynamic overwrite), doclens, stats, the meta corpus
-    count; bounds must be sound (>= rebuilt) with touched tokens exact,
-    and WAND served FROM THE REFRESHED DIRECTORY must equal naive
-    scoring over the rebuilt index. Incrementality itself is pinned:
-    every data file in an UNTOUCHED postings token-bucket or doclens
-    id-bucket must be byte-identical (same path, size, mtime) after the
-    refresh — the directories the 100 TB claim says are never rewritten
-    really are not."""
-    t, changes = _tx_with_changes(spark, tmp_path, same_length_update=False)
-    idx = str(tmp_path / "idx")
-    # 64 buckets: with ~42 touched tokens, 16 buckets would ALL be hit on
-    # this small-vocabulary corpus and the untouched-bucket pin would be
-    # vacuous
-    search.materialize_search_index(
-        t.read(0), idx, id_col="doc_id", text_col="text", n_buckets=64
-    )
-
-    def _bucket_files(sub):
-        out = {}
-        root = os.path.join(idx, sub)
-        for dirpath, _dirs, files in os.walk(root):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(dirpath, f)
-                    st = os.stat(p)
-                    out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    import pyspark.sql.functions as _F
-
-    n_buckets = search.load_search_index(spark, idx)[4]
-    touched_tokens = {
-        r["token"]
-        for r in changes.select(
-            F.explode(search._norm_tokens(F.col("text"))).alias("token")
-        ).distinct().collect()
-    }
-    from sf_epa_data_ingestion_spark.functions.refhash import xxh64_string
-
-    touched_tbs = {xxh64_string(tok) % n_buckets for tok in touched_tokens}
-    touched_ibs = {
-        r["__ib"]
-        for r in changes.select(
-            _F.pmod(_F.xxhash64(F.col("doc_id")), _F.lit(n_buckets)).alias("__ib")
-        ).distinct().collect()
-    }
-    # separator-delimited match: "__tb=1" must not exclude "__tb=12"
-    before_postings = {
-        p: v for p, v in _bucket_files("postings").items()
-        if all(f"{os.sep}__tb={tb}{os.sep}" not in p for tb in touched_tbs)
-    }
-    before_doclens = {
-        p: v for p, v in _bucket_files("doclens").items()
-        if all(f"{os.sep}__ib={ib}{os.sep}" not in p for ib in touched_ibs)
-    }
-
-    search.refresh_search_index(
-        spark, idx, changes, id_col="doc_id", text_col="text",
-        allow_inplace=True,
-    )
-
-    after_postings = _bucket_files("postings")
-    after_doclens = _bucket_files("doclens")
-    assert before_postings and before_doclens  # untouched buckets exist
-    for p, v in before_postings.items():
-        assert after_postings.get(p) == v, f"untouched postings file rewritten: {p}"
-    for p, v in before_doclens.items():
-        assert after_doclens.get(p) == v, f"untouched doclens file rewritten: {p}"
-    rebuilt_dir = str(tmp_path / "rebuilt")
-    search.materialize_search_index(
-        t.read(), rebuilt_dir, id_col="doc_id", text_col="text", n_buckets=64
-    )
-
-    mp, mst, mdl, mn, mb = search.load_search_index(spark, idx)
-    rp, rst, rdl, rn, rb = search.load_search_index(spark, rebuilt_dir)
-    assert (mn, mb) == (rn, rb)
-    _assert_same_rows(mp, rp, ["token", "id", "tf"])
-    _assert_same_rows(mdl, rdl, ["id", "dl"])
-    ms = {(r["token"], r["df"], round(r["idf"], 12)) for r in mst.collect()}
-    rs = {(r["token"], r["df"], round(r["idf"], 12)) for r in rst.collect()}
-    assert ms == rs
-    mbounds = {r["token"]: r["ub"] for r in
-               spark.read.parquet(os.path.join(idx, "bounds")).collect()}
-    rbounds = {r["token"]: r["ub"] for r in
-               spark.read.parquet(os.path.join(rebuilt_dir, "bounds")).collect()}
-    assert set(mbounds) == set(rbounds)
-    # r10: frontier-exact maintenance — bounds EQUAL the rebuild (the
-    # pre-r10 contract was only >=, via the avgdl scale factor)
-    assert all(mbounds[k] == rbounds[k] for k in rbounds), {
-        k: (mbounds[k], rbounds[k])
-        for k in rbounds if mbounds[k] != rbounds[k]
-    }
-    # the maintained frontier equals the rebuild's too
-    mfront = {(r["token"], r["tf"], r["dl"]) for r in
-              spark.read.parquet(os.path.join(idx, "frontier")).collect()}
-    rfront = {(r["token"], r["tf"], r["dl"]) for r in
-              spark.read.parquet(os.path.join(rebuilt_dir, "frontier")).collect()}
-    assert mfront == rfront
-
-    queries = spark.createDataFrame(
-        [(0, "the data of water product")], "query_id long, query_text string"
-    )
-    served = sorted(
-        (row["query_id"], row["id"], row["score"])
-        for row in search.bm25_search_many_maxscore(
-            mp.drop("__tb"), mst,
-            spark.read.parquet(os.path.join(idx, "bounds")),
-            queries, n_docs=mn, doclens=mdl, k=5,
-        ).collect()
-    )
-    naive = sorted(
-        (row["query_id"], row["id"], row["score"])
-        for row in search.bm25_search_many(
-            rp.drop("__tb"), rst, queries, n_docs=rn, k=5, doclens=rdl
-        ).collect()
-    )
-    assert served == naive
-
-
 def test_index_maintainer_stream_keeps_wand_serving_correct(spark, tmp_path):
     """The whole-service TARGET_LAG contract, end-to-end: a streaming
     change feed (2 micro-batches, file-sourced, maxFilesPerTrigger=1)
-    drives start_index_maintainer over a persisted layout; afterwards
-    every piece matches a from-scratch materialization of the final
-    corpus (bounds: sound + equal vocabulary), a REPLAY of the feed is a
-    no-op (the _meta txn marker), and WAND served from the maintained
-    directory returns the naive scorer's exact top-k."""
+    drives start_index_maintainer over a transactional index; afterwards
+    every piece matches a from-scratch build of the final corpus, a
+    REPLAY of the feed publishes no new generation (the manifest's txn
+    marker), and WAND served from the maintained snapshot returns the
+    naive scorer's exact top-k over the rebuild."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    from sf_epa_data_ingestion_spark.storage.txindex import (
+        load_tx_search_index,
+        materialize_tx_search_index,
+    )
     from sf_epa_data_ingestion_spark.streaming.freshness import start_index_maintainer
 
     docs = (
@@ -721,7 +431,7 @@ def test_index_maintainer_stream_keeps_wand_serving_correct(spark, tmp_path):
         )
     )
     idx = str(tmp_path / "idx")
-    search.materialize_search_index(docs, idx, id_col="doc_id", text_col="text")
+    materialize_tx_search_index(docs, idx, id_col="doc_id", text_col="text")
 
     # two change files -> two micro-batches: an update pair, then inserts
     lo = docs.agg(F.min("doc_id")).first()[0]
@@ -746,17 +456,20 @@ def test_index_maintainer_stream_keeps_wand_serving_correct(spark, tmp_path):
             StructField("_change_type", StringType()),
         ]
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = start_index_maintainer(
-        stream, spark, idx, str(tmp_path / "ckpt"),
-        id_col="doc_id", text_col="text", available_now=True,
-        allow_inplace=True,
-    )
-    q.awaitTermination(120)
+
+    def run(ckpt):
+        q = start_index_maintainer(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed_dir),
+            spark, idx, str(tmp_path / ckpt),
+            id_col="doc_id", text_col="text", available_now=True,
+        )
+        q.awaitTermination(120)
+
+    run("ckpt")
+    snap = load_tx_search_index(spark, idx)
+    assert snap.gen == 3  # build + one generation per micro-batch
 
     # final corpus: update applied, two inserts added
     final = (
@@ -765,54 +478,32 @@ def test_index_maintainer_stream_keeps_wand_serving_correct(spark, tmp_path):
         .unionByName(ins.drop("_change_type"))
     )
     rebuilt_dir = str(tmp_path / "rebuilt")
-    search.materialize_search_index(final, rebuilt_dir, id_col="doc_id", text_col="text")
-
-    mp, mst, mdl, mn, _ = search.load_search_index(spark, idx)
-    rp, rst, rdl, rn, _ = search.load_search_index(spark, rebuilt_dir)
-    assert mn == rn
-    _assert_same_rows(mp, rp, ["token", "id", "tf"])
-    _assert_same_rows(mdl, rdl, ["id", "dl"])
-    mb = {r["token"]: r["ub"] for r in
-          spark.read.parquet(os.path.join(idx, "bounds")).collect()}
-    rb = {r["token"]: r["ub"] for r in
-          spark.read.parquet(os.path.join(rebuilt_dir, "bounds")).collect()}
-    assert set(mb) == set(rb)
-    assert all(mb[k] >= rb[k] - 1e-12 for k in rb)
+    materialize_tx_search_index(final, rebuilt_dir, id_col="doc_id", text_col="text")
+    rebuilt = load_tx_search_index(spark, rebuilt_dir)
+    assert snap.n_docs == rebuilt.n_docs
+    _assert_same_rows(snap.postings(), rebuilt.postings(), ["token", "id", "tf"])
+    _assert_same_rows(snap.doclens(), rebuilt.doclens(), ["id", "dl"])
+    _assert_same_rows(snap.bounds(), rebuilt.bounds(), ["token", "df", "max_part", "ub"])
 
     # replay the same feed from a FRESH checkpoint: batch ids repeat, the
-    # layout's txn marker must make both batches no-ops
-    import json as _json
+    # manifest's txn marker must make both batches no-ops
+    run("ckpt2")
+    assert load_tx_search_index(spark, idx).gen == 3
 
-    meta_before = open(os.path.join(idx, "_meta.json")).read()
-    q2 = start_index_maintainer(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(feed_dir),
-        spark, idx, str(tmp_path / "ckpt2"),
-        id_col="doc_id", text_col="text", available_now=True,
-        allow_inplace=True,
-    )
-    q2.awaitTermination(120)
-    assert _json.loads(open(os.path.join(idx, "_meta.json")).read()) == _json.loads(meta_before)
-    mp2, _, mdl2, mn2, _ = search.load_search_index(spark, idx)
-    assert mn2 == mn
-    _assert_same_rows(mp2, mp, ["token", "id", "tf"])
-
-    # WAND from the maintained layout == naive full scoring on the rebuild
+    # WAND from the maintained snapshot == naive full scoring on the rebuild
     queries = spark.createDataFrame(
         [(0, "zebra quokka data"), (1, "wombat the water")],
         "query_id long, query_text string",
     )
     served = sorted(
         (r["query_id"], r["id"], r["score"])
-        for r in search.bm25_search_many_maxscore(
-            mp.drop("__tb"), mst,
-            spark.read.parquet(os.path.join(idx, "bounds")),
-            queries, n_docs=mn, doclens=mdl, k=5,
-        ).collect()
+        for r in snap.bm25_maxscore(queries, k=5).collect()
     )
     naive = sorted(
         (r["query_id"], r["id"], r["score"])
         for r in search.bm25_search_many(
-            rp.drop("__tb"), rst, queries, n_docs=rn, k=5, doclens=rdl
+            rebuilt.postings(), rebuilt.stats(), queries, n_docs=rebuilt.n_docs,
+            k=5, doclens=rebuilt.doclens(),
         ).collect()
     )
     assert served == naive and len(served) > 0
@@ -857,14 +548,13 @@ def _corpus_and_changes(draw):
 
 @settings(max_examples=6, deadline=None)
 @given(_corpus_and_changes())
-def test_apply_changes_bounds_soundness_property(spark, case):
-    """Property pin for the r9 maintenance math: for ANY corpus and ANY
+def test_apply_changes_frontier_property(spark, case):
+    """Property pin for the CDC maintenance math: for ANY corpus and ANY
     change set, (1) maintained doclens == rebuilt exactly, (2) maintained
-    stats == rebuilt exactly (df-delta merge + idf recompute), and for
-    bounds (3) exactly the rebuilt vocabulary, (4) exact df everywhere,
-    (5) ub >= the rebuilt exact bound element-wise — the invariant that
-    keeps max-score pruning result-invisible between full rebuilds (an
-    underestimate could wrongly prune a true top-k document)."""
+    stats == rebuilt exactly (df-delta merge + idf recompute), and (3)
+    bounds recomputed from the maintained frontier
+    (``apply_changes_frontier`` + ``bounds_from_frontier``) equal a full
+    ``build_term_bounds`` rebuild token for token, bit for bit."""
     docs_rows, change_rows, upd, dels = case
     docs = spark.createDataFrame(docs_rows, "id long, text string")
     changes = spark.createDataFrame(change_rows, "id long, text string, _change_type string")
@@ -879,7 +569,6 @@ def test_apply_changes_bounds_soundness_property(spark, case):
 
     p0 = search.build_postings(docs, id_col="id", text_col="text")
     dl0 = search.doc_lengths(docs, id_col="id", text_col="text")
-    b0 = search.build_term_bounds(p0, dl0, n0)
     p1 = search.apply_changes(p0, changes, id_col="id", text_col="text")
     dl1 = search.apply_changes_doclens(dl0, changes, id_col="id", text_col="text")
 
@@ -891,13 +580,11 @@ def test_apply_changes_bounds_soundness_property(spark, case):
     )
     assert dl_m == dl_r
     # (2) stats exact
-    st_m = {
-        (r["token"], r["df"], round(r["idf"], 12))
-        for r in search.apply_changes_stats(
-            search.build_token_stats(p0, n_docs=n0), changes, n1,
-            id_col="id", text_col="text",
-        ).collect()
-    }
+    st1 = search.apply_changes_stats(
+        search.build_token_stats(p0, n_docs=n0), changes, n1,
+        id_col="id", text_col="text",
+    )
+    st_m = {(r["token"], r["df"], round(r["idf"], 12)) for r in st1.collect()}
     st_r = {
         (r["token"], r["df"], round(r["idf"], 12))
         for r in search.build_token_stats(
@@ -906,25 +593,24 @@ def test_apply_changes_bounds_soundness_property(spark, case):
     }
     assert st_m == st_r
 
+    # (3) frontier-exact bounds
+    front1 = search.apply_changes_frontier(
+        search.build_term_frontier(p0, dl0), p1, dl1, changes,
+        id_col="id", text_col="text",
+    )
     maintained = {
-        r["token"]: (r["df"], r["ub"])
-        for r in search.apply_changes_bounds(
-            b0, p1, dl0, dl1, changes, n1, id_col="id", text_col="text"
-        ).collect()
+        r["token"]: (r["df"], r["max_part"], r["ub"])
+        for r in search.bounds_from_frontier(front1, st1, dl1, n1).collect()
     }
     rebuilt = {
-        r["token"]: (r["df"], r["ub"])
+        r["token"]: (r["df"], r["max_part"], r["ub"])
         for r in search.build_term_bounds(
             search.build_postings(final, id_col="id", text_col="text"),
             search.doc_lengths(final, id_col="id", text_col="text"),
             n1,
         ).collect()
     }
-    assert set(maintained) == set(rebuilt)
-    for tok, (df_r, ub_r) in rebuilt.items():
-        df_m, ub_m = maintained[tok]
-        assert df_m == df_r, tok
-        assert ub_m >= ub_r - 1e-12, (tok, ub_m, ub_r)
+    assert maintained == rebuilt
 
 
 def test_frontier_bounds_equal_full_rebuild(spark, tmp_path):
@@ -949,99 +635,3 @@ def test_frontier_bounds_equal_full_rebuild(spark, tmp_path):
     assert got == full
     # the frontier is genuinely smaller than the postings it summarizes
     assert front.count() < p.count()
-
-
-def test_refresh_bounds_exact_after_delete_heavy_feed(spark, tmp_path):
-    """r9 VERDICT next-round #7 Done-criterion: after a DELETE-HEAVY
-    change feed (which drifts avgdl — the case the old scale-factor form
-    left loose on every untouched token), the refreshed bounds equal a
-    from-scratch rebuild exactly, and WAND served from the refreshed
-    layout equals naive scoring."""
-    from sf_epa_data_ingestion_spark.storage import TxTable
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text").limit(200)
-        .withColumn(
-            "text",
-            F.concat(F.col("text"), F.lit(" uniq"), F.col("doc_id").cast("string")),
-        )
-    )
-    t = TxTable(spark, str(tmp_path / "docs")).create(
-        docs.repartitionByRange(4, "doc_id")
-    )
-    idx = str(tmp_path / "idx")
-    search.materialize_search_index(
-        t.read(0), idx, id_col="doc_id", text_col="text", n_buckets=64
-    )
-    # delete the 30 LONGEST docs: maximal avgdl shift downward
-    victims = (
-        t.read(0)
-        .select("doc_id", F.length("text").alias("n"))
-        .orderBy(F.desc("n"), "doc_id")
-        .limit(30)
-    )
-    t.delete_where(F.col("doc_id").isin(
-        [r["doc_id"] for r in victims.collect()]
-    ))
-    search.refresh_search_index(
-        spark, idx, t.changes(0), id_col="doc_id", text_col="text",
-        allow_inplace=True,
-    )
-
-    rebuilt_dir = str(tmp_path / "rebuilt")
-    search.materialize_search_index(
-        t.read(), rebuilt_dir, id_col="doc_id", text_col="text", n_buckets=64
-    )
-    m = {r["token"]: (r["df"], r["max_part"], r["ub"]) for r in
-         spark.read.parquet(os.path.join(idx, "bounds")).collect()}
-    r_ = {r["token"]: (r["df"], r["max_part"], r["ub"]) for r in
-          spark.read.parquet(os.path.join(rebuilt_dir, "bounds")).collect()}
-    assert m == r_
-
-    # served results from the refreshed layout match naive scoring
-    mp, mst, mdl, mn, mb = search.load_search_index(spark, idx)
-    queries = spark.createDataFrame(
-        [(1, "spark table join"), (2, "hash index")], "qid long, qtext string"
-    )
-    wand = search.bm25_search_many_maxscore(
-        mp, mst, spark.read.parquet(os.path.join(idx, "bounds")), queries, mn,
-        mdl, k=5, query_id="qid", text_col="qtext",
-    )
-    naive = search.bm25_search_many(
-        mp, mst, queries, mn, doclens=mdl, k=5, query_id="qid", text_col="qtext",
-    )
-    def _rows(df):
-        return sorted(
-            (r["qid"], r["id"], round(r["score"], 9)) for r in df.collect()
-        )
-    assert _rows(wand) == _rows(naive)
-
-
-def test_inplace_refresh_is_opt_in(spark, tmp_path):
-    """r11 VERDICT next-round #7: the in-place directory refresh carries
-    a documented concurrent-reader hazard, so it now refuses to run
-    unless the caller explicitly accepts it — the default error points
-    at the transactional host."""
-    import pytest
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
-    )
-    idx = str(tmp_path / "idx")
-    search.materialize_search_index(docs, idx, id_col="doc_id", text_col="text")
-    feed = spark.createDataFrame(
-        [(3, "delta", "insert")], "doc_id long, text string, _change_type string"
-    )
-    with pytest.raises(RuntimeError, match="refresh_tx_search_index"):
-        search.refresh_search_index(
-            spark, idx, feed, id_col="doc_id", text_col="text"
-        )
-    # the layout is untouched by the refusal, and the opt-in works
-    _p, _st, _dl, n0, _nb = search.load_search_index(spark, idx)
-    assert n0 == 2
-    search.refresh_search_index(
-        spark, idx, feed, id_col="doc_id", text_col="text", allow_inplace=True
-    )
-    _p, _st, _dl, n1, _nb = search.load_search_index(spark, idx)
-    assert n1 == 3

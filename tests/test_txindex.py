@@ -1,7 +1,8 @@
 """Transactional search-index hosting (storage/txindex.py): the five
 pieces inside txlog tables behind an atomic manifest — atomic cutover,
 torn-refresh invisibility, concurrent-reader snapshot isolation,
-replay markers, and parity with the directory layout."""
+replay markers, change-proportional refresh, and parity with the
+write-once directory layout."""
 
 import os
 
@@ -58,22 +59,11 @@ def _piece_rows(snap):
     }
 
 
-def _dir_rows(spark, idx_dir):
-    p, st, dl, n, _nb = search.load_search_index(spark, idx_dir)
-    return {
-        "postings": {(r["token"], r["id"], r["tf"]) for r in p.drop("__tb").collect()},
-        "doclens": {(r["id"], r["dl"]) for r in dl.collect()},
-        "stats": {(r["token"], r["df"], round(r["idf"], 12)) for r in st.collect()},
-        "bounds": {
-            (r["token"], r["df"], r["max_part"], r["ub"])
-            for r in spark.read.parquet(os.path.join(idx_dir, "bounds")).collect()
-        },
-        "frontier": {
-            (r["token"], r["tf"], r["dl"])
-            for r in spark.read.parquet(os.path.join(idx_dir, "frontier")).collect()
-        },
-        "n_docs": n,
-    }
+def _rebuilt_rows(spark, path, corpus, **kw):
+    """The oracle for a refreshed index: ``_piece_rows`` of a fresh tx
+    build of the final corpus."""
+    materialize_tx_search_index(corpus, path, id_col="doc_id", text_col="text", **kw)
+    return _piece_rows(load_tx_search_index(spark, path))
 
 
 def test_build_matches_directory_layout_and_probe_prunes(spark, tmp_path):
@@ -85,7 +75,20 @@ def test_build_matches_directory_layout_and_probe_prunes(spark, tmp_path):
 
     snap = load_tx_search_index(spark, tx)
     assert snap.gen == 1
-    assert _piece_rows(snap) == _dir_rows(spark, dir_)
+    # every piece the two layouts share holds the same rows
+    p, st, dl, n, _nb = search.load_search_index(spark, dir_)
+    tx_rows = _piece_rows(snap)
+    del tx_rows["frontier"]  # only the refreshable host keeps a frontier
+    assert tx_rows == {
+        "postings": {(r["token"], r["id"], r["tf"]) for r in p.drop("__tb").collect()},
+        "doclens": {(r["id"], r["dl"]) for r in dl.collect()},
+        "stats": {(r["token"], r["df"], round(r["idf"], 12)) for r in st.collect()},
+        "bounds": {
+            (r["token"], r["df"], r["max_part"], r["ub"])
+            for r in spark.read.parquet(os.path.join(dir_, "bounds")).collect()
+        },
+        "n_docs": n,
+    }
 
     # bucket-pruned term probe: fewer files, identical rows
     terms = ["spark", "table"]
@@ -120,11 +123,9 @@ def test_refresh_equals_rebuild_and_cutover_is_atomic(spark, tmp_path):
     # new generation equals a from-scratch build of the new corpus
     new_snap = load_tx_search_index(spark, tx)
     assert new_snap.gen == 2
-    rebuilt_dir = str(tmp_path / "rebuilt")
-    search.materialize_search_index(
-        t.read(), rebuilt_dir, id_col="doc_id", text_col="text"
+    assert _piece_rows(new_snap) == _rebuilt_rows(
+        spark, str(tmp_path / "rebuilt"), t.read()
     )
-    assert _piece_rows(new_snap) == _dir_rows(spark, rebuilt_dir)
 
     # SNAPSHOT ISOLATION: the generation-1 reader still computes the
     # OLD consistent pieces after the refresh rewrote everything
@@ -136,6 +137,106 @@ def test_refresh_equals_rebuild_and_cutover_is_atomic(spark, tmp_path):
     )
     assert load_tx_search_index(spark, tx).gen == 2
     assert new_snap.last_txn("app") == 0
+
+
+def test_refresh_leaves_untouched_bucket_files_in_place(spark, tmp_path):
+    """The O(change) claim: a refresh rewrites only the postings files
+    whose ``__tb`` bounds meet a touched token's bucket and the doclens
+    files whose ``__ib`` bounds meet a changed id's bucket. Every other
+    live data file stays in the new version's live file set under the
+    same path."""
+    from sf_epa_data_ingestion_spark.functions.refhash import xxh64_string
+
+    docs = _docs(spark)
+    tx = str(tmp_path / "tx")
+    # 64 buckets: with ~45 touched tokens, 16 buckets would ALL be hit on
+    # this small-vocabulary corpus and the untouched-file pin would be
+    # vacuous
+    materialize_tx_search_index(
+        docs, tx, id_col="doc_id", text_col="text", n_buckets=64
+    )
+    _t, changes = _feed(spark, tmp_path, docs)
+    touched_tbs = sorted({
+        xxh64_string(r["token"]) % 64
+        for r in changes.select(
+            F.explode(search._norm_tokens(F.col("text"))).alias("token")
+        ).distinct().collect()
+    })
+    touched_ibs = sorted({
+        r["ib"]
+        for r in changes.select(
+            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(64)).alias("ib")
+        ).distinct().collect()
+    })
+    pieces = load_tx_search_index(spark, tx)._t
+
+    def untouched(piece, col, buckets):
+        t = pieces[piece]
+        return set(t.read_files()) - set(t.read_files(filters=[(col, "in", buckets)]))
+
+    before = {
+        "postings": untouched("postings", "__tb", touched_tbs),
+        "doclens": untouched("doclens", "__ib", touched_ibs),
+    }
+    assert all(before.values())  # untouched files exist
+
+    refresh_tx_search_index(spark, tx, changes, id_col="doc_id", text_col="text")
+    snap = load_tx_search_index(spark, tx)
+    assert snap.gen == 2
+    for piece, files in before.items():
+        live = set(pieces[piece].read_files(version=int(snap._versions[piece])))
+        assert files <= live, f"untouched {piece} files rewritten: {sorted(files - live)}"
+
+
+def test_refresh_bounds_exact_after_delete_heavy_feed(spark, tmp_path):
+    """After a DELETE-HEAVY change feed, which drifts avgdl on every
+    untouched token, the refreshed bounds and frontier equal a fresh
+    build exactly, and WAND served from the refreshed snapshot equals
+    naive scoring over the rebuild."""
+    docs = _docs(spark)
+    t = TxTable(spark, str(tmp_path / "docs")).create(
+        docs.repartitionByRange(4, "doc_id")
+    )
+    tx = str(tmp_path / "tx")
+    materialize_tx_search_index(
+        t.read(0), tx, id_col="doc_id", text_col="text", n_buckets=64
+    )
+    # delete the 30 LONGEST docs: maximal avgdl shift downward
+    victims = (
+        t.read(0)
+        .select("doc_id", F.length("text").alias("n"))
+        .orderBy(F.desc("n"), "doc_id")
+        .limit(30)
+    )
+    t.delete_where(F.col("doc_id").isin(
+        [r["doc_id"] for r in victims.collect()]
+    ))
+    refresh_tx_search_index(
+        spark, tx, t.changes(0), id_col="doc_id", text_col="text"
+    )
+
+    snap = load_tx_search_index(spark, tx)
+    rebuilt_dir = str(tmp_path / "rebuilt")
+    want = _rebuilt_rows(spark, rebuilt_dir, t.read(), n_buckets=64)
+    got = _piece_rows(snap)
+    assert got["bounds"] == want["bounds"]
+    assert got["frontier"] == want["frontier"]
+
+    rebuilt = load_tx_search_index(spark, rebuilt_dir)
+    queries = spark.createDataFrame(
+        [(1, "spark table join"), (2, "hash index")], "qid long, qtext string"
+    )
+    wand = snap.bm25_maxscore(queries, k=5, query_id="qid", text_col="qtext")
+    naive = search.bm25_search_many(
+        rebuilt.postings(), rebuilt.stats(), queries, rebuilt.n_docs,
+        doclens=rebuilt.doclens(), k=5, query_id="qid", text_col="qtext",
+    )
+
+    def _rows(df):
+        return sorted(
+            (r["qid"], r["id"], round(r["score"], 9)) for r in df.collect()
+        )
+    assert _rows(wand) == _rows(naive) and _rows(wand)
 
 
 def test_torn_refresh_is_invisible_until_manifest(spark, tmp_path):
@@ -172,11 +273,9 @@ def test_torn_refresh_is_invisible_until_manifest(spark, tmp_path):
     )
     recovered = load_tx_search_index(spark, tx)
     assert recovered.gen == 2
-    rebuilt_dir = str(tmp_path / "rebuilt")
-    search.materialize_search_index(
-        _t.read(), rebuilt_dir, id_col="doc_id", text_col="text"
+    assert _piece_rows(recovered) == _rebuilt_rows(
+        spark, str(tmp_path / "rebuilt"), _t.read()
     )
-    assert _piece_rows(recovered) == _dir_rows(spark, rebuilt_dir)
 
 
 def test_torn_refresh_recovery_with_a_different_change_batch(spark, tmp_path):
@@ -213,11 +312,9 @@ def test_torn_refresh_recovery_with_a_different_change_batch(spark, tmp_path):
     corpus_plus_b = docs.unionByName(
         changes_b.select("doc_id", "text")
     )
-    rebuilt_dir = str(tmp_path / "rebuilt_b")
-    search.materialize_search_index(
-        corpus_plus_b, rebuilt_dir, id_col="doc_id", text_col="text"
+    assert _piece_rows(recovered) == _rebuilt_rows(
+        spark, str(tmp_path / "rebuilt_b"), corpus_plus_b
     )
-    assert _piece_rows(recovered) == _dir_rows(spark, rebuilt_dir)
     # and batch A's doc is nowhere in the published postings
     assert (
         recovered.postings().filter(F.col("id") == int(a_id) + 100000).count() == 0
@@ -225,15 +322,29 @@ def test_torn_refresh_recovery_with_a_different_change_batch(spark, tmp_path):
 
 
 def test_refresh_rejects_tokenless_delete_image(spark, tmp_path):
-    docs = _docs(spark, n=50)
+    """A delete whose image carries no tokens, for a doc whose indexed
+    dl > 0, would strand the doc's postings while n_docs decrements: the
+    refresh fails fast. Deleting a genuinely token-free doc (dl == 0)
+    with an empty image stays legal."""
+    docs = _docs(spark, n=50).unionByName(
+        spark.createDataFrame([(-1, "")], "doc_id long, text string")
+    )
     tx = str(tmp_path / "tx")
     materialize_tx_search_index(docs, tx, id_col="doc_id", text_col="text")
-    lo = docs.agg(F.min("doc_id")).first()[0]
+    lo = docs.filter(F.col("doc_id") >= 0).agg(F.min("doc_id")).first()[0]
     bad = spark.createDataFrame(
         [(int(lo), None, "delete")], "doc_id long, text string, _change_type string"
     )
     with pytest.raises(ValueError, match="full pre-image"):
         refresh_tx_search_index(spark, tx, bad, id_col="doc_id", text_col="text")
+
+    ok = spark.createDataFrame(
+        [(-1, "", "delete")], "doc_id long, text string, _change_type string"
+    )
+    refresh_tx_search_index(spark, tx, ok, id_col="doc_id", text_col="text")
+    snap = load_tx_search_index(spark, tx)
+    assert (snap.gen, snap.n_docs) == (2, 50)
+    assert snap.doclens().filter(F.col("id") == -1).count() == 0
 
 
 def test_vacuum_reclaims_old_generations(spark, tmp_path):
@@ -281,11 +392,9 @@ def test_tx_index_refresh_sink_multi_batch_replay(spark, tmp_path):
 
     snap = load_tx_search_index(spark, tx)
     assert snap.gen == 3  # build + two batches
-    rebuilt_dir = str(tmp_path / "rebuilt")
-    search.materialize_search_index(
-        t.read(), rebuilt_dir, id_col="doc_id", text_col="text"
+    assert _piece_rows(snap) == _rebuilt_rows(
+        spark, str(tmp_path / "rebuilt"), t.read()
     )
-    assert _piece_rows(snap) == _dir_rows(spark, rebuilt_dir)
 
     # replays (crash-window re-deliveries): no new generation
     sink(t.changes(1, 2), 1)
@@ -478,8 +587,7 @@ def test_single_query_plan_reads_query_frame_once(spark, tmp_path):
 def test_bounds_df_equals_stats_df_after_build_and_refresh(spark, tmp_path):
     """The max-score path takes each term's df from bounds and never
     reads stats, so the two must agree token for token: after a tx
-    build, after one tx refresh, and after an in-place directory
-    refresh of the same change feed."""
+    build and after one tx refresh."""
     def df_of(frame):
         return {r["token"]: r["df"] for r in frame.select("token", "df").collect()}
 
@@ -496,12 +604,3 @@ def test_bounds_df_equals_stats_df_after_build_and_refresh(spark, tmp_path):
     assert snap2.gen == 2
     refreshed = df_of(snap2.bounds())
     assert refreshed == df_of(snap2.stats()) and refreshed != built
-
-    dir_ = str(tmp_path / "dir")
-    search.materialize_search_index(docs, dir_, id_col="doc_id", text_col="text")
-    search.refresh_search_index(
-        spark, dir_, changes, id_col="doc_id", text_col="text", allow_inplace=True
-    )
-    dir_bounds = df_of(spark.read.parquet(os.path.join(dir_, "bounds")))
-    assert dir_bounds == df_of(spark.read.parquet(os.path.join(dir_, "stats")))
-    assert dir_bounds == refreshed

@@ -1,16 +1,14 @@
 #!/usr/bin/env python3
-"""Measure the TX-HOSTED search index at scale (r10 VERDICT next-round
-#6): build, change-feed refresh, snapshot-serving overhead vs the
-directory layout, and generation-unit vacuum reclaim, at sf0.1 and (if
+"""Measure the TX-HOSTED search index at scale: build, change-feed
+refresh, snapshot-serving overhead vs the write-once directory layout,
+and generation-unit vacuum reclaim, at sf0.1 and (if
 ``tools/make_sf1.py`` has produced it) the sf1 corpus.
 
-The question this answers: what does the snapshot-isolated host COST
-relative to the in-place directory layout it supersedes as the graded
-serving path — and does its refresh stay O(change) as the corpus grows
-10x? The refresh applies the same 55-row change feed as
-``refresh_scale.py`` (20 updates as delete+insert pairs + 10 inserts +
-5 deletes), so the refresh-derivative rows are directly comparable
-across the two hosts.
+The question this answers: what does the refreshable, snapshot-isolated
+host COST relative to the write-once directory layout that serves the
+same queries — and does its refresh stay O(change) as the corpus grows
+10x? The refresh applies a 55-row change feed (``change_feed``: 20
+updates as delete+insert pairs + 10 inserts + 5 deletes).
 
 Usage: python tools/txrefresh_scale.py [runs=2]
 One JSON line on stdout; rows land in SCALE.md by hand.
@@ -23,10 +21,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tools"))
 
 import pyspark.sql.functions as F  # noqa: E402
-from refresh_scale import change_feed  # noqa: E402
 
 from sf_epa_data_ingestion_spark.operators import search  # noqa: E402
 from sf_epa_data_ingestion_spark.session import get_spark  # noqa: E402
@@ -40,6 +36,30 @@ WAND_QUERIES = [
     (1, "dup window sort merge row"),
     (2, "scan filter value row fast"),
 ]
+
+
+def change_feed(docs):
+    """20 updates (delete+insert pairs) + 10 inserts + 5 deletes."""
+    lo = docs.agg(F.min("doc_id")).first()[0]
+    upd = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 20))
+    upd_del = upd.withColumn("_change_type", F.lit("delete"))
+    upd_ins = upd.withColumn(
+        "text", F.concat(F.lit("zzzfresh zzztokens "), F.col("text"))
+    ).withColumn("_change_type", F.lit("insert"))
+    ins = docs.limit(10).select(
+        (F.col("doc_id") + 900_000_000).alias("doc_id"),
+        F.concat(F.lit("zzznew document "), F.col("text")).alias("text"),
+    ).withColumn("_change_type", F.lit("insert"))
+    dels = (
+        docs.orderBy(F.desc("doc_id")).limit(5)
+        .withColumn("_change_type", F.lit("delete"))
+    )
+    return (
+        upd_del.select("doc_id", "text", "_change_type")
+        .unionByName(upd_ins.select("doc_id", "text", "_change_type"))
+        .unionByName(ins.select("doc_id", "text", "_change_type"))
+        .unionByName(dels.select("doc_id", "text", "_change_type"))
+    )
 
 
 def _du(path: str) -> int:
