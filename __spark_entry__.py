@@ -30,6 +30,7 @@ Determinism discipline (so order-insensitive value-hashes match):
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -61,6 +62,10 @@ from sf_epa_data_ingestion_spark.streaming import events as ev
 from sf_epa_data_ingestion_spark.streaming import vectorindex
 
 SF001 = "/root/testdata/sf0.001"
+
+#: absolute path of this checkout's golden fixtures, which the oracle
+#: SQL joins against (``'{FIXTURES}/<name>.parquet'``)
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests", "fixtures")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -848,12 +853,12 @@ def q_mutation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the whole mutation pipeline re-stated: every doc's chunks from the
 # golden fixture, rechunked docs (%4 == 0) at version 2, the rest at
 # version 1, plus the U6-added null review_status column
-ORACLE_MUTATION_SUITE = r"""
+ORACLE_MUTATION_SUITE = rf"""
 SELECT d.doc_id, f.chunk_index, f.chunk,
        CAST(CASE WHEN d.doc_id % 4 = 0 THEN 2 ELSE 1 END AS BIGINT) AS version,
        CAST(NULL AS VARCHAR) AS review_status
 FROM documents d
-JOIN '/root/repo/tests/fixtures/golden_chunks_128_32.parquet' f
+JOIN '{FIXTURES}/golden_chunks_128_32.parquet' f
   ON md5(d.text) = f.text_md5
 """
 
@@ -994,10 +999,10 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CHUNK_DOCUMENTS = r"""
+ORACLE_CHUNK_DOCUMENTS = rf"""
 SELECT d.doc_id, f.chunk_index, f.chunk
 FROM documents d
-JOIN '/root/repo/tests/fixtures/golden_chunks_128_32.parquet' f
+JOIN '{FIXTURES}/golden_chunks_128_32.parquet' f
   ON md5(d.text) = f.text_md5
 """
 
@@ -1500,13 +1505,13 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(_t(spark, sf_dir, "documents"))
 
 
-ORACLE_MINHASH_LSH = """
+ORACLE_MINHASH_LSH = f"""
 WITH docs AS (
   SELECT doc_id, md5(text) AS h FROM documents WHERE text IS NOT NULL
 ), bands AS (
   SELECT d.doc_id AS id, f.band_id, f.band_hash
   FROM docs d
-  JOIN '/root/repo/tests/fixtures/golden_minhash_bands.parquet' f
+  JOIN '{FIXTURES}/golden_minhash_bands.parquet' f
     ON d.h = f.text_md5
 ), cand AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
@@ -1516,7 +1521,7 @@ WITH docs AS (
 ), sigs AS (
   SELECT d.doc_id AS id, f.i, f.v
   FROM docs d
-  JOIN '/root/repo/tests/fixtures/golden_minhash_sig.parquet' f
+  JOIN '{FIXTURES}/golden_minhash_sig.parquet' f
     ON d.h = f.text_md5
 )
 SELECT c.id_a, c.id_b,
@@ -1607,13 +1612,13 @@ def q_neardup_replay_sig_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_NEARDUP_STREAM_REPLAY = """
+ORACLE_NEARDUP_STREAM_REPLAY = f"""
 WITH docs AS (
   SELECT doc_id, md5(text) AS h FROM documents WHERE text IS NOT NULL
 ), bands AS (
   SELECT d.doc_id AS id, f.band_id, f.band_hash
   FROM docs d
-  JOIN '/root/repo/tests/fixtures/golden_minhash_bands.parquet' f
+  JOIN '{FIXTURES}/golden_minhash_bands.parquet' f
     ON d.h = f.text_md5
 ), cand AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
@@ -1623,7 +1628,7 @@ WITH docs AS (
 ), sigs AS (
   SELECT d.doc_id AS id, f.i, f.v
   FROM docs d
-  JOIN '/root/repo/tests/fixtures/golden_minhash_sig.parquet' f
+  JOIN '{FIXTURES}/golden_minhash_sig.parquet' f
     ON d.h = f.text_md5
 )
 SELECT c.id_a, c.id_b,
@@ -1649,11 +1654,11 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_pairs(_t(spark, sf_dir, "documents"), max_hamming=8)
 
 
-ORACLE_SIMHASH = """
+ORACLE_SIMHASH = f"""
 WITH sigs AS (
   SELECT d.doc_id AS id, f.sig
   FROM documents d
-  JOIN '/root/repo/tests/fixtures/golden_simhash.parquet' f
+  JOIN '{FIXTURES}/golden_simhash.parquet' f
     ON md5(d.text) = f.text_md5
 )
 SELECT a.id AS id_a, b.id AS id_b,
@@ -1718,7 +1723,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # format identically; pinned by tests/test_refhash.py). The pair logic
 # (any-table bucket collision, self-exclusion, round-6 cosine, rank by
 # (sim desc, id)) is re-derived in SQL, independent of the engine.
-ORACLE_ANN_LSH = """
+ORACLE_ANN_LSH = f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
          md5(array_to_string(
@@ -1726,7 +1731,7 @@ WITH e AS (
   FROM embeddings
 ), s AS (
   SELECT e.vec_id, f.table_id, f.sig, e.v
-  FROM e JOIN '/root/repo/tests/fixtures/golden_lsh_sigs.parquet' f ON e.h = f.emb_md5
+  FROM e JOIN '{FIXTURES}/golden_lsh_sigs.parquet' f ON e.h = f.emb_md5
 ), cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id
   FROM s q JOIN s c ON q.table_id = c.table_id AND q.sig = c.sig
@@ -1784,7 +1789,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # loudly. Scoring re-derives in SQL over unit vectors (the operator's
 # shape: normalize first, then one dot), rounded to 6 dp like every
 # cosine oracle in this file.
-ORACLE_ANN_IVF = """
+ORACLE_ANN_IVF = f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
          md5(array_to_string(
@@ -1795,7 +1800,7 @@ WITH e AS (
   FROM e
 ), f AS (
   SELECT g.emb_md5, g.rank, g.cid
-  FROM '/root/repo/tests/fixtures/golden_ivf_probes.parquet' g
+  FROM '{FIXTURES}/golden_ivf_probes.parquet' g
   JOIN corp ON g.corpus_md5 = corp.ch
 ), un AS (
   SELECT vec_id, h,
@@ -1864,7 +1869,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # different corpus misses the join and fails the row-count compare.
 # No SQL re-scoring tail here: every PQ decision is already exact int64
 # (no float knife-edges for DuckDB to re-derive).
-ORACLE_ANN_PQ = """
+ORACLE_ANN_PQ = f"""
 WITH e AS (
   SELECT vec_id,
          md5(array_to_string(
@@ -1875,7 +1880,7 @@ WITH e AS (
   FROM e
 )
 SELECT g.query_id, g.vec_id, g.score_fp, g.rank
-FROM '/root/repo/tests/fixtures/golden_pq.parquet' g
+FROM '{FIXTURES}/golden_pq.parquet' g
 JOIN corp ON g.corpus_md5 = corp.ch
 """
 
@@ -1919,7 +1924,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Same thin corpus-keyed fixture join as ORACLE_ANN_PQ: the result is a
 # pure function of the input table, replayed outside the JVM.
-ORACLE_ANN_IVFPQ = """
+ORACLE_ANN_IVFPQ = f"""
 WITH e AS (
   SELECT vec_id,
          md5(array_to_string(
@@ -1930,7 +1935,7 @@ WITH e AS (
   FROM e
 )
 SELECT g.query_id, g.vec_id, g.score_fp, g.rank
-FROM '/root/repo/tests/fixtures/golden_ivfpq.parquet' g
+FROM '{FIXTURES}/golden_ivfpq.parquet' g
 JOIN corp ON g.corpus_md5 = corp.ch
 """
 
@@ -2219,7 +2224,7 @@ def q_approx_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct-value set — the exact quantity the linear-counting estimate
 # is a function of. A content miss drops the row (inner join) and fails
 # the row-count compare loudly instead of passing a stale estimate.
-ORACLE_APPROX_PROFILE = """
+ORACLE_APPROX_PROFILE = f"""
 WITH k AS (
   SELECT 'o_orderstatus' AS "column", COUNT(*) AS n_rows,
          CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
@@ -2238,7 +2243,7 @@ WITH k AS (
   FROM orders
 )
 SELECT k."column", k.n_rows, k.n_null, f.n_distinct
-FROM k JOIN '/root/repo/tests/fixtures/golden_hll_profile.parquet' f
+FROM k JOIN '{FIXTURES}/golden_hll_profile.parquet' f
   ON k."column" = f."column" AND k.h = f.set_md5
 """
 
@@ -2306,7 +2311,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generation (any-table bucket collision, id_a < id_b, DISTINCT) in SQL,
 # then score survivors with exact cosine and apply the 0.95 threshold.
 # Independent of the engine end to end.
-ORACLE_EMBEDDING_NEAR_DUP = """
+ORACLE_EMBEDDING_NEAR_DUP = f"""
 WITH base AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), corpus AS (
@@ -2324,7 +2329,7 @@ WITH base AS (
   FROM corpus
 ), s AS (
   SELECT e.vec_id, f.table_id, f.sig
-  FROM e JOIN '/root/repo/tests/fixtures/golden_neardup_prod_sigs.parquet' f ON e.h = f.emb_md5
+  FROM e JOIN '{FIXTURES}/golden_neardup_prod_sigs.parquet' f ON e.h = f.emb_md5
 ), cand AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
   FROM s a JOIN s b ON a.table_id = b.table_id AND a.sig = b.sig
@@ -2513,7 +2518,7 @@ def q_semdedup_replay_assign_stage(spark: SparkSession, sf_dir: str) -> DataFram
 # compute the dots independently (list_dot_product vs numpy), which is
 # safe because planted-pair ccos gaps (~1e-5) dwarf cross-engine float
 # noise (~1e-15); ties fall to the id.
-ORACLE_SEMANTIC_DEDUP = """
+ORACLE_SEMANTIC_DEDUP = f"""
 WITH base AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), corpus AS (
@@ -2536,13 +2541,13 @@ WITH base AS (
   SELECT e.vec_id, f.cid,
          list_transform(e.v, x -> x / sqrt(list_dot_product(e.v, e.v))) AS u
   FROM e
-  JOIN '/root/repo/tests/fixtures/golden_semdedup_assign.parquet' f ON f.emb_md5 = e.h
+  JOIN '{FIXTURES}/golden_semdedup_assign.parquet' f ON f.emb_md5 = e.h
   JOIN corp ON f.corpus_md5 = corp.ch
 ), withc AS (
   SELECT a.vec_id, a.cid, a.u,
          round(list_dot_product(a.u, c.cent), 6) AS ccos
   FROM assigned a
-  JOIN '/root/repo/tests/fixtures/golden_semdedup_cents.parquet' c
+  JOIN '{FIXTURES}/golden_semdedup_cents.parquet' c
     ON c.cid = a.cid
   JOIN corp ON c.corpus_md5 = corp.ch
 ), pairs AS (
@@ -2631,7 +2636,7 @@ def q_training_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 0.5 point = 2^20 / 2) -> keep the lowest gate-passing doc_id per
 # normalized-text digest. Planted +1M/+2M copies (Spark side only) can
 # never be that minimum, so the raw corpus suffices here.
-ORACLE_TRAINING_INGEST_REPLAY = r"""
+ORACLE_TRAINING_INGEST_REPLAY = rf"""
 WITH w AS (
   SELECT doc_id, text,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
@@ -2646,7 +2651,7 @@ WITH w AS (
   SELECT doc_id, text FROM m
   WHERE (n_words BETWEEN 50 AND 100000)
     AND COALESCE(mean_word_len BETWEEN 3.0 AND 10.0, FALSE)
-    AND NOT contains(text, '{')
+    AND NOT contains(text, '{{')
     AND NOT contains(lower(text), 'lorem ipsum')
 ), corp AS (
   SELECT md5(string_agg(doc_id || ':' || md5(
@@ -2654,7 +2659,7 @@ WITH w AS (
          ), ',' ORDER BY doc_id)) AS ch
   FROM documents WHERE text IS NOT NULL
 ), scored AS (
-  SELECT g.doc_id FROM '/root/repo/tests/fixtures/golden_qlr.parquet' g
+  SELECT g.doc_id FROM '{FIXTURES}/golden_qlr.parquet' g
   JOIN corp ON g.corpus_md5 = corp.ch
   WHERE g.score_fp >= 524288
 ), kept AS (
@@ -2797,10 +2802,10 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FINGERPRINT = """
+ORACLE_FINGERPRINT = f"""
 SELECT d.doc_id, f.fingerprint
 FROM documents d
-JOIN '/root/repo/tests/fixtures/golden_fingerprints.parquet' f
+JOIN '{FIXTURES}/golden_fingerprints.parquet' f
   ON md5(d.text) = f.text_md5
 """
 
@@ -3068,11 +3073,35 @@ QUALIFY rank <= 5
 SEARCH_QUERY = "spark hash join table"
 
 
+@functools.cache
+def _code_digest() -> str:
+    """md5 of the library's source (every ``.py`` under the package)
+    plus this file's, computed once per process. Every
+    ``_materialized_dir`` key mixes it in, so a layout written by other
+    code is never served: an edited build function rebuilds its layout
+    even when its hand-kept tag was not bumped."""
+    import glob
+    import hashlib
+
+    import sf_epa_data_ingestion_spark as pkg
+
+    src = pkg.__path__[0]
+    root = os.path.dirname(src)
+    files = sorted(glob.glob(os.path.join(src, "**", "*.py"), recursive=True))
+    h = hashlib.md5()
+    for f in [*files, os.path.abspath(__file__)]:
+        h.update(os.path.relpath(f, root).encode())
+        with open(f, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()
+
+
 def _materialized_dir(sf_dir: str, table, tag: str, build) -> str:
     """Build-or-reuse a PERSISTED index layout for a corpus table. The
-    cache key is the table's content signature (paths + sizes + mtimes),
-    so a regenerated corpus rebuilds and a re-run reuses — modeling the
-    real design, where the index is a maintained table (the streaming
+    cache key is the table's content signature (paths + sizes + mtimes)
+    plus the code digest (``_code_digest``), so a regenerated corpus or
+    edited build code rebuilds and a re-run reuses — modeling the real
+    design, where the index is a maintained table (the streaming
     maintainers are the TARGET_LAG analog) and query-time plans READ it
     rather than re-deriving it per query. Build is atomic: ``build``
     writes into a scratch dir (_meta.json last) which is renamed in."""
@@ -3082,7 +3111,7 @@ def _materialized_dir(sf_dir: str, table, tag: str, build) -> str:
     import tempfile
 
     tables = [table] if isinstance(table, str) else list(table)
-    sig = hashlib.md5(tag.encode())
+    sig = hashlib.md5(f"{tag}:{_code_digest()}".encode())
     for t in tables:
         p = os.path.join(sf_dir, f"{t}.parquet")
         parts = (
@@ -3111,30 +3140,11 @@ def _materialized_dir(sf_dir: str, table, tag: str, build) -> str:
     return root
 
 
-def _search_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Persisted token-bucketed search index (search.materialize_search_index)
-    over the documents table — see _materialized_dir. The layout is
-    write-once: a changed corpus gets a new signature and a new build.
-    ``search_index_v6`` keys the current layout generation (v2 added
-    bounds/; v3 widened bounds/ to (token, df, max_part, ub); v6 dropped
-    the frontier/ piece and the id-bucketing of doclens/, which only the
-    removed in-place refresh read — every served row is unchanged)."""
-    return _materialized_dir(
-        sf_dir,
-        "documents",
-        "search_index_v6",
-        lambda tmp: search.materialize_search_index(
-            _t(spark, sf_dir, "documents"), tmp, id_col="doc_id", text_col="text"
-        ),
-    )
-
-
 def _vector_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Persisted cid-partitioned IVF-PQ index + frozen model
     (similarity.materialize_vector_index) over the embeddings table —
-    the vector sibling of _search_index_dir, batch form of the
-    streaming/vectorindex.py appender's table. Training is a pure
-    function of the (id, vector) set, so every graded consumer whose
+    batch form of the streaming/vectorindex.py appender's table.
+    Training is a pure function of the (id, vector) set, so every graded consumer whose
     corpus carries the same pairs (ann_ivfpq over embeddings;
     search_hybrid_ann over documents⋈embeddings, a 1:1 rename) serves
     bit-identically from this one layout."""
@@ -3231,32 +3241,13 @@ def _joined_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _joined_search_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Persisted token-bucketed search index over the JOINED hybrid
-    corpus (documents that have an embedding) — a separate layout from
-    _search_index_dir because df/idf statistics are corpus-relative and
-    the joined corpus is a strict subset of documents at sf>=0.1. The
-    signature covers BOTH source tables, so either regenerating
-    rebuilds. One index per serving corpus is the production shape, not
-    a workaround."""
-    return _materialized_dir(
-        sf_dir,
-        ["documents", "embeddings"],
-        "search_index_join_v3",
-        lambda tmp: search.materialize_search_index(
-            _joined_docs(spark, sf_dir), tmp, id_col="id", text_col="text"
-        ),
-    )
-
-
 def _tx_search_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Persisted TRANSACTIONAL search index over the documents table
     (storage/txindex.materialize_tx_search_index): the five pieces in
-    txlog tables behind an atomic generation manifest — the
-    snapshot-isolated sibling of _search_index_dir. Serving reads pin
-    the manifest's piece versions, so results are stable under a
-    concurrent refresh (the directory layout is write-once and is
-    never refreshed)."""
+    txlog tables behind an atomic generation manifest — the one BM25
+    host every whole-documents search row serves from. Serving reads
+    pin the manifest's piece versions, so results are stable under a
+    concurrent refresh."""
     def build(tmp):
         txindex.materialize_tx_search_index(
             _t(spark, sf_dir, "documents"), tmp, id_col="doc_id", text_col="text"
@@ -3268,9 +3259,12 @@ def _tx_search_index_dir(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _tx_joined_search_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Transactional search index over the JOINED hybrid corpus — the
-    tx sibling of _joined_search_index_dir (one index per serving
-    corpus; df/idf are corpus-relative)."""
+    """Transactional search index over the JOINED hybrid corpus
+    (documents that have an embedding): a separate index from
+    _tx_search_index_dir because df/idf are corpus-relative and the
+    joined corpus is a strict subset of documents at sf>=0.1. The
+    signature covers BOTH source tables, so either regenerating
+    rebuilds."""
     def build(tmp):
         txindex.materialize_tx_search_index(
             _joined_docs(spark, sf_dir), tmp, id_col="id", text_col="text"
@@ -3343,21 +3337,6 @@ def _tx_fresh_search_index_dir(spark: SparkSession, sf_dir: str) -> str:
 _probe_terms = search._literal_terms
 
 
-def q_search_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1 index: postings (token, id, tf) joined with token stats
-    (df, idf), read from the PERSISTED token-bucketed layout (r8 — the
-    searchable index is a write-once TABLE built per corpus signature;
-    r7 re-derived it from raw text inside every graded query, which made
-    the index build the query's cost). Identical
-    rows to the live build (same build plan writes the layout; pinned by
-    test + the unchanged oracle)."""
-    root = _search_index_dir(spark, sf_dir)
-    postings, stats, _doclens, _n, _nb = search.load_search_index(spark, root)
-    return postings.drop("__tb").join(stats, "token").select(
-        "token", F.col("id").alias("doc_id"), "tf", "df", F.round("idf", 6).alias("idf")
-    )
-
-
 ORACLE_SEARCH_POSTINGS = r"""
 WITH toks AS (
   SELECT doc_id, u.token
@@ -3374,21 +3353,6 @@ WITH toks AS (
 SELECT p.token, p.doc_id, p.tf, s.df, round(s.idf, 6) AS idf
 FROM postings p JOIN stats s USING (token)
 """
-
-
-def q_search_lexical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1 retrieval: top-k docs by sum(tf*idf) over the query terms,
-    probing the PERSISTED token-bucketed index (r8): the literal terms'
-    bucket ids are computed driver-side, so the postings scan opens only
-    the probed buckets' files (PartitionFilters — pruning evidence pinned
-    in tests/test_search_ops.py) before the token IN data filter."""
-    root = _search_index_dir(spark, sf_dir)
-    postings, stats, _doclens, _n, nb = search.load_search_index(spark, root)
-    terms = sorted({t for t in SEARCH_QUERY.lower().split() if t})
-    pruned = search.prune_postings_probe(postings, terms, nb)
-    return search.lexical_search(pruned, stats, SEARCH_QUERY, k=10).select(
-        F.col("id").alias("doc_id"), "score"
-    )
 
 
 ORACLE_SEARCH_LEXICAL = rf"""
@@ -3416,28 +3380,33 @@ QUALIFY row_number() OVER (ORDER BY score DESC, doc_id ASC) <= 10
 
 def q_lexical_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The r13 merge of the search_postings + search_lexical micro-rows
-    (the ann_suite precedent — two graded rows sharing one persisted
-    token-bucketed index fixture become one window slot, freeing one for
-    the change_feed row, r12 VERDICT next-round #2). Both operator
-    surfaces still execute end-to-end in the one graded row, tagged by
-    ``op``: the postings+stats index join (the index CONTENT check) and
-    the bucket-pruned TF-IDF top-k probe (the retrieval check). Each
-    leg's plan is unchanged from its standalone row — the union is the
-    only addition. tf/df are cast to double in both engines so the
-    union's nulls never coerce pandas dtypes engine-dependently."""
-    p = q_search_postings(spark, sf_dir).select(
+    (the ann_suite precedent). Both operator surfaces execute end-to-end
+    over ONE pinned snapshot of the persisted transactional index over
+    documents, tagged by ``op``: the postings+stats index join (the
+    index CONTENT check) and the TF-IDF top-k probe (the retrieval
+    check), whose postings read is bucket-pruned through txlog file
+    skipping (``postings_for_terms``). tf/df are cast to double in both
+    engines so the union's nulls never coerce pandas dtypes
+    engine-dependently."""
+    snap = txindex.load_tx_search_index(
+        spark, _tx_search_index_dir(spark, sf_dir)
+    )
+    stats = snap.stats()
+    p = snap.postings().join(stats, "token").select(
         F.lit("postings").alias("op"),
         "token",
-        "doc_id",
+        F.col("id").alias("doc_id"),
         F.col("tf").cast("double").alias("tf"),
         F.col("df").cast("double").alias("df"),
-        "idf",
+        F.round("idf", 6).alias("idf"),
         F.lit(None).cast("double").alias("score"),
     )
-    lx = q_search_lexical(spark, sf_dir).select(
+    lx = search.lexical_search(
+        snap.postings_for_terms(_probe_terms(SEARCH_QUERY)), stats, SEARCH_QUERY, k=10
+    ).select(
         F.lit("lexical").alias("op"),
         F.lit(None).cast("string").alias("token"),
-        "doc_id",
+        F.col("id").alias("doc_id"),
         F.lit(None).cast("double").alias("tf"),
         F.lit(None).cast("double").alias("df"),
         F.lit(None).cast("double").alias("idf"),
@@ -3460,25 +3429,19 @@ FROM ({ORACLE_SEARCH_LEXICAL})
 
 
 def q_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1 retrieval, Okapi BM25 ranker (Lucene-default scoring) over the
-    same PERSISTED token-bucketed index as search_postings/search_lexical
-    (late r8 — the last search query still paying a live index build per
-    query; the r7 in-query persist amortized the tokenize pass within ONE
-    query's branches, but rebuilt it for every query and scaled 3.65x at
-    sf1). The literal terms' buckets prune the postings scan
-    (PartitionFilters via prune_postings_probe), the (id, dl) doclens
-    table replaces the postings-derived doc-length aggregate, and n_docs
-    comes from the index metadata — nothing corpus-wide but pruned linear
-    scans remains at query time. Values identical to the live build
-    (same build plan writes the layout; oracle unchanged, parity
-    pinned by tests/test_search_ops.py)."""
-    root = _search_index_dir(spark, sf_dir)
-    postings, stats, doclens, n, nb = search.load_search_index(spark, root)
-    pruned = search.prune_postings_probe(
-        postings, _probe_terms(SEARCH_QUERY), nb
-    ).drop("__tb")
+    """X1 retrieval, Okapi BM25 ranker (Lucene-default scoring) over a
+    pinned snapshot of the persisted transactional index of the
+    documents table. The literal terms' buckets prune the postings read
+    (txlog file skipping via ``postings_for_terms``), the (id, dl)
+    doclens piece replaces the postings-derived doc-length aggregate,
+    and n_docs comes from the generation manifest — nothing
+    corpus-wide but pruned linear scans remains at query time."""
+    snap = txindex.load_tx_search_index(
+        spark, _tx_search_index_dir(spark, sf_dir)
+    )
     return search.bm25_search(
-        pruned, stats, SEARCH_QUERY, n_docs=n, k=10, doclens=doclens
+        snap.postings_for_terms(_probe_terms(SEARCH_QUERY)), snap.stats(),
+        SEARCH_QUERY, n_docs=snap.n_docs, k=10, doclens=snap.doclens(),
     ).select(F.col("id").alias("doc_id"), "score")
 
 
@@ -3533,23 +3496,18 @@ def q_search_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries. Single-query parity with bm25_search pinned in
     tests/test_search_ops.py.
 
-    r14 (r13 VERDICT next-round #1): served from the PERSISTED
-    token-bucketed index like every scalar retrieval row — this was the
-    last lexical leg paying a live build_postings + corpus count per
-    query, the wrong serving shape for the batch-eval path MOST likely
-    to run repeatedly at 100 TB. The batch terms are literal constants,
-    so the probe bucket-prunes driver-side (prune_postings_probe) on
-    top of the broadcast (query, token) join; doclens/avgdl come from
-    the materialized doclens table (scoring-identical — the index is
-    built by the same build_postings plan; oracle unchanged)."""
-    root = _search_index_dir(spark, sf_dir)
-    postings, stats, doclens, n_docs, nb = search.load_search_index(spark, root)
-    pruned = search.prune_postings_probe(
-        postings, _probe_terms(*[t for _, t in BATCH_QUERIES]), nb
+    Served from a pinned snapshot of the persisted transactional index
+    like every scalar retrieval row. The batch terms are literal
+    constants, so the postings read bucket-prunes through txlog file
+    skipping (``postings_for_terms``) on top of the broadcast (query,
+    token) join; doclens/avgdl come from the snapshot's doclens piece."""
+    snap = txindex.load_tx_search_index(
+        spark, _tx_search_index_dir(spark, sf_dir)
     )
+    pruned = snap.postings_for_terms(_probe_terms(*[t for _, t in BATCH_QUERIES]))
     qdf = spark.createDataFrame(BATCH_QUERIES, "query_id long, query_text string")
     return search.bm25_search_many(
-        pruned, stats, qdf, n_docs=n_docs, doclens=doclens, k=10
+        pruned, snap.stats(), qdf, n_docs=snap.n_docs, doclens=snap.doclens(), k=10
     ).select("query_id", F.col("id").alias("doc_id"), "score")
 
 
@@ -3614,48 +3572,32 @@ WAND_BATCH_QUERIES = [
 ]
 
 
-def q_search_bm25_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch BM25 with sound max-score (WAND-style) candidate pruning
-    over the PERSISTED index (r8, r7 VERDICT next-round #6): per-term
-    score upper bounds live in the index (``bounds/``,
-    search.build_term_bounds); query-time, a first pass over the
-    top-bound term's postings sets the top-k floor and every term whose
-    suffix bound sum cannot reach it is skipped during candidate
-    generation — the high-df lists whose fan-out dominates naive batch
-    BM25. The pruning is RESULT-INVISIBLE by construction (sound floor
-    argument in the operator docstring), so the oracle is plain
-    full-scoring SQL with no fixture: any unsound pruning fails the
-    hash compare. Equality with bm25_search_many also pinned in
-    tests/test_search_ops.py; measured probe-row reduction in SCALE.md."""
-    root = _search_index_dir(spark, sf_dir)
-    postings, stats, doclens, n_docs, _nb = search.load_search_index(spark, root)
-    bounds = spark.read.parquet(os.path.join(root, "bounds"))
-    qdf = spark.createDataFrame(WAND_BATCH_QUERIES, "query_id long, query_text string")
-    return search.bm25_search_many_maxscore(
-        postings.drop("__tb"), stats, bounds, qdf, n_docs=n_docs, doclens=doclens, k=10
-    ).select("query_id", F.col("id").alias("doc_id"), "score")
-
-
 def q_search_bm25_wand_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1 retrieval served from the TRANSACTIONAL index host (r11, r10
-    VERDICT next-round #2): the same WAND-pruned batch BM25 as
-    search_bm25_wand, but every piece reads AT the manifest-pinned
-    txlog versions (storage/txindex.TxSearchSnapshot) and the postings
-    probe is bucket-pruned through txlog FILE SKIPPING on __tb instead
-    of directory PartitionFilters — the serving path that stays
+    """Batch BM25 with sound max-score (WAND-style) candidate pruning,
+    served from the TRANSACTIONAL index host (storage/txindex
+    TxSearchSnapshot): per-term score upper bounds live in the index
+    (the ``bounds`` piece, search.build_term_bounds); query-time, a
+    first pass over the top-bound term's postings sets the top-k floor
+    and every term whose suffix bound sum cannot reach it is skipped
+    during candidate generation — the high-df lists whose fan-out
+    dominates naive batch BM25. Every piece reads AT the
+    manifest-pinned txlog versions and the postings probe is
+    bucket-pruned through txlog FILE SKIPPING on __tb, so the result is
     bit-stable under a concurrent refresh_tx_search_index (reference
     anchor: continuous serving under TARGET_LAG,
-    epa_ingestion.py:844-854).
-    One logical query, two physical hosts: shares
-    ORACLE_SEARCH_BM25_WAND verbatim (the merge_upsert/merge_upsert_tx
-    precedent), so any host-side drift fails the hash compare."""
+    epa_ingestion.py:844-854). The pruning is RESULT-INVISIBLE by
+    construction (sound floor argument in the operator docstring), so
+    the oracle is plain full-scoring SQL with no fixture: any unsound
+    pruning fails the hash compare. Registered as both search_bm25_wand
+    and search_bm25_wand_tx (one logical query, one host); equality
+    with bm25_search_many also pinned in tests/test_search_ops.py."""
     snap = txindex.load_tx_search_index(
         spark, _tx_search_index_dir(spark, sf_dir)
     )
     qdf = spark.createDataFrame(WAND_BATCH_QUERIES, "query_id long, query_text string")
     # literal query batch: the driver-side term mirror skips the
-    # tokenize+collect job (same _probe_terms shape as the directory
-    # probes; a drift there would fail THIS query's hash compare)
+    # tokenize+collect job (a drift there would fail THIS query's hash
+    # compare)
     return snap.bm25_maxscore(
         qdf, k=10, terms=_probe_terms(*[t for _, t in WAND_BATCH_QUERIES])
     ).select("query_id", F.col("id").alias("doc_id"), "score")
@@ -3747,23 +3689,18 @@ def q_search_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ranker parity with the proprietary service stays out of scope per
     SURVEY §7 — the oracle checks OUR scoring, not theirs).
 
-    Late r8: the lexical leg reads the PERSISTED joined-corpus index
-    (bucket-pruned probe) like every other graded search query — this
-    was the last one rebuilding postings/stats live per query (2.40x at
-    sf1; the probe-only form is flat). Identical values: same build plan
-    writes the layout, lexical_search prunes to the query terms either
-    way (oracle unchanged)."""
+    The lexical leg reads a pinned snapshot of the joined-corpus
+    transactional index (bucket-pruned probe) like every other graded
+    search query."""
     docs = _joined_docs(spark, sf_dir)
-    root = _joined_search_index_dir(spark, sf_dir)
-    postings, stats, _dl, _n, nb = search.load_search_index(spark, root)
-    pruned = search.prune_postings_probe(
-        postings, _probe_terms(SEARCH_QUERY), nb
-    ).drop("__tb")
+    snap = txindex.load_tx_search_index(
+        spark, _tx_joined_search_index_dir(spark, sf_dir)
+    )
     qv = [1.0 if i % 7 == 0 else 0.25 for i in range(64)]
     return search.hybrid_search(
         docs,
-        pruned,
-        stats,
+        snap.postings_for_terms(_probe_terms(SEARCH_QUERY)),
+        snap.stats(),
         SEARCH_QUERY,
         query_vec=qv,
         attr_filters={"lang": "en"},
@@ -3827,23 +3764,22 @@ def q_search_hybrid_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pair for candidates + final ranks. Single-query parity with
     hybrid_search pinned in tests/test_search_ops.py.
 
-    r14 (r13 VERDICT next-round #1): the lexical leg reads the
-    PERSISTED joined-corpus index (df/idf are corpus-relative, so the
-    joined layout, not the whole-documents one — the q_search_hybrid
-    precedent verbatim) with a driver-side bucket-pruned probe over the
-    batch's literal terms, instead of a live build_postings + corpus
-    count per run. Scoring-identical, oracle unchanged."""
+    The lexical leg reads a pinned snapshot of the joined-corpus
+    transactional index (df/idf are corpus-relative, so the joined
+    index, not the whole-documents one) with a bucket-pruned probe over
+    the batch's literal terms."""
     docs = _joined_docs(spark, sf_dir)
-    root = _joined_search_index_dir(spark, sf_dir)
-    postings, stats, _dl, _n, nb = search.load_search_index(spark, root)
-    pruned = search.prune_postings_probe(
-        postings, _probe_terms(*[t for _, t, _ in HYBRID_BATCH_QUERIES]), nb
+    snap = txindex.load_tx_search_index(
+        spark, _tx_joined_search_index_dir(spark, sf_dir)
+    )
+    pruned = snap.postings_for_terms(
+        _probe_terms(*[t for _, t, _ in HYBRID_BATCH_QUERIES])
     )
     qdf = spark.createDataFrame(
         HYBRID_BATCH_QUERIES, "query_id long, query_text string, query_vec array<double>"
     )
     return search.hybrid_search_many(
-        docs, pruned, stats, qdf, attr_filters={"lang": "en"}, k=10
+        docs, pruned, snap.stats(), qdf, attr_filters={"lang": "en"}, k=10
     ).select("query_id", "id", "lex_score", "sem_score", "score")
 
 
@@ -3960,9 +3896,9 @@ def q_search_hybrid_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion are re-derived in SQL by the oracle. Semantic-only matches
     surfacing in top-k is pinned by tests/test_search_ops.py."""
     docs = _joined_docs(spark, sf_dir)
-    # BOTH legs serve from persisted, maintained layouts now: the
-    # lexical leg bucket-prunes its literal term probe over the joined
-    # corpus's token-bucketed index (a separate layout from the
+    # BOTH legs serve from persisted layouts: the lexical leg
+    # bucket-prunes its literal term probe over a pinned snapshot of the
+    # joined corpus's transactional index (a separate index from the
     # whole-documents one — df/idf are corpus-relative), and the ANN leg
     # reads the SAME persisted vector index as ann_ivfpq: the joined
     # corpus carries exactly the embeddings table's (id, vector) pairs
@@ -3970,11 +3906,8 @@ def q_search_hybrid_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # those pairs — so a rename of the id column is the only delta, and
     # the golden fixture (trained on the joined corpus) replays
     # bit-for-bit. Train once, serve every retrieval query.
-    postings, stats, _dl, _n, nb = search.load_search_index(
-        spark, _joined_search_index_dir(spark, sf_dir)
-    )
-    postings = search.prune_postings_probe(
-        postings, _probe_terms(SEARCH_QUERY), nb
+    snap = txindex.load_tx_search_index(
+        spark, _tx_joined_search_index_dir(spark, sf_dir)
     )
     index, coarse, cq, _meta = similarity.load_vector_index(
         spark, _vector_index_dir(spark, sf_dir)
@@ -3982,7 +3915,8 @@ def q_search_hybrid_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = index.withColumnRenamed("vec_id", "id")
     qv = [1.0 if i % 7 == 0 else 0.25 for i in range(64)]
     return search.hybrid_search_ann(
-        docs, postings, stats, SEARCH_QUERY, qv, index, coarse, cq, k=10, dim=64
+        docs, snap.postings_for_terms(_probe_terms(SEARCH_QUERY)), snap.stats(),
+        SEARCH_QUERY, qv, index, coarse, cq, k=10, dim=64,
     )
 
 
@@ -4025,7 +3959,7 @@ WITH docs AS (
   FROM lex
 ), sem AS (
   SELECT g.id, g.sem_rank
-  FROM '/root/repo/tests/fixtures/golden_hybrid_ann.parquet' g
+  FROM '{FIXTURES}/golden_hybrid_ann.parquet' g
   JOIN corp ON g.corpus_md5 = corp.ch
 ), fused AS (
   SELECT COALESCE(l.id, s.id) AS id,
@@ -4045,15 +3979,12 @@ QUALIFY rank <= 10
 
 
 def q_search_hybrid_ann_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1 TRUE hybrid retrieval with the LEXICAL leg served from the
-    transactional index host (r11, r10 VERDICT next-round #3): same
-    fusion as search_hybrid_ann, but postings + stats read AT the
-    manifest-pinned txlog versions of the joined-corpus tx index
-    (TxSearchSnapshot.postings_for_terms bucket-prunes the literal term
-    probe through txlog file skipping), so the full hybrid query is
-    snapshot-isolated under a concurrent tx_index_refresh_sink —
-    mid-refresh stability is pinned in tests/test_txindex.py. Since r12
-    the SEMANTIC leg is snapshot-isolated too (r11 VERDICT next-round
+    """X1 TRUE hybrid retrieval, fully snapshot-isolated: the same
+    fusion and the same LEXICAL leg as search_hybrid_ann (postings +
+    stats read AT the manifest-pinned txlog versions of the
+    joined-corpus tx index, so the lexical leg is stable under a
+    concurrent tx_index_refresh_sink — pinned in tests/test_txindex.py),
+    and the SEMANTIC leg snapshot-isolated too (r11 VERDICT next-round
     #1): the ANN probe serves from ``vectorindex.pin_vector_index`` —
     generation AND txlog version pinned once per query, the probed
     cells read via txlog file skipping at that pinned version
@@ -4193,7 +4124,7 @@ WITH q AS (
   FROM lex
 ), sem AS (
   SELECT g.query_id, g.id, g.sem_rank
-  FROM '/root/repo/tests/fixtures/golden_hybrid_ann_batch.parquet' g
+  FROM '{FIXTURES}/golden_hybrid_ann_batch.parquet' g
   JOIN corp ON g.corpus_md5 = corp.ch
 ), fused AS (
   SELECT COALESCE(l.query_id, s.query_id) AS query_id,
@@ -4995,7 +4926,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_model.score_and_label_docs_lr(d, weights, bias)
 
 
-ORACLE_QUALITY_CLASSIFIER = r"""
+ORACLE_QUALITY_CLASSIFIER = rf"""
 WITH corp AS (
   SELECT md5(string_agg(doc_id || ':' || md5(
            trim(regexp_replace(lower(text), '\s+', ' ', 'g'))
@@ -5003,7 +4934,7 @@ WITH corp AS (
   FROM documents WHERE text IS NOT NULL
 )
 SELECT g.doc_id AS id, CAST(g.label AS INT) AS label, g.score_fp
-FROM '/root/repo/tests/fixtures/golden_qlr.parquet' g
+FROM '{FIXTURES}/golden_qlr.parquet' g
 JOIN corp ON g.corpus_md5 = corp.ch
 """
 
@@ -5379,7 +5310,8 @@ def _registry_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_near_dup": q_embedding_near_dup,
         "search_hybrid_ann": q_search_hybrid_ann,
         "search_hybrid_ann_tx": q_search_hybrid_ann_tx,
-        "search_bm25_wand": q_search_bm25_wand,
+    # one plan under both names: every BM25 row serves from the tx host
+        "search_bm25_wand": q_search_bm25_wand_tx,
         "search_bm25_wand_tx": q_search_bm25_wand_tx,
         "search_bm25_wand_tx_fresh": q_search_bm25_wand_tx_fresh,
         "search_hybrid_ann_batch": q_search_hybrid_ann_batch,
@@ -5550,9 +5482,9 @@ def oracle_sql() -> dict[str, str]:
         "lexical_suite": ORACLE_LEXICAL_SUITE,
         "search_hybrid_ann": ORACLE_SEARCH_HYBRID_ANN,
         # same oracles on purpose: one logical retrieval query, two
-        # physical hosts (directory layout vs transactional snapshot) —
-        # the tx host must reproduce the ranking bit-for-bit (the
-        # merge_upsert/merge_upsert_tx precedent)
+        # physical vector hosts (directory layout vs generational
+        # snapshot) — the generational host must reproduce the ranking
+        # bit-for-bit (the merge_upsert/merge_upsert_tx precedent)
         "search_hybrid_ann_tx": ORACLE_SEARCH_HYBRID_ANN,
         "search_hybrid_ann_batch": ORACLE_SEARCH_HYBRID_ANN_BATCH,
         "search_bm25_wand": ORACLE_SEARCH_BM25_WAND,

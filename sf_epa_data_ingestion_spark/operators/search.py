@@ -125,33 +125,6 @@ def _tfidf_ranked(
     return _rank_within(lex, query_id, "score", "id", k, rank)
 
 
-def _memo_layout(cache: dict, spark, path: str, build):
-    """Session-scoped memo of an opened index layout in ``cache``: a
-    serving tier holds its index frames open for the process lifetime
-    instead of reopening parquet readers per query. Keyed by (Spark
-    application, real path, _meta.json mtime_ns) so a rebuilt layout —
-    tests rewrite them in place under tmp dirs — is reopened, never
-    served stale. DataFrames are immutable plans, so sharing them across
-    calls in one session is safe. Bounded FIFO: a serving tier holds a
-    handful of layouts (per-corpus + tx generations), so test churn
-    through tmp-dir layouts can't grow it unbounded."""
-    import os
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(path),
-        os.stat(os.path.join(path, "_meta.json")).st_mtime_ns,
-    )
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    out = build()
-    if len(cache) >= 8:
-        cache.pop(next(iter(cache)))
-    cache[key] = out
-    return out
-
-
 def build_postings(docs: DataFrame, id_col: str = "id", text_col: str = "chunk") -> DataFrame:
     """Posting list: (token, id, tf). One explode + one groupBy shuffle.
     The fan-out exchange sits UPSTREAM of the tokenization so a small-file
@@ -184,9 +157,9 @@ def lexical_search(
     TF-IDF kernel the hybrid searchers' lexical legs use
     (``_tfidf_ranked``) over a literal one-query probe
     (``_literal_probe``). The per-doc sum is one partial-aggregated
-    shuffle; ties break by id for determinism. Over the persisted layout,
-    prune the postings with ``prune_postings_probe`` first so the scan
-    opens only the query terms' buckets.
+    shuffle; ties break by id for determinism. Over a persisted index,
+    pass the bucket-pruned probe (``TxSearchSnapshot.postings_for_terms``)
+    so the scan opens only the query terms' buckets.
     """
     probe, qstats = _literal_probe(postings, stats, query, "idf")
     return _tfidf_ranked(probe, qstats, k, "query_id").select("id", "score")
@@ -416,9 +389,9 @@ def bm25_search(
     ``doclens`` (id, dl) table: with it, doc length + avgdl come from a
     narrow linear projection and a single-row aggregate, and the
     full-corpus (token, id) explode/groupBy the postings-derived fallback
-    needs is gone from the query-time plan. Over the persisted layout,
-    prune the postings with ``prune_postings_probe`` first so the scan
-    opens only the query terms' buckets.
+    needs is gone from the query-time plan. Over a persisted index,
+    pass the bucket-pruned probe (``TxSearchSnapshot.postings_for_terms``)
+    so the scan opens only the query terms' buckets.
 
     High-df terms still fan the candidate set out with document
     frequency; exact BM25 over an inverted index scores every posting of
@@ -876,115 +849,6 @@ def _maxscore_topk(
     return _rank_within(
         exact_scores(candidates(essential)), query_id, "score", "id", k
     ).drop("rank")
-
-
-def materialize_search_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "id",
-    text_col: str = "chunk",
-    n_buckets: int = 16,
-) -> None:
-    """Write the search index as a PERSISTED, token-bucketed layout, once
-    per corpus generation: query-time plans READ the index instead of
-    re-deriving it from raw text. The layout is write-once — nothing
-    refreshes it in place. An index that must stay fresh under a change
-    feed is hosted by ``storage/txindex.py`` instead, whose refresh
-    publishes each new generation atomically.
-
-    Layout, under ``path``:
-    - ``postings/`` (token, id, tf) parquet, directory-partitioned by
-      ``__tb = pmod(xxhash64(token), n_buckets)`` — a literal term probe
-      computes its bucket ids driver-side (refhash.xxh64_string mirrors
-      xxhash64) and the scan prunes to ~|terms|/n_buckets of the files
-      (PartitionFilters; pinned by test). Directory partitioning rather
-      than metastore bucketBy so a vanilla session reads it with plain
-      ``spark.read.parquet`` — no warehouse/metastore dependency.
-    - ``doclens/`` (id, dl) — the narrow index-side table bm25_search's
-      doclens= path wants.
-    - ``stats/`` (token, df, idf) — vocabulary-sized, probe-pruned by a
-      token filter at query time.
-    - ``bounds/`` (token, df, max_part, ub) — the max-score
-      candidate-pruning statistic (``build_term_bounds``).
-    - ``_meta.json`` {n_docs, n_buckets} — the corpus count the scorers
-      need and the bucket count a term probe hashes into.
-    """
-    import json
-    import os
-
-    n = docs.count()
-    postings = build_postings(docs, id_col=id_col, text_col=text_col)
-    (
-        postings.withColumn(
-            "__tb", F.pmod(F.xxhash64(F.col("token")), F.lit(n_buckets))
-        )
-        .repartition(n_buckets, "__tb")
-        .write.mode("overwrite")
-        .partitionBy("__tb")
-        .parquet(os.path.join(path, "postings"))
-    )
-    persisted = docs.sparkSession.read.parquet(os.path.join(path, "postings"))
-    build_token_stats(persisted, n_docs=n).write.mode("overwrite").parquet(
-        os.path.join(path, "stats")
-    )
-    doc_lengths(docs, id_col=id_col, text_col=text_col).write.mode("overwrite").parquet(
-        os.path.join(path, "doclens")
-    )
-    build_term_bounds(
-        persisted, docs.sparkSession.read.parquet(os.path.join(path, "doclens")), n
-    ).write.mode("overwrite").parquet(os.path.join(path, "bounds"))
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump({"n_docs": n, "n_buckets": n_buckets}, f)
-
-
-#: Session-scoped memo of opened index layouts (``_memo_layout``):
-#: reopening three parquet readers per query costs ~0.3 s of pure
-#: driver/py4j plan construction (profiled r15: the batch_search_suite
-#: row spent more wall on spark.read.parquet round-trips than on any
-#: executor stage).
-_INDEX_CACHE: dict = {}
-
-
-def load_search_index(spark, path: str):
-    """Read a write-once ``materialize_search_index`` layout: returns
-    (postings, stats, doclens, n_docs, n_buckets). ``postings`` carries
-    the ``__tb`` partition column — pass it through
-    ``prune_postings_probe`` so literal term probes prune buckets.
-    The max-score bounds table is read separately
-    (``spark.read.parquet(path + "/bounds")``) by callers that prune.
-    Opened layouts are memoized per session (see ``_INDEX_CACHE``)."""
-    import json
-    import os
-
-    def build():
-        with open(os.path.join(path, "_meta.json")) as f:
-            meta = json.load(f)
-        return (
-            spark.read.parquet(os.path.join(path, "postings")),
-            spark.read.parquet(os.path.join(path, "stats")),
-            spark.read.parquet(os.path.join(path, "doclens")),
-            int(meta["n_docs"]),
-            int(meta["n_buckets"]),
-        )
-
-    return _memo_layout(_INDEX_CACHE, spark, path, build)
-
-
-def prune_postings_probe(postings: DataFrame, terms: list[str], n_buckets: int) -> DataFrame:
-    """Bucket-prune a literal term probe over the persisted postings
-    layout: the terms' bucket ids are computed DRIVER-side with the
-    xxhash64 mirror, so the ``__tb IN (...)`` predicate is a literal
-    partition filter (directory pruning — no file in an unprobed bucket
-    is opened), composed with the ``token IN (...)`` data filter the
-    scorers already push. Ranking-identical to the unpruned probe by
-    construction (every row of a probed term lives in its bucket)."""
-    from ..functions.refhash import xxh64_string
-
-    buckets = sorted({xxh64_string(t) % n_buckets for t in terms})
-    return postings.filter(
-        F.col("__tb").isin([int(b) for b in buckets])
-        & F.col("token").isin(list(terms))
-    ).drop("__tb")
 
 
 def prune_high_df_terms(

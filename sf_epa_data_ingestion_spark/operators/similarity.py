@@ -48,7 +48,7 @@ from ..functions.refhash import (
 )
 from ..functions.vectors import to_double_array
 from ..partitioning import spread
-from .search import _memo_layout, _rank_within
+from .search import _rank_within
 
 # Fixed-point resolution for IVF's Lloyd sums: unit coordinates floored
 # at 2^-30 before the per-cell integer aggregate (see ivf_topk docstring).
@@ -667,12 +667,37 @@ def _write_layout(path: str, encoded: DataFrame | None, n_centroids: int, meta: 
         json.dump(meta, f)
 
 
-#: Session-scoped memo of opened vector-index layouts (the
-#: load_search_index discipline — see operators/search.py): a serving
-#: tier holds its frames open; reopening a parquet reader per query is
-#: ~90 ms of pure driver time. Keyed by (application, real path,
-#: _meta.json mtime_ns) so a rebuilt layout is reopened, never stale.
+#: Session-scoped memo of opened vector-index layouts
+#: (``_memo_layout``): a serving tier holds its frames open; reopening a
+#: parquet reader per query is ~90 ms of pure driver time.
 _VINDEX_CACHE: dict = {}
+
+
+def _memo_layout(cache: dict, spark, path: str, build):
+    """Session-scoped memo of an opened index layout in ``cache``: a
+    serving tier holds its index frames open for the process lifetime
+    instead of reopening parquet readers per query. Keyed by (Spark
+    application, real path, _meta.json mtime_ns) so a rebuilt layout —
+    tests rewrite them in place under tmp dirs — is reopened, never
+    served stale. DataFrames are immutable plans, so sharing them across
+    calls in one session is safe. Bounded FIFO: a serving tier holds a
+    handful of layouts (per-corpus + tx generations), so test churn
+    through tmp-dir layouts can't grow it unbounded."""
+    import os
+
+    key = (
+        spark.sparkContext.applicationId,
+        os.path.realpath(path),
+        os.stat(os.path.join(path, "_meta.json")).st_mtime_ns,
+    )
+    hit = cache.get(key)
+    if hit is not None:
+        return hit
+    out = build()
+    if len(cache) >= 8:
+        cache.pop(next(iter(cache)))
+    cache[key] = out
+    return out
 
 
 def _load_layout(spark, path: str, model_keys: tuple, empty_schema: str) -> tuple:
@@ -1566,7 +1591,6 @@ def materialize_vector_index(
     residual: bool = False,
 ) -> None:
     """Write the IVF-PQ retrieval tier as a PERSISTED layout — the
-    vector-side sibling of ``search.materialize_search_index`` and the
     batch form of what ``streaming/vectorindex.py`` maintains
     incrementally: query-time plans READ a maintained index table
     instead of re-running the trainer per query (train once, serve

@@ -1,16 +1,13 @@
 """Transactional search-index hosting: the five-piece layout inside
-txlog tables behind an atomic manifest — the one search index that can
-change.
-
-``operators/search.materialize_search_index`` writes a write-once
-directory layout (plain directory-partitioned parquet, readable by a
-vanilla session). An index kept fresh under a change feed lives here
-instead, built by composing two primitives the engine already has:
+txlog tables behind an atomic manifest — the one BM25 index host. Every
+search row serves from a pinned ``TxSearchSnapshot``, and the same host
+is kept fresh under a change feed, built by composing two primitives
+the engine already has:
 
 - each piece (postings, doclens, stats, bounds, frontier) lives in its
   own ``TxTable`` — copy-on-write commits, per-file min/max stats, so
-  the directory-partition bucket pruning becomes txlog FILE SKIPPING on
-  the ``__tb``/``__ib`` column (the build range-partitions by bucket, so
+  a term probe's bucket pruning is txlog FILE SKIPPING on the
+  ``__tb``/``__ib`` column (the build range-partitions by bucket, so
   per-file bounds are tight);
 - a ``GenerationStore`` manifest pins a CONSISTENT SET of per-piece
   versions: ``{postings: v, doclens: v, stats: v, bounds: v,
@@ -75,8 +72,8 @@ def materialize_tx_search_index(
     """Build generation 1: five txlog tables + the manifest. Postings
     are range-partitioned on ``__tb`` (doclens on ``__ib``) so each data
     file's committed bucket bounds are tight and a term probe's
-    ``("__tb", "in", buckets)`` skipping read prunes like the directory
-    layout's PartitionFilters."""
+    ``("__tb", "in", buckets)`` skipping read opens only the probed
+    buckets' files."""
     spark = docs.sparkSession
     n = docs.count()
     t = _tables(spark, path)
@@ -134,10 +131,12 @@ class TxSearchSnapshot:
         return self._read("postings").drop("__tb")
 
     def postings_for_terms(self, terms) -> DataFrame:
-        """Bucket-pruned probe: the txlog file-skipping equivalent of
-        the directory layout's PartitionFilters — files whose committed
-        __tb bounds exclude every probed bucket never enter the scan;
-        the residual token filter still applies."""
+        """Bucket-pruned probe: the terms' bucket ids are computed
+        driver-side with the xxhash64 mirror, so files whose committed
+        __tb bounds exclude every probed bucket never enter the scan
+        (txlog file skipping); the residual token filter still applies.
+        Ranking-identical to the unpruned postings by construction:
+        every row of a probed term lives in its bucket."""
         from sf_epa_data_ingestion_spark.functions.refhash import xxh64_string
 
         buckets = sorted({xxh64_string(t) % self.n_buckets for t in terms})

@@ -5,12 +5,13 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # Python workers must be able to import test modules (closures defined at
 # test-module level are cloudpickled by reference).
-os.environ["PYTHONPATH"] = (
-    "/root/repo/tests:/root/repo:" + os.environ.get("PYTHONPATH", "")
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [os.path.join(REPO, "tests"), REPO, os.environ.get("PYTHONPATH", "")]
 )
 
 

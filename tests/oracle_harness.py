@@ -9,6 +9,7 @@ directly:  python tests/oracle_harness.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -20,8 +21,6 @@ TABLES = (
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -98,7 +97,7 @@ def compare(spark_df, oracle_pdf: pd.DataFrame, name: str) -> list[str]:
 
 
 def run_all(sf_dir: str, only: list[str] | None = None) -> dict[str, list[str]]:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from sf_epa_data_ingestion_spark.session import get_spark
 

@@ -1,16 +1,15 @@
-"""Session-scoped reader memos (r15): load_table and load_search_index
-each cost ~90 ms of pure driver/py4j time per call — a 100-query suite
-pays that hundreds of times for the same static layouts, and a serving
-tier would hold its frames open. The memos must be invisible except for
-speed: same plan back for the same bytes, a fresh plan the moment the
-path's content changes."""
+"""Session-scoped reader memos (r15): load_table and the vector-index
+layout loaders each cost ~90 ms of pure driver/py4j time per call — a
+100-query suite pays that hundreds of times for the same static
+layouts, and a serving tier would hold its frames open. The memos must
+be invisible except for speed: same plan back for the same bytes, a
+fresh plan the moment the path's content changes."""
 
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sf_epa_data_ingestion_spark.operators import search
 from sf_epa_data_ingestion_spark.sources import readers
 
 SF = "/root/testdata/sf0.001"
@@ -71,18 +70,29 @@ def test_load_ivf_index_memoizes_and_reopens(spark, tmp_path):
     assert similarity.load_ivf_index(spark, root) is not a
 
 
-def test_load_search_index_memoizes_and_reopens(spark, tmp_path):
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "beta gamma")], "id long, text string"
-    )
-    root = str(tmp_path / "idx")
-    search.materialize_search_index(docs, root, id_col="id", text_col="text")
-    a = search.load_search_index(spark, root)
-    b = search.load_search_index(spark, root)
-    assert a is b, "repeat load of an unchanged layout must hit the memo"
-    # a rebuilt layout (fresh _meta.json mtime) must be reopened
-    meta = os.path.join(root, "_meta.json")
-    st = os.stat(meta)
-    os.utime(meta, ns=(st.st_atime_ns + 1_000_000, st.st_mtime_ns + 1_000_000))
-    c = search.load_search_index(spark, root)
-    assert c is not a
+def test_materialized_dir_reuses_only_under_the_same_code(tmp_path, monkeypatch):
+    """A persisted layout is served only to the code that built it: an
+    unchanged code digest reuses the layout (one build), a changed one
+    (edited build code, tag not bumped) rebuilds it (two builds)."""
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "documents.parquet").write_bytes(b"corpus")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    builds = []
+
+    def build(tmp):
+        builds.append(tmp)
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "_meta.json"), "w") as f:
+            f.write("{}")
+
+    a = entry._materialized_dir(str(sf), "documents", "probe_v1", build)
+    assert entry._materialized_dir(str(sf), "documents", "probe_v1", build) == a
+    assert len(builds) == 1
+    monkeypatch.setattr(entry, "_code_digest", lambda: "edited build code")
+    b = entry._materialized_dir(str(sf), "documents", "probe_v1", build)
+    assert b != a and len(builds) == 2

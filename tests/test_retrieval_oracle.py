@@ -1,7 +1,8 @@
 """Oracle parity in the default (fast) tier: the retrieval rows (the ANN
-suite, IVF-PQ, BM25, hybrid search, and max-score BM25 served from the
-directory layout, from a transactional snapshot, and from a snapshot
-brought to the corpus by a CDC refresh) and the stateful streaming replay
+suite, IVF-PQ, and every BM25 search row — the lexical suite, BM25, the
+batch suite, hybrid, true hybrid over IVF-PQ, and max-score BM25 served
+from a transactional snapshot and from a snapshot brought to the corpus
+by a CDC refresh) and the stateful streaming replay
 (running_user_stats_replay: per-user running totals carried across two
 micro-batches) each hash-match their DuckDB oracle at sf0.001. The
 max-score rows share one full-scoring oracle, so any unsound pruning
@@ -17,8 +18,11 @@ from test_oracle_parity import SF_DIR
 ROWS = [
     "ann_suite",
     "ann_ivfpq",
+    "lexical_suite",
     "search_bm25",
+    "batch_search_suite",
     "search_hybrid",
+    "search_hybrid_ann",
     "search_bm25_wand",
     "search_bm25_wand_tx",
     "search_bm25_wand_tx_fresh",

@@ -342,65 +342,6 @@ def test_hybrid_ann_single_leg_degeneracy(spark):
     assert all(r["lex_rank"] == 0 for r in sem_only)
 
 
-def test_persisted_index_layout_prunes_partitions_and_matches_live(spark, tmp_path):
-    """r8 persisted-layout evidence: materialize_search_index writes
-    postings directory-partitioned by token bucket; a literal term probe
-    through prune_postings_probe shows a __tb partition filter in the
-    scan (directory pruning — unprobed buckets' files never open) and
-    ranks identically to the live-built index."""
-    import contextlib
-    import io
-    import re
-
-    d, n, postings, stats = _index(spark)
-    root = str(tmp_path / "index")
-    search.materialize_search_index(d, root, id_col="doc_id", text_col="text")
-    p2, s2, dl2, n2, nb = search.load_search_index(spark, root)
-    assert n2 == n
-    # identical index rows (layout change only)
-    live = {(r["token"], r["id"], r["tf"]) for r in postings.collect()}
-    pers = {(r["token"], r["id"], r["tf"]) for r in p2.drop("__tb").collect()}
-    assert pers == live
-    terms = sorted(set(QUERY.split()))
-    pruned = search.prune_postings_probe(p2, terms, nb)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
-    m = re.search(r"PartitionFilters: \[.*__tb.*\]", plan)
-    assert m, plan
-    # probed bucket set is a strict subset (16 buckets, <=4 distinct terms)
-    from sf_epa_data_ingestion_spark.functions.refhash import xxh64_string
-
-    probed = {xxh64_string(t) % nb for t in terms}
-    assert 0 < len(probed) < nb
-    # ranking parity: pruned persisted probe == live index
-    a = sorted(
-        (r["id"], r["score"])
-        for r in search.lexical_search(pruned, s2, QUERY, k=25).collect()
-    )
-    b = sorted(
-        (r["id"], r["score"])
-        for r in search.lexical_search(postings, stats, QUERY, k=25).collect()
-    )
-    assert a == b and len(a) > 0
-    # BM25 parity over the same routes (q_search_bm25's late-r8 serving
-    # path: pruned persisted postings + index doclens vs live postings
-    # with the postings-derived fallback doc lengths)
-    c = sorted(
-        (r["id"], r["score"])
-        for r in search.bm25_search(
-            pruned.drop("__tb"), s2, QUERY, n_docs=n2, k=25, doclens=dl2
-        ).collect()
-    )
-    d_ = sorted(
-        (r["id"], r["score"])
-        for r in search.bm25_search(postings, stats, QUERY, n_docs=n, k=25).collect()
-    )
-    assert c == d_ and len(c) > 0
-    postings.unpersist()
-
-
 def test_maxscore_bm25_identical_to_naive_and_actually_prunes(spark):
     """r8 WAND/max-score gate: (1) the pruned batch ranking is IDENTICAL
     to bm25_search_many over the same index — scores, ids, tie-breaks;

@@ -2,11 +2,12 @@
 they get the same regression protection as operators)."""
 
 import json
+import os
 import shutil
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run(*args):

@@ -1,10 +1,8 @@
 """Transactional search-index hosting (storage/txindex.py): the five
 pieces inside txlog tables behind an atomic manifest — atomic cutover,
 torn-refresh invisibility, concurrent-reader snapshot isolation,
-replay markers, change-proportional refresh, and parity with the
-write-once directory layout."""
-
-import os
+replay markers, change-proportional refresh, and parity with a live
+index build."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -66,26 +64,29 @@ def _rebuilt_rows(spark, path, corpus, **kw):
     return _piece_rows(load_tx_search_index(spark, path))
 
 
-def test_build_matches_directory_layout_and_probe_prunes(spark, tmp_path):
+def test_build_matches_live_index_and_probe_prunes(spark, tmp_path):
     docs = _docs(spark)
     tx = str(tmp_path / "tx")
     materialize_tx_search_index(docs, tx, id_col="doc_id", text_col="text")
-    dir_ = str(tmp_path / "dir")
-    search.materialize_search_index(docs, dir_, id_col="doc_id", text_col="text")
 
     snap = load_tx_search_index(spark, tx)
     assert snap.gen == 1
-    # every piece the two layouts share holds the same rows
-    p, st, dl, n, _nb = search.load_search_index(spark, dir_)
+    # every piece holds the rows the live index functions compute over docs
+    n = docs.count()
+    p = search.build_postings(docs, id_col="doc_id", text_col="text")
+    dl = search.doc_lengths(docs, id_col="doc_id", text_col="text")
     tx_rows = _piece_rows(snap)
-    del tx_rows["frontier"]  # only the refreshable host keeps a frontier
+    del tx_rows["frontier"]  # covered by the refresh-equals-rebuild tests
     assert tx_rows == {
-        "postings": {(r["token"], r["id"], r["tf"]) for r in p.drop("__tb").collect()},
+        "postings": {(r["token"], r["id"], r["tf"]) for r in p.collect()},
         "doclens": {(r["id"], r["dl"]) for r in dl.collect()},
-        "stats": {(r["token"], r["df"], round(r["idf"], 12)) for r in st.collect()},
+        "stats": {
+            (r["token"], r["df"], round(r["idf"], 12))
+            for r in search.build_token_stats(p, n_docs=n).collect()
+        },
         "bounds": {
             (r["token"], r["df"], r["max_part"], r["ub"])
-            for r in spark.read.parquet(os.path.join(dir_, "bounds")).collect()
+            for r in search.build_term_bounds(p, dl, n).collect()
         },
         "n_docs": n,
     }
@@ -104,6 +105,21 @@ def test_build_matches_directory_layout_and_probe_prunes(spark, tmp_path):
         for r in snap.postings().filter(F.col("token").isin(terms)).collect()
     }
     assert got == want and got
+    # the pruned probe ranks exactly like the live, unpruned index
+    query = " ".join(terms)
+    live = sorted(
+        (r["id"], r["score"])
+        for r in search.lexical_search(
+            p, search.build_token_stats(p, n_docs=n), query, k=25
+        ).collect()
+    )
+    served = sorted(
+        (r["id"], r["score"])
+        for r in search.lexical_search(
+            snap.postings_for_terms(terms), snap.stats(), query, k=25
+        ).collect()
+    )
+    assert served == live and served
 
 
 def test_refresh_equals_rebuild_and_cutover_is_atomic(spark, tmp_path):
@@ -406,7 +422,7 @@ def test_snapshot_wand_serving_matches_naive_and_survives_refresh(spark, tmp_pat
     """r10: WAND served from a pinned snapshot equals naive scoring over
     the same generation — and keeps returning the OLD generation's
     results after a concurrent refresh rewrote every piece (the
-    stable-serving property the directory layout cannot offer)."""
+    stable-serving property of a pinned generation)."""
     docs = _docs(spark, n=150)
     tx = str(tmp_path / "tx")
     materialize_tx_search_index(docs, tx, id_col="doc_id", text_col="text")

@@ -1,14 +1,14 @@
 #!/usr/bin/env python3
 """Measure the TX-HOSTED search index at scale: build, change-feed
-refresh, snapshot-serving overhead vs the write-once directory layout,
-and generation-unit vacuum reclaim, at sf0.1 and (if
-``tools/make_sf1.py`` has produced it) the sf1 corpus.
+refresh, snapshot-served max-score query, and generation-unit vacuum
+reclaim, at sf0.1 and (if ``tools/make_sf1.py`` has produced it) the
+sf1 corpus.
 
-The question this answers: what does the refreshable, snapshot-isolated
-host COST relative to the write-once directory layout that serves the
-same queries — and does its refresh stay O(change) as the corpus grows
-10x? The refresh applies a 55-row change feed (``change_feed``: 20
-updates as delete+insert pairs + 10 inserts + 5 deletes).
+The question this answers: what do the refreshable, snapshot-isolated
+host's build, refresh and serving cost — and does its refresh stay
+O(change) as the corpus grows 10x? The refresh applies a 55-row change
+feed (``change_feed``: 20 updates as delete+insert pairs + 10 inserts
++ 5 deletes).
 
 Usage: python tools/txrefresh_scale.py [runs=2]
 One JSON line on stdout; rows land in SCALE.md by hand.
@@ -24,7 +24,6 @@ sys.path.insert(0, REPO)
 
 import pyspark.sql.functions as F  # noqa: E402
 
-from sf_epa_data_ingestion_spark.operators import search  # noqa: E402
 from sf_epa_data_ingestion_spark.session import get_spark  # noqa: E402
 from sf_epa_data_ingestion_spark.sources.readers import load_table  # noqa: E402
 from sf_epa_data_ingestion_spark.storage import txindex  # noqa: E402
@@ -91,16 +90,13 @@ def main() -> None:
             WAND_QUERIES, "query_id long, query_text string"
         )
         tx = os.path.join(SCRATCH, tag, "tx")
-        dirx = os.path.join(SCRATCH, tag, "dir")
         best = {
             "tx_build": float("inf"), "tx_refresh": float("inf"),
-            "tx_query": float("inf"), "dir_build": float("inf"),
-            "dir_query": float("inf"),
+            "tx_query": float("inf"),
         }
         vacuum_reclaim = 0
         for _ in range(runs):
             shutil.rmtree(tx, ignore_errors=True)
-            shutil.rmtree(dirx, ignore_errors=True)
             t0 = time.time()
             txindex.materialize_tx_search_index(
                 docs, tx, id_col="doc_id", text_col="text"
@@ -120,22 +116,6 @@ def main() -> None:
             pre = _du(tx)
             txindex.vacuum_tx_search_index(spark, tx, keep_generations=1)
             vacuum_reclaim = max(vacuum_reclaim, pre - _du(tx))
-            # directory layout, same corpus + same query batch
-            t0 = time.time()
-            search.materialize_search_index(
-                docs, dirx, id_col="doc_id", text_col="text"
-            )
-            best["dir_build"] = min(best["dir_build"], time.time() - t0)
-            postings, stats, doclens, n_docs, _nb = search.load_search_index(
-                spark, dirx
-            )
-            bounds = spark.read.parquet(os.path.join(dirx, "bounds"))
-            t0 = time.time()
-            search.bm25_search_many_maxscore(
-                postings.drop("__tb"), stats, bounds, qdf,
-                n_docs=n_docs, doclens=doclens, k=10,
-            ).collect()
-            best["dir_query"] = min(best["dir_query"], time.time() - t0)
             spark.catalog.clearCache()
         feed.unpersist()
         out[tag] = {
