@@ -1587,31 +1587,6 @@ def q_neardup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_neardup_replay_sig_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a registry row: bench-time decomposition probe (r15 — the
-    semdedup ``assign_stage`` recipe applied to the one remaining
-    undecomposed >5 s sf1 heavy). neardup_stream_replay = the Arrow
-    MinHash signature stage over the corpus (this sub-plan — the SAME
-    ``minhash_signature_rows``-via-``spread`` path the monitor's
-    ``_signatures`` runs per batch, at the monitor's defaults) + the
-    banded state-probe/verify joins + three sink invocations' txlog
-    fixed cost. The signature stage is the data-proportional part; if a
-    flagged number or a scale derivative moves, the artifact now shows
-    whether signatures grew (data/host) or the fixed cost did
-    (plan/commit regression)."""
-    from sf_epa_data_ingestion_spark.operators.dedup import minhash_signature_rows
-    from sf_epa_data_ingestion_spark.partitioning import spread
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return minhash_signature_rows(
-        spread(docs.filter(F.col("text").isNotNull()), F.col("doc_id")),
-        "text",
-        "doc_id",
-        64,
-        8,
-    )
-
-
 ORACLE_NEARDUP_STREAM_REPLAY = f"""
 WITH docs AS (
   SELECT doc_id, md5(text) AS h FROM documents WHERE text IS NOT NULL
@@ -2494,23 +2469,6 @@ def q_semdedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.read()
 
 
-def q_semdedup_replay_assign_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only stage probe (NOT a registry row): the ASSIGN half of
-    q_semdedup_stream_replay — frozen-model load + planted-union corpus
-    build + encode_with_ccos over the full corpus, with none of the
-    state probe / pair scoring / txlog commits. Timed separately by
-    bench.py so the row's three-round upward drift (3.56 -> 3.83 ->
-    4.30 s) decomposes into assign vs probe+pairs+commit (r14 VERDICT
-    next-round #3, the dedup_clusters recipe)."""
-    from sf_epa_data_ingestion_spark.streaming.semdedup import _encode_with_ccos
-
-    _index, cents, _meta = similarity.load_ivf_index(
-        spark, _semdedup_index_dir(spark, sf_dir)
-    )
-    corpus = _semdedup_corpus(spark, sf_dir)
-    return _encode_with_ccos(corpus, cents)
-
-
 # Corpus construction mirrors ORACLE_EMBEDDING_NEAR_DUP (same planted
 # union); assignment + centroids join from the corpus-hash-guarded
 # fixtures; unit vectors re-derive in SQL exactly like ORACLE_ANN_IVF.
@@ -2669,35 +2627,6 @@ WITH w AS (
 )
 SELECT MIN(doc_id) AS doc_id, text_hash FROM kept GROUP BY text_hash
 """
-
-
-def q_training_ingest_gate_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only stage probe (NOT a registry row): the GATE half of
-    q_training_ingest_replay — C4 keep expression + normalized-text md5
-    digest + pre-trained LR score semi-join over the FULL corpus, with
-    none of the window dedup / cross-batch anti-join / txlog commits /
-    replay no-op probe. The two real micro-batches together gate ~1.2
-    corpus passes (halves + planted copies), so this probe bounds the
-    per-row compute share of the replay's 3.5 s; the remainder is
-    micro-batch fixed cost (state reads, two commits, the replayed
-    batch's txn probe). Same gate chain as streaming/ingest.write_batch,
-    pinned by test_training_gate_stage_probe_matches_appender_gate."""
-    from sf_epa_data_ingestion_spark.functions.refhash import QLR_ONE
-    from sf_epa_data_ingestion_spark.operators.cleaning import c4_keep_expr
-    from sf_epa_data_ingestion_spark.operators.dedup import normalized_text
-    from sf_epa_data_ingestion_spark.operators.quality_model import score_docs_lr
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    weights, bias = _qlr_model(spark, sf_dir)
-    kept = docs.filter(c4_keep_expr("text")).withColumn(
-        "text_hash", F.md5(normalized_text(F.col("text")))
-    )
-    scores = score_docs_lr(kept, weights, bias, "text", "doc_id").filter(
-        F.col("score_fp") >= F.lit(QLR_ONE // 2)
-    )
-    return kept.join(
-        scores.select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2985,17 +2914,6 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cleaning.dedup_lines(d, "doc_id", "text", max_freq=900, delimiter=" ")
 
 
-def q_line_dedup_banned_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only stage probe (NOT a registry row): the banned-set half
-    of q_line_dedup — explode + map-side-combined groupBy on the token
-    value. Timed separately by bench.py so the sf1 derivative (5.11x at
-    r14, the sweep's worst row) decomposes into banned-set vs
-    rewrite+reassembly instead of one opaque number (r14 VERDICT
-    next-round #2, the dedup_clusters recipe)."""
-    d = _t(spark, sf_dir, "documents")
-    return cleaning.banned_lines(d, "text", max_freq=900, delimiter=" ")
-
-
 ORACLE_LINE_DEDUP = """
 WITH lines AS (
   SELECT doc_id,
@@ -3130,7 +3048,12 @@ def _materialized_dir(sf_dir: str, table, tag: str, build) -> str:
         tmp = f"{root}.build_{os.getpid()}"
         shutil.rmtree(tmp, ignore_errors=True)
         build(tmp)
-        shutil.rmtree(root, ignore_errors=True)
+        if os.path.exists(os.path.join(root, "_meta.json")):
+            # lost a build race: another process published the same
+            # layout meanwhile and may be serving from it
+            shutil.rmtree(tmp, ignore_errors=True)
+            return root
+        shutil.rmtree(root, ignore_errors=True)  # a partial layout
         try:
             os.rename(tmp, root)
         except OSError:
@@ -4731,19 +4654,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.resolve_duplicates(d, pairs).select(
         "doc_id", "component", "is_canonical"
     )
-
-
-def q_dedup_clusters_pairs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a registry row: bench-time decomposition probe (r12 VERDICT
-    next-round #3). dedup_clusters = PPJoin candidate generation (this
-    sub-plan — identical to the one feeding resolve_duplicates) + the
-    resolve stage. bench.py times this probe right next to the full row
-    so a driver-vs-builder discrepancy shows WHICH stage absorbed the
-    time (SCALE.md's r12-close decomposition said the floor is the
-    candidate join; this measures it under the same host conditions as
-    the flagged number instead of arguing from a quiet box)."""
-    d = _t(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(d, k=12, threshold=0.30).select("id_a", "id_b")
 
 
 ORACLE_DEDUP_CLUSTERS = r"""

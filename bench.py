@@ -16,76 +16,38 @@ headline total this way), so stdout carries just the summary.
 Each query is forced end-to-end with the ``noop`` sink so the full physical
 plan executes (a bare ``count()`` would let Catalyst prune projections and
 under-report the work).
+
+Every row is timed over ``K`` cold runs (``queries`` holds the min,
+``queries_median`` the median), then run once more under the span
+wrappers of ``perfbench/tracing.py``. The session writes its Spark event
+log to a private temp dir, parsed once after ``spark.stop()``; each
+row's ``breakdown`` splits that traced run into driver time (wall time
+no Spark job covers), jobs, task CPU, job seconds per library layer
+(``row``: jobs issued outside any library span, e.g. the noop sink
+forcing a lazy plan) and index builds. ``tools/probe_query.py`` and
+``tools/scale_check.py`` time their rows with the same ``time_rows``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+PERFBENCH = os.path.join(REPO, "perfbench")
+sys.path[:0] = [REPO, PERFBENCH]
 
 import __spark_entry__ as entrymod  # noqa: E402
+import tracing  # noqa: E402
 from sf_epa_data_ingestion_spark.session import get_spark  # noqa: E402
 
-#: Bench-only stage probes (none are registry rows): rows whose single
-#: wall-clock number has previously needed adjudication get their named
-#: sub-plans timed right next to the full measurement, so a flagged
-#: number or a scale derivative decomposes on the spot instead of
-#: starting a round of driver-vs-builder forensics.
-STAGE_PROBES: dict[str, list] = {
-    # PPJoin candidate generation vs union-find resolve (r12 #3)
-    "dedup_clusters": [("pairs_stage", entrymod.q_dedup_clusters_pairs_stage)],
-    # banned-set build vs rewrite+reassembly (r14 #2: sf1 5.11x)
-    "line_dedup": [("banned_stage", entrymod.q_line_dedup_banned_stage)],
-    # frozen-model assign vs state-probe+pairs+txlog commits (r14 #3)
-    "semdedup_stream_replay": [
-        ("assign_stage", entrymod.q_semdedup_replay_assign_stage)
-    ],
-    # per-leg serving cost vs union overhead (r14 #5: the ~0.8 s chase)
-    "batch_search_suite": [
-        ("bm25_leg", entrymod.q_search_bm25_batch),
-        ("hybrid_leg", entrymod.q_search_hybrid_batch),
-    ],
-    # Arrow signature stage vs banded probe/verify + txlog fixed cost
-    # (r15: the last undecomposed >5 s sf1 heavy). ngram_jaccard needs
-    # no probe of its own: dedup_clusters' pairs_stage IS
-    # ngram_jaccard_pairs(k=12, threshold=0.30) — the same plan minus a
-    # projection — so its decomposition already rides every artifact
-    # once, without paying the ~4 s probe twice.
-    "neardup_stream_replay": [
-        ("sig_stage", entrymod.q_neardup_replay_sig_stage)
-    ],
-    # full-corpus gate pass (C4 + digest + LR semi-join) vs window dedup
-    # + anti-join + txlog commits + replay no-op probe (r15: the last
-    # undecomposed replay row above 3 s)
-    "training_ingest_replay": [
-        ("gate_stage", entrymod.q_training_ingest_gate_stage)
-    ],
-}
-
-
-#: Rows whose sf0.1 wall-clock the stage probes show to be mostly
-#: per-micro-batch / per-serving-call DRIVER fixed cost rather than
-#: task compute — echoed in the stdout summary so a core-scaling sweep
-#: at sf0.1 can tell "knob ignored" apart from "nothing here scales
-#: with cores at this feed size" (r15 VERDICT next-round #2).
-FIXED_COST_BOUND_ROWS = sorted(
-    [
-        "semdedup_stream_replay",
-        "neardup_stream_replay",
-        "training_ingest_replay",
-        "running_user_stats_replay",
-        "late_data_replay",
-        "dedup_stream_replay",
-        "profile_stream_replay",
-        "search_bm25_wand_tx",
-        "search_bm25_wand_tx_fresh",
-        "search_hybrid_ann_tx",
-    ]
-)
+#: cold runs per row; the traced run comes on top
+K = 3
 
 
 #: Deep-quiet thresholds for the opt-in cooldown wait (r15): the
@@ -116,6 +78,118 @@ def _loadavg1() -> float | None:
     return None if la is None else la[0]
 
 
+def _run_cold(spark, fn, sf_dir) -> tuple[float, float]:
+    """Force one row through the noop sink; returns its (start, end)
+    epoch window, the clock the event log uses."""
+    t0 = time.time()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    t1 = time.time()
+    # Isolate queries: drop persisted intermediates (several operators
+    # persist() shared subtrees) so every timing is against a cold
+    # cache and the heap doesn't accumulate a suite's worth of blocks.
+    spark.catalog.clearCache()
+    # clearCache() only covers SQL-cached plans; localCheckpoint()
+    # blocks (the iterative ops: connected_components, ivf k-means)
+    # are plain persisted RDDs that survive it and pile up across a
+    # suite — unpersist whatever is still materialized.
+    try:
+        jsc = spark.sparkContext._jsc
+        for rdd_id in list(jsc.getPersistentRDDs().keySet().toArray()):
+            jsc.sc().unpersistRDD(int(str(rdd_id)), False)
+    except Exception:
+        pass  # diagnostics-only hygiene; never fail the bench over it
+    return t0, t1
+
+
+def _breakdown(tracer, untraced: list[float], window) -> dict:
+    """Where the traced run's wall time went, from the parsed event log."""
+    w0, w1 = window
+    jobs = [j for j in tracer.events.jobs.values() if w0 <= j["t0"] <= w1]
+    layers, own_s, _ = tracing.attribute(jobs, {s.sid: s for s in tracer.spans})
+    req = tracer.per_window([window], "row")
+    builds = [
+        s for s in tracer.spans
+        if s.layer == "index" and s.t1 is not None and w0 <= s.t0 and s.t1 <= w1
+    ]
+    return {
+        "traced_s": round(w1 - w0, 3),
+        "trace_ratio": round((w1 - w0) / statistics.median(untraced), 3),
+        "driver_s": round(req["row.driver_ms"] / 1000.0, 3),
+        "jobs": req["row.jobs"],
+        "task_cpu_s": round(req["row.task_cpu_ms"] / 1000.0, 3),
+        "job_s": {
+            **{k: round(v["job_s"], 3) for k, v in sorted(layers.items())},
+            "row": round(own_s, 3),
+        },
+        "index_builds": len(builds),
+        "index_build_s": round(sum(s.dur for s in builds), 3),
+    }
+
+
+def time_rows(plan, runs: int = K, app_name: str = "bench") -> tuple[dict, str]:
+    """Time each ``(key, fn, sf_dir)`` of ``plan`` on one session: ``runs``
+    cold runs, then one traced run. Returns ``({key: {"runs", "min",
+    "median", "breakdown"}}, master)``."""
+    log_dir = tempfile.mkdtemp(prefix="bench-events-")
+    # Python workers import the library and the span wrappers that UDF
+    # bodies may carry, as perfbench/run.py sets it
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [REPO, PERFBENCH] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    )
+    try:
+        spark = get_spark(
+            app_name=app_name,
+            extra_conf={
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.dir": "file://" + log_dir,
+                "spark.eventLog.compress": "false",
+                "spark.eventLog.rolling.enabled": "false",
+            },
+        )
+        spark.sparkContext.setLogLevel("ERROR")
+        master = spark.sparkContext.master
+        warm_sf = plan[0][2]
+        # Warm the JVM + parquet footers once so per-query numbers measure
+        # the queries, not session startup ...
+        entrymod.q_filter_project(spark, warm_sf).write.format("noop").mode("overwrite").save()
+        # ... and the machinery the scan warmup doesn't touch: the Arrow
+        # mapInPandas/pandas_udf path and the shuffle+window codepaths get
+        # their JIT/codegen warmup here instead of inside the first heavy
+        # query's measurement.
+        entrymod.q_multimodal_meta(spark, warm_sf).write.format("noop").mode("overwrite").save()
+        entrymod.q_window_dedup_latest(spark, warm_sf).write.format("noop").mode("overwrite").save()
+        spark.catalog.clearCache()
+
+        tracer = tracing.Tracer(spark)
+        measured = {}
+        for key, fn, sf_dir in plan:
+            untraced = [t1 - t0 for t0, t1 in (_run_cold(spark, fn, sf_dir) for _ in range(runs))]
+            tracer.install(entrymod)
+            try:
+                window = _run_cold(spark, fn, sf_dir)
+            finally:
+                tracer.uninstall()
+            measured[key] = (untraced, window)
+            print(f"  {key}: {min(untraced):.3f}s", file=sys.stderr, flush=True)
+        spark.stop()  # flushes the event log
+
+        windows = [w for _, w in measured.values()]
+        tracer.window = (min(w[0] for w in windows), max(w[1] for w in windows))
+        tracer.summarize(log_dir, tracer.window[1] - tracer.window[0])
+        rows = {
+            key: {
+                "runs": [round(t, 3) for t in untraced],
+                "min": round(min(untraced), 3),
+                "median": round(statistics.median(untraced), 3),
+                "breakdown": _breakdown(tracer, untraced, window),
+            }
+            for key, (untraced, window) in measured.items()
+        }
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+    return rows, master
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
@@ -126,8 +200,8 @@ def main() -> None:
     # IS honored (session.py builds master=local[$SPARK_GRAFT_CPUS]),
     # but nothing in stdout said so. `cpus`/`master` make the knob's
     # effect legible; `fixed_cost_bound_rows` below names the rows whose
-    # sf0.1 cost is driver-side micro-batch/serving fixed cost, which an
-    # 8-vs-32 ratio near 1 at this scale does NOT contradict.
+    # traced run is mostly driver time, which an 8-vs-32 ratio near 1
+    # does NOT contradict.
     cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     # Quiet-box gate (r13 VERDICT next-round #4): two same-tree sf1 runs
@@ -227,187 +301,27 @@ def main() -> None:
         )
         sys.exit(2)
 
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
     qs = entrymod.queries()
-    timings: dict[str, float] = {}
-    noise: dict[str, dict] = {}
-    decomposition: dict | None = None
-    stage_decompositions: dict[str, dict] = {}
-
-    # Per-query best-ever history (committed, min across past local runs
-    # and driver rounds at sf0.1). A measurement far above a query's
-    # best-ever is a host-noise suspect, not a regression — round 3
-    # recorded minhash_lsh at 8.2s (best-ever 2.4s) purely because all
-    # three of its cold runs landed inside a CPU-steal burst.
-    hist: dict[str, float] = {}
-    hist_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "tools", "bench_history.json")
-    if sf == 0.1 and os.path.exists(hist_path):
-        try:
-            with open(hist_path) as f:
-                hist = json.load(f).get("queries", {})
-        except (OSError, ValueError):
-            hist = {}
-
-    # Warm the JVM + parquet footers once so per-query numbers measure the
-    # queries, not session startup.
-    entrymod.q_filter_project(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # ... and the machinery the scan warmup doesn't touch: the Arrow
-    # mapInPandas/pandas_udf path and the shuffle+window codepaths get
-    # their JIT/codegen warmup here instead of inside the first heavy
-    # query's measurement (the rotated r6 order put dedup_clusters near
-    # the front, where it paid ~2s of session warmup).
-    entrymod.q_multimodal_meta(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    entrymod.q_window_dedup_latest(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-
-    # 1-minute /proc/loadavg per run: the box shows bursty external CPU
-    # steal, and a flagged bench number without the host-load context
-    # has cost three rounds of driver-vs-builder argument over
-    # dedup_clusters (r12 VERDICT next-round #3) — record the evidence
-    # at measurement time instead.
-    loadavg = _loadavg1
-
-    run_loads: dict[str, list] = {}
-
-    def time_once(fn, track: str | None = None) -> float:
-        la0 = loadavg()
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        if track is not None:
-            run_loads.setdefault(track, []).append(
-                {"sec": round(elapsed, 3), "load_before": la0,
-                 "load_after": loadavg()}
-            )
-        # Isolate queries: drop persisted intermediates (several operators
-        # persist() shared subtrees) so every timing is against a cold
-        # cache and the heap doesn't accumulate a suite's worth of blocks.
-        spark.catalog.clearCache()
-        # clearCache() only covers SQL-cached plans; localCheckpoint()
-        # blocks (the iterative ops: connected_components, ivf k-means)
-        # are plain persisted RDDs that survive it and pile up across a
-        # suite — unpersist whatever is still materialized.
-        try:
-            jsc = spark.sparkContext._jsc
-            for rdd_id in list(jsc.getPersistentRDDs().keySet().toArray()):
-                jsc.sc().unpersistRDD(int(str(rdd_id)), False)
-        except Exception:
-            pass  # diagnostics-only hygiene; never fail the bench over it
-        return elapsed
-
-    for name, fn in qs.items():
-        best = hist.get(name)
-        t = time_once(fn, track=name)
-        all_runs = [t]
-        # The box shows bursty external load (host-level CPU steal: the
-        # same query measures 4s on a quiet machine and 40s during a
-        # burst). Re-run cold and keep the min while the measurement is
-        # slow in absolute terms (>2s) and, when history exists, still
-        # >1.5x the query's best-ever — up to 4 runs for a history-flagged
-        # outlier so one sustained burst can't fake a regression. Stop
-        # early once a re-run stops improving >20% AND the number is back
-        # within 1.5x of best-ever (or there is no history to compare).
-        runs = 1
-        if best is None:
-            # no history: re-run slow queries up to 3 total, stop when a
-            # re-run stops improving >20%
-            while t > 2.0 and runs < 3:
-                t2 = time_once(fn, track=name)
-                all_runs.append(t2)
-                runs += 1
-                improved = t2 < t * 0.8
-                t = min(t, t2)
-                if not improved:
-                    break
-        else:
-            # history-backed: a measurement >1.5x best-ever is suspect.
-            # Expensive queries (>2s) get up to 3 extra cold runs so one
-            # sustained burst can't fake a regression; cheap flagged ones
-            # get min-of-3 (r11 VERDICT next-round #4: ann_ivf and
-            # ann_bruteforce were graded from TWO runs inside one burst —
-            # a third cold run is cheap insurance exactly where the
-            # number is about to be flagged).
-            # retry trigger at 1.3x (r12): this round dedup_clusters
-            # measured 6.93 s against a 4.67 s best-ever — 1.48x, just
-            # under the old 1.5x trigger, so the burst-inflated number
-            # shipped with zero re-runs. 1.3x catches that band; on a
-            # quiet box it fires rarely and costs nothing.
-            while t > max(0.3, 1.3 * best) and runs < (4 if t > 2.0 else 3):
-                t2 = time_once(fn, track=name)
-                all_runs.append(t2)
-                runs += 1
-                t = min(t, t2)
-        timings[name] = round(t, 3)
-        if best is not None and t > 1.5 * best:
-            # still hot after max_runs: flag it with a stability signal.
-            # A STABLE suspect (all runs within 20% of each other) looks
-            # like a real regression reproduced N times; an UNSTABLE one
-            # (wide spread across runs) looks like host-noise bursts.
-            # The flag reports evidence either way — it does not decide.
-            noise[name] = {"runs": runs, "best_ever": best,
-                           "ratio": round(t / best, 2),
-                           "stable": bool(runs > 1 and max(all_runs) <= min(all_runs) * 1.2),
-                           "loadavg": run_loads.get(name, [])}
-        probes = STAGE_PROBES.get(name)
-        if probes:
-            # Stage decomposition AT BENCH TIME, adjacent to the
-            # measurement it explains (the dedup_clusters recipe, r12
-            # VERDICT next-round #3; generalized r15 to the rows whose
-            # one wall-clock number left a scale derivative or a drift
-            # unexplained — r14 VERDICT next-round #2/#3/#5). Each named
-            # sub-plan is timed cold like the full row; the remainder is
-            # DERIVED (full - sum of stages) and can legitimately go
-            # negative where stages re-pay shared setup the full row
-            # pays once (e.g. both batch-search legs load the same
-            # persisted index) — the stage numbers, not the remainder,
-            # are the signal there.
-            stages = {}
-            for sname, sfn in probes:
-                stages[sname] = round(time_once(sfn, track=f"{name}:{sname}"), 3)
-            stage_decompositions[name] = {
-                "full_s": timings[name],
-                "stages_s": stages,
-                "remainder_derived_s": round(
-                    timings[name] - sum(stages.values()), 3
-                ),
-                "full_runs": run_loads.get(name, []),
-                "stage_runs": {
-                    s: run_loads.get(f"{name}:{s}", []) for s, _ in probes
-                },
-            }
-        if name == "dedup_clusters":
-            # legacy artifact key, kept so round-over-round diffs of the
-            # dedup_clusters decomposition stay one jq path
-            d = stage_decompositions[name]
-            decomposition = {
-                "full_s": d["full_s"],
-                "pairs_stage_s": d["stages_s"]["pairs_stage"],
-                "resolve_derived_s": round(
-                    max(0.0, d["full_s"] - d["stages_s"]["pairs_stage"]), 3
-                ),
-                "full_runs": d["full_runs"],
-                "pairs_stage_runs": d["stage_runs"]["pairs_stage"],
-            }
-        print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr, flush=True)
-
-    # Fold fresh minima back into the committed history so the noise
-    # detector tightens over time (only at the canonical sf).
-    if sf == 0.1 and hist:
-        new_best = {k: min(v, hist.get(k, v)) for k, v in
-                    ((n, t) for n, t in timings.items())}
-        if any(new_best.get(k) != hist.get(k) for k in new_best):
-            try:
-                with open(hist_path) as f:
-                    doc = json.load(f)
-                merged = {**hist, **new_best}
-                doc["queries"] = {k: merged[k] for k in sorted(merged)}
-                with open(hist_path, "w") as f:
-                    json.dump(doc, f, indent=1)
-            except OSError:
-                pass
+    rows, master = time_rows([(name, fn, sf_dir) for name, fn in qs.items()])
+    timings = {name: r["min"] for name, r in rows.items()}
+    breakdown = {name: r["breakdown"] for name, r in rows.items()}
+    job_s = sum(sum(b["job_s"].values()) for b in breakdown.values())
+    own_s = sum(b["job_s"]["row"] for b in breakdown.values())
+    trace = {
+        "attributed_share": round(1.0 - own_s / job_s, 3) if job_s else None,
+        "traced_over_untraced": round(
+            sum(b["traced_s"] for b in breakdown.values())
+            / sum(r["median"] for r in rows.values()),
+            3,
+        ),
+    }
+    # Rows whose traced run is mostly driver time (Catalyst planning,
+    # py4j, txlog commits, state checkpoints) rather than Spark jobs: a
+    # core-scaling sweep cannot move these, so an 8-vs-32-core ratio
+    # near 1 on them is expected, not evidence the core knob is ignored.
+    fixed_cost_bound = sorted(
+        name for name, b in breakdown.items() if b["driver_s"] > 0.5 * b["traced_s"]
+    )
 
     total = round(sum(timings.values()), 3)
     # Like-for-like anchor: the suite GROWS round over round (76 queries
@@ -418,8 +332,7 @@ def main() -> None:
     # list drifted by r8: 11 post-r3 queries leaked 21.9 s into the
     # "r3-comparable" number and masked a real 0.74x->0.60x improvement).
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_r03.json")) as f:
+        with open(os.path.join(REPO, "BENCH_r03.json")) as f:
             r3_queries = set(json.load(f)["parsed"]["queries"])
     except (OSError, KeyError, TypeError, json.JSONDecodeError):
         r3_queries = None
@@ -432,15 +345,17 @@ def main() -> None:
         "unit": "sec",
         "n_queries": len(timings),
         "cpus": cpus_env,
-        "master": spark.sparkContext.master,
+        "master": master,
         "r3_subset_total": subset,
         "r3_subset_n": len(r3_queries & set(timings)) if r3_queries else 0,
         "r3_missing_from_suite": r3_missing,
         "queries": timings,
+        "queries_median": {name: r["median"] for name, r in rows.items()},
+        "runs": {name: r["runs"] for name, r in rows.items()},
+        "breakdown": breakdown,
+        "trace": trace,
+        "fixed_cost_bound_rows_at_this_sf": fixed_cost_bound,
         "sf": sf,
-        "noise_suspects": noise,
-        "dedup_clusters_decomposition": decomposition,
-        "stage_decompositions": stage_decompositions,
         "quiet_box": {
             "loadavg_start": la_start,
             "bound": load_bound,
@@ -463,8 +378,7 @@ def main() -> None:
         tag = f"{int(sf)}" if sf == int(sf) else f"{sf:g}".replace(".", "_")
         out_name = f"BENCH_SF{tag}_LOCAL.json"
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               out_name), "w") as f:
+        with open(os.path.join(REPO, out_name), "w") as f:
             json.dump(full, f, indent=1)
     except OSError:
         pass
@@ -478,24 +392,12 @@ def main() -> None:
                 "unit": "sec",
                 "n_queries": len(timings),
                 "cpus": cpus_env,
-                "master": spark.sparkContext.master,
+                "master": master,
                 "r3_subset_total": subset,
                 "sf": sf,
                 "queries": slowest,
                 "queries_note": "5 slowest of n_queries; full map in BENCH_LOCAL.json",
-                # Rows whose sf0.1 wall-clock is dominated by per-micro-
-                # batch / per-serving-call driver fixed cost (Catalyst
-                # planning, txlog commits, state checkpoints — probe
-                # evidence in stage_decompositions: e.g. semdedup assign
-                # 0.96 s of 4.28, training_ingest gate 1.42 of 3.09,
-                # neardup sigs 0.56 of 4.09): an 8-vs-32-core ratio near
-                # 1 on THESE rows at sf0.1 is expected, not evidence the
-                # core knob is ignored. The CPU-bound rows
-                # (dedup_clusters pairs_stage, ngram_jaccard) show the
-                # core spread at sf1.
-                "fixed_cost_bound_rows_at_this_sf": FIXED_COST_BOUND_ROWS
-                if sf <= 0.1
-                else [],
+                "fixed_cost_bound_rows_at_this_sf": fixed_cost_bound,
             }
         ),
         flush=True,

@@ -185,8 +185,8 @@ class TxSearchSnapshot:
         term-set subtree and the query frame is scanned once.
 
         ``terms``: when the query texts are LITERALS the caller already
-        knows their normalized term set (the directory path's
-        ``_probe_terms`` shape) — passing it skips the tokenize+collect
+        knows their normalized term set (``search._literal_terms`` over
+        the literals) — passing it skips the tokenize+collect
         job this method otherwise runs over the query frame. Must equal
         ``_norm_tokens``' output for the same texts: a superset only
         widens the probe (safe), a subset would silently drop a term

@@ -96,3 +96,33 @@ def test_materialized_dir_reuses_only_under_the_same_code(tmp_path, monkeypatch)
     monkeypatch.setattr(entry, "_code_digest", lambda: "edited build code")
     b = entry._materialized_dir(str(sf), "documents", "probe_v1", build)
     assert b != a and len(builds) == 2
+
+
+def test_materialized_dir_keeps_the_layout_of_a_build_race_winner(tmp_path, monkeypatch):
+    """When another process publishes the same layout while this one
+    builds, the winner's layout stays (it may be serving from it) and
+    this process's own build dir is dropped."""
+    import glob
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "documents.parquet").write_bytes(b"corpus")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def build(tmp):
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "_meta.json"), "w") as f:
+            f.write("{}")
+        # the other process finishes first and publishes its layout
+        root = tmp.rsplit(".build_", 1)[0]
+        os.makedirs(root)
+        for name in ("_meta.json", "winner"):
+            with open(os.path.join(root, name), "w") as f:
+                f.write("{}")
+
+    root = entry._materialized_dir(str(sf), "documents", "race_v1", build)
+    assert os.path.exists(os.path.join(root, "winner"))
+    assert glob.glob(str(tmp_path / "*.build_*")) == []

@@ -106,61 +106,3 @@ def test_replay_pin_feed_size_boundary(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
-
-def test_neardup_sig_stage_probe_matches_monitor_signature_path(spark):
-    """r15 decomposition probe: q_neardup_replay_sig_stage must walk the
-    SAME signature path the monitor runs per batch — one (id, sig) row
-    per non-null-text document, 64 hashes. If the probe's plan drifts
-    from the monitor's (different shingle_k, a lost spread, a filter
-    change), its bench timing decomposes a stage the row no longer
-    runs."""
-    sf_dir = "/root/testdata/sf0.001"
-    sig = entry.q_neardup_replay_sig_stage(spark, sf_dir)
-    assert [f.name for f in sig.schema.fields] == ["id", "sig"]
-    docs = entry._t(spark, sf_dir, "documents")
-    n_docs = docs.filter(docs.text.isNotNull()).count()
-    rows = sig.collect()
-    assert len(rows) == n_docs
-    assert all(len(r.sig) == 64 for r in rows[:5])
-
-
-def test_training_gate_stage_probe_matches_appender_gate(spark):
-    """r15 decomposition probe: q_training_ingest_gate_stage must run
-    the SAME gate chain streaming/ingest.write_batch runs (C4 keep +
-    normalized-md5 digest + LR score semi-join) — keep-lowest-id per
-    digest over the probe's full-corpus output must equal the replay
-    row's admitted set exactly (batches partition the corpus by id
-    range and planted +1M/+2M copies can never be a digest's minimum,
-    so the derivations coincide). If the probe's gate drifts (threshold,
-    digest normalization, filter order), its bench timing decomposes a
-    stage the row no longer runs."""
-    from pyspark.sql import functions as F
-
-    sf_dir = "/root/testdata/sf0.001"
-    gate = entry.q_training_ingest_gate_stage(spark, sf_dir)
-    derived = (
-        gate.groupBy("text_hash")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id", "text_hash")
-    )
-    admitted = entry.q_training_ingest_replay(spark, sf_dir)
-    assert sorted(map(tuple, derived.collect())) == sorted(
-        map(tuple, admitted.collect())
-    )
-
-
-def test_stage_probes_decompose_registry_rows_only():
-    """Every STAGE_PROBES key must be a graded registry row (a probe
-    decomposing a retired/renamed row would silently measure nothing
-    the driver grades), and no probe callable may itself BE a registry
-    row (probes are bench-only sub-plans; grading one would double-count
-    its stage)."""
-    import bench
-
-    registry = entry.queries()
-    for row, probes in bench.STAGE_PROBES.items():
-        assert row in registry, f"STAGE_PROBES key {row!r} is not a registry row"
-        for _, fn in probes:
-            assert fn not in registry.values(), (
-                f"probe for {row!r} is itself a registry row"
-            )

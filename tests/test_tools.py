@@ -296,3 +296,43 @@ def test_bench_rejects_malformed_cooldown_secs_with_structured_error():
     assert "malformed SPARK_GRAFT_COOLDOWN_SECS" in doc["error"]
     assert doc["value"] == "soon"
     assert "Traceback" not in r.stderr
+
+
+def _checkout_files():
+    return {
+        os.path.join(d, f)
+        for d, _, files in os.walk(REPO)
+        if ".git" not in d.split(os.sep) and "__pycache__" not in d.split(os.sep)
+        for f in files
+    }
+
+
+def test_row_timer_breaks_rows_down_from_the_event_log(tmp_path):
+    """The bench row timer (through tools/probe_query.py) gives every row
+    K cold runs, their min and median, and the breakdown of one traced
+    run parsed from the session's event log; merge_upsert_tx's txlog
+    commits show up as storage.txlog job time. The event log and every
+    other file the run writes stay out of the checkout."""
+    import bench
+
+    before = _checkout_files()
+    env = {**os.environ, "TMPDIR": str(tmp_path),
+           "SPARK_GRAFT_CPUS": "2", "SPARK_DRIVER_MEMORY": "1g"}
+    r = subprocess.run(
+        [sys.executable, f"{REPO}/tools/probe_query.py", "filter_project",
+         "merge_upsert_tx", "--sf", "/root/testdata/sf0.001", "--n", str(bench.K)],
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=600,
+    )
+    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-4000:]
+    rows = json.loads(r.stdout.strip().splitlines()[-1])
+    assert sorted(rows) == ["filter_project", "merge_upsert_tx"]
+    for row in rows.values():
+        assert len(row["runs"]) == bench.K
+        assert row["min"] == min(row["runs"])
+        assert row["min"] <= row["median"] <= max(row["runs"])
+        b = row["breakdown"]
+        assert 0 <= b["driver_s"] <= b["traced_s"]
+        assert b["jobs"] > 0
+    assert rows["merge_upsert_tx"]["breakdown"]["job_s"]["storage.txlog"] > 0
+    assert _checkout_files() == before
+    assert not any(p.startswith("bench-events-") for p in os.listdir(tmp_path))

@@ -3,16 +3,17 @@
 
 Usage:  python tools/probe_query.py <query> [query ...] [--sf DIR] [--n N]
 
-Prints per-run wall-clock and the min/median per query.  This is the
-noise-diagnosis companion to bench.py: the host shows bursty CPU steal
-(the same query can measure 4s quiet / 40s during a burst), so a single
-bench number is meaningless without a steady-state floor to compare to.
+Prints the min/median per query and the breakdown of one more, traced
+run (driver time, jobs, task CPU, job seconds per library layer, index
+builds; see ``bench.time_rows``), then all of it as one JSON line.  The
+host shows bursty CPU steal (the same query can measure 4s quiet / 40s
+during a burst), so a single bench number is meaningless without a
+steady-state floor to compare to.
 """
 import argparse
-import statistics
-import sys
-import time
+import json
 import os
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -25,31 +26,20 @@ def main():
     ap.add_argument("--n", type=int, default=5)
     args = ap.parse_args()
 
-    import __spark_entry__ as entry
-    from sf_epa_data_ingestion_spark.session import get_spark
+    import bench
 
-    spark = get_spark(app_name="probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
-    # warm-up: JVM + parquet footers
-    entry.q_filter_project(spark, args.sf).write.format("noop").mode("overwrite").save()
-
-    for name in args.queries:
-        fn = qs[name]
-        times = []
-        for i in range(args.n):
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            el = time.perf_counter() - t0
-            spark.catalog.clearCache()
-            times.append(el)
-            print(f"  {name} run {i}: {el:.2f}s", flush=True)
+    qs = bench.entrymod.queries()
+    rows, _ = bench.time_rows(
+        [(name, qs[name], args.sf) for name in args.queries], runs=args.n, app_name="probe"
+    )
+    for name, r in rows.items():
         print(
-            f"{name}: min={min(times):.2f}s median={statistics.median(times):.2f}s "
-            f"max={max(times):.2f}s n={args.n}",
+            f"{name}: min={r['min']:.2f}s median={r['median']:.2f}s "
+            f"max={max(r['runs']):.2f}s n={args.n}",
             flush=True,
         )
-    spark.stop()
+        print(f"  breakdown: {json.dumps(r['breakdown'])}", flush=True)
+    print(json.dumps(rows))
 
 
 if __name__ == "__main__":

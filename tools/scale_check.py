@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Measure sf0.1 -> sf1 (10x) wall-time scaling for the heavy operators.
 
-Runs each query at both scales on the same session (min of N cold runs,
-cache cleared between runs — the box shows bursty CPU steal, see
-bench.py), prints a ratio table, and emits one JSON line. A subquadratic
+Runs each query at both scales on the same session (min of N cold runs
+plus one traced run, through ``bench.time_rows`` — the box shows bursty
+CPU steal, see bench.py), prints a ratio table, and emits one JSON line
+that also carries each scale's breakdown. A subquadratic
 operator should grow ~10x on 10x data on a fixed-core box; the SCALE.md
 gate is <15x (linear-ish: 10x data plus shuffle/log-factor headroom).
 
@@ -13,13 +14,11 @@ Requires .scaledata/sf1 (tools/make_sf1.py).
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import __spark_entry__ as entry  # noqa: E402
-from sf_epa_data_ingestion_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
 
 # every query that reads only documents/embeddings (the two tables
 # make_sf1.py scales) — the heavy five plus the r5 additions
@@ -56,26 +55,19 @@ def main() -> None:
     nums = [a for a in argv if a.isdigit()]
     runs = int(nums[0]) if nums else 3
     heavy = names or HEAVY
-    spark = get_spark(app_name="scale-check")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
-    # warm JVM + python workers
-    qs["simhash"](spark, "/root/testdata/sf0.01").write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
+    qs = bench.entrymod.queries()
+    scales = (("sf0.1", SF01), ("sf1", SF1))
+    timed, _ = bench.time_rows(
+        [(f"{name}@{tag}", qs[name], sf_dir) for name in heavy for tag, sf_dir in scales],
+        runs=runs,
+        app_name="scale-check",
+    )
 
     out = {}
     for name in heavy:
-        row = {}
-        for tag, sf_dir in (("sf0.1", SF01), ("sf1", SF1)):
-            best = None
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                t = time.perf_counter() - t0
-                best = t if best is None else min(best, t)
-                spark.catalog.clearCache()
-            row[tag] = round(best, 3)
+        row = {tag: timed[f"{name}@{tag}"]["min"] for tag, _ in scales}
         row["ratio"] = round(row["sf1"] / row["sf0.1"], 2)
+        row["breakdown"] = {tag: timed[f"{name}@{tag}"]["breakdown"] for tag, _ in scales}
         out[name] = row
         print(f"{name:16s} sf0.1={row['sf0.1']:7.3f}s sf1={row['sf1']:8.3f}s "
               f"ratio={row['ratio']:.2f}x", flush=True)
