@@ -11,7 +11,11 @@ kept fresh by the transactional host (``storage/txindex.py``) and its
 streaming maintainer in ``streaming/freshness.py`` (the TARGET_LAG
 analog). Queries never scan raw text: they broadcast the query
 terms against the postings table (partition-pruned by token at scale if the
-postings table is bucketed/partitioned by token).
+postings table is bucketed/partitioned by token). The served max-score
+path (``TxSearchSnapshot.bm25_maxscore``, ``bm25_search_many_maxscore``)
+is one ``spark.sql`` text whose inputs are DataFrame arguments
+(``_maxscore_topk``): one query-frame scan, one bounds scan and one
+postings scan, whose exchanges both passes read.
 
 Retrieval scoring is deterministic TF-IDF (ranking parity with the
 proprietary Cortex ranker is explicitly out of scope — SURVEY §7 hard-part
@@ -31,6 +35,12 @@ from ..partitioning import spread
 
 def _norm_tokens(col: Column) -> Column:
     return tokens(F.regexp_replace(F.lower(col), r"[^a-z0-9\s]", " "))
+
+
+#: ``_norm_tokens`` as Spark SQL over the column ``{}``: the same
+#: functions in the same order (pinned equal by test), for SQL texts
+#: that would otherwise need a DataFrame op to tokenize
+_NORM_TOKENS_SQL = r"filter(split(regexp_replace(lower({}), '[^a-z0-9\\s]', ' '), '\\s+'), t -> t != '')"
 
 
 def _literal_terms(*texts: str) -> list[str]:
@@ -316,6 +326,20 @@ def _tf_part(k1: float, b: float, avgdl: Column) -> Column:
     return (F.col("tf") * (k1 + 1.0)) / (
         F.col("tf") + F.lit(k1) * (1.0 - b + F.lit(b) * F.col("dl") / avgdl)
     )
+
+
+def _bm25_sql(n_docs: int, k1: float, b: float, avgdl: str) -> str:
+    """``_idf(n_docs) * _tf_part(k1, b, avgdl)`` as Spark SQL text over
+    columns df, tf and dl, operand for operand: the same double
+    expression tree, so a SQL plan scores bit-identically to the
+    DataFrame kernels. ``avgdl`` is SQL text too (a literal or a scalar
+    subquery)."""
+    idf = f"LN(1.0D + ((({float(n_docs)!r}D - df) + 0.5D) / (df + 0.5D)))"
+    part = (
+        f"((tf * {float(k1) + 1.0!r}D) / (tf + ({float(k1)!r}D"
+        f" * ((({float(b)!r}D * dl) / {avgdl}) + {1.0 - b!r}D))))"
+    )
+    return f"({idf} * {part})"
 
 
 def _doclen(doclens: DataFrame) -> DataFrame:
@@ -731,13 +755,20 @@ def bm25_search_many_maxscore(
        term is non-essential iff S_i < floor - eps: a document matching
        ONLY non-essential terms scores at most S_i, strictly below the
        floor, so at least k pass-1 candidates beat it — it cannot appear
-       in the top k. Candidate generation therefore scans ONLY essential
-       terms' posting lists (the high-df stopword-class lists are
-       typically non-essential — exactly the lists whose fan-out
+       in the top k. Candidate generation therefore keeps ONLY the docs
+       that match an essential term (the high-df stopword-class lists
+       are typically non-essential — exactly the lists whose fan-out
        dominates naive batch BM25); final scoring still uses every query
-       term, semi-joined to the candidate ids BEFORE the aggregate, so
-       the shuffled/aggregated row volume collapses with the candidate
-       set.
+       term of a kept doc.
+
+    The postings of ALL the query's terms are read and shuffled by
+    (query, doc) ONCE, and both passes read that exchange. A pass flags
+    each row by whether its term generates candidates (the top term in
+    pass 1, the essential terms in pass 2), a window keeps the docs
+    with at least one flagged row, and only those rows meet doclens and
+    the aggregate. So a query shuffles every matched posting once, and
+    what shrinks with the candidate set is the doclens join, the
+    aggregate and the ranking — not the shuffle.
 
     Every per-term statistic comes from ``bounds``, whose ``df`` is the
     same count as ``stats``' (``build_term_bounds`` counts it, and
@@ -746,14 +777,119 @@ def bm25_search_many_maxscore(
     one scalar subquery over ``doclens``; ``TxSearchSnapshot.bm25_maxscore``
     passes its per-snapshot avgdl as a literal instead.
 
-    At 100 TB this composes with the persisted layout: candidate
-    generation is a bucket-pruned scan of the essential terms' buckets,
-    and the batch's (query, term) set broadcasts onto the bounds scan —
-    the vocabulary-sized table is never broadcast."""
+    At 100 TB this composes with the persisted layout: the probe is a
+    bucket-pruned scan of the query terms' buckets, and the batch's
+    (query, term) set broadcasts onto the bounds scan — the
+    vocabulary-sized table is never broadcast."""
     return _maxscore_topk(
-        postings, bounds, queries, n_docs, doclens, _doc_avgdl(doclens).scalar(),
+        postings, bounds, queries, n_docs, doclens, None,
         k, k1, b, query_id, text_col, explain_out=_explain_out,
     )
+
+
+def _sql_quote(value: str, quote: str) -> str:
+    """``value`` quoted for the kernel's SQL text: a ``'`` string literal
+    (backslash and quote escaped, as PySpark's SQL formatter writes a str
+    argument) or a `` ` `` identifier (backtick doubled). Braces are
+    doubled so the ``spark.sql`` formatter passes them through."""
+    if quote == "'":
+        body = value.replace("\\", "\\\\").replace("'", "\\'")
+    else:
+        body = value.replace("`", "``")
+    return (quote + body + quote).replace("{", "{{").replace("}", "}}")
+
+
+def _essential_sql(terms: str) -> str:
+    """Whether a term of the ``terms`` frame is essential, against the
+    floors joined as ``t``."""
+    return f"t.__floor IS NULL OR {terms}.__suffix >= t.__floor - {MAXSCORE_EPS!r}D"
+
+
+def _maxscore_sql(
+    query_id: str, text: str, score: str, k: int, terms_in: str, tail: str
+) -> str:
+    """The max-score kernel's SQL text over the formatter's frames
+    ``{q}`` (the caller's queries, with columns ``query_id`` and
+    ``text``, quoted), ``{p}`` postings, ``{b}`` bounds and ``{d}``
+    doclens. ``score`` is the per-posting BM25 term, ``terms_in`` a
+    predicate on a token column (``IN (...)``, ``IS NOT NULL`` when the
+    batch has no literal term set) and ``tail`` the final SELECT over
+    the CTEs.
+
+    - ``ranked``: the raw query terms broadcast onto the bounds scan,
+      then DISTINCT and both windows over ONE ``query_id`` exchange
+      (the DISTRIBUTE BY).
+    - ``probe``: the postings of every ranked term, shuffled ONCE by
+      (query, doc); both passes read that exchange, so each posting is
+      scanned and shuffled once per query.
+    - a pass flags each probe row against a per-query threshold on the
+      term's suffix bound: the top term's suffix (the query's total
+      bound, reached by the top term alone) in pass 1, the floor minus
+      eps in pass 2. ``max(flag)`` over (query, doc) keeps the
+      candidate docs before doclens and the aggregate. The candidate
+      set itself is never broadcast, so no join can put a corpus-scale
+      candidate set on every executor."""
+
+    def scored(name: str, thresholds: str, flag: str) -> str:
+        return f"""{name}_cand AS (
+  SELECT query_id, id, tf, df FROM (
+    SELECT /*+ BROADCAST(t) */ p.query_id, p.id, p.tf, p.df,
+      max({flag}) OVER (PARTITION BY p.query_id, p.id) AS __cand
+    FROM probe p LEFT JOIN {thresholds} t ON p.query_id = t.query_id
+  ) WHERE __cand
+), {name} AS (
+  SELECT c.query_id, c.id, ROUND(SUM({score}), 6) AS score
+  FROM {name}_cand c JOIN doclen l ON c.id = l.id
+  GROUP BY c.query_id, c.id
+)"""
+
+    # Pass 1's flag picks the top term alone: every bound is > 0, so the
+    # suffix sums fall strictly with the order (each step drops a bound
+    # at least 1/n of the rest, far above float error), and only the
+    # top term's suffix equals the query's total.
+    # The top term is always essential, so pass 2's candidates hold pass
+    # 1's: its suffix S_1 is the sum of every term's bound, which is at
+    # least any doc's exact score (each term adds at most its bound),
+    # hence at least the floor (the k-th best exact score). Rounding the
+    # score to 6 places moves it by at most 5e-7 and the bound/score
+    # float-order difference is ~1e-14, both far below MAXSCORE_EPS, so
+    # S_1 >= floor - eps holds and no union with pass 1 is needed.
+    by_bound = "PARTITION BY query_id ORDER BY ub DESC, token ASC"
+    return f"""WITH qt AS (
+  SELECT query_id, token FROM (
+    SELECT {query_id} AS query_id,
+      explode({_NORM_TOKENS_SQL.format(text)}) AS token
+    FROM {{q}}
+  ) WHERE query_id IS NOT NULL AND token {terms_in}
+), ranked AS (
+  SELECT query_id, token, df, ub,
+    row_number() OVER ({by_bound}) AS __ord,
+    sum(ub) OVER ({by_bound}
+      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS __suffix
+  FROM (
+    SELECT DISTINCT query_id, token, df, ub FROM (
+      SELECT /*+ BROADCAST(t) */ t.query_id, b.token, b.df, b.ub
+      FROM {{b}} b JOIN qt t ON b.token = t.token
+      WHERE b.token {terms_in}
+      DISTRIBUTE BY query_id
+    )
+  )
+), doclen AS (
+  SELECT id, CAST(dl AS DOUBLE) AS dl FROM {{d}} WHERE dl > 0
+), probe AS (
+  SELECT /*+ BROADCAST(r) */ r.query_id, p.id, p.tf, r.df, r.__suffix
+  FROM {{p}} p JOIN ranked r ON p.token = r.token
+  DISTRIBUTE BY query_id, id
+), top AS (
+  SELECT query_id, __suffix AS __total FROM ranked WHERE __ord = 1
+), {scored("pass1", "top", "p.__suffix >= t.__total")}, floors AS (
+  SELECT query_id, score AS __floor FROM (
+    SELECT query_id, score,
+      row_number() OVER (PARTITION BY query_id ORDER BY score DESC, id ASC) AS __rn
+    FROM pass1
+  ) WHERE __rn = {int(k)}
+), {scored("pass2", "floors", _essential_sql("p"))}
+{tail}"""
 
 
 def _maxscore_topk(
@@ -762,7 +898,7 @@ def _maxscore_topk(
     queries: DataFrame,
     n_docs: int,
     doclens: DataFrame,
-    avgdl: Column,
+    avgdl: float | None,
     k: int,
     k1: float,
     b: float,
@@ -771,84 +907,44 @@ def _maxscore_topk(
     terms: list | None = None,
     explain_out: dict | None = None,
 ) -> DataFrame:
-    """``bm25_search_many_maxscore`` with avgdl given as a Column (a
-    scalar subquery, or a pinned snapshot's literal). Every consumer of
-    the term set reads it through ONE frame, ``ranked`` (query, token,
-    df, ub, __ord, __suffix). ``terms``: a literal superset of the
-    batch's tokens, the same set a ``postings_for_terms`` probe is cut
-    to; filtering the query terms by it too gives every branch of the
-    plan the same term-set subtree, so the query frame is scanned once."""
-    qterms = _query_terms(queries, query_id, text_col)
-    if terms is not None:
-        qterms = qterms.filter(F.col("token").isin(sorted(terms)))
-    lengths = (_doclen(doclens), avgdl)
-    # terms absent from the index carry no bound and no postings: they
-    # contribute nothing and prune nothing, exactly like bm25_search_many
-    w = Window.partitionBy(query_id)
-    ranked = (
-        bounds.select("token", "df", "ub")
-        .join(broadcast(qterms), "token")
-        .withColumn("__ord", F.row_number().over(w.orderBy(F.desc("ub"), F.asc("token"))))
-        .withColumn(
-            "__suffix",
-            F.sum("ub").over(
-                w.orderBy("__ord").rowsBetween(Window.currentRow, Window.unboundedFollowing)
-            ),
-        )
-    )
-    probe_terms = ranked.select(query_id, "token", "df")
+    """The one max-score kernel: ``bm25_search_many_maxscore`` as a
+    single ``spark.sql`` text (``_maxscore_sql``), analyzed once per
+    call, with the frames passed as arguments — the formatter's views
+    live only for the call. ``avgdl``: a pinned snapshot's literal, or
+    None for one scalar subquery over ``doclens``. ``terms``: a literal
+    superset of the batch's tokens, the same set a
+    ``postings_for_terms`` probe is cut to; it filters the query terms
+    and the bounds scan as escaped string literals (``_sql_quote``), so
+    no caller string enters the text unescaped. Literals, not named
+    parameters: binding costs py4j round trips per term, about 35-100
+    ms of build time for a 31-term batch."""
+    literals = [_sql_quote(t, "'") for t in sorted(set(terms or ()))]
+    terms_in = f"IN ({', '.join(literals)})" if literals else "IS NOT NULL"
+    if terms is not None and not literals:
+        terms_in = "IS NULL"  # an empty literal term set matches nothing
+    if avgdl is None:
+        avgdl_sql = "(SELECT CAST(sum(dl) AS DOUBLE) / CAST(count(1) AS DOUBLE) FROM {d} WHERE dl > 0)"
+    else:
+        avgdl_sql = f"{float(avgdl)!r}D"
+    score = _bm25_sql(n_docs, k1, b, avgdl_sql)
+    qid = _sql_quote(query_id, "`")
 
-    def exact_scores(cand):
-        """Exact per-(query, doc) BM25 over ALL query terms, probe rows
-        semi-joined to the candidate (query_id, id) pairs first. The
-        candidate join is deliberately NOT broadcast-hinted: for queries
-        with no prunable rare term the candidate set approaches the full
-        matched-doc set (corpus-scale — an executor-OOM hazard if forced
-        onto every executor); left to the planner/AQE it broadcasts when
-        small and shuffles when not, same as plain bm25_search_many. A
-        semi-join needs no distinct build side."""
-        probe = postings.join(broadcast(probe_terms), "token").join(
-            cand, [query_id, "id"], "left_semi"
-        )
-        return _bm25_scores(probe, lengths, n_docs, k1, b, query_id)
+    def run(tail: str) -> DataFrame:
+        text = _maxscore_sql(qid, _sql_quote(text_col, "`"), score, k, terms_in, tail)
+        return queries.sparkSession.sql(text, q=queries, p=postings, b=bounds, d=doclens)
 
-    def candidates(terms):
-        # (token, id) is unique in postings, and each (query, token) is
-        # one row of ranked: no duplicate pairs to remove
-        return postings.join(broadcast(terms), "token").select(query_id, "id")
-
-    # ---- pass 1: floor from the top-bound term's postings ----
-    top_term = ranked.filter(F.col("__ord") == 1).select(query_id, "token")
-    floors = (
-        _rank_within(exact_scores(candidates(top_term)), query_id, "score", "id", k, "__rn")
-        .filter(F.col("__rn") == k)
-        .select(query_id, F.col("score").alias("__floor"))
-    )
-
-    # ---- pass 2: essential-term candidates, exact top-k ----
-    # The top term is always essential, so these candidates already hold
-    # pass 1's: its suffix S_1 is the sum of every term's bound, which is
-    # at least any doc's exact score (each term adds at most its bound),
-    # hence at least the floor (the k-th best exact score). Rounding the
-    # score to 6 places moves it by at most 5e-7 and the bound/score
-    # float-order difference is ~1e-14, both far below MAXSCORE_EPS, so
-    # S_1 >= floor - eps holds and no union with pass 1 is needed.
-    essential = (
-        ranked.join(broadcast(floors), query_id, "left")
-        .filter(
-            F.col("__floor").isNull()
-            | (F.col("__suffix") >= F.col("__floor") - F.lit(MAXSCORE_EPS))
-        )
-        .select(query_id, "token")
-    )
     if explain_out is not None:
         # test/measurement hook: the probe-term frames, for pruning
-        # evidence (which (query, term) lists candidate generation scans)
-        explain_out["qterms"] = qterms
-        explain_out["essential"] = essential
-    return _rank_within(
-        exact_scores(candidates(essential)), query_id, "score", "id", k
-    ).drop("rank")
+        # evidence (which (query, term) lists generate candidates)
+        explain_out["qterms"] = run(f"SELECT DISTINCT query_id AS {qid}, token FROM qt")
+        explain_out["essential"] = run(f"""SELECT /*+ BROADCAST(t) */ r.query_id AS {qid}, r.token
+FROM ranked r LEFT JOIN floors t ON r.query_id = t.query_id
+WHERE {_essential_sql("r")}""")
+    return run(f"""SELECT query_id AS {qid}, id, score FROM (
+  SELECT query_id, id, score,
+    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, id ASC) AS rank
+  FROM pass2
+) WHERE rank <= {int(k)}""")
 
 
 def prune_high_df_terms(

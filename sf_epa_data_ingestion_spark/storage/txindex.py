@@ -111,7 +111,14 @@ class TxSearchSnapshot:
     """A consistent view of one manifest generation. Every accessor
     reads its piece AT the pinned version — refreshes and vacuums of
     NEWER generations never change what this snapshot computes (txlog
-    retains a removed file until vacuum drops the generation)."""
+    retains a removed file until vacuum drops the generation).
+
+    A pinned version never changes, so each piece's txlog snapshot
+    (files, schema, per-file stats) is resolved once per object, and
+    each unfiltered piece frame is built once: the queries of a session
+    share them. Both memos hold at most one entry per piece. Two threads
+    that miss at once both resolve the same pinned version and store
+    equal values, so the memos need no lock."""
 
     def __init__(self, spark, path: str, gen: int, meta: dict):
         self.spark = spark
@@ -121,22 +128,35 @@ class TxSearchSnapshot:
         self.n_buckets = int(meta["n_buckets"])
         self._versions = meta["versions"]
         self._t = _tables(spark, path)
+        self._resolved: dict[str, tuple] = {}
+        self._frames: dict[str, DataFrame] = {}
 
     def _read(self, piece: str, filters=None) -> DataFrame:
-        return self._t[piece].read(
-            version=int(self._versions[piece]), filters=filters
-        )
+        snapshot = self._resolved.get(piece)
+        if snapshot is None:
+            snapshot = self._resolved[piece] = self._t[piece]._snapshot_full(
+                int(self._versions[piece])
+            )
+        return self._t[piece].read_snapshot(snapshot, filters)
+
+    def _piece(self, piece: str) -> DataFrame:
+        """The whole piece without its bucket column, built once."""
+        df = self._frames.get(piece)
+        if df is None:
+            df = self._frames[piece] = self._read(piece).drop("__tb", "__ib")
+        return df
 
     def postings(self) -> DataFrame:
-        return self._read("postings").drop("__tb")
+        return self._piece("postings")
 
     def postings_for_terms(self, terms) -> DataFrame:
         """Bucket-pruned probe: the terms' bucket ids are computed
         driver-side with the xxhash64 mirror, so files whose committed
         __tb bounds exclude every probed bucket never enter the scan
-        (txlog file skipping); the residual token filter still applies.
-        Ranking-identical to the unpruned postings by construction:
-        every row of a probed term lives in its bucket."""
+        (txlog file skipping over the snapshot's resolved file list);
+        the residual token filter still applies. Ranking-identical to
+        the unpruned postings by construction: every row of a probed
+        term lives in its bucket."""
         from sf_epa_data_ingestion_spark.functions.refhash import xxh64_string
 
         buckets = sorted({xxh64_string(t) % self.n_buckets for t in terms})
@@ -147,16 +167,16 @@ class TxSearchSnapshot:
         )
 
     def doclens(self) -> DataFrame:
-        return self._read("doclens").drop("__ib")
+        return self._piece("doclens")
 
     def stats(self) -> DataFrame:
-        return self._read("stats")
+        return self._piece("stats")
 
     def bounds(self) -> DataFrame:
-        return self._read("bounds")
+        return self._piece("bounds")
 
     def frontier(self) -> DataFrame:
-        return self._read("frontier")
+        return self._piece("frontier")
 
     @functools.cached_property
     def avgdl(self) -> float | None:
@@ -174,15 +194,20 @@ class TxSearchSnapshot:
                       query_id: str = "query_id",
                       text_col: str = "query_text",
                       terms: list | None = None) -> DataFrame:
-        """WAND-pruned batch BM25 served ENTIRELY from this snapshot:
-        the postings probe is bucket-pruned through txlog file skipping
+        """WAND-pruned batch BM25 served ENTIRELY from this snapshot, as
+        one SQL plan (``search._maxscore_topk``, the kernel
+        ``bm25_search_many_maxscore`` runs too): the postings probe is
+        bucket-pruned through txlog file skipping
         (``postings_for_terms``), and every statistic (bounds, doclens,
         n_docs) reads at the pinned versions — so results are stable
-        under concurrent refreshes. avgdl is the snapshot's ``avgdl``, a literal in
-        the plan, so no query scans all of doclens for it; the query
-        frame's term set is filtered by the same literal ``terms`` as
-        the postings probe, so every branch of the plan reads the same
-        term-set subtree and the query frame is scanned once.
+        under concurrent refreshes. avgdl is the snapshot's ``avgdl``,
+        a literal in the plan, so no query scans all of doclens for it.
+        The query frame's terms are broadcast onto the bounds scan, and
+        both passes read the one ranked-terms exchange above it and the
+        one probe exchange of the postings, so the query frame, bounds
+        and postings are each scanned once; each pass flags its
+        candidate docs instead of joining a candidate set back. The
+        bounds and doclens frames are this snapshot's memoized ones.
 
         ``terms``: when the query texts are LITERALS the caller already
         knows their normalized term set (``search._literal_terms`` over
@@ -190,7 +215,8 @@ class TxSearchSnapshot:
         job this method otherwise runs over the query frame. Must equal
         ``_norm_tokens``' output for the same texts: a superset only
         widens the probe (safe), a subset would silently drop a term
-        from scoring."""
+        from scoring. The terms enter the SQL text as escaped string
+        literals only."""
         if terms is None:
             # the SAME Spark expression the scorer tokenizes with (one
             # tiny collect over the query frame) — a hand-rolled Python
@@ -209,7 +235,7 @@ class TxSearchSnapshot:
             queries,
             self.n_docs,
             self.doclens(),
-            F.lit(self.avgdl).cast("double"),
+            self.avgdl,
             k, k1, b, query_id, text_col, terms=terms,
         )
 

@@ -911,7 +911,16 @@ class TxTable:
         Files whose committed min/max prove no row can match are dropped
         from the scan before Spark ever lists them; the residual predicate
         is still applied, so pruning is transparent to results."""
-        _, files, schema, stats = self._snapshot_full(version)
+        return self.read_snapshot(self._snapshot_full(version), filters)
+
+    def read_snapshot(
+        self,
+        snapshot: tuple[int, list[str], StructType, dict[str, dict]],
+        filters: Sequence[tuple[str, str, object]] | None = None,
+    ) -> DataFrame:
+        """``read`` over a snapshot already resolved by ``_snapshot_full``,
+        for a reader that pins a version and reads it more than once."""
+        _, files, schema, stats = snapshot
         if filters:
             files = [f for f in files if _may_match(stats.get(f), filters)]
         if not files:

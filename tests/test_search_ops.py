@@ -574,3 +574,19 @@ def test_hybrid_ann_index_provider_matches_eager_index(spark):
             ).collect()
         )
         assert eager == via_provider and eager
+
+
+def test_sql_normalizer_matches_norm_tokens(spark):
+    """The max-score kernel tokenizes its queries in SQL with
+    ``_NORM_TOKENS_SQL``; it must split every text exactly like the
+    index's ``_norm_tokens``, or a term would silently miss its
+    postings."""
+    texts = [
+        "Hello, World!!  foo-bar\tBAZ", "", None, "  a  b ", "Ünïcode ß x_y 42",
+        "it's o'brien back\\slash {q}", "MIXED case\nnew line", "...", "a1b2 c3",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    got = df.select("i", F.expr(search._NORM_TOKENS_SQL.format("t")).alias("x")).collect()
+    want = df.select("i", search._norm_tokens(F.col("t")).alias("x")).collect()
+    assert sorted(got) == sorted(want)
+    assert dict(want)[0] == ["hello", "world", "foo", "bar", "baz"]

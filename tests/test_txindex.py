@@ -4,6 +4,8 @@ torn-refresh invisibility, concurrent-reader snapshot isolation,
 replay markers, change-proportional refresh, and parity with a live
 index build."""
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -598,6 +600,138 @@ def test_single_query_plan_reads_query_frame_once(spark, tmp_path):
     plan = _final_plan(served)
     assert plan.count("Scan ExistingRDD") == 1, plan
     assert "Exchange SinglePartition" not in plan, plan
+
+
+@pytest.fixture(scope="module")
+def served_index(spark, tmp_path_factory):
+    """One small tx index shared by the serving-plan and session-safety
+    tests below; each test pins its own snapshot of it."""
+    tx = str(tmp_path_factory.mktemp("served") / "tx")
+    materialize_tx_search_index(_docs(spark, n=80), tx, id_col="doc_id", text_col="text")
+    return tx
+
+
+_BOUNDS_SCHEMA = re.compile(
+    r"struct<token:string(,df:bigint)?(,max_part:double)?(,ub:double)?>"
+)
+
+
+def _served(snap, queries, terms=None, **kw):
+    spark = snap.spark
+    qdf = spark.createDataFrame(queries, "query_id long, query_text string")
+    if terms is None:
+        terms = search._literal_terms(*[t for _, t in queries])
+    return snap.bm25_maxscore(qdf, k=5, terms=terms, **kw)
+
+
+def _scored(df, qid="query_id"):
+    return sorted((r[qid], r["id"], r["score"]) for r in df.collect())
+
+
+def test_single_query_plan_scans_each_input_once_and_flags_candidates(spark, served_index):
+    """The served max-score plan of one query: the query frame is
+    scanned once, bounds once (both passes read one ranked-terms
+    exchange above it), postings once (both passes read one probe
+    exchange, and each flags its candidate docs with a window instead
+    of semi-joining a second postings scan back), and no
+    SinglePartition exchange."""
+    snap = load_tx_search_index(spark, served_index)
+    served = _served(snap, [(7, "spark table join")])
+    assert served.collect()
+    plan = _final_plan(served)
+    # a piece's scan is told by its read schema (the location string is
+    # truncated): postings lead with (token, id), bounds with token and
+    # only bounds columns after it
+    schemas = re.findall(r"FileScan parquet .*ReadSchema: (struct<[^>]*>)", plan)
+    assert plan.count("Scan ExistingRDD") == 1, plan
+    assert sum(s.startswith("struct<token:string,id:bigint") for s in schemas) == 1, plan
+    assert sum(bool(_BOUNDS_SCHEMA.fullmatch(s)) for s in schemas) == 1, plan
+    assert "LeftSemi" not in plan, plan
+    assert "Exchange SinglePartition" not in plan, plan
+
+
+def test_snapshot_resolves_each_piece_once(spark, served_index, monkeypatch):
+    """Three queries served from one pinned snapshot resolve each piece's
+    txlog snapshot once: the file list, schema and stats are memoized
+    on the snapshot, and the postings probe prunes from that list."""
+    import collections
+
+    calls = collections.Counter()
+    real = TxTable._snapshot_full
+
+    def counting(self, version=None):
+        calls[self.root.rsplit("/", 1)[-1]] += 1
+        return real(self, version)
+
+    monkeypatch.setattr(TxTable, "_snapshot_full", counting)
+    snap = load_tx_search_index(spark, served_index)
+    for q in [(1, "spark table"), (2, "hash join scan"), (3, "row filter")]:
+        assert _scored(_served(snap, [q]))
+    assert calls["postings"] == calls["bounds"] == calls["doclens"] == 1, calls
+    assert max(calls.values()) == 1, calls
+
+
+def test_concurrent_queries_on_one_snapshot_match_single_thread(spark, served_index):
+    """Two threads serve different queries on one pinned snapshot at
+    once; each gets exactly its single-thread answer."""
+    import threading
+
+    snap = load_tx_search_index(spark, served_index)
+    batches = {"a": [(1, "spark table join")], "b": [(1, "hash index scan row")]}
+    want = {name: _scored(_served(snap, qs)) for name, qs in batches.items()}
+    assert want["a"] and want["b"] and want["a"] != want["b"]
+    got, errors = {}, []
+    barrier = threading.Barrier(len(batches))
+
+    def serve(name):
+        try:
+            barrier.wait(timeout=60)
+            got[name] = _scored(_served(snap, batches[name]))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=serve, args=(n,)) for n in batches]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert got == want
+
+
+def test_served_call_leaves_no_temp_view_and_escapes_caller_terms(spark, served_index):
+    """The kernel's frames are SQL arguments that live only for the
+    call: no temporary view outlives a served query (nor the
+    ``_explain_out`` frames). Caller terms holding quotes, backslashes
+    and braces are escaped as SQL literals, so they neither break the
+    SQL nor change the rows; custom query id and text column names
+    still work."""
+    snap = load_tx_search_index(spark, served_index)
+    before = sorted(t.name for t in spark.catalog.listTables())
+    queries = [(1, "spark table join"), (2, "hash index scan")]
+    plain = _scored(_served(snap, queries))
+    assert plain
+    odd = search._literal_terms(*[t for _, t in queries]) + [
+        "o'brien", "back\\slash", "x') OR ('1'='1", "{q}",
+    ]
+    assert _scored(_served(snap, queries, terms=odd)) == plain
+
+    renamed = spark.createDataFrame(queries, "qid long, qtext string")
+    custom = snap.bm25_maxscore(
+        renamed, k=5, query_id="qid", text_col="qtext",
+        terms=search._literal_terms(*[t for _, t in queries]),
+    )
+    assert custom.columns == ["qid", "id", "score"]
+    assert _scored(custom, "qid") == plain
+
+    info: dict = {}
+    search.bm25_search_many_maxscore(
+        snap.postings(), snap.stats(), snap.bounds(), renamed, snap.n_docs,
+        snap.doclens(), k=5, query_id="qid", text_col="qtext", _explain_out=info,
+    )
+    assert info["essential"].count() <= info["qterms"].count()
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
 
 
 def test_bounds_df_equals_stats_df_after_build_and_refresh(spark, tmp_path):

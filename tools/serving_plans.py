@@ -12,28 +12,39 @@ Usage (from the root of a checkout):
 The corpus is ``perfbench/datagen.py`` at scale 1.0 with the benchmark's
 data seed, and the query set is ``search_serving``'s at seed 1, on
 ``local[4]``.  Writes ``<outdir>/single.txt`` and ``<outdir>/batch.txt``:
-the job count, the wall time, the ``Scan ExistingRDD`` (query-frame scan)
-and Exchange counts of the final adaptive plan, then that plan.  Each call runs
-once untimed first so the counted call is warm.  The input tables and the
-index live in a temporary directory that is removed at exit.
+the job count; the median over five warm calls of the time to build the
+DataFrame, to plan it and to run it (``build_ms``, ``plan_ms``,
+``exec_ms``); the query-frame (``Scan ExistingRDD``), postings and bounds
+scan counts and the Exchange counts of the final adaptive plan; then that
+plan.  Each case runs once untimed first so the timed calls are warm.  The
+input tables and the index live in a temporary directory that is removed
+at exit.
 """
 
 import os
+import re
 import shutil
+import statistics
 import sys
 import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
-SCALE, SEED, MASTER = 1.0, 1, "local[4]"
+SCALE, SEED, MASTER, RUNS = 1.0, 1, "local[4]", 5
+BOUNDS_SCHEMA = re.compile(r"struct<token:string(,df:bigint)?(,max_part:double)?(,ub:double)?>")
 
 
 def _count(plan: str) -> dict[str, int]:
-    """Node counts of the final adaptive plan."""
+    """Node counts of the final adaptive plan. A piece's scan is told by
+    its read schema: postings lead with (token, id), bounds with token
+    and only bounds columns after it."""
     nodes = [ln.lstrip(":+- ") for ln in plan.splitlines()]
+    schemas = re.findall(r"FileScan parquet .*ReadSchema: (struct<[^>]*>)", plan)
     return {
         "query_frame_scans": sum("Scan ExistingRDD" in n for n in nodes),
+        "postings_scans": sum(s.startswith("struct<token:string,id:bigint") for s in schemas),
+        "bounds_scans": sum(bool(BOUNDS_SCHEMA.fullmatch(s)) for s in schemas),
         "shuffle_exchanges": sum(n.startswith("Exchange ") for n in nodes),
         "broadcast_exchanges": sum(n.startswith("BroadcastExchange ") for n in nodes),
         "reused_exchanges": sum(n.startswith("ReusedExchange ") for n in nodes),
@@ -42,18 +53,31 @@ def _count(plan: str) -> dict[str, int]:
 
 
 def _measure(spark, make_df) -> tuple[dict, str]:
+    """Times ``RUNS`` warm calls in three phases and keeps each phase's
+    median: ``build_ms`` builds the DataFrame (no job runs), ``plan_ms``
+    forces its physical plan and ``exec_ms`` collects it. The jobs and
+    the plan are the last call's."""
     make_df().collect()  # warm-up
     sc = spark.sparkContext
-    group = f"serving_plans_{time.monotonic_ns()}"
-    sc.setJobGroup(group, group)
-    df = make_df()
-    t0 = time.perf_counter()
-    df.collect()
-    wall_ms = (time.perf_counter() - t0) * 1000.0
-    sc.setJobGroup("", "")
-    plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    times = {"build_ms": [], "plan_ms": [], "exec_ms": []}
+    for _ in range(RUNS):
+        group = f"serving_plans_{time.monotonic_ns()}"
+        t0 = time.perf_counter()
+        df = make_df()
+        t1 = time.perf_counter()
+        qe = df._jdf.queryExecution()
+        qe.executedPlan()
+        t2 = time.perf_counter()
+        sc.setJobGroup(group, group)
+        df.collect()
+        t3 = time.perf_counter()
+        sc.setJobGroup("", "")
+        for k, v in zip(times, (t1 - t0, t2 - t1, t3 - t2)):
+            times[k].append(v * 1000.0)
+    plan = qe.executedPlan().toString().split("== Initial Plan ==")[0]
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    return {"jobs": jobs, "wall_ms": round(wall_ms, 1), **_count(plan)}, plan
+    medians = {k: round(statistics.median(v), 1) for k, v in times.items()}
+    return {"jobs": jobs, **medians, **_count(plan)}, plan
 
 
 def main():
