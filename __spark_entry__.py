@@ -1818,24 +1818,26 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (tools/make_golden_pq.py). Recall@5 vs ann_bruteforce >= 0.9 at
     sf0.01 (pinned in tests/test_recall_gates.py).
 
-    Since r8 the query SERVES from a persisted ONE-CELL vector index:
-    flat PQ is exactly the n_centroids=1, n_probe=1 special case of the
-    IVF-PQ chain — same hash-ordered seed scan (n_seed = max(1, ksub) =
-    ksub), same integer-rank codebook Lloyd, same int64 ADC/refine —
-    so ivfpq_search over a materialize_vector_index(n_centroids=1)
-    layout is bit-identical to pq_topk (pinned by test; golden fixture
-    unchanged). Train once, serve many; the 'index' is the codes table
-    with a single cell partition (the full sweep IS flat PQ's contract —
-    cell pruning is what ann_ivfpq adds)."""
+    The query SERVES from a ONE-CELL generation of the generational
+    vector index (``_tx_vector_index_dir(n_centroids=1)``): flat PQ is
+    exactly the n_centroids=1, n_probe=1 special case of the IVF-PQ
+    chain — same hash-ordered seed scan (n_seed = max(1, ksub) = ksub),
+    same integer-rank codebook Lloyd, same int64 ADC/refine — so
+    ivfpq_search over that generation is bit-identical to pq_topk
+    (pinned by test; golden fixture unchanged). Train once, serve many;
+    the pinned snapshot's one cell is the whole codes table (the full
+    sweep IS flat PQ's contract — cell pruning is what ann_ivfpq
+    adds)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    index, coarse, cq, _meta = similarity.load_vector_index(
-        spark, _flat_pq_index_dir(spark, sf_dir)
+    vsnap = vectorindex.pin_vector_index(
+        spark, _tx_vector_index_dir(spark, sf_dir, n_centroids=1)
     )
     return similarity.ivfpq_search(
-        index, emb, queries, coarse, cq, k=5, dim=64, n_probe=1
+        None, emb, queries, vsnap.coarse, vsnap.cq, k=5, dim=64, n_probe=1,
+        index_for_cids=vsnap.index_for_cids,
     )
 
 
@@ -1873,16 +1875,14 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tools/make_golden_ivfpq.py). Recall@5 vs ann_bruteforce pinned in
     tests/test_recall_gates.py.
 
-    Since r8 the query SERVES from a persisted index (train once, serve
-    many); since r12 that index is the GENERATION-PINNED transactional
-    host (r11 VERDICT next-round #1): ``vectorindex.pin_vector_index``
-    resolves the generation + txlog version once, and the driver-side
-    probe's literal ``cid IN (...)`` becomes txlog file skipping at the
-    pinned version (VectorIndexSnapshot.index_for_cids) — same pruning
-    as the directory layout's PartitionFilters, plus snapshot isolation
-    under a concurrent maintainer/retrain. Generation 1 copies the
-    directory layout's rows under the same frozen model
-    (init_vector_index_from_layout), so serving is bit-identical and
+    The query SERVES from the GENERATION-PINNED vector index (train
+    once, serve many): ``vectorindex.pin_vector_index`` resolves the
+    generation + txlog version once, and the driver-side probe's literal
+    ``cid IN (...)`` becomes txlog file skipping at the pinned version
+    (VectorIndexSnapshot.index_for_cids), with snapshot isolation under
+    a concurrent maintainer/retrain. Generation 1 is trained and encoded
+    straight from the embeddings table, and training is a pure function
+    of the corpus, so serving is bit-identical to the in-query chain and
     the golden fixture is unchanged."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(
@@ -3014,6 +3014,12 @@ def _code_digest() -> str:
     return h.hexdigest()
 
 
+#: Age of ``_meta.json`` after which a superseded layout is reclaimed
+#: (txlog vacuum's default retention): a process still serving from it
+#: has had that long to finish.
+_LAYOUT_RETENTION_S = 3600.0
+
+
 def _materialized_dir(sf_dir: str, table, tag: str, build) -> str:
     """Build-or-reuse a PERSISTED index layout for a corpus table. The
     cache key is the table's content signature (paths + sizes + mtimes)
@@ -3022,14 +3028,22 @@ def _materialized_dir(sf_dir: str, table, tag: str, build) -> str:
     design, where the index is a maintained table (the streaming
     maintainers are the TARGET_LAG analog) and query-time plans READ it
     rather than re-deriving it per query. Build is atomic: ``build``
-    writes into a scratch dir (_meta.json last) which is renamed in."""
+    writes into a scratch dir (_meta.json last) which is renamed in.
+
+    The directory name is ``sg_<tag>_<source>_<key>``, where ``source``
+    digests the table paths alone. A build that publishes a new layout
+    reclaims the layouts it supersedes: same tag and same table paths,
+    another key, ``_meta.json`` older than ``_LAYOUT_RETENTION_S``. The
+    layouts of other table paths (another scale factor) stay."""
     import glob
     import hashlib
     import shutil
     import tempfile
+    import time
 
     tables = [table] if isinstance(table, str) else list(table)
     sig = hashlib.md5(f"{tag}:{_code_digest()}".encode())
+    source = hashlib.md5()
     for t in tables:
         p = os.path.join(sf_dir, f"{t}.parquet")
         parts = (
@@ -3038,12 +3052,14 @@ def _materialized_dir(sf_dir: str, table, tag: str, build) -> str:
             else [p]
         )
         sig.update(f":{os.path.realpath(p)}".encode())
+        source.update(f":{os.path.realpath(p)}".encode())
         for q in parts:
             st = os.stat(q)
             sig.update(f"{q}:{st.st_size}:{st.st_mtime_ns}".encode())
-    root = os.path.join(
-        tempfile.gettempdir(), f"sg_{tag}_{sig.hexdigest()[:16]}"
+    prefix = os.path.join(
+        tempfile.gettempdir(), f"sg_{tag}_{source.hexdigest()[:8]}_"
     )
+    root = prefix + sig.hexdigest()[:16]
     if not os.path.exists(os.path.join(root, "_meta.json")):
         tmp = f"{root}.build_{os.getpid()}"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -3060,49 +3076,43 @@ def _materialized_dir(sf_dir: str, table, tag: str, build) -> str:
             if not os.path.exists(os.path.join(root, "_meta.json")):
                 raise  # lost a build race AND the winner's index is absent
             shutil.rmtree(tmp, ignore_errors=True)
+            return root
+        # 16 key characters exactly: never a .build_ dir
+        for old in glob.glob(glob.escape(prefix) + "?" * 16):
+            try:
+                age = time.time() - os.stat(os.path.join(old, "_meta.json")).st_mtime
+            except OSError:
+                continue  # partial, or reclaimed by another process
+            if old != root and age >= _LAYOUT_RETENTION_S:
+                shutil.rmtree(old, ignore_errors=True)
     return root
 
 
-def _vector_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Persisted cid-partitioned IVF-PQ index + frozen model
-    (similarity.materialize_vector_index) over the embeddings table —
-    batch form of the streaming/vectorindex.py appender's table.
-    Training is a pure function of the (id, vector) set, so every graded consumer whose
-    corpus carries the same pairs (ann_ivfpq over embeddings;
-    search_hybrid_ann over documents⋈embeddings, a 1:1 rename) serves
-    bit-identically from this one layout."""
-    return _materialized_dir(
-        sf_dir,
-        "embeddings",
-        "vector_index_v1",
-        lambda tmp: similarity.materialize_vector_index(
-            _t(spark, sf_dir, "embeddings"), tmp, corpus_id="vec_id",
-            vec_col="embedding", dim=64,
-        ),
-    )
-
-
-def _tx_vector_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """GENERATIONAL host of the same frozen vector index (r11 VERDICT
-    next-round #1): generation 1 is built FROM the directory layout —
-    identical model, identical (id, cid, codes) rows, range-partitioned
-    on cid so txlog per-file bounds prune like the directory layout's
-    PartitionFilters — and graded consumers serve from
-    ``vectorindex.pin_vector_index`` (generation + txlog version pinned
-    once per query), so a concurrent ``vector_index_maintainer_gen`` or
-    ``retrain_vector_index_generation`` can never tear a read
-    mid-query. Bit-identical serving is structural (the rows are
-    copied), so the golden-fixture oracles are shared verbatim."""
+def _tx_vector_index_dir(
+    spark: SparkSession, sf_dir: str, n_centroids: int = 16
+) -> str:
+    """The generational IVF-PQ index over the embeddings table, the one
+    host of the (id, cid, codes) rows: generation 1 is trained and
+    encoded straight from the corpus
+    (``vectorindex.retrain_vector_index_generation``), and every vector
+    row serves from a ``vectorindex.pin_vector_index`` snapshot of it.
+    ``n_centroids=1`` is the one-cell index ann_pq serves. Training is a
+    pure function of the (id, vector) set, so the hybrid rows over
+    documents⋈embeddings (a 1:1 rename) serve bit-identically from the
+    same root."""
     import json
 
     def build(tmp):
-        vectorindex.init_vector_index_from_layout(
-            spark, tmp, _vector_index_dir(spark, sf_dir)
+        vectorindex.retrain_vector_index_generation(
+            spark, tmp, "vec-index", _t(spark, sf_dir, "embeddings"),
+            n_centroids=n_centroids,
         )
         with open(os.path.join(tmp, "_meta.json"), "w") as f:
-            json.dump({"host": "generational", "from": "vector_index_v1"}, f)
+            json.dump({"host": "generational", "n_centroids": n_centroids}, f)
 
-    return _materialized_dir(sf_dir, "embeddings", "tx_vector_index_v1", build)
+    return _materialized_dir(
+        sf_dir, "embeddings", f"tx_vector_index_c{n_centroids}", build
+    )
 
 
 def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -3115,22 +3125,6 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
         lambda tmp: similarity.materialize_ivf_index(
             _t(spark, sf_dir, "embeddings"), tmp, corpus_id="vec_id",
             vec_col="embedding", dim=64, n_centroids=16,
-        ),
-    )
-
-
-def _flat_pq_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Persisted FLAT-PQ codes table: materialize_vector_index with
-    n_centroids=1 — flat PQ is the one-cell special case of the IVF-PQ
-    chain (bit-parity with pq_topk pinned by test), so the graded ann_pq
-    serves from this layout with no separate flat-PQ machinery."""
-    return _materialized_dir(
-        sf_dir,
-        "embeddings",
-        "pq_index_v1",
-        lambda tmp: similarity.materialize_vector_index(
-            _t(spark, sf_dir, "embeddings"), tmp, corpus_id="vec_id",
-            vec_col="embedding", dim=64, n_centroids=1,
         ),
     )
 
@@ -3810,36 +3804,39 @@ def q_search_hybrid_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     is unreachable at any k — the one capability where the reference's
     managed service (epa_ingestion.py:844-854, lexical AND vector
     retrieval, fused) still beat the engine (r7 VERDICT next-round #1).
-    Here the semantic leg queries a PREBUILT (id, cid, codes) index with
-    a frozen train_ivfpq model — the serving shape of a maintained 100 TB
-    retrieval tier — and the fusion is RRF over the two rank lists, so
-    scores on incomparable scales need no normalization sweep. The ANN
+    Here the semantic leg queries a PINNED snapshot of the generational
+    (id, cid, codes) index with its frozen train_ivfpq model — the
+    serving shape of a maintained 100 TB retrieval tier — and the fusion
+    is RRF over the two rank lists, so scores on incomparable scales
+    need no normalization sweep. The ANN
     leg is deterministic end to end (the golden-fixture chain already
     proven for ann_ivfpq, external-query form), the lexical leg and the
     fusion are re-derived in SQL by the oracle. Semantic-only matches
     surfacing in top-k is pinned by tests/test_search_ops.py."""
     docs = _joined_docs(spark, sf_dir)
-    # BOTH legs serve from persisted layouts: the lexical leg
-    # bucket-prunes its literal term probe over a pinned snapshot of the
-    # joined corpus's transactional index (a separate index from the
-    # whole-documents one — df/idf are corpus-relative), and the ANN leg
-    # reads the SAME persisted vector index as ann_ivfpq: the joined
-    # corpus carries exactly the embeddings table's (id, vector) pairs
-    # (doc_id == vec_id, 1:1 join), and training is a pure function of
-    # those pairs — so a rename of the id column is the only delta, and
-    # the golden fixture (trained on the joined corpus) replays
-    # bit-for-bit. Train once, serve every retrieval query.
+    # BOTH legs serve from pinned snapshots: the lexical leg
+    # bucket-prunes its literal term probe over the joined corpus's
+    # transactional index (a separate index from the whole-documents one
+    # — df/idf are corpus-relative), and the ANN leg reads the SAME
+    # generational vector index as ann_ivfpq: the joined corpus carries
+    # exactly the embeddings table's (id, vector) pairs (doc_id ==
+    # vec_id, 1:1 join), and training is a pure function of those pairs
+    # — so a rename of the id column is the only delta, and the golden
+    # fixture (trained on the joined corpus) replays bit-for-bit. The
+    # ANN leg passes the pinned index as a FRAME (the frame-argument
+    # form of hybrid_search_ann; the _tx and _batch siblings pass the
+    # file-skipping ``index_for_cids`` provider instead).
     snap = txindex.load_tx_search_index(
         spark, _tx_joined_search_index_dir(spark, sf_dir)
     )
-    index, coarse, cq, _meta = similarity.load_vector_index(
-        spark, _vector_index_dir(spark, sf_dir)
+    vsnap = vectorindex.pin_vector_index(
+        spark, _tx_vector_index_dir(spark, sf_dir)
     )
-    index = index.withColumnRenamed("vec_id", "id")
+    index = vsnap.index().withColumnRenamed("vec_id", "id")
     qv = [1.0 if i % 7 == 0 else 0.25 for i in range(64)]
     return search.hybrid_search_ann(
         docs, snap.postings_for_terms(_probe_terms(SEARCH_QUERY)), snap.stats(),
-        SEARCH_QUERY, qv, index, coarse, cq, k=10, dim=64,
+        SEARCH_QUERY, qv, index, vsnap.coarse, vsnap.cq, k=10, dim=64,
     )
 
 
@@ -3914,8 +3911,10 @@ def q_search_hybrid_ann_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VectorIndexSnapshot.index_for_cids) — so a concurrent
     vector_index_maintainer_gen rewrite or generation cutover can never
     tear the hybrid mid-query (pinned bit-stable mid-vector-refresh in
-    tests/test_vector_index_stream.py). Shares ORACLE_SEARCH_HYBRID_ANN
-    verbatim — the host swap is hash-checked."""
+    tests/test_vector_index_stream.py). search_hybrid_ann serves the
+    same pinned host as a frame; this row passes the file-skipping
+    provider instead. Shares ORACLE_SEARCH_HYBRID_ANN verbatim, so the
+    two serving forms are hash-checked against each other."""
     docs = _joined_docs(spark, sf_dir)
     snap = txindex.load_tx_search_index(
         spark, _tx_joined_search_index_dir(spark, sf_dir)
@@ -3949,13 +3948,13 @@ def q_search_hybrid_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF-PQ semantic candidates — ``search_hybrid_ann``'s batch sibling,
     the serving shape for offline eval sets / query-log replays / RAG
     batch retrieval. One plan for the batch: broadcast term-set pruning
-    for the lexical legs, ONE ivfpq_search over the PERSISTED
-    cid-partitioned index for all semantic legs (the per-query probes
-    union into one literal cid IN (...) partition filter), RRF fusion
-    per query. Single-row-batch parity with the scalar form and batch
-    semantic-only reachability pinned in tests/test_search_ops.py."""
+    for the lexical legs, ONE ivfpq_search over a pinned snapshot of the
+    generational vector index for all semantic legs (the per-query
+    probes union into one cid IN (...) txlog file-skipping read), RRF
+    fusion per query. Single-row-batch parity with the scalar form and
+    batch semantic-only reachability pinned in tests/test_search_ops.py."""
     docs = _joined_docs(spark, sf_dir)
-    # both legs from persisted layouts; r11 (r10 VERDICT next-round #3
+    # both legs from pinned snapshots; r11 (r10 VERDICT next-round #3
     # named hybrid_search_ann_many explicitly): the lexical legs now
     # serve from the joined-corpus TX snapshot like the scalar _tx
     # sibling — manifest-pinned piece versions, the union of the three
@@ -5392,9 +5391,9 @@ def oracle_sql() -> dict[str, str]:
         "lexical_suite": ORACLE_LEXICAL_SUITE,
         "search_hybrid_ann": ORACLE_SEARCH_HYBRID_ANN,
         # same oracles on purpose: one logical retrieval query, two
-        # physical vector hosts (directory layout vs generational
-        # snapshot) — the generational host must reproduce the ranking
-        # bit-for-bit (the merge_upsert/merge_upsert_tx precedent)
+        # serving forms of one pinned vector host (the index frame vs
+        # the file-skipping probe provider) — both must reproduce the
+        # ranking bit-for-bit (the merge_upsert/merge_upsert_tx precedent)
         "search_hybrid_ann_tx": ORACLE_SEARCH_HYBRID_ANN,
         "search_hybrid_ann_batch": ORACLE_SEARCH_HYBRID_ANN_BATCH,
         "search_bm25_wand": ORACLE_SEARCH_BM25_WAND,

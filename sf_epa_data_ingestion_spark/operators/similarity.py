@@ -11,9 +11,9 @@ The ANN ladder, each tier fixing the previous one's scale gap:
   (16x4-bit codes = 8 B/vector), integer-exact end to end.
 - ``ivfpq_topk`` / ``train_ivfpq`` + ``encode_ivfpq`` + ``ivfpq_search``:
   the composed sublinear tier (FAISS ``IVF16,PQ16x4`` analog) with a
-  train/add/search split — the streaming vector-index appender applies
-  the frozen model to arriving vectors, and queries serve from the
-  prebuilt (id, cid, codes) table.
+  train/add/search split — the generational vector index
+  (streaming/vectorindex.py) applies the frozen model to arriving
+  vectors, and queries serve from its prebuilt (id, cid, codes) table.
 - ``embedding_near_dup_pairs``: corpus self-similarity above a cosine
   threshold (near-duplicate detection by embedding; banded production
   path, exact mode as test-only verifier).
@@ -646,12 +646,11 @@ def ivf_search(
 
 
 def _write_layout(path: str, encoded: DataFrame | None, n_centroids: int, meta: dict) -> None:
-    """The persisted layout both IVF tiers write: the encoded frame
-    directory-partitioned by cid under ``index/`` (the search's literal
-    probe predicate prunes to the probed cells' directories; a no-model
-    build writes none) plus the frozen model and params in
-    ``_meta.json``, written LAST so a present meta file implies a
-    complete index."""
+    """The persisted IVF layout: the encoded frame directory-partitioned
+    by cid under ``index/`` (the search's literal probe predicate prunes
+    to the probed cells' directories; a no-model build writes none) plus
+    the frozen model and params in ``_meta.json``, written LAST so a
+    present meta file implies a complete index."""
     import json
     import os
 
@@ -667,22 +666,21 @@ def _write_layout(path: str, encoded: DataFrame | None, n_centroids: int, meta: 
         json.dump(meta, f)
 
 
-#: Session-scoped memo of opened vector-index layouts
-#: (``_memo_layout``): a serving tier holds its frames open; reopening a
-#: parquet reader per query is ~90 ms of pure driver time.
+#: Session-scoped memo of opened IVF layouts (``_memo_layout``): a
+#: serving tier holds its frames open; reopening a parquet reader per
+#: query is ~90 ms of pure driver time.
 _VINDEX_CACHE: dict = {}
 
 
-def _memo_layout(cache: dict, spark, path: str, build):
-    """Session-scoped memo of an opened index layout in ``cache``: a
+def _memo_layout(spark, path: str, build):
+    """Session-scoped memo of an opened layout in ``_VINDEX_CACHE``: a
     serving tier holds its index frames open for the process lifetime
     instead of reopening parquet readers per query. Keyed by (Spark
     application, real path, _meta.json mtime_ns) so a rebuilt layout —
     tests rewrite them in place under tmp dirs — is reopened, never
     served stale. DataFrames are immutable plans, so sharing them across
-    calls in one session is safe. Bounded FIFO: a serving tier holds a
-    handful of layouts (per-corpus + tx generations), so test churn
-    through tmp-dir layouts can't grow it unbounded."""
+    calls in one session is safe. Bounded FIFO, so test churn through
+    tmp-dir layouts can't grow it unbounded."""
     import os
 
     key = (
@@ -690,36 +688,37 @@ def _memo_layout(cache: dict, spark, path: str, build):
         os.path.realpath(path),
         os.stat(os.path.join(path, "_meta.json")).st_mtime_ns,
     )
-    hit = cache.get(key)
+    hit = _VINDEX_CACHE.get(key)
     if hit is not None:
         return hit
     out = build()
-    if len(cache) >= 8:
-        cache.pop(next(iter(cache)))
-    cache[key] = out
+    if len(_VINDEX_CACHE) >= 8:
+        _VINDEX_CACHE.pop(next(iter(_VINDEX_CACHE)))
+    _VINDEX_CACHE[key] = out
     return out
 
 
-def _load_layout(spark, path: str, model_keys: tuple, empty_schema: str) -> tuple:
-    """Read a ``_write_layout`` layout: (index, *model, meta). A no-model
-    layout (empty/all-NULL corpus at build time) loads as an EMPTY index
-    frame of ``empty_schema`` and None model parts, so downstream
-    searches return empty results instead of dereferencing None. Opened
-    layouts are memoized per session (``_VINDEX_CACHE``)."""
+def _load_layout(spark, path: str) -> tuple:
+    """Read a ``_write_layout`` layout: (index, cents, meta). A no-model
+    layout (empty/all-NULL corpus at build time) loads as an EMPTY
+    (id, __u, cid) frame and None centroids, so downstream searches
+    return empty results instead of dereferencing None. Opened layouts
+    are memoized per session (``_memo_layout``)."""
     import json
     import os
 
     def build():
         with open(os.path.join(path, "_meta.json")) as f:
             meta = json.load(f)
-        model = [meta[key] for key in model_keys]
-        if model[0] is None:
-            index = spark.createDataFrame([], f"{meta['corpus_id']} long, {empty_schema}")
+        if meta["cents"] is None:
+            index = spark.createDataFrame(
+                [], f"{meta['corpus_id']} long, __u array<double>, cid int"
+            )
         else:
             index = spark.read.parquet(os.path.join(path, "index"))
-        return (index, *model, meta)
+        return (index, meta["cents"], meta)
 
-    return _memo_layout(_VINDEX_CACHE, spark, path, build)
+    return _memo_layout(spark, path, build)
 
 
 def materialize_ivf_index(
@@ -756,7 +755,7 @@ def materialize_ivf_index(
 def load_ivf_index(spark, path: str):
     """Read a ``materialize_ivf_index`` layout: (index, cents, meta)
     (``_load_layout``)."""
-    return _load_layout(spark, path, ("cents",), "__u array<double>, cid int")
+    return _load_layout(spark, path)
 
 
 def _round6_halfup(x: float) -> float:
@@ -1255,8 +1254,8 @@ def train_ivfpq(
     """Train the IVF-PQ model only: returns (coarse, cq) — the coarse
     centroids (floats) and the 2^-15-quantized PQ codebooks — or
     (None, None) on an all-invalid corpus. This is the offline half of
-    the FAISS train/add split: ``encode_ivfpq`` (and the streaming
-    vector-index appender) apply a FROZEN model to new vectors without
+    the FAISS train/add split: ``encode_ivfpq`` (and the generational
+    vector-index maintainer) apply a FROZEN model to new vectors without
     retraining. Both trainers are shared: the coarse quantizer is
     ``_train_coarse`` (IVF's fixed-point Lloyd), the codebooks
     ``_train_pq`` (integer-rank Lloyd).
@@ -1312,9 +1311,9 @@ def encode_ivfpq(
     """Apply a FROZEN IVF-PQ model: (id, cid, codes) rows for every valid
     vector — the "add" half of the train/add split. One Arrow pass per
     vector (cell assignment matmul + per-subspace integer-rank argmin),
-    no shuffle beyond the spread; this is what the streaming vector-index
-    appender runs per micro-batch, and what a batch job runs to (re)build
-    the persisted, cid-bucketed index table. With ``residual=True`` the
+    no shuffle beyond the spread; this is what the vector-index maintainer
+    runs per micro-batch, and what a generation build runs to encode the
+    persisted, cid-clustered index table. With ``residual=True`` the
     codes quantize ``u - coarse[cid]`` (the cell stays the raw-vector
     assignment — same argsort either way); pass the flag the model was
     trained with. cid and codes are generator outputs (see encode_ivf)."""
@@ -1435,13 +1434,14 @@ def ivfpq_search(
     index_for_cids=None,
 ) -> DataFrame:
     """Query a PREBUILT IVF-PQ index table: ``index`` is the
-    (corpus_id, cid, codes) frame a batch ``encode_ivfpq`` or the
-    streaming vector-index appender maintains — this path never touches
-    the model trainer or re-encodes anything, which is how a
-    continuously-ingesting 100 TB retrieval tier actually serves
-    queries (the index table is bucketed by cid; the probe equi-join
-    becomes a partition-pruned scan). ``corpus`` supplies raw vectors
-    for the refinement step only — rerank*k rows per query read it.
+    (corpus_id, cid, codes) frame a batch ``encode_ivfpq`` builds or the
+    generational vector index (streaming/vectorindex.py) maintains —
+    this path never touches the model trainer or re-encodes anything,
+    which is how a continuously-ingesting 100 TB retrieval tier actually
+    serves queries (the index table is clustered by cid; the probe
+    equi-join becomes a file-pruned scan). ``corpus`` supplies raw
+    vectors for the refinement step only — rerank*k rows per query read
+    it.
     Bit-identical to ivfpq_topk over the same model + vectors (pinned
     by test; ivfpq_topk itself delegates here).
 
@@ -1512,13 +1512,13 @@ def ivfpq_search(
 
     # ---- ADC over probed cells only: equi-join on cid, not a sweep ----
     # The probed cells are known DRIVER-side, so push them as a literal
-    # IN predicate too: over a cid-partitioned persisted index
-    # (materialize_vector_index) this is a directory-level PartitionFilter
-    # — unprobed cells' files are never opened — where the broadcast join
-    # alone only filters rows after the scan. Bit-identical: the join key
-    # set is exactly the probed set. A snapshot-pinned txlog host passes
-    # ``index_for_cids`` instead, turning the same probe into txlog file
-    # skipping at its pinned version.
+    # IN predicate too: parquet row-group min/max (or a cid-partitioned
+    # directory's PartitionFilters) can then skip unprobed cells, where
+    # the broadcast join alone only filters rows after the scan.
+    # Bit-identical: the join key set is exactly the probed set. The
+    # snapshot-pinned generational host passes ``index_for_cids``
+    # instead, turning the same probe into txlog file skipping at its
+    # pinned version, so unprobed cells' files are never opened.
     probed_cids = sorted({cid for _, cid, _ in probe_rows})
     if index_for_cids is not None:
         pruned = index_for_cids(probed_cids)
@@ -1577,71 +1577,3 @@ def ivfpq_search(
 
     refined = ref_in.mapInPandas(refine_rows, ref_schema)
     return _rank_topk(refined, query_id, corpus_id, "score_fp", k)
-
-
-def materialize_vector_index(
-    corpus: DataFrame,
-    path: str,
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    n_centroids: int = 16,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    residual: bool = False,
-) -> None:
-    """Write the IVF-PQ retrieval tier as a PERSISTED layout — the
-    batch form of what ``streaming/vectorindex.py`` maintains
-    incrementally: query-time plans READ a maintained index table
-    instead of re-running the trainer per query (train once, serve
-    many — the FAISS train/add split, on disk).
-
-    Layout (``_write_layout``), under ``path``:
-    - ``index/`` (corpus_id, codes) parquet, directory-partitioned by
-      ``cid`` — ``ivfpq_search``'s driver-side probe pushes a literal
-      ``cid IN (...)`` predicate, so a query's scan opens only the
-      ``n_probe`` probed cells' directories (PartitionFilters; pinned by
-      test). 8 B of codes per vector; the raw vectors stay in the source
-      table and are re-joined for the rerank·k refinement rows only.
-    - ``_meta.json`` — the FROZEN model: coarse centroids (exact
-      repr-round-trip doubles), the 2^-15-quantized integer codebooks,
-      and the (dim, m, ksub, n_centroids, residual) params.
-
-    Training is a pure function of the corpus (hash-ordered seeds,
-    fixed-point Lloyd — train_ivfpq), so serving from this layout is
-    bit-identical to the in-query ivfpq_topk chain: same golden
-    fixtures, pinned by test. At 100 TB the index is a real table the
-    streaming appender keeps current; a corpus change rewrites only the
-    touched cells' partitions.
-    """
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
-    prepped = _ivfpq_prep(corpus, corpus_id, vec_col, dim).persist()
-    try:
-        coarse, cq = train_ivfpq(
-            corpus, corpus_id=corpus_id, vec_col=vec_col, n_centroids=n_centroids,
-            m=m, ksub=ksub, dim=dim, _prepped=prepped, residual=residual,
-        )
-        encoded = None if coarse is None else encode_ivfpq(
-            corpus, coarse, cq, dim, id_col=corpus_id, vec_col=vec_col,
-            residual=residual, _prepped=prepped,
-        )
-        _write_layout(
-            path, encoded, n_centroids,
-            {"corpus_id": corpus_id, "dim": dim, "n_centroids": n_centroids, "m": m,
-             "ksub": ksub, "residual": residual, "coarse": coarse, "cq": cq},
-        )
-    finally:
-        prepped.unpersist()
-
-
-def load_vector_index(spark, path: str):
-    """Read a ``materialize_vector_index`` layout (``_load_layout``):
-    returns (index, coarse, cq, meta) — ``index`` is the
-    (corpus_id, cid, codes) frame ``ivfpq_search`` consumes (cid as the
-    partition column, so the probe's literal IN predicate prunes
-    directories), ``coarse``/``cq`` the frozen model (None on an
-    all-invalid corpus), ``meta`` the param dict. Rename the id column to
-    match the serving corpus when the two differ (e.g. doc_id vs vec_id
-    over the same id/vector pairs)."""
-    return _load_layout(spark, path, ("coarse", "cq"), "codes array<int>, cid int")

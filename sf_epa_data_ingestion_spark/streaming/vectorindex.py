@@ -1,29 +1,32 @@
-"""Streaming vector-index freshness: frozen-model IVF-PQ encoding of
-arriving embeddings with exactly-once appends.
+"""The generational IVF-PQ vector index: one host for the (id, cid,
+codes) rows every vector query serves from, kept fresh by a change-feed
+maintainer and re-trained by generation cutover.
 
-This is the vector-tier sibling of streaming/freshness.py (the lexical
+This is the vector-tier sibling of storage/txindex.py (the lexical
 index's TARGET_LAG analog — the reference's search service refreshed
 within one minute of base-table change, epa_ingestion.py:844-854): a
 retrieval corpus at 100 TB cannot re-train or re-encode its index when
 documents arrive, so the pipeline splits FAISS-style into
 
-- TRAIN (offline, batch): ``similarity.train_ivfpq`` fits the coarse
-  cells + PQ codebooks on a historical sample — metadata-scale model
-  (n_centroids*dim floats + m*ksub*dsub ints);
-- ADD (continuous, here): each micro-batch of new embeddings is
-  assigned its cell and encoded to 8-byte codes by
-  ``similarity.encode_ivfpq`` with the FROZEN model (one Arrow pass,
-  broadcast centroids, no shuffle), then appended exactly-once into the
-  index table through the txlog txn marker. Newly ingested vectors are
-  probe-visible as soon as the batch commits.
+- TRAIN (offline, batch): ``retrain_vector_index_generation`` fits the
+  coarse cells + PQ codebooks (``similarity.train_ivfpq``) on a corpus
+  snapshot, encodes the snapshot and publishes it as a new generation
+  — generation 1 on an empty root, N+1 as a cutover — or
+  ``init_vector_index_generations`` publishes an empty generation 1
+  under a model fitted elsewhere;
+- ADD (continuous): ``vector_index_maintainer_gen`` applies each
+  micro-batch of a change feed with the FROZEN model — deletes as a
+  file-granular CoW delete, inserts assigned their cell and encoded to
+  8-byte codes by ``similarity.encode_ivfpq`` (one Arrow pass, broadcast
+  centroids, no shuffle), appended exactly-once through the txlog txn
+  marker. Newly ingested vectors are probe-visible as soon as the batch
+  commits.
 
-The index table is (vec_id, cid, codes) — at 100 TB it is written
-bucketed/partitioned by ``cid`` so a query's n_probe cells become a
-partition-pruned scan. Cell drift is answered by the GENERATION CUTOVER
-at the bottom of this module (``retrain_vector_index_generation`` +
-``vector_index_maintainer_gen``): train N+1 offline on the current
-corpus snapshot, re-encode, publish an atomic pointer the maintainer
-follows mid-stream.
+Serving pins one generation and one txlog version of its table
+(``pin_vector_index`` -> ``VectorIndexSnapshot``), so a query never sees
+a concurrent batch or cutover half-applied. Every generation's backfill
+is range-partitioned on ``cid``, so per-file cid bounds let a query's
+n_probe cells become a file-pruned scan.
 
 Id dedup follows streaming/ingest.py's two-stage design: in-batch (one
 encoded row per id, lowest cid/codes tiebreak — a window over the
@@ -42,90 +45,31 @@ from sf_epa_data_ingestion_spark.storage.txlog import TxTable
 from sf_epa_data_ingestion_spark.streaming.txsink import append_once
 
 
-def vector_index_appender(
+def _apply_change_batch(
     table: TxTable,
     app_id: str,
-    coarse: list[list[float]],
-    cq: list[list[list[int]]],
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_retries: int = 5,
-    residual: bool = False,
-):
-    """Build a ``foreachBatch`` callable maintaining an IVF-PQ index table
-    (schema: id_col, cid int, codes array<int>)::
+    model: dict,
+    batch_df,
+    batch_id: int,
+    id_col: str,
+    vec_col: str,
+    change_col: str,
+    max_retries: int,
+) -> None:
+    """Apply one CHANGE-FEED micro-batch to a generation's index table
+    under its frozen ``model``. Rows are full row images tagged
+    insert/delete in ``change_col`` (storage/txlog.changes' shape; an
+    update is the usual delete+insert pair), so a deleted or updated
+    document's stale codes stop serving at the batch's commit.
 
-        coarse, cq = similarity.train_ivfpq(historical_sample, dim=64)
-        (embeddings.writeStream
-            .foreachBatch(vector_index_appender(tbl, "vec-index", coarse, cq, 64))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start())
-
-    Encoding is bit-identical to what ``ivfpq_topk`` would produce for
-    the same vectors under the same model (pinned by test), so batch and
-    streaming index builds are interchangeable.
-    """
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        last = table.last_txn(app_id)
-        if last is not None and batch_id <= last:
-            return  # replayed batch: already durable
-        enc = encode_ivfpq(
-            batch_df, coarse, cq, dim, id_col=id_col, vec_col=vec_col,
-            residual=residual,
-        )
-        # in-batch dedup: duplicate ids arriving WITHIN one micro-batch all
-        # survive the cross-batch anti-join, so collapse to one encoded row
-        # per id first (deterministic keep: lowest (cid, codes) — encoding
-        # is a pure function of the vector, so true duplicates are
-        # identical rows and any tiebreak returns the same codes).
-        one = Window.partitionBy(id_col).orderBy(F.asc("cid"), F.asc("codes"))
-        enc = (
-            enc.withColumn("__rn", F.row_number().over(one))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        existing = table.read().select(id_col).distinct()
-        fresh = enc.join(existing, id_col, "left_anti")
-        append_once(table, fresh, app_id, batch_id, max_retries)
-
-    return write_batch
-
-
-def vector_index_maintainer(
-    table: TxTable,
-    app_id: str,
-    coarse: list[list[float]],
-    cq: list[list[list[int]]],
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    change_col: str = "_change_type",
-    max_retries: int = 5,
-    residual: bool = False,
-):
-    """Build a ``foreachBatch`` callable maintaining an IVF-PQ index
-    table from a CHANGE FEED — the delete-capable sibling of
-    ``vector_index_appender`` (r9: the appender handled arrivals only,
-    so a deleted or updated document's stale codes kept serving until a
-    full re-encode; the reference's TARGET_LAG covers changes of every
-    kind, epa_ingestion.py:844-854). Micro-batch rows are full row
-    images tagged insert/delete in ``change_col`` (storage/txlog.changes'
-    shape; an update is the usual delete+insert pair).
-
-    Per batch: deletes first, as a file-granular CoW ``delete_where`` on
-    the changed ids — IDEMPOTENT, so it needs no marker of its own —
-    then the inserts encode under the frozen model and append with the
-    batch's txn marker, exactly like the appender. Replay protocol: a
-    marker at or below the recorded one skips the whole batch; a crash
-    BETWEEN delete and append replays into "re-delete (no-op) + append"
-    — neither table state double-counts, the same decisions-before-state
-    reasoning streaming/semdedup.py documents.
+    Deletes go first, as a file-granular CoW ``delete_where`` on the
+    changed ids — IDEMPOTENT, so it needs no marker of its own — then
+    the inserts encode under the frozen model and append with the
+    batch's txn marker. Replay protocol: a marker at or below the
+    recorded one skips the whole batch; a crash BETWEEN delete and
+    append replays into "re-delete (no-op) + append" — neither table
+    state double-counts, the same decisions-before-state reasoning
+    streaming/semdedup.py documents.
 
     Scale: the delete's touched-file discovery is a broadcast semi-join
     of the change-set-sized id list against the index; over a
@@ -134,49 +78,47 @@ def vector_index_maintainer(
     under the same frozen model) row-for-row, pinned by test — encoding
     is a pure per-row function, so the equality is exact, not
     approximate."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
-    def write_batch(batch_df, batch_id: int) -> None:
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        last = table.last_txn(app_id)
-        if last is not None and batch_id <= last:
-            return  # replayed batch: already durable
-        deleted_ids = {
-            r["id"]
-            for r in batch_df.filter(F.col(change_col) == "delete")
-            .select(F.col(id_col).alias("id")).distinct().collect()
-        }
-        if deleted_ids:
-            # prune_filters == the cond's own id list, so the discovery
-            # scan opens only files whose committed id bounds admit a
-            # changed id (r11 — this is the txlog min/max skipping the
-            # scale note above promises; before it, discovery was an
-            # O(live-files) scan per batch)
-            table.delete_where(
-                F.col(id_col).isin(sorted(deleted_ids)),
-                prune_filters=[(id_col, "in", sorted(deleted_ids))],
-            )
-        inserts = batch_df.filter(F.col(change_col) == "insert")
-        enc = encode_ivfpq(
-            inserts, coarse, cq, dim, id_col=id_col, vec_col=vec_col,
-            residual=residual,
+    last = table.last_txn(app_id)
+    if last is not None and batch_id <= last:
+        return  # replayed batch: already durable
+    deleted_ids = {
+        r["id"]
+        for r in batch_df.filter(F.col(change_col) == "delete")
+        .select(F.col(id_col).alias("id")).distinct().collect()
+    }
+    if deleted_ids:
+        # prune_filters == the cond's own id list, so the discovery scan
+        # opens only files whose committed id bounds admit a changed id
+        table.delete_where(
+            F.col(id_col).isin(sorted(deleted_ids)),
+            prune_filters=[(id_col, "in", sorted(deleted_ids))],
         )
-        one = Window.partitionBy(id_col).orderBy(F.asc("cid"), F.asc("codes"))
-        enc = (
-            enc.withColumn("__rn", F.row_number().over(one))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        # cross-batch id guard: an id re-delivered WITHOUT a delete must
-        # not duplicate its row. Ids deleted THIS batch are gone from the
-        # table already, so the anti-join naturally admits their fresh
-        # encodings (the update path).
-        existing = table.read().select(id_col).distinct()
-        fresh = enc.join(existing, id_col, "left_anti")
-        append_once(table, fresh, app_id, batch_id, max_retries)
-
-    return write_batch
+    inserts = batch_df.filter(F.col(change_col) == "insert")
+    enc = encode_ivfpq(
+        inserts, model["coarse"], model["cq"], int(model["dim"]),
+        id_col=id_col, vec_col=vec_col, residual=bool(model["residual"]),
+    )
+    # in-batch dedup: duplicate ids arriving WITHIN one micro-batch all
+    # survive the cross-batch anti-join, so collapse to one encoded row
+    # per id first (deterministic keep: lowest (cid, codes) — encoding
+    # is a pure function of the vector, so true duplicates are identical
+    # rows and any tiebreak returns the same codes).
+    one = Window.partitionBy(id_col).orderBy(F.asc("cid"), F.asc("codes"))
+    enc = (
+        enc.withColumn("__rn", F.row_number().over(one))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+    # cross-batch id guard: an id re-delivered WITHOUT a delete must not
+    # duplicate its row. Ids deleted THIS batch are gone from the table
+    # already, so the anti-join naturally admits their fresh encodings
+    # (the update path).
+    existing = table.read().select(id_col).distinct()
+    fresh = enc.join(existing, id_col, "left_anti")
+    append_once(table, fresh, app_id, batch_id, max_retries)
 
 
 # ---------------------------------------------------------------------------
@@ -251,51 +193,63 @@ def retrain_vector_index_generation(
     index_files: int = 8,
     **train_kw,
 ) -> int:
-    """Offline cutover: fit generation N+1's IVF-PQ model on
-    ``corpus_df`` (the CURRENT corpus snapshot — the source of truth the
-    index serves; PQ codes are lossy so history cannot re-encode from
-    the old index), re-encode the snapshot as one batch job
+    """Build and publish the next generation from ``corpus_df`` (the
+    CURRENT corpus snapshot — the source of truth the index serves; PQ
+    codes are lossy so history cannot re-encode from the old index):
+    fit its IVF-PQ model, re-encode the snapshot as one batch job
     range-partitioned on the new cid (probe pruning from the first
-    post-cutover batch), carry the replay marker, publish atomically.
-    Crash mid-build leaves the pointer on N — a retry rebuilds
-    (build_generation clears the orphan first)."""
-    from sf_epa_data_ingestion_spark.operators.similarity import train_ivfpq
+    batch), carry the replay marker, publish atomically. Crash
+    mid-build leaves the pointer where it was — a retry rebuilds
+    (build_generation clears the orphan first).
+
+    On a root with no generation yet this builds generation 1 straight
+    from the corpus: no marker to carry, no coverage check, and the
+    vector width is read off the corpus's first non-NULL vector. Later
+    generations keep their predecessor's width. An empty or all-NULL
+    snapshot raises ValueError and publishes nothing."""
+    import pyspark.sql.functions as F
+
+    from sf_epa_data_ingestion_spark.operators.similarity import (
+        _infer_dim,
+        train_ivfpq,
+    )
     from sf_epa_data_ingestion_spark.streaming.generations import (
         GenerationStore,
         build_generation,
     )
 
     store = GenerationStore(root)
-    gen, model, table_old = current_vector_index_generation(spark, root)
-    marker = table_old.last_txn(app_id)
-    dim = int(model["dim"])
-
-    # Coverage invariant (r10 ADVICE): the new generation inherits the
-    # old one's replay marker, so the snapshot must contain every id
-    # the serving index holds at that marker — a LAGGING snapshot would
-    # silently drop the missing rows from generation N+1 (their batches
-    # are marked replayed and will never re-append). Checked BEFORE the
-    # training spend; ids-only anti-join, narrow column scans.
-    import pyspark.sql.functions as F
-
-    n_missing = (
-        table_old.read()
-        .select(F.col(id_col).alias("__id"))
-        .join(
-            corpus_df.select(F.col(id_col).alias("__id")).distinct(),
-            "__id",
-            "left_anti",
+    gen, marker = store.latest() or 0, None
+    if not gen:
+        dim = _infer_dim(corpus_df, vec_col)
+    else:
+        gen, model, table_old = current_vector_index_generation(spark, root)
+        marker = table_old.last_txn(app_id)
+        dim = int(model["dim"])
+        # Coverage invariant (r10 ADVICE): the new generation inherits
+        # the old one's replay marker, so the snapshot must contain every
+        # id the serving index holds at that marker — a LAGGING snapshot
+        # would silently drop the missing rows from generation N+1 (their
+        # batches are marked replayed and will never re-append). Checked
+        # BEFORE the training spend; ids-only anti-join, narrow scans.
+        n_missing = (
+            table_old.read()
+            .select(F.col(id_col).alias("__id"))
+            .join(
+                corpus_df.select(F.col(id_col).alias("__id")).distinct(),
+                "__id",
+                "left_anti",
+            )
+            .count()
         )
-        .count()
-    )
-    if n_missing:
-        raise ValueError(
-            f"corpus snapshot is missing {n_missing} id(s) the serving "
-            f"index holds at replay marker {marker!r}: the snapshot lags "
-            "the stream, and publishing would silently drop those rows "
-            "from the new generation — retrain from a snapshot covering "
-            "every batch the marker acknowledges"
-        )
+        if n_missing:
+            raise ValueError(
+                f"corpus snapshot is missing {n_missing} id(s) the serving "
+                f"index holds at replay marker {marker!r}: the snapshot lags "
+                "the stream, and publishing would silently drop those rows "
+                "from the new generation — retrain from a snapshot covering "
+                "every batch the marker acknowledges"
+            )
 
     coarse, cq = train_ivfpq(
         corpus_df, corpus_id=id_col, vec_col=vec_col,
@@ -412,7 +366,13 @@ class VectorIndexSnapshot:
 
     A reader that outlives retention fails CLOSED (FileNotFoundError
     from the missing log), never with partial rows — the generations.py
-    contract, pinned in test_generations_retire."""
+    contract, pinned in test_generations_retire.
+
+    A pinned version never changes, so its txlog snapshot (files,
+    schema, per-file stats) is resolved once per object, on the first
+    read, and every later read of the session reuses it (the
+    ``TxSearchSnapshot`` memo: two threads that miss at once store equal
+    values, so it needs no lock)."""
 
     def __init__(self, spark, root: str, gen: int, model: dict,
                  table: TxTable, version: int):
@@ -422,6 +382,12 @@ class VectorIndexSnapshot:
         self.model = model
         self.table = table
         self.version = version
+        self._resolved = None
+
+    def _read(self, filters=None):
+        if self._resolved is None:
+            self._resolved = self.table._snapshot_full(self.version)
+        return self.table.read_snapshot(self._resolved, filters)
 
     @property
     def coarse(self):
@@ -441,20 +407,16 @@ class VectorIndexSnapshot:
 
     def index(self):
         """The full (id, cid, codes) frame AT the pinned version."""
-        return self.table.read(version=self.version)
+        return self._read()
 
     def index_for_cids(self, cids):
         """Cell-pruned probe read AT the pinned version: files whose
         committed cid bounds exclude every probed cell never enter the
         scan (txlog min/max skipping — the backfill range-partitions on
-        cid, so per-file bounds are tight and this prunes like the
-        directory layout's ``cid=`` PartitionFilters). The residual
-        ``cid IN`` filter still applies, so results are exactly the
-        probed subset."""
-        return self.table.read(
-            version=self.version,
-            filters=[("cid", "in", sorted(int(c) for c in cids))],
-        )
+        cid, so per-file bounds are tight). The residual ``cid IN``
+        filter still applies, so results are exactly the probed
+        subset."""
+        return self._read([("cid", "in", sorted(int(c) for c in cids))])
 
 
 def pin_vector_index(spark, root: str) -> VectorIndexSnapshot:
@@ -468,44 +430,6 @@ def pin_vector_index(spark, root: str) -> VectorIndexSnapshot:
             f"generation {gen} at {root} has no committed index versions"
         )
     return VectorIndexSnapshot(spark, root, gen, model, table, vs[-1])
-
-
-def init_vector_index_from_layout(
-    spark, root: str, layout_path: str, index_files: int = 8,
-) -> TxTable:
-    """Build generation 1 of the generational store FROM a
-    ``similarity.materialize_vector_index`` directory layout: same
-    frozen model, same (id, cid, codes) rows — so a query served from
-    ``pin_vector_index(root)`` is bit-identical to one served from the
-    directory layout (encoding is a pure function of the model + vector;
-    the rows are literally copied). The backfill range-partitions on
-    cid so txlog per-file bounds make ``index_for_cids`` prune like the
-    directory layout's partition filters."""
-    from sf_epa_data_ingestion_spark.operators.similarity import (
-        load_vector_index,
-    )
-
-    index, coarse, cq, meta = load_vector_index(spark, layout_path)
-    id_col = meta["corpus_id"]
-    dim = int(meta["dim"])
-    residual = bool(meta.get("residual", False))
-    table = init_vector_index_generations(
-        spark, root, coarse, cq, dim, id_col=id_col, residual=residual,
-        n_rows_at_train=0,
-    )
-    if coarse is not None:
-        import pyspark.sql.functions as F
-
-        table.append(
-            index.select(
-                F.col(id_col),
-                # directory-partition columns usually read back int
-                # already, but be explicit: the table schema pins cid int
-                F.col("cid").cast("int").alias("cid"),
-                F.col("codes"),
-            ).repartitionByRange(index_files, "cid")
-        )
-    return table
 
 
 def vacuum_vector_index(
@@ -561,11 +485,20 @@ def vector_index_maintainer_gen(
     max_retries: int = 5,
     auto_retrain: dict | None = None,
 ):
-    """The generation-following face of ``vector_index_maintainer``: the
-    serving generation (model + index table) is re-resolved at EVERY
-    micro-batch start, so a ``retrain_vector_index_generation`` cutover
-    takes effect mid-stream at the next batch boundary with no restart;
-    the carried marker keeps replay exact across the swap.
+    """Build a ``foreachBatch`` callable maintaining the generational
+    IVF-PQ index from a CHANGE FEED (``_apply_change_batch``: deletes,
+    then frozen-model inserts, exactly once per batch id)::
+
+        retrain_vector_index_generation(spark, root, "vec-index", corpus, dim=64)
+        (changes.writeStream
+            .foreachBatch(vector_index_maintainer_gen(spark, root, "vec-index"))
+            .option("checkpointLocation", ckpt)
+            .start())
+
+    The serving generation (model + index table) is re-resolved at
+    EVERY micro-batch start, so a ``retrain_vector_index_generation``
+    cutover takes effect mid-stream at the next batch boundary with no
+    restart; the carried marker keeps replay exact across the swap.
 
     ``auto_retrain`` closes the drift loop the FAISS way — retrain when
     the corpus has outgrown the sample the codebooks were fitted on
@@ -619,12 +552,10 @@ def vector_index_maintainer_gen(
 
     def write_batch(batch_df, batch_id: int) -> None:
         gen, model, table = current_vector_index_generation(spark, root)
-        inner = vector_index_maintainer(
-            table, app_id, model["coarse"], model["cq"], int(model["dim"]),
-            id_col=id_col, vec_col=vec_col, change_col=change_col,
-            max_retries=max_retries, residual=bool(model["residual"]),
+        _apply_change_batch(
+            table, app_id, model, batch_df, batch_id,
+            id_col, vec_col, change_col, max_retries,
         )
-        inner(batch_df, batch_id)
         if not auto_retrain:
             return
         n_at = int(GenerationStore(root).meta(gen).get("n_rows_at_train", 0))

@@ -126,3 +126,64 @@ def test_materialized_dir_keeps_the_layout_of_a_build_race_winner(tmp_path, monk
     root = entry._materialized_dir(str(sf), "documents", "race_v1", build)
     assert os.path.exists(os.path.join(root, "winner"))
     assert glob.glob(str(tmp_path / "*.build_*")) == []
+
+
+def _layouts(tmp_path, monkeypatch):
+    """A private temp dir, and a function that publishes one layout of
+    the ``documents`` table of ``sf`` under the given code digest, aged
+    ``age_s`` seconds."""
+    import tempfile
+    import time
+
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def build(tmp):
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "_meta.json"), "w") as f:
+            f.write("{}")
+
+    def publish(sf, code, age_s=0.0):
+        sf.mkdir(exist_ok=True)
+        (sf / "documents.parquet").write_bytes(b"corpus")
+        monkeypatch.setattr(entry, "_code_digest", lambda: code)
+        root = entry._materialized_dir(str(sf), "documents", "probe_v1", build)
+        t = time.time() - age_s
+        os.utime(os.path.join(root, "_meta.json"), (t, t))
+        return root
+
+    return publish
+
+
+def test_materialized_dir_reclaims_an_old_superseded_layout(tmp_path, monkeypatch):
+    """A build that supersedes a layout of the same tag and table, older
+    than the retention, deletes it; the new layout stays."""
+    publish = _layouts(tmp_path, monkeypatch)
+    old = publish(tmp_path / "sf", "old code", age_s=7200)
+    new = publish(tmp_path / "sf", "new code")
+    assert new != old and os.path.isdir(new)
+    assert not os.path.exists(old)
+
+
+def test_materialized_dir_keeps_the_layout_of_another_table_path(tmp_path, monkeypatch):
+    """Layouts of another table path (another scale factor) under the
+    same tag are never superseded, however old: only the same-path one
+    is reclaimed."""
+    publish = _layouts(tmp_path, monkeypatch)
+    other = publish(tmp_path / "sf_other", "old code", age_s=7200)
+    old = publish(tmp_path / "sf", "old code", age_s=7200)
+    publish(tmp_path / "sf", "new code")
+    assert os.path.exists(os.path.join(other, "_meta.json"))
+    assert not os.path.exists(old)
+
+
+def test_materialized_dir_keeps_a_young_superseded_layout(tmp_path, monkeypatch):
+    """A superseded layout younger than the retention may still be
+    serving another process: it stays, while an old one goes."""
+    publish = _layouts(tmp_path, monkeypatch)
+    old = publish(tmp_path / "sf", "old code", age_s=7200)
+    young = publish(tmp_path / "sf", "young code", age_s=60)
+    publish(tmp_path / "sf", "new code")
+    assert os.path.exists(os.path.join(young, "_meta.json"))
+    assert not os.path.exists(old)

@@ -1,13 +1,26 @@
-"""Streaming IVF-PQ index maintenance (streaming/vectorindex.py): frozen
-model, per-batch encode, exactly-once txlog appends, restart survival,
-and bit-parity with the batch encoder."""
+"""The generational IVF-PQ vector index (streaming/vectorindex.py):
+generation 1 built straight from the corpus, frozen-model change-feed
+maintenance with exactly-once appends, restart survival, cutover,
+pinned serving, and bit-parity with the batch encoder and the in-query
+chains."""
+
+import os
 
 import pyspark.sql.functions as F
 import pytest
 
 from sf_epa_data_ingestion_spark.operators import similarity
 from sf_epa_data_ingestion_spark.storage import TxTable
-from sf_epa_data_ingestion_spark.streaming.vectorindex import vector_index_appender
+from sf_epa_data_ingestion_spark.streaming.generations import GenerationStore
+from sf_epa_data_ingestion_spark.streaming.vectorindex import (
+    current_vector_index_generation,
+    init_vector_index_generations,
+    pin_vector_index,
+    retrain_vector_index_generation,
+    sampled_index_recall,
+    vacuum_vector_index,
+    vector_index_maintainer_gen,
+)
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -16,6 +29,17 @@ def _rows(df):
     return {
         (r["vec_id"], r["cid"], tuple(r["codes"])) for r in df.collect()
     }
+
+
+def _inserts(df):
+    """A change feed of arrivals only: every row tagged insert."""
+    return df.withColumn("_change_type", F.lit("insert"))
+
+
+def _queries(emb):
+    return emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
 
 
 def test_vector_index_stream_appends_exactly_once(spark, tmp_path):
@@ -27,14 +51,13 @@ def test_vector_index_stream_appends_exactly_once(spark, tmp_path):
     wave1 = emb.filter(F.col("vec_id") < 250)
     wave1.write.mode("overwrite").parquet(src)
 
-    t = TxTable(spark, str(tmp_path / "tbl")).create(
-        similarity.encode_ivfpq(emb, coarse, cq, 64).limit(0)
-    )
-    sink = vector_index_appender(t, "vec-index", coarse, cq, 64)
+    root = str(tmp_path / "gens")
+    t = init_vector_index_generations(spark, root, coarse, cq, 64)
+    sink = vector_index_maintainer_gen(spark, root, "vec-index")
 
     def run_once():
         q = (
-            spark.readStream.schema(emb.schema).parquet(src)
+            _inserts(spark.readStream.schema(emb.schema).parquet(src))
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -57,7 +80,7 @@ def test_vector_index_stream_appends_exactly_once(spark, tmp_path):
 
     # replaying an old batch id is acknowledged, never re-written
     n = t.read().count()
-    sink(wave1, 0)
+    sink(_inserts(wave1), 0)
     assert t.read().count() == n
 
     # freshness contract: a newly committed vector is probe-visible —
@@ -65,39 +88,37 @@ def test_vector_index_stream_appends_exactly_once(spark, tmp_path):
     probe = similarity.encode_ivfpq(
         emb.filter(F.col("vec_id") == 499), coarse, cq, 64
     ).collect()[0]
-    hit = t.read().filter(
-        (F.col("vec_id") == 499) & (F.col("cid") == probe["cid"])
+    hit = pin_vector_index(spark, root).index_for_cids([probe["cid"]]).filter(
+        F.col("vec_id") == 499
     )
     assert hit.count() == 1
 
 
 def test_search_over_streamed_index_matches_ivfpq_topk(spark, tmp_path):
     """End-to-end freshness contract: querying the STREAM-maintained
-    index table via ivfpq_search returns exactly what ivfpq_topk
+    generation via ivfpq_search returns exactly what ivfpq_topk
     computes from scratch on the same corpus + model."""
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     coarse, cq = similarity.train_ivfpq(emb, dim=64)
     src = str(tmp_path / "src")
     emb.write.mode("overwrite").parquet(src)
-    t = TxTable(spark, str(tmp_path / "tbl")).create(
-        similarity.encode_ivfpq(emb, coarse, cq, 64).limit(0)
-    )
+    root = str(tmp_path / "gens")
+    init_vector_index_generations(spark, root, coarse, cq, 64)
     q = (
-        spark.readStream.schema(emb.schema).parquet(src)
-        .writeStream.foreachBatch(vector_index_appender(t, "vec-index2", coarse, cq, 64))
+        _inserts(spark.readStream.schema(emb.schema).parquet(src))
+        .writeStream.foreachBatch(vector_index_maintainer_gen(spark, root, "vec-index2"))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
 
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _queries(emb)
+    vsnap = pin_vector_index(spark, root)
     via_index = sorted(
         tuple(r)
         for r in similarity.ivfpq_search(
-            t.read(), emb, queries, coarse, cq, k=5, dim=64
+            vsnap.index(), emb, queries, vsnap.coarse, vsnap.cq, k=5, dim=64
         ).collect()
     )
     from_scratch = sorted(
@@ -147,31 +168,36 @@ def test_cid_partitioned_index_probe_is_partition_pruned(spark, tmp_path):
     assert via_table == from_scratch
 
 
-def test_materialized_vector_index_serves_bit_identically(spark, tmp_path):
-    """materialize_vector_index -> load_vector_index -> ivfpq_search is
-    bit-identical to the in-query ivfpq_topk chain (training is a pure
-    function of the corpus), and _meta.json round-trips the model
-    exactly (repr doubles for coarse, ints for the codebooks)."""
+def test_generation_one_serves_bit_identically(spark, tmp_path):
+    """A generation-1 build straight from the corpus -> pin ->
+    ivfpq_search is bit-identical to the in-query ivfpq_topk chain
+    (training is a pure function of the corpus), and ``_model.json``
+    round-trips the model exactly (repr doubles for coarse, ints for
+    the codebooks)."""
+    import json
+
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    path = str(tmp_path / "vi")
-    similarity.materialize_vector_index(emb, path, dim=64)
-    index, coarse, cq, meta = similarity.load_vector_index(spark, path)
+    root = str(tmp_path / "gens")
+    assert retrain_vector_index_generation(spark, root, "vi", emb) == 1
+    vsnap = pin_vector_index(spark, root)
 
     want_coarse, want_cq = similarity.train_ivfpq(emb, dim=64)
-    assert coarse == want_coarse  # exact float round-trip through JSON
-    assert cq == want_cq
-    assert meta["dim"] == 64 and meta["corpus_id"] == "vec_id"
-    assert _rows(index.select("vec_id", "cid", "codes")) == _rows(
+    with open(os.path.join(GenerationStore(root).path(1), "_model.json")) as f:
+        on_disk = json.load(f)
+    # exact float round-trip through JSON, on disk and as served
+    assert on_disk["coarse"] == vsnap.coarse == want_coarse
+    assert on_disk["cq"] == vsnap.cq == want_cq
+    assert vsnap.dim == 64 and vsnap.gen == 1
+    assert _rows(vsnap.index()) == _rows(
         similarity.encode_ivfpq(emb, want_coarse, want_cq, 64)
     )
 
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _queries(emb)
     served = sorted(
         tuple(r)
         for r in similarity.ivfpq_search(
-            index, emb, queries, coarse, cq, k=5, dim=64
+            None, emb, queries, vsnap.coarse, vsnap.cq, k=5, dim=64,
+            index_for_cids=vsnap.index_for_cids,
         ).collect()
     )
     from_scratch = sorted(
@@ -180,46 +206,47 @@ def test_materialized_vector_index_serves_bit_identically(spark, tmp_path):
     assert served == from_scratch and len(served) == 50
 
 
-def test_ivfpq_search_probe_prunes_persisted_partitions(spark, tmp_path):
-    """ivfpq_search's own plan over the persisted layout carries the
-    driver-side probe as a literal cid IN (...) PartitionFilter — the
-    unprobed cells' directories are never opened (n_probe=1 here, so at
-    most 10 of 16 cell partitions survive for 10 distinct queries)."""
-    import contextlib
-    import io
-
+def test_ivfpq_search_probe_skips_unprobed_generation_files(spark, tmp_path):
+    """ivfpq_search's driver-side probe reaches the pinned generation as
+    txlog file skipping: the probe read opens only the files whose
+    committed cid bounds admit a probed cell, fewer than the index holds
+    (n_probe=1, so at most 10 of 16 cells are probed for 10 queries)."""
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    path = str(tmp_path / "vi")
-    similarity.materialize_vector_index(emb, path, dim=64)
-    index, coarse, cq, _ = similarity.load_vector_index(spark, path)
+    root = str(tmp_path / "gens")
+    retrain_vector_index_generation(spark, root, "vi", emb)
+    vsnap = pin_vector_index(spark, root)
+    reads = []
 
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    def provider(cids):
+        reads.append((list(cids), vsnap.index_for_cids(cids)))
+        return reads[-1][1]
+
     out = similarity.ivfpq_search(
-        index, emb, queries, coarse, cq, k=5, dim=64, n_probe=1
+        None, emb, _queries(emb), vsnap.coarse, vsnap.cq, k=5, dim=64,
+        n_probe=1, index_for_cids=provider,
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    # the literal IN predicate reached the index scan's partition filters
-    seg = plan[plan.index("PartitionFilters"):]
-    assert "cid" in seg.split("]")[0] + "]"
     assert out.count() == 50
+    (cids, probed), = reads
+    assert len(cids) <= 10
+    opened = {os.path.basename(f) for f in probed.inputFiles()}
+    admitted = {
+        os.path.basename(f)
+        for f in vsnap.table.read_files(
+            version=vsnap.version, filters=[("cid", "in", cids)]
+        )
+    }
+    assert opened == admitted
+    assert len(opened) < len(vsnap.index().inputFiles())
 
 
 def test_flat_pq_is_one_cell_ivfpq(spark, tmp_path):
     """The identity the graded ann_pq serves through: pq_topk ==
     ivfpq_topk(n_centroids=1, n_probe=1) bit-for-bit (same hash-ordered
     seed scan — n_seed = max(1, ksub) = ksub — same integer-rank
-    codebook Lloyd, same int64 ADC/refine), and the persisted one-cell
-    layout serves it identically."""
+    codebook Lloyd, same int64 ADC/refine), and a one-cell generation
+    serves it identically."""
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _queries(emb)
     flat = sorted(
         tuple(r) for r in similarity.pq_topk(emb, queries, k=5, dim=64).collect()
     )
@@ -231,13 +258,14 @@ def test_flat_pq_is_one_cell_ivfpq(spark, tmp_path):
     )
     assert flat == one_cell and len(flat) == 50
 
-    path = str(tmp_path / "flat")
-    similarity.materialize_vector_index(emb, path, dim=64, n_centroids=1)
-    index, coarse, cq, _ = similarity.load_vector_index(spark, path)
+    root = str(tmp_path / "flat")
+    retrain_vector_index_generation(spark, root, "pq", emb, n_centroids=1)
+    vsnap = pin_vector_index(spark, root)
     served = sorted(
         tuple(r)
         for r in similarity.ivfpq_search(
-            index, emb, queries, coarse, cq, k=5, dim=64, n_probe=1
+            None, emb, queries, vsnap.coarse, vsnap.cq, k=5, dim=64, n_probe=1,
+            index_for_cids=vsnap.index_for_cids,
         ).collect()
     )
     assert served == flat
@@ -313,17 +341,11 @@ def test_ivf_search_zero_norm_query_matches_topk(spark, tmp_path):
 
 
 def test_no_model_layouts_serve_empty_not_crash(spark, tmp_path):
-    """Building either index over an all-NULL corpus writes a no-model
+    """Building the IVF layout over an all-NULL corpus writes a no-model
     layout; loading + searching it returns EMPTY results (not None
-    dereferences) — the degenerate contract train_ivfpq established."""
+    dereferences) — the degenerate contract train_ivf established."""
     empty = spark.createDataFrame([(1, None)], "vec_id long, embedding array<double>")
     q = spark.createDataFrame([(-1, [1.0] * 64)], "query_id long, embedding array<double>")
-
-    p1 = str(tmp_path / "vi_empty")
-    similarity.materialize_vector_index(empty, p1, dim=64)
-    index, coarse, cq, _ = similarity.load_vector_index(spark, p1)
-    assert coarse is None
-    assert similarity.ivfpq_search(index, empty, q, coarse, cq, k=5, dim=64).count() == 0
 
     p2 = str(tmp_path / "ivf_empty")
     similarity.materialize_ivf_index(empty, p2, dim=64)
@@ -332,25 +354,40 @@ def test_no_model_layouts_serve_empty_not_crash(spark, tmp_path):
     assert similarity.ivf_search(index2, q, cents, k=5).count() == 0
 
 
+def test_generation_one_build_on_all_null_corpus_raises(spark, tmp_path):
+    """An IVF-PQ generation has no no-model form: building generation 1
+    over an all-NULL corpus raises before anything is published (no
+    vector to read the width off), so the root stays empty and a pin
+    fails loudly instead of serving a modelless index."""
+    empty = spark.createDataFrame([(1, None)], "vec_id long, embedding array<double>")
+    root = str(tmp_path / "gens")
+    with pytest.raises(ValueError, match="no non-NULL 'embedding' rows"):
+        retrain_vector_index_generation(spark, root, "vi", empty)
+    assert GenerationStore(root).latest() is None
+    with pytest.raises(FileNotFoundError):
+        pin_vector_index(spark, root)
+
+
 def test_vector_index_maintainer_applies_change_feed(spark, tmp_path):
     """The delete-capable maintainer (r9): updates (delete+insert of an
     id with a NEW vector), pure deletes, and fresh inserts applied from
-    a tagged change feed leave the index row-for-row equal to a frozen-
-    model encode of the final corpus; a replayed batch (marker) and a
-    crash-window replay (delete already applied, append not) are both
-    absorbed."""
-    from sf_epa_data_ingestion_spark.streaming.vectorindex import (
-        vector_index_maintainer,
-    )
-
+    a tagged change feed leave the generation's index row-for-row equal
+    to a frozen-model encode of the final corpus; a replayed batch
+    (marker) and a crash-window replay (delete already applied, append
+    not) are both absorbed."""
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     coarse, cq = similarity.train_ivfpq(emb, dim=64)
-    t = TxTable(spark, str(tmp_path / "tbl")).create(
-        similarity.encode_ivfpq(emb, coarse, cq, 64)
-    )
-    sink = vector_index_maintainer(t, "vec-maint", coarse, cq, 64)
+
+    def backfilled(name):
+        root = str(tmp_path / name)
+        t = init_vector_index_generations(spark, root, coarse, cq, 64)
+        t.append(similarity.encode_ivfpq(emb, coarse, cq, 64))
+        return root, t
+
+    root, t = backfilled("gens")
+    sink = vector_index_maintainer_gen(spark, root, "vec-maint")
 
     # change feed: update ids 0..4 (negated vectors — real new encodings),
     # delete ids 10..12, insert fresh ids +1e6 copies of 20..24
@@ -388,11 +425,9 @@ def test_vector_index_maintainer_applies_change_feed(spark, tmp_path):
 
     # crash-window replay: the delete half applied but the append (and
     # marker) did not — re-running the batch must converge, not diverge
-    t2 = TxTable(spark, str(tmp_path / "tbl2")).create(
-        similarity.encode_ivfpq(emb, coarse, cq, 64)
-    )
+    root2, t2 = backfilled("gens2")
     t2.delete_where(F.col("vec_id").isin(upd_ids + del_ids))  # simulated partial
-    sink2 = vector_index_maintainer(t2, "vec-maint-2", coarse, cq, 64)
+    sink2 = vector_index_maintainer_gen(spark, root2, "vec-maint-2")
     sink2(feed, 1)
     assert _rows(t2.read()) == want
 
@@ -405,14 +440,6 @@ def test_vector_index_generation_cutover_mid_stream(spark, tmp_path):
     per-generation index contents equal a batch encode under that
     generation's model, replay stays a no-op across the swap, no batch
     lost or doubled, old generation retires without breaking serving."""
-    from sf_epa_data_ingestion_spark.streaming.generations import GenerationStore
-    from sf_epa_data_ingestion_spark.streaming.vectorindex import (
-        current_vector_index_generation,
-        init_vector_index_generations,
-        retrain_vector_index_generation,
-        vector_index_maintainer_gen,
-    )
-
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     wave1 = emb.filter(F.col("vec_id") < 200)
     wave2 = emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 400))
@@ -472,13 +499,6 @@ def test_retrain_rejects_lagging_corpus_snapshot(spark, tmp_path):
     corpus snapshot missing ids the serving index holds at that marker
     would silently drop those rows from generation N+1 (their batches
     never re-append). The retrain must refuse to publish."""
-    from sf_epa_data_ingestion_spark.streaming.generations import GenerationStore
-    from sf_epa_data_ingestion_spark.streaming.vectorindex import (
-        init_vector_index_generations,
-        retrain_vector_index_generation,
-        vector_index_maintainer_gen,
-    )
-
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     wave1 = emb.filter(F.col("vec_id") < 200)
     wave2 = emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 400))
@@ -506,8 +526,6 @@ def test_row_count_is_metadata_only_and_exact(spark, tmp_path):
     """r10: TxTable.row_count equals COUNT(*) across appends, CoW
     deletes, and compaction — from commit stats alone for r10-written
     files."""
-    from sf_epa_data_ingestion_spark.storage import TxTable
-
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet").limit(300)
     t = TxTable(spark, str(tmp_path / "t")).create(emb.repartition(3))
     assert t.row_count() == 300
@@ -523,14 +541,6 @@ def test_vector_index_auto_retrain_on_growth(spark, tmp_path):
     """r10: the maintainer itself cuts a new generation when the index
     outgrows the sample its codebooks were fitted on (metadata-only
     growth check) — and not before."""
-    from sf_epa_data_ingestion_spark.streaming.generations import GenerationStore
-    from sf_epa_data_ingestion_spark.streaming.vectorindex import (
-        current_vector_index_generation,
-        init_vector_index_generations,
-        retrain_vector_index_generation,
-        vector_index_maintainer_gen,
-    )
-
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     wave1 = emb.filter(F.col("vec_id") < 150)
     coarse, cq = similarity.train_ivfpq(wave1, dim=64, n_centroids=8)
@@ -587,14 +597,6 @@ def test_vector_index_auto_retrain_on_recall_decay(spark, tmp_path):
     in-distribution data never does; the new generation equals a batch
     re-encode under the new model. Growth is disabled (100x) so the
     recall trigger is isolated."""
-    from sf_epa_data_ingestion_spark.streaming.generations import GenerationStore
-    from sf_epa_data_ingestion_spark.streaming.vectorindex import (
-        current_vector_index_generation,
-        init_vector_index_generations,
-        sampled_index_recall,
-        vector_index_maintainer_gen,
-    )
-
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
     wave1 = emb.filter(F.col("vec_id") < 300).select("vec_id", "embedding")
     coarse, cq = similarity.train_ivfpq(wave1, dim=64, n_centroids=8)
@@ -677,13 +679,6 @@ def test_pinned_vector_snapshot_hybrid_stable_mid_refresh(spark, tmp_path):
     vector-index maintenance (the test_txindex mid-refresh precedent,
     vector tier)."""
     from sf_epa_data_ingestion_spark.operators import search
-    from sf_epa_data_ingestion_spark.streaming.generations import GenerationStore
-    from sf_epa_data_ingestion_spark.streaming.vectorindex import (
-        init_vector_index_from_layout,
-        pin_vector_index,
-        retrain_vector_index_generation,
-        vector_index_maintainer_gen,
-    )
 
     docs = (
         spark.read.parquet(f"{SF001}/documents.parquet")
@@ -701,14 +696,11 @@ def test_pinned_vector_snapshot_hybrid_stable_mid_refresh(spark, tmp_path):
     postings = search.build_postings(corpus, id_col="id", text_col="text").persist()
     stats = search.build_token_stats(postings, n_docs=n).persist()
 
-    # vector tier: directory layout -> generation 1 of the tx host
-    layout = str(tmp_path / "layout")
-    similarity.materialize_vector_index(
-        corpus, layout, corpus_id="id", vec_col="embedding", dim=64,
-        n_centroids=8,
-    )
+    # vector tier: generation 1 built straight from the corpus
     root = str(tmp_path / "gens")
-    init_vector_index_from_layout(spark, root, layout)
+    retrain_vector_index_generation(
+        spark, root, "vec-pin-test", corpus, id_col="id", n_centroids=8,
+    )
 
     query = "zebra tokens text"
     qv = [1.0 if i % 7 == 0 else 0.25 for i in range(64)]
@@ -752,7 +744,7 @@ def test_pinned_vector_snapshot_hybrid_stable_mid_refresh(spark, tmp_path):
         touched.withColumn("embedding", F.transform("embedding", lambda x: -x))
         .withColumn("_change_type", F.lit("insert"))
     )
-    # the table inherited the LAYOUT's id column name ("id")
+    # the table carries the corpus's id column name ("id")
     sink = vector_index_maintainer_gen(spark, root, "vec-pin-test", id_col="id")
     sink(feed, 0)
 
@@ -791,6 +783,29 @@ def test_pinned_vector_snapshot_hybrid_stable_mid_refresh(spark, tmp_path):
     stats.unpersist()
 
 
+def test_pinned_snapshot_resolves_its_txlog_snapshot_once(spark, tmp_path, monkeypatch):
+    """A pin never changes version, so its txlog snapshot (files, schema,
+    per-file stats) is resolved once: three probes and a full read of
+    one pin replay the log once, not once per read."""
+    root = str(tmp_path / "gens")
+    t = init_vector_index_generations(spark, root, [[0.0] * 4, [1.0] * 4], [[[0]]], 4)
+    t.append(spark.createDataFrame(
+        [(i, i % 2, [i % 3]) for i in range(6)], "vec_id long, cid int, codes array<int>"
+    ))
+    resolved = []
+    orig = TxTable._snapshot_full
+
+    def counted(self, version=None):
+        resolved.append(version)
+        return orig(self, version)
+
+    monkeypatch.setattr(TxTable, "_snapshot_full", counted)
+    vsnap = pin_vector_index(spark, root)
+    assert [vsnap.index_for_cids(c).count() for c in ([0], [1], [0, 1])] == [3, 3, 6]
+    assert vsnap.index().count() == 6
+    assert resolved == [vsnap.version]
+
+
 def test_vacuum_vector_index_reclaims_and_pins_fail_closed(spark, tmp_path):
     """r12: the generational vector store's vacuum face — old txlog
     versions inside the current generation AND retired generation
@@ -798,13 +813,6 @@ def test_vacuum_vector_index_reclaims_and_pins_fail_closed(spark, tmp_path):
     CLOSED (raises, never partial rows); a fresh pin serves on."""
     import pytest
 
-    from sf_epa_data_ingestion_spark.streaming.vectorindex import (
-        init_vector_index_generations,
-        pin_vector_index,
-        retrain_vector_index_generation,
-        vacuum_vector_index,
-        vector_index_maintainer_gen,
-    )
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet").select(
         "vec_id", "embedding"

@@ -2,10 +2,12 @@
 """Measure the delete-capable vector-index maintainer at sf0.1 vs sf1
 (r9 VERDICT next-round #6): one mixed micro-batch (updates as
 delete+insert pairs, pure inserts, pure deletes) applied by
-``vector_index_maintainer`` to a cid-clustered IVF-PQ index table, with
-the stale-code-window-0 claim VERIFIED each run — after the batch
-commits, the table equals a from-scratch encode of the final corpus
-under the same frozen model, row-for-row (no stale codes serve).
+``vector_index_maintainer_gen`` to generation 1 of a generational
+IVF-PQ index (``init_vector_index_generations``, then a cid-clustered
+backfill), with the stale-code-window-0 claim VERIFIED each run —
+after the batch commits, the table equals a from-scratch encode of the
+final corpus under the same frozen model, row-for-row (no stale codes
+serve).
 
 The interesting number is the maintainer's derivative as the corpus
 grows 10x: the delete is a file-granular CoW bounded by the touched
@@ -29,9 +31,9 @@ import pyspark.sql.functions as F  # noqa: E402
 
 from sf_epa_data_ingestion_spark.operators import similarity  # noqa: E402
 from sf_epa_data_ingestion_spark.session import get_spark  # noqa: E402
-from sf_epa_data_ingestion_spark.storage import TxTable  # noqa: E402
 from sf_epa_data_ingestion_spark.streaming.vectorindex import (  # noqa: E402
-    vector_index_maintainer,
+    init_vector_index_generations,
+    vector_index_maintainer_gen,
 )
 
 SCRATCH = os.path.join(REPO, ".scaledata", "vecmaint_scale")
@@ -101,9 +103,10 @@ def main() -> None:
             shutil.rmtree(root, ignore_errors=True)
             t0 = time.time()
             enc = similarity.encode_ivfpq(emb, coarse, cq, DIM)
-            t = TxTable(spark, root).create(enc.repartitionByRange(16, "cid"))
+            t = init_vector_index_generations(spark, root, coarse, cq, DIM)
+            t.append(enc.repartitionByRange(16, "cid"))
             build_best = min(build_best, time.time() - t0)
-            sink = vector_index_maintainer(t, "vm-scale", coarse, cq, DIM)
+            sink = vector_index_maintainer_gen(spark, root, "vm-scale")
             t0 = time.time()
             sink(feed, 0)
             maintain_best = min(maintain_best, time.time() - t0)
