@@ -56,6 +56,7 @@ from sf_epa_data_ingestion_spark.operators import (
     vocab,
 )
 from sf_epa_data_ingestion_spark.plans import epa_views
+from sf_epa_data_ingestion_spark.session import scoped_conf
 from sf_epa_data_ingestion_spark.sources import readers
 from sf_epa_data_ingestion_spark.storage import txindex
 from sf_epa_data_ingestion_spark.streaming import events as ev
@@ -1012,11 +1013,8 @@ JOIN '{FIXTURES}/golden_chunks_128_32.parquet' f
 # ---------------------------------------------------------------------------
 
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
-    return e.select(
-        "event_id",
-        F.get_json_object(F.col("props"), "$.k").cast("long").alias("k"),
-    )
+    e = _t(spark, sf_dir, "events").select("event_id", "props")
+    return ev.extract_props(e).select("event_id", F.col("k").cast("long").alias("k"))
 
 
 ORACLE_JSON_EXTRACT = """
@@ -1122,28 +1120,14 @@ def _replay_shuffle_partitions(spark: SparkSession, feed_dir: str | None = None)
     import contextlib
     import glob as _glob
 
-    pin: int | None = 8
     if feed_dir is not None:
         feed_bytes = sum(
             os.path.getsize(p)
             for p in _glob.glob(os.path.join(feed_dir, "*.parquet"))
         )
         if feed_bytes > REPLAY_FIXTURE_FEED_BYTES:
-            pin = None  # production-scale feed: the session conf rules
-
-    @contextlib.contextmanager
-    def scope():
-        if pin is None:
-            yield
-            return
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(pin))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    return scope()
+            return contextlib.nullcontext()  # production-scale feed: the session conf rules
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"})
 
 
 def _arrival_feed(batches, feed_dir: str) -> None:

@@ -119,12 +119,6 @@ def murmur3_long(value: int, seed: int) -> int:
     return _i32(_fmix(h1, 8))
 
 
-def murmur3_int(value: int, seed: int) -> int:
-    """Spark ``Murmur3_x86_32.hashInt``: one mixed word."""
-    h1 = _mix_h1(seed & _M32, _mix_k1(value & _M32))
-    return _i32(_fmix(h1, 4))
-
-
 def hash_long_array(values: list[int], seed: int = 42) -> int:
     """``F.hash(array<long>)``: element hashes chain — each result seeds
     the next element (null elements, which leave the seed unchanged in

@@ -36,7 +36,7 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from sf_epa_data_ingestion_spark.partitioning import persist_keyed, spread
+from sf_epa_data_ingestion_spark.partitioning import cache, spread
 
 #: (pattern, replacement) pairs applied in order. Order matters: SSNs
 #: (3-2-4 with dashes) are redacted before generic phones (3-3-4) so the
@@ -451,11 +451,11 @@ def ngram_novelty(
         ),
         "id",
     ).select("id", F.explode(word_ngrams(F.col(text_col), n)).alias("gram"))
-    # persist_keyed (r16): the per-doc count below aggregates the exploded
+    # keyed (r16): the per-doc count below aggregates the exploded
     # corpus-sized relation ON the cache's spread key - with the
     # partitioning visible it runs as one exchange-free aggregate (the
     # first-carrier groupBy(gram) re-keys and pays its exchange either way)
-    grams = persist_keyed(grams)  # per-doc counts + the first-carrier aggregate
+    grams = cache(grams, keyed=True, owner="cleaning.ngram_novelty")
     per_doc = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
     novel = (
         grams.groupBy("gram")

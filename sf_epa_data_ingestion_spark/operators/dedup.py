@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from sf_epa_data_ingestion_spark.functions.binding import let
 from sf_epa_data_ingestion_spark.partitioning import (
     adaptive_factor,
-    persist_keyed,
+    cache,
     spread,
 )
 
@@ -516,7 +516,7 @@ def minhash_lsh_pairs(
     # exchange reuse does not fire across the self-join's dedup-aliased
     # branches (measured 7.7s -> 3.2s at sf0.1). MEMORY_AND_DISK, ~520 B
     # per doc: spills gracefully instead of OOMing at scale.
-    sig = spread(sig, F.col("id")).persist()
+    sig = cache(spread(sig, F.col("id")), owner="dedup.minhash_lsh_pairs")
 
     # Band rows are NARROW (id, band_id, band_hash) — signatures are NOT
     # carried through the bucket self-join. A near-dup cluster of m docs
@@ -719,7 +719,7 @@ def hamming_near_pairs(
     )
     # persist: a and b below are dedup-aliased branches of the same
     # subtree; without the cache the whole signature computation runs twice.
-    blocks = blocks.persist()
+    blocks = cache(blocks, owner="dedup.hamming_near_pairs")
     a, b = blocks.alias("a"), blocks.alias("b")
     ham = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
 
@@ -872,7 +872,7 @@ def ngram_jaccard_pairs(
             "n_u",
         )
     )
-    ordered = spread(ordered, "id").persist()
+    ordered = cache(spread(ordered, "id"), owner="dedup.ngram_jaccard_pairs.ordered")
 
     # ONE full posexplode serves both join sides: the probe side is a
     # FILTER to prefix positions (cheap, and the persisted explode is
@@ -891,11 +891,11 @@ def ngram_jaccard_pairs(
     # real web corpus unique shingles are the MAJORITY of rows, which
     # makes this the cheapest shuffle cut in the plan at 100 TB.
     full = ordered.select("id", "n_sh", "n_u", F.posexplode("shs").alias("pos", "sh"))
-    # persist_keyed, not persist: the sh-keyed self-join below must SEE
-    # this cache's hashpartitioning so neither join side re-exchanges
-    # (r16; the two avoided shuffles are the two largest relations in
-    # the query - probe prefixes and the full position index)
-    full = persist_keyed(
+    # keyed: the sh-keyed self-join below must SEE this cache's
+    # hashpartitioning so neither join side re-exchanges (r16; the two
+    # avoided shuffles are the two largest relations in the query -
+    # probe prefixes and the full position index)
+    full = cache(
         spread(
             full.filter(F.col("pos") >= F.col("n_u")).drop("n_u"),
             "sh",
@@ -905,7 +905,8 @@ def ngram_jaccard_pairs(
             # at exactly this count - no AQE coalescing to rescue a
             # constant tuned for the wrong scale)
             factor=adaptive_factor(df, 4),
-        )
+        ),
+        keyed=True, owner="dedup.ngram_jaccard_pairs.full",
     )
     # PROBE prefix (valid for the larger record x of any qualifying pair:
     # overlap o >= t*|x|, so the smallest common shingle sits within the
@@ -1101,10 +1102,10 @@ def duplicate_spans(
             ).alias("sh"),
         )
     )
-    # persist_keyed: the span_df groupBy AND both self-join sides are
-    # keyed sh - exposing the cache's hashpartitioning lets all three
-    # consumers skip their re-exchange (r16)
-    spans = persist_keyed(spread(spans, "sh"))  # two consumers: df filter + self-join
+    # keyed: the span_df groupBy AND both self-join sides are keyed sh -
+    # exposing the cache's hashpartitioning lets all three consumers skip
+    # their re-exchange (r16); two consumers: df filter + self-join
+    spans = cache(spread(spans, "sh"), keyed=True, owner="dedup.duplicate_spans")
     eligible = (
         spans.groupBy("sh")
         .agg(F.count(F.lit(1)).alias("span_df"))
@@ -1165,7 +1166,8 @@ def strip_duplicate_spans(
             F.col(id_col).alias("id"), t.alias("t")
         ),
         "id",
-    ).persist()  # two consumers: occurrence explode + final rebuild join
+    )  # two consumers: occurrence explode + final rebuild join
+    base = cache(base, owner="dedup.strip_duplicate_spans.base")
     occ = base.filter(F.length("t") >= span).select(
         "id",
         F.explode(
@@ -1176,7 +1178,8 @@ def strip_duplicate_spans(
         ).alias("pos"),
         "t",
     ).select("id", "pos", F.xxhash64(F.col("t").substr(F.col("pos"), F.lit(span))).alias("sh"))
-    occ = persist_keyed(spread(occ, "sh"))  # grouping + removal join (both keyed sh)
+    # grouping + removal join (both keyed sh)
+    occ = cache(spread(occ, "sh"), keyed=True, owner="dedup.strip_duplicate_spans.occ")
     grp = (
         occ.groupBy("sh")
         .agg(F.countDistinct("id").alias("span_df"), F.min("id").alias("canon"))
@@ -1442,7 +1445,9 @@ def connected_components(
         if prev_sum is not None and new_sum == prev_sum:
             break
         prev_sum = new_sum
-    return labels
+    # the last round's cache outlives the call: the caller's plan reads it
+    # (a checkpointed last round is not a cache)
+    return cache(labels, owner="dedup.connected_components") if labels.is_cached else labels
 
 
 def resolve_duplicates(

@@ -246,25 +246,21 @@ def score_quality_lr(
     weights, bias, labels, feats, err_frame, n_docs = _fit(
         df, text_col, id_col, dim, iters
     )
-    if n_docs == 0:  # nothing to train on — empty result, not a div-by-zero
-        out = labels.select(
-            "id", "label", F.lit(0).cast("long").alias("score_fp")
+    try:
+        if n_docs == 0:  # nothing to train on — empty result, not a div-by-zero
+            return labels.select(
+                "id", "label", F.lit(0).cast("long").alias("score_fp")
+            ).localCheckpoint(eager=True)
+        # Final scoring pass with the trained weights, materialized via
+        # localCheckpoint so the two training caches can be RELEASED here:
+        # .persist() blocks are session-lifetime unless unpersisted (r6
+        # ADVICE — repeated library calls accumulated cached blocks).
+        return err_frame(weights, bias).select(
+            "id", "label", _hard_sigmoid_fp("logit").alias("score_fp")
         ).localCheckpoint(eager=True)
+    finally:
         labels.unpersist()
         feats.unpersist()
-        return out
-    # Final scoring pass with the trained weights, materialized via
-    # localCheckpoint so the two training caches can be RELEASED here:
-    # .persist() blocks are session-lifetime unless unpersisted (r6
-    # ADVICE — repeated library calls accumulated cached blocks), while
-    # checkpoint blocks are reclaimed by the ContextCleaner when the
-    # returned frame is dropped.
-    out = err_frame(weights, bias).select(
-        "id", "label", _hard_sigmoid_fp("logit").alias("score_fp")
-    ).localCheckpoint(eager=True)
-    labels.unpersist()
-    feats.unpersist()
-    return out
 
 
 def train_quality_lr(

@@ -17,6 +17,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from ..partitioning import cache
+
 
 def _hash_unit(key: Column) -> Column:
     """Uniform [0, 1) from the first 13 hex digits of md5(key) — 52 bits,
@@ -239,8 +241,8 @@ def sample_to_budget(
     # unit (measured 16 FileScans in the un-cached plan; at 100 TB that is
     # 3+ full corpus reads). Narrow rows (key, source, w, u, bucket,
     # budget), MEMORY_AND_DISK by default so big corpora spill instead of
-    # OOMing. Cache ownership follows the session-cache policy in SCALE.md.
-    base = base.persist()
+    # OOMing. The returned plan reads it: the next call releases it.
+    base = cache(base, owner="sampling.sample_to_budget")
 
     per_bucket = base.groupBy("source", "bucket").agg(F.sum("w").alias("bw"))
     wb = (

@@ -47,7 +47,7 @@ from ..functions.refhash import (
     PQ_SUM_SCALE,
 )
 from ..functions.vectors import to_double_array
-from ..partitioning import spread
+from ..partitioning import cache, spread
 from .search import _rank_within
 
 # Fixed-point resolution for IVF's Lloyd sums: unit coordinates floored
@@ -552,18 +552,18 @@ def ivf_topk(
     recall/compute trades via ``n_probe``.
 
     Cache lifecycle: the returned frame is lazy and REFERENCES the
-    persisted prepped corpus (training and the index both read it), the
-    same contract as ivfpq_topk.
+    cached prepped corpus (training and the index both read it), so the
+    cache outlives the call; the next ivf_topk call releases it
+    (``partitioning.cache``), as in ivfpq_topk.
     """
     if dim is None:
         dim = _infer_dim(corpus, vec_col)
     # persist: the prepped corpus (id, unit-vec) is consumed iters+1 times
     # (every Lloyd pass + the final assignment); without it each pass
     # re-runs scan -> normalize -> spread.
-    c = _ivf_prep(corpus, corpus_id, vec_col).persist()
+    c = cache(_ivf_prep(corpus, corpus_id, vec_col), owner="similarity.ivf_topk")
     cents = train_ivf(corpus, corpus_id, vec_col, n_centroids, iters, dim, _prepped=c)
     if cents is None:  # empty/all-NULL corpus
-        c.unpersist()
         return _no_hits(corpus.sparkSession, query_id, corpus_id)
     index = encode_ivf(corpus, cents, id_col=corpus_id, vec_col=vec_col, _prepped=c)
     return ivf_search(
@@ -1390,20 +1390,14 @@ def ivfpq_topk(
 
     # Cache lifecycle: the returned frame is lazy and REFERENCES this cache
     # (train, encode and the refine re-join all read it), so this function
-    # cannot unpersist it before the caller consumes the result. Callers
-    # invoking ivfpq_topk repeatedly in one session should release it
-    # (spark.catalog.clearCache() or unpersist) between calls — the same
-    # documented contract as q_search_bm25's persisted index.
-    c = _ivfpq_prep(corpus, corpus_id, vec_col, dim).persist()
+    # cannot unpersist it before the caller consumes the result; the next
+    # ivfpq_topk call releases it (partitioning.cache).
+    c = cache(_ivfpq_prep(corpus, corpus_id, vec_col, dim), owner="similarity.ivfpq_topk")
     coarse, cq = train_ivfpq(
         corpus, corpus_id, vec_col, n_centroids, ivf_iters, m, ksub, pq_iters,
         dim, _prepped=c, residual=residual,
     )
-    if coarse is None:
-        # empty-corpus early return: the empty frame never references the
-        # cache, so release it here instead of leaking session-lifetime
-        # cached blocks (r7 ADVICE)
-        c.unpersist()
+    if coarse is None:  # empty corpus
         return _no_hits(corpus.sparkSession, query_id, corpus_id, "score_fp long")
     index = encode_ivfpq(
         corpus, coarse, cq, dim, id_col=corpus_id, vec_col=vec_col,

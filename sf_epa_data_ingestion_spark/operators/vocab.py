@@ -39,38 +39,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
-from ..partitioning import persist_keyed, spread
+from ..partitioning import cache, spread
 
 
 #: Word delimiter: anything outside [a-z0-9] after lowercasing. Shared by
 #: the Spark operators and the DuckDB oracles (RE2-compatible: no
 #: lookaround, no backreference).
 WORD_DELIM = "[^a-z0-9]+"
-
-
-#: Persisted frames still live from the most recent call of each operator
-#: in this module (r15 VERDICT #4 / ADVICE: ``bigram_lm_scores`` and
-#: ``dsir_log_weights`` persist shared subtrees that the RETURNED lazy
-#: plan still reads, so they cannot be unpersisted before the caller's
-#: action — but never releasing them leaks one call's token/bigram blocks
-#: per call in a long-lived session). Each new call releases the previous
-#: call's blocks first, bounding accumulation at ONE call's footprint per
-#: operator. Contract: a result DataFrame from an EARLIER call of the
-#: same operator stays value-correct after a later call (plans recompute
-#: from source when their cache is gone) — it just loses its cache.
-_LIVE_PERSISTS: dict[str, list] = {}
-
-
-def _release_previous(op: str) -> None:
-    for frame in _LIVE_PERSISTS.pop(op, []):
-        try:
-            frame.unpersist()
-        except Exception:
-            pass  # hygiene only — never fail a query over cache release
-
-
-def _register_persists(op: str, *frames: DataFrame) -> None:
-    _LIVE_PERSISTS[op] = list(frames)
 
 
 def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -162,7 +137,6 @@ def bigram_lm_scores(
     reused to score any number of corpora (score-only reruns skip the
     training shuffles).
     """
-    _release_previous("bigram_lm_scores")
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), WORD_DELIM), lambda w: w != F.lit("")
     )
@@ -183,12 +157,12 @@ def bigram_lm_scores(
     # same-session at sf0.1, values identical). The vocab collect below
     # is the first action, so it materializes this cache and the bigram
     # persist build then reads token arrays instead of raw text.
-    # persist_keyed (r16): docs carries spread(id); bigrams below is a
-    # narrow transform of it, so with BOTH caches' partitioning visible
-    # the final per-doc scoring aggregate reuses hashpartitioning(id)
-    # and the corpus-bigram-sized ENSURE_REQUIREMENTS exchange in front
-    # of it disappears (the model joins broadcast either way)
-    docs = persist_keyed(docs)
+    # keyed (r16): docs carries spread(id); bigrams below is a narrow
+    # transform of it, so with BOTH caches' partitioning visible the
+    # final per-doc scoring aggregate reuses hashpartitioning(id) and the
+    # corpus-bigram-sized ENSURE_REQUIREMENTS exchange in front of it
+    # disappears (the model joins broadcast either way)
+    docs = cache(docs, keyed=True, owner="vocab.bigram_lm_scores.docs")
     bigrams = docs.filter(F.size("__t") >= 2).select(
         "id",
         F.explode(
@@ -200,10 +174,9 @@ def bigram_lm_scores(
         ).alias("bg"),
     ).select("id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     # persist: training (2 aggregates) + scoring all consume the bigram
-    # rows. Lifetime: released at the NEXT bigram_lm_scores call
-    # (_LIVE_PERSISTS above) — the returned plan still reads both caches.
-    bigrams = persist_keyed(bigrams)
-    _register_persists("bigram_lm_scores", docs, bigrams)
+    # rows. The returned plan still reads both caches: the next call
+    # releases them.
+    bigrams = cache(bigrams, keyed=True, owner="vocab.bigram_lm_scores.bigrams")
 
     uni = bigrams.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     # V counts every distinct word (including final words that never open
@@ -262,7 +235,6 @@ def dsir_log_weights(
     documents' bigrams and a per-doc sum. The feature table is
     vocabulary-sized and broadcasts when it fits.
     """
-    _release_previous("dsir_log_weights")
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), WORD_DELIM), lambda w: w != F.lit("")
     )
@@ -288,19 +260,19 @@ def dsir_log_weights(
             ).alias("f"),
         )
     )
-    # persist_keyed: same id-partitioning argument as bigram_lm_scores -
-    # the per-doc scoring groupBy reuses the spread(id) carried through
-    # the narrow bigram transform (feats broadcasts)
-    bigrams = persist_keyed(bigrams)  # counts + totals + the scoring join
+    # keyed: same id-partitioning argument as bigram_lm_scores - the
+    # per-doc scoring groupBy reuses the spread(id) carried through the
+    # narrow bigram transform (feats broadcasts); read by counts, totals
+    # and the scoring join
+    bigrams = cache(bigrams, keyed=True, owner="vocab.dsir_log_weights.bigrams")
 
     counts = bigrams.groupBy("f").agg(
         F.sum(F.when(F.col("__is_target"), 1).otherwise(0)).alias("ct"),
         F.sum(F.when(F.col("__is_target"), 0).otherwise(1)).alias("cs"),
     )
-    counts = counts.persist()  # totals aggregate + scoring join
-    # released at the NEXT dsir_log_weights call (_LIVE_PERSISTS): the
-    # returned scoring plan reads both caches
-    _register_persists("dsir_log_weights", bigrams, counts)
+    # totals aggregate + scoring join; the returned scoring plan reads
+    # both caches: the next call releases them
+    counts = cache(counts, owner="vocab.dsir_log_weights.counts")
     tot = counts.agg(
         F.sum("ct").alias("nt"), F.sum("cs").alias("ns"), F.count(F.lit(1)).alias("b")
     ).collect()[0]

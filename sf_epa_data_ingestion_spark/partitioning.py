@@ -8,6 +8,9 @@ estimate — a few MB of doc ids upstream of an expensive per-row expression
 and the whole stage runs on one core. ``df.repartition(n, col)`` is
 REPARTITION_BY_NUM, which AQE must preserve, so the explicit form is the
 only reliable way to fan CPU-bound (rather than byte-bound) work out.
+
+``cache`` persists a frame that outlives its call under one release
+rule (SCALE.md "Cache ownership").
 """
 
 from __future__ import annotations
@@ -17,6 +20,8 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+
+from .session import scoped_conf
 
 
 def parallelism(df: DataFrame, factor: int = 1) -> int:
@@ -47,7 +52,7 @@ def plan_size_bytes(df: DataFrame) -> int | None:
 #: Plan-estimate size (for a parquet scan: compressed file bytes) above
 #: which CPU-skew oversubscription (spread factor > 1) pays for itself.
 #: Below it the extra partitions are pure task/scheduler overhead: with
-#: the partitioning now visible through persist_keyed caches, downstream
+#: the partitioning now visible through keyed caches, downstream
 #: stages run at the cache's partition count with no AQE coalescing, so a
 #: factor tuned for big inputs costs small ones real time. Measured on
 #: the PPJoin pairs stage: factor 4 on the 0.6 MB (compressed) sf0.1
@@ -72,50 +77,43 @@ def adaptive_factor(df: DataFrame, factor: int) -> int:
     return factor
 
 
-#: Serializes ``persist_keyed``'s scoped AQE switch across threads.
-_AQE_SWITCH = threading.Lock()
+#: The frame each owner's latest call cached (see ``cache``).
+_OWNED: dict[str, DataFrame] = {}
+_OWNED_LOCK = threading.Lock()
 
 
-def persist_keyed(df: DataFrame) -> DataFrame:
-    """``persist()`` whose cached hash partitioning stays VISIBLE to
-    consumers (r16, guide §2.4: two operations keyed the same way should
-    share one exchange).
+def cache(df: DataFrame, *, keyed: bool = False, owner: str | None = None) -> DataFrame:
+    """``df.persist()`` for a frame the operator's RETURNED lazy plan still
+    reads, so the operator cannot release it (a frame released before
+    its function returns keeps Spark's own ``persist``/``unpersist``).
 
-    With AQE on, ``persist()`` wraps the cached plan in an
-    AdaptiveSparkPlan whose output partitioning is unknown until runtime,
-    so a downstream join/groupBy on the SAME key the frame was
-    ``spread()`` by re-shuffles it anyway (measured on the PPJoin
-    candidate join: both sides of the sh-keyed self-join re-exchanged
-    hashpartitioning(sh, 128) -> hashpartitioning(sh, 32),
-    ENSURE_REQUIREMENTS, even though both read the one cache). Scoping
-    ``spark.sql.adaptive.enabled=false`` around the ``persist()`` call —
-    InMemoryRelation compiles its cached plan with the session state at
-    cache REGISTRATION, not first materialization — keeps the cached
-    plan non-adaptive, so InMemoryTableScan exposes the explicit
-    repartition's hashpartitioning and every same-key consumer reuses it
-    exchange-free.
+    ``owner`` names the frame's slot: ``"<operator>"``, or
+    ``"<operator>.<frame>"`` when an operator caches several. A call
+    registers its frame, then releases the slot's previous frame unless
+    both are the same plan (``sameSemantics``): a session holds at most
+    one call's blocks per slot, and an identical call reuses them (its
+    ``persist()`` is a no-op; releasing first would rebuild). An earlier
+    call's result stays value-correct: it recomputes from its source.
 
-    Cost: the cached subtree itself loses AQE (no runtime coalescing /
-    skew handling INSIDE the cache build — its shuffle widths come from
-    ``spark.sql.shuffle.partitions`` and any explicit ``spread``).
-    Use ONLY on frames built with an explicit ``spread(df, key)`` whose
-    downstream consumers re-key on that same key; AQE stays on for the
-    rest of the query.
-
-    Thread safety: the read → switch off → ``persist()`` → restore
-    sequence runs under ``_AQE_SWITCH``, so two overlapping calls cannot
-    restore each other's ``false`` and leave AQE off for the session.
-    The conf is session-global, though: another thread that PLANS a
-    query during that short window still sees AQE off.
+    ``keyed=True`` keeps the cached hash partitioning VISIBLE (guide
+    §2.4). Under AQE the cached plan is an AdaptiveSparkPlan of unknown
+    output partitioning, so a same-key join/groupBy re-exchanges a frame
+    ``spread()`` for it (the PPJoin sh-keyed self-join re-exchanged both
+    sides). InMemoryRelation compiles its plan at registration, so AQE
+    is scoped off around ``persist()`` only; the cached subtree loses
+    AQE coalescing. Use it only on a ``spread(df, key)`` frame whose
+    consumers re-key on that key.
     """
-    conf = df.sparkSession.conf
-    with _AQE_SWITCH:
-        old = conf.get("spark.sql.adaptive.enabled")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return df.persist()
-        finally:
-            conf.set("spark.sql.adaptive.enabled", old)
+    if not df.is_cached:  # a frame the caller persisted is only registered
+        with scoped_conf(df.sparkSession, {"spark.sql.adaptive.enabled": "false"} if keyed else {}):
+            df.persist()
+    if owner is not None:
+        with _OWNED_LOCK:
+            prev, _OWNED[owner] = _OWNED.get(owner), df
+        # a frame of an earlier session is skipped: its blocks went with it
+        if prev is not None and prev.sparkSession is df.sparkSession and not prev.sameSemantics(df):
+            prev.unpersist()
+    return df
 
 
 def salted_join(

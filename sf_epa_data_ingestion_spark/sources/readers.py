@@ -18,6 +18,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scoped_conf
+
 #: The driver-generated synthetic tables (TESTDATA.md).
 TABLES = (
     "region",
@@ -71,7 +73,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     table) are read via ``spark.sql.legacy.parquet.nanosAsLong`` and the
     raw nanos are truncated to microsecond TIMESTAMP_NTZ — the same
     floor-truncation DuckDB applies, so oracle values line up exactly.
-    Opened tables are memoized per session (see ``_TABLE_CACHE``).
+    Both that conf and a UTC session time zone are scoped to the read
+    and the column derivation: the frame keeps its long-typed scan and
+    its UTC cast once they are restored, and the caller's session keeps
+    its own values. Opened tables are memoized per session (see
+    ``_TABLE_CACHE``).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
@@ -85,29 +91,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if key is not None:
         hit = _TABLE_CACHE.get(key)
         if hit is not None:
-            df, had_nanos = hit
-            if had_nanos:
-                # the legacy-nanos conf is consulted when the scan
-                # executes, not when the plan was built — re-assert it
-                # so a cached frame survives an intervening conf flip
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                spark.conf.set("spark.sql.session.timeZone", "UTC")
-            return df
+            return hit
     nanos = _nanos_timestamp_cols(path)
     if not nanos:
         df = spark.read.parquet(path)
     else:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(path)
-        for c in nanos:
-            df = df.withColumn(
-                c, F.timestamp_micros(F.expr(f"`{c}` div 1000")).cast("timestamp_ntz")
-            )
+        utc_nanos = {
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+            "spark.sql.session.timeZone": "UTC",
+        }
+        with scoped_conf(spark, utc_nanos):
+            df = spark.read.parquet(path)
+            for c in nanos:
+                df = df.withColumn(
+                    c, F.timestamp_micros(F.expr(f"`{c}` div 1000")).cast("timestamp_ntz")
+                )
     if key is not None:
         if len(_TABLE_CACHE) >= 64:
             _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
-        _TABLE_CACHE[key] = (df, bool(nanos))
+        _TABLE_CACHE[key] = df
     return df
 
 

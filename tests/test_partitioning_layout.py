@@ -77,12 +77,12 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_items_b")
 
 
-def test_persist_keyed_exposes_cache_partitioning(spark):
+def test_keyed_cache_exposes_cache_partitioning(spark):
     """r16: persist() under AQE wraps the cached plan in an
     AdaptiveSparkPlan whose partitioning is invisible, so a same-key
-    self-join re-exchanges BOTH sides; persist_keyed must keep the
+    self-join re-exchanges BOTH sides; cache(keyed=True) must keep the
     cache's hashpartitioning visible so the join runs exchange-free."""
-    from sf_epa_data_ingestion_spark.partitioning import persist_keyed
+    from sf_epa_data_ingestion_spark.partitioning import cache
 
     base = spark.range(0, 2000).select(
         (F.col("id") % 37).alias("k"), F.col("id").alias("v")
@@ -90,11 +90,12 @@ def test_persist_keyed_exposes_cache_partitioning(spark):
     # distinct lineages: the CacheManager dedups by logical plan, so an
     # identical plan would silently reuse the FIRST (AQE-wrapped) cache
     plain = base.repartition(8, "k").persist()
-    keyed = persist_keyed(
+    keyed = cache(
         spark.range(0, 2000)
         .select((F.col("id") % 37).alias("k"), F.col("id").alias("v"))
         .where(F.col("v") >= 0)
-        .repartition(8, "k")
+        .repartition(8, "k"),
+        keyed=True,
     )
     try:
 
@@ -136,29 +137,29 @@ def test_adaptive_factor_gates_on_plan_size(spark):
     assert adaptive_factor(small, 1) == 1  # factor 1 is never raised
 
 
-def test_persist_keyed_overlapping_calls_leave_aqe_on(spark, monkeypatch):
-    """Two threads in persist_keyed at once, ordered by events inside a
-    wrapped persist(): the second call reads the conf while the first is
-    inside persist(), and restores last. Unserialized, the second call
-    saves the first's ``false`` and restores it, leaving AQE off for the
-    rest of the session."""
-    from sf_epa_data_ingestion_spark.partitioning import persist_keyed
+def test_keyed_cache_overlapping_calls_leave_aqe_on(spark, monkeypatch):
+    """Two threads in cache(keyed=True) at once, ordered by events inside
+    a wrapped persist(): the first enters, the second enters while the
+    first is inside persist(), the first exits while the second is still
+    inside. The second must still see AQE off, and once both are out AQE
+    is back on for the session. A lock held across persist() would keep
+    the second out until the first is done, and the waits below would
+    never be met."""
+    from sf_epa_data_ingestion_spark.partitioning import cache
 
-    first_inside = threading.Event()
     second_inside = threading.Event()
     first_done = threading.Event()
+    seen_by_second = []
     frame_cls = type(spark.range(0))
     plain_persist = frame_cls.persist
 
     def ordered_persist(self, *args, **kwargs):
         if threading.current_thread().name == "first":
-            first_inside.set()
-            # hold persist() until the second call is inside it too; when
-            # the switch is serialized it cannot get there, so time out
-            second_inside.wait(3)
+            assert second_inside.wait(60)
         else:
             second_inside.set()
-            first_done.wait(60)
+            assert first_done.wait(60)
+            seen_by_second.append(spark.conf.get("spark.sql.adaptive.enabled"))
         return plain_persist(self, *args, **kwargs)
 
     monkeypatch.setattr(frame_cls, "persist", ordered_persist)
@@ -166,7 +167,7 @@ def test_persist_keyed_overlapping_calls_leave_aqe_on(spark, monkeypatch):
 
     def call(name, n):
         try:
-            cached.append(persist_keyed(spark.range(0, n).repartition(2, "id")))
+            cached.append(cache(spark.range(0, n).repartition(2, "id"), keyed=True))
         except Exception as exc:  # surfaced by the assert below
             errors.append(exc)
         finally:
@@ -174,16 +175,18 @@ def test_persist_keyed_overlapping_calls_leave_aqe_on(spark, monkeypatch):
                 first_done.set()
 
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    threads = [
+        threading.Thread(target=call, args=("first", 100), name="first"),
+        threading.Thread(target=call, args=("second", 200), name="second"),
+    ]
     try:
-        first = threading.Thread(target=call, args=("first", 100), name="first")
-        second = threading.Thread(target=call, args=("second", 200), name="second")
-        first.start()
-        assert first_inside.wait(60)
-        second.start()
-        first.join(120)
-        second.join(120)
-        assert not first.is_alive() and not second.is_alive()
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads)
         assert errors == []
+        assert seen_by_second == ["false"]
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -37,21 +37,37 @@ def test_load_table_reopens_on_rewrite(spark, tmp_path):
     assert b.count() == 5
 
 
-def test_load_table_nanos_conf_reasserted_on_hit(spark, tmp_path):
+def test_load_table_leaves_session_conf_and_reads_utc(spark, tmp_path):
+    """A nanos table loads under its own conf scope: a session at a
+    non-UTC zone with the legacy-nanos reader off keeps both after the
+    load and after a memo hit, and the frame (and a query derived from
+    it, planned under the caller's conf) still reads the UTC values."""
     # fabricate a TIMESTAMP(NANOS) table (the driver's testdata has
     # carried micros since r14, but the legacy-reader path must hold)
+    import datetime
+
     import pyarrow as pa
     import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
 
-    t = pa.table({"ts": pa.array([1_700_000_000_000_000_123], pa.timestamp("ns"))})
+    nanos = 1_700_000_000_000_000_123  # 2023-11-14 22:13:20 UTC, +123 ns
+    t = pa.table({"ts": pa.array([nanos], pa.timestamp("ns"))})
     pq.write_table(t, str(tmp_path / "nanos.parquet"))
-    df = readers.load_table(spark, str(tmp_path), "nanos")
-    assert df.count() == 1  # conf was set; truncated micros read works
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-    hit = readers.load_table(spark, str(tmp_path), "nanos")  # memo hit
-    assert hit is df
-    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
-    assert hit.count() == 1
+    utc = datetime.datetime(2023, 11, 14, 22, 13, 20)
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    try:
+        df = readers.load_table(spark, str(tmp_path), "nanos")
+        hit = readers.load_table(spark, str(tmp_path), "nanos")  # memo hit
+        assert hit is df
+        assert spark.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles"
+        assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) is None
+        assert [r["ts"] for r in df.collect()] == [utc]
+        day = df.select(F.to_date("ts").alias("d")).first()["d"]
+        assert day == utc.date()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
 
 
 def test_load_ivf_index_memoizes_and_reopens(spark, tmp_path):

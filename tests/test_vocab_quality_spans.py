@@ -340,41 +340,3 @@ def test_strip_dup_spans_short_docs_pass_through(spark):
     )
     rows = {r["id"]: r for r in dedup.strip_duplicate_spans(df, span=40).collect()}
     assert rows[1]["clean_text"] == "short" and rows[2]["clean_text"] == "short"
-
-
-def test_vocab_persists_bounded_across_calls(spark):
-    """r16 (r15 VERDICT #4/ADVICE): bigram_lm_scores and dsir_log_weights
-    persist shared subtrees the returned plan reads, so they cannot
-    unpersist before the caller's action — but repeated calls in one
-    session must not accumulate blocks. Each call releases the previous
-    call's frames, bounding the footprint at one call's blocks per
-    operator, and results stay identical call over call."""
-
-    def n_persisted() -> int:
-        jsc = spark.sparkContext._jsc
-        return jsc.getPersistentRDDs().size()
-
-    df = spark.createDataFrame(
-        [(1, "a b a c"), (2, "a b d e"), (3, "solo"), (4, "b a c d")],
-        "doc_id long, text string",
-    )
-    first = sorted(map(tuple, vocab.bigram_lm_scores(df).collect()))
-    after_first = n_persisted()
-    for _ in range(3):
-        again = sorted(map(tuple, vocab.bigram_lm_scores(df).collect()))
-        assert again == first
-    assert n_persisted() <= after_first  # no growth call over call
-
-    tgt = F.col("doc_id") <= 2
-    first_w = sorted(map(tuple, vocab.dsir_log_weights(df, tgt).collect()))
-    after_first = n_persisted()
-    for _ in range(3):
-        again_w = sorted(map(tuple, vocab.dsir_log_weights(df, tgt).collect()))
-        assert again_w == first_w
-    assert n_persisted() <= after_first
-
-    # an EARLIER call's result frame stays value-correct after a later
-    # call (its cache is gone; the plan recomputes from source)
-    held = vocab.bigram_lm_scores(df)
-    vocab.bigram_lm_scores(df).collect()
-    assert sorted(map(tuple, held.collect())) == first
