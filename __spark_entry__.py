@@ -60,7 +60,7 @@ from sf_epa_data_ingestion_spark.session import scoped_conf
 from sf_epa_data_ingestion_spark.sources import readers
 from sf_epa_data_ingestion_spark.storage import txindex
 from sf_epa_data_ingestion_spark.streaming import events as ev
-from sf_epa_data_ingestion_spark.streaming import vectorindex
+from sf_epa_data_ingestion_spark.streaming import semdedup, vectorindex
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -1724,21 +1724,22 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions/refhash.ref_ivf_probes replays it bit-for-bit — the last
     rows-only query graduated to a golden-fixture hash-exact oracle.
 
-    Since r8 the query SERVES from the persisted cid-partitioned
-    assignment table (materialize_ivf_index — ivf_topk's own scale note,
-    "the assignment is written once as a bucketed table and reused
-    across query batches", made concrete): Lloyd runs once per corpus;
-    the graded plan is a literal-pruned probe join + the same cosine
-    fold. Bit-identical to in-query ivf_topk (pinned by test; fixture
-    unchanged)."""
+    The query SERVES from the k-means assignment persisted once per
+    corpus as a SemDeDup generation (``_kmeans_generation`` — ivf_topk's
+    own scale note, "the assignment is written once and reused across
+    query batches", made concrete): Lloyd runs once per corpus; the
+    graded plan is a probe join over a txlog file-skipping read of the
+    probed cells + the same cosine fold. Bit-identical to in-query
+    ivf_topk (pinned by test; fixture unchanged)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    index, cents, _meta = similarity.load_ivf_index(
-        spark, _ivf_index_dir(spark, sf_dir)
+    _gen, cents, state = _kmeans_generation(spark, sf_dir)
+    return similarity.ivf_search(
+        None, queries, cents, k=10, n_probe=4,
+        index_for_cids=lambda cids: semdedup.state_assignments(state, cids),
     )
-    return similarity.ivf_search(index, queries, cents, k=10, n_probe=4)
 
 
 # Cell assignments (rank 1) and probe lists (ranks 1..4) join from the
@@ -1907,8 +1908,9 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     All three operator surfaces still execute end-to-end in the one
     graded row, tagged by ``method``: exact brute-force cosine top-k
     (the recall baseline), seeded-hyperplane LSH bucket join, and the
-    persisted cid-partitioned IVF probe. Each leg's plan is unchanged
-    from its standalone row — the union is the only addition."""
+    IVF probe of a persisted k-means generation. Each leg's plan is
+    unchanged from its standalone row — the union is the only
+    addition."""
     bf = q_ann_bruteforce(spark, sf_dir).withColumn("method", F.lit("bruteforce"))
     lsh = q_ann_lsh(spark, sf_dir).withColumn("method", F.lit("lsh"))
     ivf = q_ann_ivf(spark, sf_dir).withColumn("method", F.lit("ivf"))
@@ -2345,21 +2347,26 @@ SEMDEDUP_CENTROIDS = 64  # cluster count ∝ corpus size is SemDeDup's knob:
                          # ~16 rows/cluster at the graded sf0.01 union
 
 
-def _semdedup_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Persisted cid-partitioned k-means assignment over the PLANTED
-    union corpus (the SemDeDup serving layout — same machinery as
-    _ivf_index_dir, different corpus and a finer quantizer). Content-
-    keyed on the embeddings table: the planted half is a pure function
-    of it."""
-    return _materialized_dir(
-        sf_dir,
-        "embeddings",
-        "semdedup_index_v1",
-        lambda tmp: similarity.materialize_ivf_index(
-            _semdedup_corpus(spark, sf_dir), tmp, corpus_id="vec_id",
-            vec_col="embedding", dim=64, n_centroids=SEMDEDUP_CENTROIDS,
-        ),
-    )
+def _kmeans_generation(spark: SparkSession, sf_dir: str, planted: bool = False):
+    """The one host of the rows' k-means assignments, a SemDeDup
+    generation built straight from its corpus
+    (``semdedup.retrain_semdedup_generation`` on an empty root): the
+    embeddings table at 16 cells (ann_suite's ivf leg) or, ``planted``,
+    the planted union at SEMDEDUP_CENTROIDS cells (semantic_dedup,
+    semdedup_stream_replay). Returns the serving (gen, cents, state)."""
+    import json
+
+    n_centroids = SEMDEDUP_CENTROIDS if planted else 16
+
+    def build(tmp):
+        corpus = _semdedup_corpus(spark, sf_dir) if planted else _t(spark, sf_dir, "embeddings")
+        semdedup.retrain_semdedup_generation(spark, tmp, "kmeans", n_centroids, corpus=corpus)
+        with open(os.path.join(tmp, "_meta.json"), "w") as f:
+            json.dump({"host": "generational", "n_centroids": n_centroids}, f)
+
+    tag = "tx_kmeans_planted" if planted else "tx_kmeans_embeddings"
+    root = _materialized_dir(sf_dir, "embeddings", tag, build)
+    return semdedup.current_semdedup_generation(spark, root)
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2371,16 +2378,18 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding_near_dup: LSH bands find near-identical pairs anywhere;
     SemDeDup finds same-meaning pairs and prescribes the survivor.
 
-    Serves from the persisted cid-partitioned assignment table over the
-    planted union corpus (train-once/serve-many like every r8 retrieval
-    query); the oracle replays the fixed-point Lloyd from golden
-    fixtures (tools/make_golden_semdedup.py — assignment + frozen
-    centroid vectors, corpus-hash-guarded) and re-derives pair cosines
-    and the keep rule in SQL over the same unit vectors."""
-    index, cents, _meta = similarity.load_ivf_index(
-        spark, _semdedup_index_dir(spark, sf_dir)
+    Serves from the k-means assignment of the planted union corpus,
+    persisted once as a SemDeDup generation (``_kmeans_generation``,
+    train-once/serve-many like every retrieval query): its state renamed
+    to the operator's (vec_id, __u, cid) frame. The oracle replays the
+    fixed-point Lloyd from golden fixtures (tools/make_golden_semdedup.py
+    — assignment + frozen centroid vectors, corpus-hash-guarded) and
+    re-derives pair cosines and the keep rule in SQL over the same unit
+    vectors."""
+    _gen, cents, state = _kmeans_generation(spark, sf_dir, planted=True)
+    return similarity.semantic_dedup_pairs(
+        semdedup.state_assignments(state), cents, threshold=0.95
     )
-    return similarity.semantic_dedup_pairs(index, cents, threshold=0.95)
 
 
 def q_semdedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2418,11 +2427,8 @@ def q_semdedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from sf_epa_data_ingestion_spark.storage import TxTable
-    from sf_epa_data_ingestion_spark.streaming.semdedup import semantic_dedup_monitor
 
-    _index, cents, _meta = similarity.load_ivf_index(
-        spark, _semdedup_index_dir(spark, sf_dir)
-    )
+    _gen, cents, _state = _kmeans_generation(spark, sf_dir, planted=True)
     corpus = _semdedup_corpus(spark, sf_dir)
     # fixed per-process dir, wiped on entry (see q_merge_upsert_tx)
     root = os.path.join(tempfile.gettempdir(), f"semdedup_replay_{os.getpid()}")
@@ -2436,7 +2442,7 @@ def q_semdedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = TxTable(spark, os.path.join(root, "decisions")).create_empty(
         "cid int, keep_id long, drop_id long, cosine_sim double"
     )
-    sink = semantic_dedup_monitor(
+    sink = semdedup.semantic_dedup_monitor(
         state, out, "sd-replay", cents, threshold=0.95
     )
     # the "stream source" materialized once: without this every micro-batch
@@ -3096,20 +3102,6 @@ def _tx_vector_index_dir(
 
     return _materialized_dir(
         sf_dir, "embeddings", f"tx_vector_index_c{n_centroids}", build
-    )
-
-
-def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Persisted cid-partitioned IVF assignment table + frozen centroids
-    (similarity.materialize_ivf_index) over the embeddings table."""
-    return _materialized_dir(
-        sf_dir,
-        "embeddings",
-        "ivf_index_v1",
-        lambda tmp: similarity.materialize_ivf_index(
-            _t(spark, sf_dir, "embeddings"), tmp, corpus_id="vec_id",
-            vec_col="embedding", dim=64, n_centroids=16,
-        ),
     )
 
 

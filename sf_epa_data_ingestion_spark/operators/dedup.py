@@ -1270,8 +1270,10 @@ def connected_components(
     transfers the duplicate rows too. Larger edge sets take the distributed
     min-label-propagation loop below — the same AQE-sized joins as
     before, the only path whose cost grows with data. The count() that
-    picks the path materializes the localCheckpoint the loop needs
-    anyway, so the probe is not an extra pass.
+    picks the path materializes a cache of the edge list that the next
+    read (the collect, or the loop's deduplicated checkpoint) reuses, so
+    the probe is not an extra pass; the cache is released before the
+    call returns.
 
     Algorithm (distributed path): min-label propagation. Each node starts
     labeled with itself; every iteration each node takes the minimum label among
@@ -1321,13 +1323,24 @@ def connected_components(
     # duplicate edges as no-ops, so the common driver path skips a whole
     # dedup shuffle stage of the (tiny) edge list; only the distributed
     # loop — where duplicate edges would multiply every iteration's join
-    # volume — pays for it, after the split.
-    edges = edges.localCheckpoint(eager=False)
-
-    n_edges = edges.count()  # also materializes the checkpoint
+    # volume — pays for it, after the split. The edge list is cached for
+    # the count that picks the path and the one read that follows, and
+    # released inside the call: a local checkpoint stays listed in the
+    # session for its life, so only the loop, whose lineage it truncates,
+    # makes one.
+    cached = edges.persist()
+    try:
+        n_edges = cached.count()
+        if n_edges <= driver_edge_threshold:
+            pdf = cached.toPandas()  # Arrow path: two narrow columns
+        else:
+            # the loop's join volume IS duplicate-sensitive — dedup the
+            # edge list once here (the driver path never pays this shuffle)
+            edges = cached.distinct().localCheckpoint(eager=True)
+    finally:
+        cached.unpersist()
     if n_edges <= driver_edge_threshold:
         spark = pairs.sparkSession
-        pdf = edges.toPandas()  # Arrow path: two narrow columns
         parent: dict = {}
 
         def find(x):
@@ -1358,9 +1371,6 @@ def connected_components(
             ),
         )
 
-    # the loop's join volume IS duplicate-sensitive — dedup the edge
-    # list once here (the driver path above never pays this shuffle)
-    edges = edges.distinct().localCheckpoint(eager=False)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()

@@ -49,7 +49,7 @@ from sf_epa_data_ingestion_spark.functions.refhash import (
     qlr_update,
 )
 from sf_epa_data_ingestion_spark.operators.dedup import normalized_text
-from sf_epa_data_ingestion_spark.partitioning import spread
+from sf_epa_data_ingestion_spark.partitioning import cache, spread
 
 __all__ = [
     "hashed_presence_features",
@@ -248,16 +248,16 @@ def score_quality_lr(
     )
     try:
         if n_docs == 0:  # nothing to train on — empty result, not a div-by-zero
-            return labels.select(
-                "id", "label", F.lit(0).cast("long").alias("score_fp")
-            ).localCheckpoint(eager=True)
-        # Final scoring pass with the trained weights, materialized via
-        # localCheckpoint so the two training caches can be RELEASED here:
-        # .persist() blocks are session-lifetime unless unpersisted (r6
-        # ADVICE — repeated library calls accumulated cached blocks).
-        return err_frame(weights, bias).select(
-            "id", "label", _hard_sigmoid_fp("logit").alias("score_fp")
-        ).localCheckpoint(eager=True)
+            out = labels.select("id", "label", F.lit(0).cast("long").alias("score_fp"))
+        else:  # final scoring pass with the trained weights
+            out = err_frame(weights, bias).select(
+                "id", "label", _hard_sigmoid_fp("logit").alias("score_fp")
+            )
+        # the returned plan reads its own cache, materialized here so the
+        # two training caches can be RELEASED before returning
+        out = cache(out, owner="quality_model.score_quality_lr")
+        out.count()
+        return out
     finally:
         labels.unpersist()
         feats.unpersist()

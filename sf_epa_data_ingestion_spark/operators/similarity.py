@@ -480,8 +480,9 @@ def train_ivf(
 ) -> list[list[float]]:
     """Train the IVF coarse quantizer only, returned as the plain
     centroid list (None on an empty/all-invalid corpus) — the frozen
-    model ``encode_ivf``/``ivf_search`` and the persisted layout
-    (``materialize_ivf_index``) apply without retraining. Deterministic
+    model ``encode_ivf``/``ivf_search`` and a SemDeDup generation
+    (streaming/semdedup.py, whose model it is) apply without
+    retraining. Deterministic
     across any partitioning: hash-ordered seeds, stable-argsort
     assignment, int64 fixed-point cell sums (see ivf_topk's docstring
     for the full argument)."""
@@ -523,7 +524,7 @@ def ivf_topk(
     partitions the corpus into ``n_centroids`` cells; each query scores only
     the ``n_probe`` cells nearest its own vector. The in-query chain
     ``train_ivf`` -> ``encode_ivf`` -> ``ivf_search``, so serving from a
-    persisted layout is the same code path (and, as in ivfpq_topk, the
+    SemDeDup generation is the same code path (and, as in ivfpq_topk, the
     query set is probed driver-side: keep it interactive-small).
 
     Everything is deterministic — INCLUDING across partitionings: seeds
@@ -548,8 +549,9 @@ def ivf_topk(
     back to the driver — no shuffle of vectors; search is an equi-join on
     the centroid id, so per-query work drops from |corpus| to
     ~n_probe/n_centroids of it. At 100 TB the assignment (id, cid) is
-    written once as a bucketed table and reused across query batches;
-    recall/compute trades via ``n_probe``.
+    written once as a SemDeDup generation's state (range-partitioned on
+    cid, streaming/semdedup.py) and reused across query batches, each
+    probe a file-pruned read; recall/compute trades via ``n_probe``.
 
     Cache lifecycle: the returned frame is lazy and REFERENCES the
     cached prepped corpus (training and the index both read it), so the
@@ -581,7 +583,8 @@ def encode_ivf(
 ) -> DataFrame:
     """Apply a FROZEN IVF coarse quantizer: (id, __u, cid) rows — the
     "add" half of the IVF train/add split. This is what a batch job runs
-    to (re)build the persisted, cid-partitioned assignment table.
+    to (re)build the persisted assignment (a SemDeDup generation's
+    state, streaming/semdedup.py).
 
     cid must be a GENERATOR output, not a projection over the UDF: when
     queries share lineage with the corpus (self-search), constraint
@@ -603,18 +606,25 @@ def ivf_search(
     query_id: str = "query_id",
     vec_col: str = "embedding",
     n_probe: int = 4,
+    index_for_cids=None,
 ) -> DataFrame:
     """Query a PREBUILT IVF assignment table: ``index`` is the
-    (corpus_id, __u, cid) frame ``encode_ivf`` (or the persisted
-    ``materialize_ivf_index`` layout) maintains — this path never
+    (corpus_id, __u, cid) frame ``encode_ivf`` builds — this path never
     retrains. Queries are interactive-small by contract (the same
     collect the IVF-PQ serving path documents): their probes are
     computed driver-side (``_probe_cells``), so the probe lands on the
     index scan BOTH as a broadcast equi-join AND as a literal
-    ``cid IN (...)`` predicate — over the cid-partitioned persisted
-    layout that is a directory-level PartitionFilter (unprobed cells
-    never opened). Scoring is the sequential ``_dot`` cosine fold over
-    unit vectors."""
+    ``cid IN (...)`` predicate. Scoring is the sequential ``_dot``
+    cosine fold over unit vectors.
+
+    ``index_for_cids``: the provider contract of ``ivfpq_search`` — an
+    optional ``cids -> DataFrame`` invoked with the driver-side probed
+    cell set INSTEAD of filtering ``index`` (which may then be None).
+    A SemDeDup generation serves it (``semdedup.state_assignments``),
+    turning the probe into txlog file skipping, so files holding no
+    probed cell are never opened. Bit-identical by construction: the
+    provider must return exactly the rows
+    ``index.filter(cid.isin(probed))`` would."""
     spark = queries.sparkSession
     # no model (empty/all-NULL corpus at build time): no query is probed
     qrows = _ivf_prep(queries, query_id, vec_col).collect() if cents else []
@@ -632,9 +642,13 @@ def ivf_search(
     q_probe = spark.createDataFrame(
         probe_rows, f"{query_id} long, cid int, __qu array<double>"
     )
+    probed_cids = sorted({cid for _, cid, _ in probe_rows})
+    if index_for_cids is not None:
+        pruned = index_for_cids(probed_cids)
+    else:
+        pruned = index.filter(F.col("cid").isin(probed_cids))
     scored = (
-        index.filter(F.col("cid").isin(sorted({cid for _, cid, _ in probe_rows})))
-        .join(broadcast(q_probe), "cid")
+        pruned.join(broadcast(q_probe), "cid")
         .filter(F.col(query_id) != F.col(corpus_id))
         .select(
             query_id,
@@ -643,119 +657,6 @@ def ivf_search(
         )
     )
     return _rank_topk(scored, query_id, corpus_id, "cosine_sim", k)
-
-
-def _write_layout(path: str, encoded: DataFrame | None, n_centroids: int, meta: dict) -> None:
-    """The persisted IVF layout: the encoded frame directory-partitioned
-    by cid under ``index/`` (the search's literal probe predicate prunes
-    to the probed cells' directories; a no-model build writes none) plus
-    the frozen model and params in ``_meta.json``, written LAST so a
-    present meta file implies a complete index."""
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    if encoded is not None:
-        (
-            encoded.repartition(n_centroids, "cid")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(os.path.join(path, "index"))
-        )
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(meta, f)
-
-
-#: Session-scoped memo of opened IVF layouts (``_memo_layout``): a
-#: serving tier holds its frames open; reopening a parquet reader per
-#: query is ~90 ms of pure driver time.
-_VINDEX_CACHE: dict = {}
-
-
-def _memo_layout(spark, path: str, build):
-    """Session-scoped memo of an opened layout in ``_VINDEX_CACHE``: a
-    serving tier holds its index frames open for the process lifetime
-    instead of reopening parquet readers per query. Keyed by (Spark
-    application, real path, _meta.json mtime_ns) so a rebuilt layout —
-    tests rewrite them in place under tmp dirs — is reopened, never
-    served stale. DataFrames are immutable plans, so sharing them across
-    calls in one session is safe. Bounded FIFO, so test churn through
-    tmp-dir layouts can't grow it unbounded."""
-    import os
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(path),
-        os.stat(os.path.join(path, "_meta.json")).st_mtime_ns,
-    )
-    hit = _VINDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    out = build()
-    if len(_VINDEX_CACHE) >= 8:
-        _VINDEX_CACHE.pop(next(iter(_VINDEX_CACHE)))
-    _VINDEX_CACHE[key] = out
-    return out
-
-
-def _load_layout(spark, path: str) -> tuple:
-    """Read a ``_write_layout`` layout: (index, cents, meta). A no-model
-    layout (empty/all-NULL corpus at build time) loads as an EMPTY
-    (id, __u, cid) frame and None centroids, so downstream searches
-    return empty results instead of dereferencing None. Opened layouts
-    are memoized per session (``_memo_layout``)."""
-    import json
-    import os
-
-    def build():
-        with open(os.path.join(path, "_meta.json")) as f:
-            meta = json.load(f)
-        if meta["cents"] is None:
-            index = spark.createDataFrame(
-                [], f"{meta['corpus_id']} long, __u array<double>, cid int"
-            )
-        else:
-            index = spark.read.parquet(os.path.join(path, "index"))
-        return (index, meta["cents"], meta)
-
-    return _memo_layout(spark, path, build)
-
-
-def materialize_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    iters: int = 2,
-    dim: int | None = None,
-) -> None:
-    """Write the IVF tier as a PERSISTED layout (``_write_layout``): the
-    (id, __u, cid) assignment table plus the frozen centroids. The scale
-    note in ivf_topk's docstring — "the assignment is written once as a
-    bucketed table and reused across query batches" — made concrete;
-    training is a pure function of the corpus, so serving from this
-    layout is bit-identical to ivf_topk (pinned by test)."""
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
-    prepped = _ivf_prep(corpus, corpus_id, vec_col).persist()
-    try:
-        cents = train_ivf(corpus, corpus_id, vec_col, n_centroids, iters, dim, _prepped=prepped)
-        encoded = None if cents is None else encode_ivf(
-            corpus, cents, id_col=corpus_id, vec_col=vec_col, _prepped=prepped
-        )
-        _write_layout(
-            path, encoded, n_centroids,
-            {"corpus_id": corpus_id, "dim": dim, "n_centroids": n_centroids, "cents": cents},
-        )
-    finally:
-        prepped.unpersist()
-
-
-def load_ivf_index(spark, path: str):
-    """Read a ``materialize_ivf_index`` layout: (index, cents, meta)
-    (``_load_layout``)."""
-    return _load_layout(spark, path)
 
 
 def _round6_halfup(x: float) -> float:
@@ -793,12 +694,13 @@ def semantic_dedup_pairs(
     (SemDeDup on LAION/C4) actually run.
 
     ``index`` is the (corpus_id, __u, cid) assignment frame that
-    ``encode_ivf`` / the persisted ``materialize_ivf_index`` layout
-    maintains — training is NOT repeated here; the frozen ``cents`` are
-    only needed for the keep rule's centroid dots. Plan shape: one
-    shuffle on cid (the groupBy), then per-cluster Arrow-batched numpy
-    matmuls generate candidates (row-blocked so memory stays
-    block x cluster, not cluster^2 at once). At 100 TB the knob is
+    ``encode_ivf`` builds, or a SemDeDup generation's state read through
+    ``semdedup.state_assignments`` — training is NOT repeated here; the
+    frozen ``cents`` are only needed for the keep rule's centroid dots.
+    Plan shape: one shuffle on cid (the groupBy), then per-cluster
+    Arrow-batched numpy matmuls generate candidates (row-blocked so
+    memory stays block x cluster, not cluster^2 at once). At 100 TB the
+    knob is
     n_centroids ∝ n — cluster sizes stay bounded (the paper runs ~10^5
     clusters), clusters parallelize perfectly, and nothing corpus-scale
     ever crosses a partition boundary. Scoring determinism: candidate

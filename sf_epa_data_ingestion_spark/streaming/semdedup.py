@@ -38,13 +38,20 @@ streaming/vectorindex.py's train/add split applied to dedup):
 
 Scale notes (100 TB): per batch the probe touches |batch| x (cells hit
 by the batch) state rows — with cluster count ∝ corpus size that is
-|batch| x bounded-cluster work, and the cid partition filter keeps the
-scan to the probed directories. Centroid drift is answered by the
-GENERATION CUTOVER at the bottom of this module
+|batch| x bounded-cluster work, and txlog file skipping keeps the scan
+to the files whose cid bounds admit a hit cell. Centroid drift is
+answered by the GENERATION CUTOVER at the bottom of this module
 (``retrain_semdedup_generation`` + ``semantic_dedup_monitor_gen``):
 train N+1 offline from the state's own unit vectors, backfill, publish
 atomically, the monitor follows mid-stream. Single-writer discipline as
 streaming/ingest.py.
+
+A generation is the one persisted host of a k-means assignment: its
+model is the frozen centroids and its state holds the (id, cid, u)
+rows of ``encode_ivf`` plus ccos. ``retrain_semdedup_generation`` on an
+empty root builds generation 1 straight from a corpus, and the batch
+operators read its state through ``state_assignments``: ``ivf_search``
+as a cell-pruned probe, ``semantic_dedup_pairs`` in full.
 """
 
 from __future__ import annotations
@@ -376,6 +383,7 @@ def retrain_semdedup_generation(
     n_centroids: int,
     iters: int = 2,
     state_files: int = 8,
+    corpus=None,
 ) -> int:
     """The offline half of the cutover: train generation N+1's centroids
     from generation N's state, re-assign the FULL history under the new
@@ -399,8 +407,19 @@ def retrain_semdedup_generation(
       from N+1.
     Crash safety: the pointer commits LAST, so a crash mid-backfill
     leaves an orphaned gen directory and intact N serving — and a RETRY
-    simply rebuilds: build_generation clears the orphan first."""
-    from sf_epa_data_ingestion_spark.operators.similarity import train_ivf
+    simply rebuilds: build_generation clears the orphan first.
+
+    On a root with no generation yet this builds generation 1 straight
+    from ``corpus``, a (vec_id, embedding) frame, normalized on the way
+    in exactly as the batch operators prep it (so the state is their
+    ``encode_ivf`` assignment row for row), with no marker to carry. An
+    empty or all-NULL corpus or state raises ValueError and publishes
+    nothing. On a root with a generation, ``corpus`` is not read."""
+    from sf_epa_data_ingestion_spark.operators.similarity import (
+        _infer_dim,
+        _ivf_prep,
+        train_ivf,
+    )
     from sf_epa_data_ingestion_spark.partitioning import spread
     from sf_epa_data_ingestion_spark.streaming.generations import (
         GenerationStore,
@@ -408,28 +427,32 @@ def retrain_semdedup_generation(
     )
 
     store = GenerationStore(root)
-    gen, _cents_old, state_old = current_semdedup_generation(spark, root)
-    marker = state_old.last_txn(app_id)
-
-    dim = _state_dim(state_old)
-    if dim is None:
-        raise ValueError(
-            f"generation {gen} state at {root} is empty — nothing to retrain from"
-        )
-    # (id, __u) of every vector ever seen — already unit-normalized. The
-    # same frame doubles as the trainer's seed-scan corpus (u as the
-    # vector column) and its prepped Lloyd input.
-    history = state_old.read().select("id", F.col("u").alias("embedding"))
-    prepped = spread(
-        state_old.read().select("id", F.col("u").alias("__u")), F.col("id")
-    ).persist()
+    gen, marker = store.latest() or 0, None
+    if gen:
+        gen, _cents_old, state_old = current_semdedup_generation(spark, root)
+        marker = state_old.last_txn(app_id)
+        # (id, u) of every vector ever seen, already unit-normalized: the
+        # trainer's seed-scan corpus (u as the vector column) and, spread,
+        # its prepped Lloyd input
+        id_col = "id"
+        history = state_old.read().select("id", F.col("u").alias("embedding"))
+        prepped = spread(history.withColumnRenamed("embedding", "__u"), F.col("id"))
+    elif corpus is None:
+        raise ValueError(f"no generation at {root}: pass the corpus to build generation 1")
+    else:
+        id_col, history = "vec_id", corpus
+        prepped = _ivf_prep(corpus, id_col, "embedding")
+    dim = _infer_dim(history, "embedding")
+    prepped = prepped.persist()
     try:
         new_cents = train_ivf(
-            history, corpus_id="id", vec_col="embedding",
+            history, corpus_id=id_col, vec_col="embedding",
             n_centroids=n_centroids, iters=iters, dim=dim, _prepped=prepped,
         )
+        if new_cents is None:
+            raise ValueError(f"no valid vector at {root} to train from")
         backfill = _encode_with_ccos(
-            None, new_cents, id_col="id", _prepped=prepped
+            None, new_cents, id_col=id_col, _prepped=prepped
         ).repartitionByRange(state_files, "cid")
 
         new_gen = gen + 1
@@ -440,21 +463,27 @@ def retrain_semdedup_generation(
         _gen_dir, new_state = build_generation(
             spark, root, new_gen, {"cents": new_cents}, "state", _STATE_SCHEMA
         )
-        if marker is not None:
-            new_state.append(backfill, txn={"app": app_id, "batch": marker})
-        else:
-            new_state.append(backfill)
+        new_state.append(
+            backfill, txn=None if marker is None else {"app": app_id, "batch": marker}
+        )
     finally:
         prepped.unpersist()
     store.publish(new_gen, {"n_centroids": n_centroids, "from_gen": gen})
     return new_gen
 
 
-def _state_dim(state: TxTable) -> int | None:
-    """Vector width from one state row (None for an empty state — the
-    trainer then infers from its own input)."""
-    row = state.read().select(F.size("u").alias("d")).first()
-    return int(row["d"]) if row is not None else None
+def state_assignments(state: TxTable, cids=None):
+    """A state table as the batch operators' (vec_id, __u, cid)
+    assignment frame (``ivf_search``, ``semantic_dedup_pairs``). With
+    ``cids`` it is the probe read of those cells only: files whose
+    committed cid bounds exclude every probed cell never enter the scan
+    (txlog min/max skipping; a generation's backfill range-partitions on
+    cid, so per-file bounds are tight), and the residual ``cid IN``
+    filter keeps the result exactly the probed subset."""
+    filters = None if cids is None else [("cid", "in", sorted(int(c) for c in cids))]
+    return state.read(filters=filters).select(
+        F.col("id").alias("vec_id"), F.col("u").alias("__u"), "cid"
+    )
 
 
 def semantic_dedup_monitor_gen(

@@ -12,7 +12,7 @@ import gc
 import pyspark.sql.functions as F
 import pytest
 
-from sf_epa_data_ingestion_spark.operators import cleaning, dedup, sampling, similarity, vocab
+from sf_epa_data_ingestion_spark.operators import cleaning, dedup, quality_model, sampling, similarity, vocab
 
 BASE = "the quick brown fox jumps over the lazy dog near the river bank today"
 
@@ -79,6 +79,7 @@ OWNERS = {
         _pairs(s, i), driver_edge_threshold=0
     ),
     "ngram_novelty": lambda s, i: cleaning.ngram_novelty(_docs(s, i), n=2),
+    "score_quality_lr": lambda s, i: quality_model.score_quality_lr(_docs(s, i)),
     "sample_to_budget": lambda s, i: sampling.sample_to_budget(*_budget_input(s, i), weight_col="w"),
     "bigram_lm_scores": lambda s, i: vocab.bigram_lm_scores(_docs(s, i)),
     "dsir_log_weights": lambda s, i: vocab.dsir_log_weights(_docs(s, i), F.col("doc_id") <= 2),
@@ -118,10 +119,31 @@ def test_owner_holds_one_call_of_blocks(spark, op):
         counts.append(len(_live_rdds(spark)))
     assert max(counts[1:]) <= counts[0], f"persisted RDDs grew call over call: {counts}"
 
-    if op != "connected_components":  # its edge checkpoint is new every call
+    # a new RDD in every call's plan: connected_components' edge
+    # checkpoint, score_quality_lr's weights frame made from local rows
+    if op not in ("connected_components", "score_quality_lr"):
         before = _live_rdds(spark)
         _rows(call(spark, 3))  # identical to the last call
         assert _live_rdds(spark) == before, "an identical call rebuilt its cache"
 
     # the earlier call's result recomputes once its cache is released
     assert _rows(first) == first_rows
+
+
+def test_driver_path_connected_components_leaves_no_rdd(spark):
+    """The driver path of ``connected_components`` (an edge list under
+    ``driver_edge_threshold``, the path dedup_clusters takes) caches its
+    edges only inside the call: repeated calls leave the session's
+    persisted RDDs, local checkpoints included, as they found them."""
+
+    def persistent() -> set[int]:
+        for _ in range(2):
+            gc.collect()
+            spark._jvm.System.gc()
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    for i in range(10):
+        comp = dict(_rows(dedup.connected_components(_pairs(spark, i))))
+        assert comp == {1: 1, 2: 1, 3: 1, 10 + i: 10 + i, 11 + i: 10 + i}
+    assert persistent() - before == set()

@@ -7,6 +7,11 @@ import math
 import pyspark.sql.functions as F
 
 from sf_epa_data_ingestion_spark.operators import dedup, similarity
+from sf_epa_data_ingestion_spark.streaming.semdedup import (
+    current_semdedup_generation,
+    retrain_semdedup_generation,
+    state_assignments,
+)
 
 
 def _docs(spark, texts):
@@ -220,7 +225,8 @@ def test_ivf_topk_identical_vector_and_recall(spark):
 def test_ivf_with_fewer_vectors_than_centroids(spark, tmp_path):
     """A corpus with fewer valid vectors than n_centroids trains one cell
     per valid vector (a NULL row seeds nothing), and the in-query chain,
-    the persisted layout and the refhash mirror all agree on it."""
+    a generation-1 SemDeDup build and the refhash mirror all agree on
+    it."""
     import numpy as np
 
     from sf_epa_data_ingestion_spark.functions.refhash import ref_ivf_model
@@ -244,11 +250,13 @@ def test_ivf_with_fewer_vectors_than_centroids(spark, tmp_path):
     )
     assert {r[0] for r in topk} == {0, 1} and all(r[3] <= 3 for r in topk)
 
-    path = str(tmp_path / "ivf")
-    similarity.materialize_ivf_index(df, path, n_centroids=16, dim=8)
-    index, loaded, _meta = similarity.load_ivf_index(spark, path)
+    root = str(tmp_path / "ivf")
+    retrain_semdedup_generation(spark, root, "ivf", 16, corpus=df)
+    _gen, loaded, state = current_semdedup_generation(spark, root)
     assert loaded == cents
-    served = similarity.ivf_search(index, queries, loaded, k=3).collect()
+    served = similarity.ivf_search(
+        state_assignments(state), queries, loaded, k=3
+    ).collect()
     assert sorted(map(tuple, served)) == topk
 
 
@@ -786,11 +794,9 @@ def test_semantic_dedup_cluster_count_is_a_cost_knob(spark, tmp_path):
     try:
         for cells in (8, 64):
             d = str(tmp_path / f"cells{cells}")
-            similarity.materialize_ivf_index(
-                corpus, d, corpus_id="vec_id", vec_col="embedding",
-                dim=64, n_centroids=cells,
-            )
-            index, cents, _meta = similarity.load_ivf_index(spark, d)
+            retrain_semdedup_generation(spark, d, "cells", cells, corpus=corpus)
+            _gen, cents, state = current_semdedup_generation(spark, d)
+            index = state_assignments(state)
             pairs = similarity.semantic_dedup_pairs(index, cents, threshold=0.95)
             planted = (
                 pairs.withColumn("lo", F.least("keep_id", "drop_id"))

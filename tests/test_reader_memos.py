@@ -1,9 +1,9 @@
-"""Session-scoped reader memos (r15): load_table and the vector-index
-layout loaders each cost ~90 ms of pure driver/py4j time per call — a
-100-query suite pays that hundreds of times for the same static
-layouts, and a serving tier would hold its frames open. The memos must
-be invisible except for speed: same plan back for the same bytes, a
-fresh plan the moment the path's content changes."""
+"""Session-scoped reader memos (r15): load_table costs ~90 ms of pure
+driver/py4j time per call — a 100-query suite pays that hundreds of
+times for the same static tables, and a serving tier would hold its
+frames open. The memo must be invisible except for speed: same plan
+back for the same bytes, a fresh plan the moment the path's content
+changes. Also the persisted-layout cache (``_materialized_dir``)."""
 
 import os
 import sys
@@ -68,22 +68,6 @@ def test_load_table_leaves_session_conf_and_reads_utc(spark, tmp_path):
         assert day == utc.date()
     finally:
         spark.conf.set("spark.sql.session.timeZone", zone)
-
-
-def test_load_ivf_index_memoizes_and_reopens(spark, tmp_path):
-    from sf_epa_data_ingestion_spark.operators import similarity
-
-    vecs = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(8)], "vec_id long, embedding array<double>"
-    )
-    root = str(tmp_path / "ivf")
-    similarity.materialize_ivf_index(vecs, root, n_centroids=2)
-    a = similarity.load_ivf_index(spark, root)
-    assert similarity.load_ivf_index(spark, root) is a
-    meta = os.path.join(root, "_meta.json")
-    st = os.stat(meta)
-    os.utime(meta, ns=(st.st_atime_ns + 1_000_000, st.st_mtime_ns + 1_000_000))
-    assert similarity.load_ivf_index(spark, root) is not a
 
 
 def test_materialized_dir_reuses_only_under_the_same_code(tmp_path, monkeypatch):

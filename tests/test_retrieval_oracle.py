@@ -27,6 +27,8 @@ ROWS = [
     "search_bm25_wand_tx",
     "search_bm25_wand_tx_fresh",
     "running_user_stats_replay",
+    "semantic_dedup",
+    "semdedup_stream_replay",
 ]
 
 

@@ -2,7 +2,9 @@
 generation 1 built straight from the corpus, frozen-model change-feed
 maintenance with exactly-once appends, restart survival, cutover,
 pinned serving, and bit-parity with the batch encoder and the in-query
-chains."""
+chains. The IVF assignment's host, a SemDeDup generation
+(streaming/semdedup.py), is pinned here against the same in-query
+chain."""
 
 import os
 
@@ -12,6 +14,11 @@ import pytest
 from sf_epa_data_ingestion_spark.operators import similarity
 from sf_epa_data_ingestion_spark.storage import TxTable
 from sf_epa_data_ingestion_spark.streaming.generations import GenerationStore
+from sf_epa_data_ingestion_spark.streaming.semdedup import (
+    current_semdedup_generation,
+    retrain_semdedup_generation,
+    state_assignments,
+)
 from sf_epa_data_ingestion_spark.streaming.vectorindex import (
     current_vector_index_generation,
     init_vector_index_generations,
@@ -271,29 +278,39 @@ def test_flat_pq_is_one_cell_ivfpq(spark, tmp_path):
     assert served == flat
 
 
-def test_materialized_ivf_index_serves_bit_identically(spark, tmp_path):
-    """materialize_ivf_index -> load_ivf_index -> ivf_search is
-    bit-identical to the in-query ivf_topk chain (training is a pure
-    function of the corpus; the driver-side probe mirror reproduces
-    _centroid_topn_pd's stable-argsort contract; the scoring fold is
-    the same sequential zip_with/aggregate expression), and the probe's
-    literal cid IN (...) predicate reaches the persisted layout's
-    PartitionFilters."""
-    import contextlib
-    import io
+def _assignments(df):
+    return {(r["vec_id"], r["cid"], tuple(r["__u"])) for r in df.collect()}
 
+
+def test_generation_one_ivf_serves_bit_identically(spark, tmp_path):
+    """A SemDeDup generation 1 built straight from the corpus is the
+    IVF assignment host: its state is ``encode_ivf``'s (vec_id, __u,
+    cid) assignment row for row, its model round-trips the trained
+    centroids exactly, and ivf_search over it is bit-identical to the
+    in-query ivf_topk chain (training is a pure function of the corpus;
+    the driver-side probe mirror reproduces _centroid_topn_pd's
+    stable-argsort contract; the scoring fold is the same sequential
+    expression). The probe reaches the state as txlog file skipping:
+    the probe read opens only the files whose committed cid bounds admit
+    a probed cell, fewer than the state holds (n_probe=1, so at most 10
+    of 16 cells are probed for 10 queries)."""
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    similarity.materialize_ivf_index(emb, path, dim=64)
-    index, cents, meta = similarity.load_ivf_index(spark, path)
+    root = str(tmp_path / "kmeans")
+    assert retrain_semdedup_generation(spark, root, "ivf", 16, corpus=emb) == 1
+    gen, cents, state = current_semdedup_generation(spark, root)
+    assert gen == 1
     assert cents == similarity.train_ivf(emb, dim=64)  # exact JSON round-trip
-
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+    assert _assignments(state_assignments(state)) == _assignments(
+        similarity.encode_ivf(emb, cents)
     )
+
+    queries = _queries(emb)
     served = sorted(
         tuple(r)
-        for r in similarity.ivf_search(index, queries, cents, k=10, n_probe=4).collect()
+        for r in similarity.ivf_search(
+            None, queries, cents, k=10, n_probe=4,
+            index_for_cids=lambda cids: state_assignments(state, cids),
+        ).collect()
     )
     from_scratch = sorted(
         tuple(r)
@@ -303,14 +320,25 @@ def test_materialized_ivf_index_serves_bit_identically(spark, tmp_path):
     )
     assert served == from_scratch and len(served) == 100
 
-    out = similarity.ivf_search(index, queries, cents, k=10, n_probe=1)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    seg = plan[plan.index("PartitionFilters"):]
-    assert "cid" in seg.split("]")[0] + "]"
+    reads = []
+
+    def provider(cids):
+        reads.append((list(cids), state_assignments(state, cids)))
+        return reads[-1][1]
+
+    out = similarity.ivf_search(
+        None, queries, cents, k=10, n_probe=1, index_for_cids=provider
+    )
+    assert out.count() == 100
+    (cids, probed), = reads
+    assert len(cids) <= 10
+    opened = {os.path.basename(f) for f in probed.inputFiles()}
+    admitted = {
+        os.path.basename(f)
+        for f in state.read_files(filters=[("cid", "in", cids)])
+    }
+    assert opened == admitted
+    assert len(opened) < len(state.read().inputFiles())
 
 
 def test_ivf_search_zero_norm_query_matches_topk(spark, tmp_path):
@@ -319,9 +347,9 @@ def test_ivf_search_zero_norm_query_matches_topk(spark, tmp_path):
     (probes [0..n_probe-1] via the all-nan stable argsort, NULL cosine)
     instead of crashing on the driver-side mirror."""
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-    path = str(tmp_path / "ivf0")
-    similarity.materialize_ivf_index(emb, path, dim=64)
-    index, cents, _ = similarity.load_ivf_index(spark, path)
+    root = str(tmp_path / "kmeans0")
+    retrain_semdedup_generation(spark, root, "ivf", 16, corpus=emb)
+    _gen, cents, state = current_semdedup_generation(spark, root)
 
     queries = spark.createDataFrame(
         [(-1, [0.0] * 64), (-2, [1.0] + [0.0] * 63)],
@@ -329,7 +357,10 @@ def test_ivf_search_zero_norm_query_matches_topk(spark, tmp_path):
     )
     served = sorted(
         tuple(r)
-        for r in similarity.ivf_search(index, queries, cents, k=5, n_probe=4).collect()
+        for r in similarity.ivf_search(
+            None, queries, cents, k=5, n_probe=4,
+            index_for_cids=lambda cids: state_assignments(state, cids),
+        ).collect()
     )
     from_scratch = sorted(
         tuple(r)
@@ -340,32 +371,34 @@ def test_ivf_search_zero_norm_query_matches_topk(spark, tmp_path):
     assert served == from_scratch
 
 
-def test_no_model_layouts_serve_empty_not_crash(spark, tmp_path):
-    """Building the IVF layout over an all-NULL corpus writes a no-model
-    layout; loading + searching it returns EMPTY results (not None
-    dereferences) — the degenerate contract train_ivf established."""
-    empty = spark.createDataFrame([(1, None)], "vec_id long, embedding array<double>")
-    q = spark.createDataFrame([(-1, [1.0] * 64)], "query_id long, embedding array<double>")
-
-    p2 = str(tmp_path / "ivf_empty")
-    similarity.materialize_ivf_index(empty, p2, dim=64)
-    index2, cents, _ = similarity.load_ivf_index(spark, p2)
-    assert cents is None and index2.count() == 0
-    assert similarity.ivf_search(index2, q, cents, k=5).count() == 0
-
-
 def test_generation_one_build_on_all_null_corpus_raises(spark, tmp_path):
-    """An IVF-PQ generation has no no-model form: building generation 1
-    over an all-NULL corpus raises before anything is published (no
-    vector to read the width off), so the root stays empty and a pin
-    fails loudly instead of serving a modelless index."""
+    """Neither generational host has a no-model form: building
+    generation 1 of an IVF-PQ index or of a k-means assignment over an
+    all-NULL corpus raises before anything is published (no vector to
+    read the width off), so the root stays empty and a pin fails loudly
+    instead of serving a modelless index. The operator's own no-model
+    contract still holds: ivf_search without centroids returns no
+    hits."""
     empty = spark.createDataFrame([(1, None)], "vec_id long, embedding array<double>")
-    root = str(tmp_path / "gens")
-    with pytest.raises(ValueError, match="no non-NULL 'embedding' rows"):
-        retrain_vector_index_generation(spark, root, "vi", empty)
-    assert GenerationStore(root).latest() is None
-    with pytest.raises(FileNotFoundError):
-        pin_vector_index(spark, root)
+    builds = {
+        "ivfpq": (
+            lambda root: retrain_vector_index_generation(spark, root, "vi", empty),
+            lambda root: pin_vector_index(spark, root),
+        ),
+        "kmeans": (
+            lambda root: retrain_semdedup_generation(spark, root, "sd", 16, corpus=empty),
+            lambda root: current_semdedup_generation(spark, root),
+        ),
+    }
+    for kind, (build, pin) in builds.items():
+        root = str(tmp_path / kind)
+        with pytest.raises(ValueError, match="no non-NULL 'embedding' rows"):
+            build(root)
+        assert GenerationStore(root).latest() is None
+        with pytest.raises(FileNotFoundError):
+            pin(root)
+    q = spark.createDataFrame([(-1, [1.0] * 64)], "query_id long, embedding array<double>")
+    assert similarity.ivf_search(None, q, None, k=5).count() == 0
 
 
 def test_vector_index_maintainer_applies_change_feed(spark, tmp_path):

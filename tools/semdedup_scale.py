@@ -8,7 +8,8 @@ sf0.1 corpus): SemDeDup with the FIXED 64-cell knob vs the
 ∝n 640-cell knob (same ~60 rows/cell density as the graded sf0.1 run).
 
 Reported per setting:
-- index build (train + encode + persisted write) and pair-scoring wall
+- index build (train + encode + a generation-1 publish,
+  semdedup.retrain_semdedup_generation) and pair-scoring wall
 - sum(size^2) over clusters — the pairwise candidate work the
   applyInPandas stage actually does — and max cluster size (the
   straggler bound / per-task memory proxy)
@@ -37,6 +38,7 @@ import pyspark.sql.functions as F  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402
 from sf_epa_data_ingestion_spark.operators import similarity  # noqa: E402
 from sf_epa_data_ingestion_spark.session import get_spark  # noqa: E402
+from sf_epa_data_ingestion_spark.streaming import semdedup  # noqa: E402
 
 SF1 = os.path.join(REPO, ".scaledata", "sf1")
 SCRATCH = os.path.join(REPO, ".scaledata", "semdedup_scale")
@@ -58,18 +60,17 @@ def main() -> None:
         for _ in range(runs):
             shutil.rmtree(idx_dir, ignore_errors=True)
             t0 = time.time()
-            similarity.materialize_ivf_index(
-                corpus, idx_dir, corpus_id="vec_id", vec_col="embedding",
-                dim=64, n_centroids=n_cells,
+            semdedup.retrain_semdedup_generation(
+                spark, idx_dir, "scale", n_cells, corpus=corpus
             )
             build_best = min(build_best, time.time() - t0)
-            index, cents, _meta = similarity.load_ivf_index(spark, idx_dir)
+            _gen, cents, state = semdedup.current_semdedup_generation(spark, idx_dir)
+            index = semdedup.state_assignments(state)
             t0 = time.time()
             pairs = similarity.semantic_dedup_pairs(index, cents, threshold=0.95)
             n_dec = pairs.count()
             score_best = min(score_best, time.time() - t0)
             spark.catalog.clearCache()
-        index, cents, _meta = similarity.load_ivf_index(spark, idx_dir)
         sizes = index.groupBy("cid").count()
         stats = sizes.agg(
             F.sum(F.col("count") * F.col("count")).alias("sum_sq"),
