@@ -378,7 +378,7 @@ def test_generation_one_build_on_all_null_corpus_raises(spark, tmp_path):
     read the width off), so the root stays empty and a pin fails loudly
     instead of serving a modelless index. The operator's own no-model
     contract still holds: ivf_search without centroids returns no
-    hits."""
+    hits (test_no_model_layouts_serve_empty_not_crash)."""
     empty = spark.createDataFrame([(1, None)], "vec_id long, embedding array<double>")
     builds = {
         "ivfpq": (
@@ -397,8 +397,26 @@ def test_generation_one_build_on_all_null_corpus_raises(spark, tmp_path):
         assert GenerationStore(root).latest() is None
         with pytest.raises(FileNotFoundError):
             pin(root)
+
+
+def test_no_model_layouts_serve_empty_not_crash(spark):
+    """Training the IVF quantizer over an all-NULL corpus yields no
+    model (None, the degenerate contract train_ivf established), and
+    ivf_search without centroids returns EMPTY results rather than
+    dereferencing None: over an empty assignment frame, and over a
+    provider, which is never asked for cells since no query is probed."""
+    empty = spark.createDataFrame([(1, None)], "vec_id long, embedding array<double>")
     q = spark.createDataFrame([(-1, [1.0] * 64)], "query_id long, embedding array<double>")
-    assert similarity.ivf_search(None, q, None, k=5).count() == 0
+    cents = similarity.train_ivf(empty, dim=64)
+    assert cents is None
+
+    no_index = spark.createDataFrame([], "vec_id long, __u array<double>, cid int")
+    assert similarity.ivf_search(no_index, q, cents, k=5).count() == 0
+    asked = []
+    out = similarity.ivf_search(
+        None, q, cents, k=5, index_for_cids=lambda cids: asked.append(cids)
+    )
+    assert out.count() == 0 and asked == []
 
 
 def test_vector_index_maintainer_applies_change_feed(spark, tmp_path):
